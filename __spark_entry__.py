@@ -1537,14 +1537,15 @@ def q_prune_bloom_url(spark, sf_dir):
 
 
 def q_point_lookup_store(spark, sf_dir):
-    """Late-materialization point lookup over a checkpointed store
-    (choetl_spark/lookup.py): chunk-granular Bloom pruning on the key
-    column finds the matching (part_id, row_pos), then ONLY the value
-    chunks covering those positions are decoded — O(hit chunks) work
-    instead of a partition-wide multi-column decode. The oracle
-    recomputes the row from the documents table; a Bloom false negative,
-    a row_pos misalignment, or a fetch-pass chunk-selection bug each
-    flip it. Collected eagerly so the temp store can be deleted."""
+    """Point lookup over a checkpointed store (choetl_spark/lookup.py,
+    a front-end over format("choetl")): the reader drops url chunks
+    whose Bloom excludes the key before reading any payload, masks the
+    surviving chunks in the filtered decode kernel, and decodes the
+    other columns only for chunks covering the match. The oracle
+    recomputes the row from the documents table; a Bloom false
+    negative, a mask dropping a matching row, or a misaligned column
+    fetch each flip it. Collected eagerly so the temp store can be
+    deleted."""
     import shutil
     import tempfile
 
@@ -1645,7 +1646,14 @@ def q_streaming_upsert_store(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        if not q.awaitTermination(300):
+            # a stall must surface as a stall, never as a hash mismatch
+            # over whatever the store holds when the wait gives up
+            q.stop()
+            raise TimeoutError(
+                "streaming_upsert_store: the availableNow query did not "
+                "terminate within 300 s"
+            )
         census = (
             scan_encoded(spark, out, ["url", "text", "lang", "version"])
             .groupBy("lang")

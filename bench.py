@@ -273,13 +273,14 @@ def bench_pruned_lookup(spark, sf_dir: str) -> None:
 
 
 def bench_point_lookup(spark, sf_dir: str) -> None:
-    """Late-materialization lookup (choetl_spark/lookup.py): chunk-
-    granular Bloom prune on the key column, then fetch ONLY the value
-    chunks covering the matching row positions. vs pruned_point_lookup
-    (scan_encoded), which still decodes every chunk of the surviving
-    partitions for all three columns. At sf0.1 this runs TWO Spark jobs
-    (key pass + fetch) against full_scan_filter's one, so wall clock is
-    fixed-stage-bound and understates the mechanism — the JSON's
+    """Late-materialization lookup (choetl_spark/lookup.py, a filtered
+    format("choetl") read): task-side Bloom skipping of key chunks, then
+    the filtered decode kernel decodes the other columns only for chunks
+    covering a match. vs pruned_point_lookup (scan_encoded), which still
+    decodes every chunk of the surviving partitions for all three
+    columns. It runs one Spark job for the read plus one for the local
+    result's count, so wall clock is fixed-stage-bound and understates
+    the mechanism — the JSON's
     key_chunks_bloom_hit / key_chunks_total ratio is the
     data-proportional term (decoded bytes), which at 10^12 docs is the
     whole cost."""

@@ -40,24 +40,31 @@ subtraction, EQUALITY-delete subtraction (value sets are O(deleted
 keys) — they load driver-side, ride the splits, and apply task-side
 under the data-seq < delete-seq rule; splits whose partitions all
 post-date every delete skip the probe), and WAP-staged invisibility
-all behave identically.
+all behave identically. Nested/decimal ("logical") columns read back
+in their logical type: the shared decode kernel restores their
+JSON/cast storage strings.
 
-Scope guards (v1, each raises with a pointer to the primary API):
-nested/decimal ("logical") columns — their JSON restore happens
-JVM-side in :func:`choetl_spark.engine.decode_dataframe`; equality
-deletes whose key column was DROPPED after the delete (a RENAMED key
-resolves through the schema log's physical chunk key and keeps
+One scope guard remains: equality deletes whose key column was DROPPED
+after the delete raise with a pointer to ``scan_encoded`` (a RENAMED
+key resolves through the schema log's physical chunk key and keeps
 applying, same as the primary reader).
 
-Filter pushdown: ``pushFilters`` keeps simple predicates and evaluates
-them task-side with ``pyarrow.compute`` so non-matching rows never
-cross to the JVM — but every filter is also RETURNED as unsupported,
-so Spark re-applies them all. The task-side mask is therefore a pure
-transfer optimization that can only ever be exact-or-skipped (the same
-superset discipline as the kernel pushdown in
-:mod:`choetl_spark.engine`); float and timestamp predicates are
-skipped entirely (NaN ordering / tz conversion differ between Arrow
-and Spark semantics).
+Filter pushdown: ``pushFilters`` translates simple predicates into the
+engine's pushdown spec (``=``/``IN`` become ``("in", values)``,
+comparisons an inclusive ``("range", lo, hi)``) and each task runs the
+engine's filtered decode kernel
+(:func:`choetl_spark.engine._make_filtered_decode_kernel`): the mask is
+evaluated per predicate-column chunk (dict chunks on their symbol
+table), other columns decode only where a row survives, and only
+surviving rows cross to the JVM. An ``IN`` on a string/binary column
+also skips whole chunks first: predicate-column chunks whose Bloom
+filter excludes every value are dropped before any payload is read,
+and a split left with no predicate-column chunk reads no payload at
+all — the late materialization :func:`choetl_spark.lookup.point_lookup`
+relies on. Every filter is also RETURNED to Spark, which re-applies
+it, so a mask only has to be a superset; only ints, strings, bools and
+binary are masked (float NaN ordering and timestamp tz conversion
+differ between Arrow and Spark).
 
 The streaming reader exposes ledger epochs as micro-batch offsets —
 Iceberg's streaming-read contract: an offset is a committed
@@ -98,19 +105,21 @@ from pyspark.sql.datasource import (
     GreaterThanOrEqual,
     In,
     InputPartition,
-    IsNotNull,
-    IsNull,
     LessThan,
     LessThanOrEqual,
     WriterCommitMessage,
 )
 
+from choetl_spark.bloom import bloom_maybe_contains
 from choetl_spark.codecs.base import str_to_type
 from choetl_spark.engine import (
+    _SPARK_TO_STORAGE,
     EncodeConfig,
     _make_decode_kernel,
     _make_encode_kernel,
+    _make_filtered_decode_kernel,
     _spark_type_ddl,
+    bloom_probeable,
 )
 from choetl_spark.deletes import _deletes_dir
 from choetl_spark.eqdeletes import _eq_dir
@@ -356,21 +365,32 @@ def _manifest_columns(
             "write one with df.write.format('choetl') or "
             "encode_with_resume)"
         )
-    items = manifest_data_items(manifest)
-    logical = [c for c, m in items if m.get("logical")]
-    if logical:
-        raise NotImplementedError(
-            f"columns {logical} store nested/decimal values as JSON "
-            "strings; their restore is JVM-side — read this store with "
-            "choetl_spark.ledger.scan_encoded instead"
-        )
-    return items
+    return manifest_data_items(manifest)
 
 
 def _store_schema_ddl(out_dir: str, as_of: int | None = None) -> str:
     return ", ".join(
-        f"`{c}` {_spark_type_ddl(str_to_type(m['dtype']))}"
+        f"`{c}` {m.get('logical') or _spark_type_ddl(str_to_type(m['dtype']))}"
         for c, m in _manifest_columns(out_dir, as_of)
+    )
+
+
+def _out_schema(items: list[tuple[str, dict]], schema) -> pa.Schema:
+    """Decoded Arrow schema: storage types, except nested/decimal
+    columns, which decode to the Arrow form of their logical type in the
+    read schema (a ``StructType`` Spark hands the reader)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema(
+        [
+            (
+                c,
+                to_arrow_type(schema[c].dataType)
+                if m.get("logical")
+                else str_to_type(m["dtype"]),
+            )
+            for c, m in items
+        ]
     )
 
 
@@ -493,34 +513,57 @@ def plan_store_splits(
 # task-side decode
 # ---------------------------------------------------------------------------
 
-_CHUNK_READ_COLS = [
-    "part_id", "column", "chunk_seq", "row_start", "payload", "meta",
-    "attempt_id",
+_CHUNK_META_COLS = [
+    "part_id", "column", "row_start", "n_rows", "meta", "attempt_id",
 ]
+
+
+def _bloom_kept(
+    chunks: pa.Table, display: list[str], probes: dict[str, list]
+) -> list[bool]:
+    """Per chunk row: False only for a probed column's chunk whose Bloom
+    filter excludes every probe value (no/legacy Bloom keeps it)."""
+    if "stats" not in chunks.column_names:
+        return [True] * chunks.num_rows
+    keep = []
+    for name, st in zip(display, chunks.column("stats").to_pylist()):
+        vals = probes.get(name)
+        bloom = json.loads(st).get("bloom") if vals and st else None
+        keep.append(
+            bloom is None or any(bloom_maybe_contains(bloom, v) for v in vals)
+        )
+    return keep
 
 
 def _decode_split(
     split: StoreSplit,
     items: list[tuple[str, dict]],
     batch_rows: int,
-    masks: list[tuple] | None = None,
+    out_schema: pa.Schema,
+    pushdown: dict[str, tuple] | None = None,
 ) -> Iterator[pa.RecordBatch]:
+    """Decode one split: read the chunk metadata, drop the chunk rows
+    the pushdown spec rules out (Bloom skipping, then partitions left
+    without a chunk of some predicate column — the filtered kernel
+    would emit nothing for them), read payloads for the rest only, then
+    run the shared decode kernel and subtract deletes."""
     import numpy as np
 
     phys_to_display = {physical_name(m, c): c for c, m in items}
     col_order = [c for c, _ in items]
-    out_schema = pa.schema(
-        [(c, str_to_type(m["dtype"])) for c, m in items]
-    )
+    probes = {
+        c: op[1]
+        for c, op in (pushdown or {}).items()
+        if op[0] == "in" and bloom_probeable(op[1])
+    }
+    want = _CHUNK_META_COLS + (["stats"] if probes else [])
     part_set = set(split.parts)
-    pieces = []
+    pieces = []  # (ParquetFile, row groups, kept chunk rows, their indices)
     for path, rgs in split.files:
         pf = pq.ParquetFile(path)
-        cols = [
-            c for c in _CHUNK_READ_COLS
-            if c in pf.schema_arrow.names
-        ]
-        t = pf.read_row_groups(list(rgs), columns=cols)
+        t = pf.read_row_groups(
+            list(rgs), columns=[c for c in want if c in pf.schema_arrow.names]
+        )
         if "attempt_id" not in t.column_names:
             t = t.append_column(
                 "attempt_id", pa.nulls(t.num_rows, pa.string())
@@ -536,30 +579,55 @@ def _decode_split(
             and _attempt_ok(att[i], split.attempts[pid[i]])
         ]
         if keep:
-            pieces.append(t.take(keep))
+            pieces.append((pf, rgs, t.take(keep), keep))
     if not pieces:
         return
-    chunks = pa.concat_tables(pieces).sort_by(
+    chunks = pa.concat_tables([p[2] for p in pieces])
+    display = [
+        phys_to_display[n] for n in chunks.column("column").to_pylist()
+    ]
+    alive = np.ones(chunks.num_rows, dtype=bool)
+    if pushdown:
+        alive &= _bloom_kept(chunks, display, probes)
+        pids = chunks.column("part_id").to_pylist()
+        have: dict[int, set] = {}
+        for p, c, a in zip(pids, display, alive):
+            if a and c in pushdown:
+                have.setdefault(p, set()).add(c)
+        alive &= [len(have.get(p, ())) == len(pushdown) for p in pids]
+    payloads, at = [], 0
+    for pf, rgs, t, keep in pieces:
+        sel = np.flatnonzero(alive[at:at + t.num_rows])
+        at += t.num_rows
+        if len(sel):
+            col = pf.read_row_groups(list(rgs), columns=["payload"]).column(0)
+            payloads.extend(col.take(np.asarray(keep)[sel]).chunks)
+    if not payloads:
+        return  # nothing can match: not a byte of payload was read
+    alive = pa.array(alive)
+    kept = chunks.filter(alive)
+    feed = pa.table(
+        {
+            "part_id": kept.column("part_id"),
+            "column": pa.array(display, pa.string()).filter(alive),
+            "payload": pa.chunked_array(payloads),
+            "meta": kept.column("meta"),
+            "row_start": kept.column("row_start"),
+            "n_rows": kept.column("n_rows"),
+        }
+    ).sort_by(
         [("part_id", "ascending"), ("column", "ascending"),
          ("row_start", "ascending")]
     )
-    display = pa.array(
-        [phys_to_display[n] for n in chunks.column("column").to_pylist()],
-        pa.string(),
-    )
     with_pos = bool(split.tombstones) or bool(split.eq)
-    kernel = _make_decode_kernel(
-        col_order, out_schema, batch_rows, with_pos=with_pos
-    )
-    feed = pa.table(
-        {
-            "part_id": chunks.column("part_id"),
-            "column": display,
-            "payload": chunks.column("payload"),
-            "meta": chunks.column("meta"),
-            "row_start": chunks.column("row_start"),
-        }
-    )
+    if pushdown:
+        kernel = _make_filtered_decode_kernel(
+            col_order, out_schema, batch_rows, pushdown, with_pos=with_pos
+        )
+    else:
+        kernel = _make_decode_kernel(
+            col_order, out_schema, batch_rows, with_pos=with_pos
+        )
     for batch in kernel(iter(feed.to_batches())):
         if with_pos:
             parts_np = batch.column(0).to_numpy(zero_copy_only=False)
@@ -593,8 +661,6 @@ def _decode_split(
                 [batch.column(i) for i in range(2, batch.num_columns)],
                 schema=pa.schema(list(batch.schema)[2:]),
             ).filter(pa.array(mask))
-        if masks:
-            batch = _apply_masks(batch, masks)
         if len(batch):
             yield batch
 
@@ -605,100 +671,60 @@ def _attempt_ok(row_att: str | None, committed: frozenset) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# safe task-side filter masks (pure optimization; Spark re-applies all)
+# filter pushdown: Spark filters -> the engine's pushdown spec
 # ---------------------------------------------------------------------------
 
 _MASKABLE = (int, str, bool, bytes)
+_LOWER = (GreaterThan, GreaterThanOrEqual)
+_UPPER = (LessThan, LessThanOrEqual)
 
 
-def _compile_masks(filters: list[Filter], items) -> tuple[list[Filter], list[tuple]]:
-    """(all filters back to Spark, exact-safe masks we ALSO apply).
-
-    Only type-families whose Arrow comparison provably agrees with
-    Spark's are masked (ints/strings/bools/bytes/None-checks); floats
-    (NaN ordering) and timestamps (tz conversion) are never masked."""
-    types = {c: str_to_type(m["dtype"]) for c, m in items}
-    masks: list[tuple] = []
+def _pushdown_spec(filters: list[Filter], items) -> dict[str, tuple]:
+    """The engine pushdown spec (``{col: ("in", values)}`` /
+    ``{col: ("range", lo, hi)}``, inclusive, ``None`` = open) for the
+    filters whose masks provably agree with Spark: int/string/bool/
+    binary storage columns and literals only — floats (NaN ordering),
+    timestamps (tz conversion) and nested/decimal columns never mask.
+    Strict comparisons widen to inclusive bounds and an IN-list literal
+    the storage type cannot hold (300 against int8) gives no mask: the
+    spec only has to be a superset, because Spark re-applies every
+    filter."""
+    types = {
+        c: str_to_type(m["dtype"]) for c, m in items if not m.get("logical")
+    }
+    spec: dict[str, tuple] = {}
     for f in filters:
         attr = getattr(f, "attribute", None)
         if not attr or len(attr) != 1 or attr[0] not in types:
             continue
-        col = attr[0]
-        t = types[col]
-        ok_family = (
+        col, t = attr[0], types[attr[0]]
+        if not (
             pa.types.is_integer(t)
-            or pa.types.is_string(t)
-            or pa.types.is_large_string(t)
+            or pa.types.is_string(t) or pa.types.is_large_string(t)
             or pa.types.is_boolean(t)
-            or pa.types.is_binary(t)
-            or pa.types.is_large_binary(t)
-        )
-        if isinstance(f, IsNull):
-            masks.append(("isnull", col))
-        elif isinstance(f, IsNotNull):
-            masks.append(("notnull", col))
-        elif not ok_family:
-            continue
-        elif isinstance(f, EqualTo) and isinstance(f.value, _MASKABLE):
-            masks.append(("eq", col, f.value))
-        elif isinstance(f, In) and all(
-            isinstance(v, _MASKABLE) for v in f.value
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)
         ):
-            try:
-                # an IN-list literal outside the storage type's range
-                # (e.g. 300 against int8) cannot build a typed value
-                # set — skip the mask (exact-or-skipped contract)
-                pa.array(list(f.value), t)
-            except Exception:
+            continue
+        if isinstance(f, (EqualTo, In)):
+            vals = [f.value] if isinstance(f, EqualTo) else list(f.value)
+            if not all(isinstance(v, _MASKABLE) for v in vals):
                 continue
-            masks.append(("in", col, list(f.value)))
-        elif isinstance(f, GreaterThan) and isinstance(f.value, _MASKABLE):
-            masks.append(("gt", col, f.value))
-        elif isinstance(f, GreaterThanOrEqual) and isinstance(
-            f.value, _MASKABLE
-        ):
-            masks.append(("ge", col, f.value))
-        elif isinstance(f, LessThan) and isinstance(f.value, _MASKABLE):
-            masks.append(("lt", col, f.value))
-        elif isinstance(f, LessThanOrEqual) and isinstance(
-            f.value, _MASKABLE
-        ):
-            masks.append(("le", col, f.value))
-    return filters, masks
-
-
-def _apply_masks(batch: pa.RecordBatch, masks: list[tuple]) -> pa.RecordBatch:
-    import pyarrow.compute as pc
-
-    keep = None
-    for m in masks:
-        op, col = m[0], m[1]
-        arr = batch.column(batch.schema.get_field_index(col))
-        try:
-            if op == "isnull":
-                cond = pc.is_null(arr)
-            elif op == "notnull":
-                cond = pc.is_valid(arr)
-            elif op == "eq":
-                cond = pc.equal(arr, m[2])
-            elif op == "in":
-                cond = pc.is_in(arr, value_set=pa.array(m[2], arr.type))
-            elif op == "gt":
-                cond = pc.greater(arr, m[2])
-            elif op == "ge":
-                cond = pc.greater_equal(arr, m[2])
-            elif op == "lt":
-                cond = pc.less(arr, m[2])
+            try:
+                pa.array(vals, t)
+            except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+                continue
+            spec[col] = ("in", vals)  # the tighter mask wins over a range
+        elif isinstance(f, _LOWER + _UPPER) and isinstance(f.value, _MASKABLE):
+            prev = spec.get(col, ("range", None, None))
+            if prev[0] == "in":
+                continue
+            lo, hi = prev[1], prev[2]
+            if isinstance(f, _LOWER):
+                lo = f.value if lo is None else max(lo, f.value)
             else:
-                cond = pc.less_equal(arr, m[2])
-        except Exception:
-            # a comparison Arrow cannot type (range overflow, cast)
-            # skips ITS mask only — Spark re-applies every filter, so
-            # the result stays exact (the contract: exact-or-skipped)
-            continue
-        cond = pc.fill_null(cond, op == "isnull")
-        keep = cond if keep is None else pc.and_(keep, cond)
-    return batch.filter(keep) if keep is not None else batch
+                hi = f.value if hi is None else min(hi, f.value)
+            spec[col] = ("range", lo, hi)
+    return spec
 
 
 # ---------------------------------------------------------------------------
@@ -707,7 +733,7 @@ def _apply_masks(batch: pa.RecordBatch, masks: list[tuple]) -> pa.RecordBatch:
 
 
 class ChoetlBatchReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema):
         self._dir = options["path"]
         self._batch_rows = int(options.get("batch_rows", 8192))
         self._target = int(options.get("target_split_bytes", 128 << 20))
@@ -715,11 +741,13 @@ class ChoetlBatchReader(DataSourceReader):
         # snapshot-scoped schema: column names (and the decode plan)
         # resolve against the epoch's schema under as_of
         self._items = _manifest_columns(self._dir, self._as_of)
-        self._masks: list[tuple] = []
+        self._out_schema = _out_schema(self._items, schema)
+        self._pushdown: dict[str, tuple] = {}
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
-        unsupported, self._masks = _compile_masks(filters, self._items)
-        return unsupported
+        filters = list(filters)
+        self._pushdown = _pushdown_spec(filters, self._items)
+        return filters  # all of them: Spark re-applies every filter
 
     def partitions(self):
         state = _ledger_state(self._dir, self._as_of)
@@ -735,7 +763,8 @@ class ChoetlBatchReader(DataSourceReader):
             # an empty store reads as an empty DataFrame, not a crash
             return
         yield from _decode_split(
-            partition, self._items, self._batch_rows, self._masks
+            partition, self._items, self._batch_rows, self._out_schema,
+            self._pushdown,
         )
 
 
@@ -745,7 +774,7 @@ class ChoetlBatchReader(DataSourceReader):
 
 
 class ChoetlStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema):
         self._dir = options["path"]
         self._batch_rows = int(options.get("batch_rows", 8192))
         self._target = int(options.get("target_split_bytes", 128 << 20))
@@ -754,6 +783,7 @@ class ChoetlStreamReader(DataSourceStreamReader):
             options.get("skip_change_commits", "false")
         ).lower() in ("true", "1")
         self._items = _manifest_columns(self._dir)
+        self._out_schema = _out_schema(self._items, schema)
 
     def initialOffset(self):  # noqa: N802
         return {"seq": self._start}
@@ -804,7 +834,9 @@ class ChoetlStreamReader(DataSourceStreamReader):
     def read(self, partition: StoreSplit):
         if partition is None:
             return  # empty epoch range planned [] -> Spark sends None
-        yield from _decode_split(partition, self._items, self._batch_rows)
+        yield from _decode_split(
+            partition, self._items, self._batch_rows, self._out_schema
+        )
 
     def commit(self, end):
         pass
@@ -825,13 +857,6 @@ class _TaskResult(WriterCommitMessage):
     parts: list  # [(part_id, n_rows, raw, enc, n_chunks, codec_map, fp)]
     dtypes: dict  # column -> storage dtype string observed by the task
 
-
-_STORAGE_FROM_SPARK = {
-    "boolean": "bool", "byte": "int8", "short": "int16",
-    "integer": "int32", "long": "int64", "float": "float32",
-    "double": "float64", "string": "string", "binary": "binary",
-    "date": "date32",
-}
 
 _LEDGER_PA_SCHEMA = pa.schema(
     [
@@ -855,16 +880,16 @@ def _schema_manifest_fallback(schema, tz: str) -> dict:
     out = {}
     for f in schema.fields:
         t = f.dataType.typeName()
-        if t in _STORAGE_FROM_SPARK:
-            out[f.name] = {"dtype": _STORAGE_FROM_SPARK[t], "logical": None}
+        if t in _SPARK_TO_STORAGE:
+            out[f.name] = {"dtype": _SPARK_TO_STORAGE[t], "logical": None}
         elif t == "timestamp":
             out[f.name] = {"dtype": f"timestamp[us][{tz}]", "logical": None}
         elif t == "timestamp_ntz":
             out[f.name] = {"dtype": "timestamp[us]", "logical": None}
         elif t == "array" and (
-            f.dataType.elementType.typeName() in _STORAGE_FROM_SPARK
+            f.dataType.elementType.typeName() in _SPARK_TO_STORAGE
         ):
-            inner = _STORAGE_FROM_SPARK[f.dataType.elementType.typeName()]
+            inner = _SPARK_TO_STORAGE[f.dataType.elementType.typeName()]
             out[f.name] = {"dtype": f"list[{inner}]", "logical": None}
         else:
             raise NotImplementedError(
@@ -1096,10 +1121,10 @@ class ChoetlDataSource(DataSource):
         )
 
     def reader(self, schema) -> ChoetlBatchReader:
-        return ChoetlBatchReader(self.options)
+        return ChoetlBatchReader(self.options, schema)
 
     def streamReader(self, schema) -> ChoetlStreamReader:  # noqa: N802
-        return ChoetlStreamReader(self.options)
+        return ChoetlStreamReader(self.options, schema)
 
     def writer(self, schema, overwrite: bool) -> ChoetlWriter:
         return ChoetlWriter(self.options, schema, overwrite)

@@ -21,8 +21,9 @@ row_start), columns reassembled per logical partition, and batches
 re-emitted — the analog of ChoParquetRecordReader.Unpack
 (ChoParquetRecordReader.cs:154-179), but columnar end-to-end.
 
-Everything row-wise happens inside Arrow batches; there is no per-row
-Python on either path.
+Everything row-wise happens inside Arrow batches; the only per-row
+Python is the decode-side JSON restore of nested columns (which are
+stored as JSON strings).
 """
 
 from __future__ import annotations
@@ -371,11 +372,11 @@ def _nested_columns(df: DataFrame) -> dict[str, str]:
     """Columns whose Spark type the codec layer does not store natively
     -> their DDL. These ride as JSON strings (the reference's own
     fallback: any complex value JSON-serializes on write,
-    ChoParquetRecordWriter.cs:128-137) and decode restores the type with
-    from_json. NaN/Infinity inside nested floats are not JSON-portable —
-    the one documented fidelity limit of this path. array<numeric>
-    columns are exempt: they store natively via the veclist codec
-    (which also keeps float NaN/Inf bit-exact)."""
+    ChoParquetRecordWriter.cs:128-137) and the decode kernel restores the
+    type (:func:`_conform`). NaN/Infinity inside nested floats are not
+    JSON-portable — the one documented fidelity limit of this path.
+    array<numeric> columns are exempt: they store natively via the
+    veclist codec (which also keeps float NaN/Inf bit-exact)."""
     out = {}
     for f in df.schema.fields:
         if f.dataType.typeName() not in _SIMPLE_SPARK_TYPES and not (
@@ -713,11 +714,101 @@ def _meta_storage_type(meta: dict) -> pa.DataType:
     return str_to_type(child["dtype"])
 
 
-def encoded_column_types(enc_df: DataFrame) -> dict[str, pa.DataType]:
-    """Recover source column STORAGE types from chunk metas."""
-    return {
-        c: _meta_storage_type(m) for c, m in _column_metas(enc_df).items()
-    }
+def logical_arrow_type(ddl: str) -> pa.DataType:
+    """Arrow type of a nested/decimal column's logical Spark DDL (the
+    ``logical`` manifest entry). Driver-side: parsing DDL needs the JVM."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_type(_parse_datatype_string(ddl))
+
+
+def _json_converter(t: pa.DataType):
+    """Python value parsed from Spark's ``to_json`` output -> a value
+    ``pa.array(..., t)`` accepts. JSON has no timestamps, dates,
+    decimals, bytes or non-string map keys, so those leaves convert
+    here; everything else passes through."""
+    import base64
+    import datetime as _dt
+    from decimal import Decimal
+
+    if pa.types.is_struct(t):
+        fields = [(f.name, _json_converter(f.type)) for f in t]
+        conv = lambda v: {n: c(v.get(n)) for n, c in fields}  # noqa: E731
+    elif pa.types.is_map(t):
+        kc, vc = _json_converter(t.key_type), _json_converter(t.item_type)
+        conv = lambda v: [(kc(k), vc(x)) for k, x in v.items()]  # noqa: E731
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
+        ec = _json_converter(t.value_type)
+        conv = lambda v: [ec(x) for x in v]  # noqa: E731
+    elif pa.types.is_timestamp(t):
+        conv = _dt.datetime.fromisoformat
+    elif pa.types.is_date(t):
+        conv = _dt.date.fromisoformat
+    elif pa.types.is_decimal(t):
+        conv = lambda v: Decimal(str(v))  # noqa: E731
+    elif pa.types.is_integer(t):
+        conv = int  # map keys arrive as JSON strings
+    elif pa.types.is_floating(t):
+        conv = float  # also parses Spark's quoted "NaN"/"Infinity"
+    elif pa.types.is_boolean(t):
+        conv = lambda v: v is True or v == "true"  # noqa: E731
+    elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        conv = base64.b64decode
+    else:
+        return lambda v: v
+    return lambda v: None if v is None else conv(v)
+
+
+def _conform(arr: pa.Array, t: pa.DataType) -> pa.Array:
+    """A decoded chunk in its output type ``t``. Nested/decimal columns
+    are stored as strings: nested ones via ``to_json``, restored here by
+    a recursive JSON parse; the others via ``cast(string)``, restored by
+    an Arrow cast — the same cast that widens a promoted column."""
+    if arr.type == t:
+        return arr
+    if pa.types.is_null(t):
+        return pa.nulls(len(arr), t)
+    nested = (
+        pa.types.is_struct(t) or pa.types.is_map(t)
+        or pa.types.is_list(t) or pa.types.is_large_list(t)
+    )
+    stored_json = pa.types.is_string(arr.type) or pa.types.is_large_string(
+        arr.type
+    )
+    if not (nested and stored_json):
+        return arr.cast(t)
+    from decimal import Decimal
+
+    conv = _json_converter(t)
+    return pa.array(
+        [
+            None if s is None else conv(json.loads(s, parse_float=Decimal))
+            for s in arr.to_pylist()
+        ],
+        type=t,
+    )
+
+
+def _checked_rows(arr: pa.Array, n_rows, part, name: str, start) -> pa.Array:
+    """Integrity gate: a decoded chunk must hold exactly its ``n_rows``
+    (a truncated or corrupt payload can otherwise decode short)."""
+    if n_rows is not None and len(arr) != n_rows:
+        raise ValueError(
+            f"part {part} column {name!r} chunk at row_start {start}: "
+            f"decoded {len(arr)} rows, expected {n_rows}"
+        )
+    return arr
+
+
+def _kernel_schema(out_schema: pa.Schema, with_pos: bool) -> pa.Schema:
+    """A decode kernel's output schema: ``with_pos`` prepends each row's
+    ``(_part_id, _row_pos)`` coordinates."""
+    if not with_pos:
+        return out_schema
+    return pa.schema(
+        [("_part_id", pa.int64()), ("_row_pos", pa.int64()), *out_schema]
+    )
 
 
 def _make_decode_kernel(
@@ -726,16 +817,7 @@ def _make_decode_kernel(
     batch_rows: int,
     with_pos: bool = False,
 ):
-    if with_pos:
-        full_schema = pa.schema(
-            [
-                ("_part_id", pa.int64()),
-                ("_row_pos", pa.int64()),
-                *out_schema,
-            ]
-        )
-    else:
-        full_schema = out_schema
+    full_schema = _kernel_schema(out_schema, with_pos)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
@@ -776,10 +858,11 @@ def _make_decode_kernel(
                 tgt = out_schema.field(name).type
                 arr = (
                     pa.concat_arrays(
-                        # type widening (manifest promoted after these
-                        # chunks were written): cast each piece BEFORE
-                        # concat — mixed-dtype concat raises
-                        [a if a.type == tgt else a.cast(tgt) for _, a in pieces]
+                        # conform each piece BEFORE concat: type widening
+                        # (manifest promoted after these chunks were
+                        # written) leaves mixed dtypes, and nested/decimal
+                        # columns restore from their storage strings
+                        [_conform(a, tgt) for _, a in pieces]
                     )
                     if pieces
                     else pa.nulls(n, type=tgt)
@@ -807,12 +890,14 @@ def _make_decode_kernel(
             payloads = batch.column(2)  # payload
             metas = batch.column(3).to_pylist()  # meta
             starts = batch.column(4).to_pylist()  # row_start
+            nrows = batch.column(5).to_pylist()  # n_rows
             for i in range(len(pids)):
                 if pids[i] != cur_part:
                     yield from flush()
                     cur_part = pids[i]
-                arr = decode_array(
-                    payloads[i].as_py(), json.loads(metas[i])
+                arr = _checked_rows(
+                    decode_array(payloads[i].as_py(), json.loads(metas[i])),
+                    nrows[i], cur_part, names[i], starts[i],
                 )
                 acc.setdefault(names[i], []).append((starts[i], arr))
         yield from flush()
@@ -910,7 +995,11 @@ def _eval_chunk_mask(
     from choetl_spark.codecs.base import unpack_uints
 
     def eval_values(arr: pa.Array) -> "np.ndarray":
-        vals = list(op[1]) if op[0] == "in" else [op[1], op[2]]
+        vals = (
+            list(op[1])
+            if op[0] == "in"
+            else [v for v in op[1:] if v is not None]  # None = open end
+        )
         if not _pushdown_values_compatible(vals, arr.type):
             # a cross-family coercion (int bounds on a string column,
             # naive datetimes against a non-UTC store, ...) can be
@@ -923,12 +1012,14 @@ def _eval_chunk_mask(
             vs = pa.array(vals).cast(arr.type)
             m = pa.compute.is_in(arr, value_set=vs)
         elif op[0] == "range":
-            lo = pa.scalar(op[1]).cast(arr.type)
-            hi = pa.scalar(op[2]).cast(arr.type)
-            m = pa.compute.and_kleene(
-                pa.compute.greater_equal(arr, lo),
-                pa.compute.less_equal(arr, hi),
-            )
+            m = None
+            for bound, cmp in (
+                (op[1], pa.compute.greater_equal),
+                (op[2], pa.compute.less_equal),
+            ):
+                if bound is not None:
+                    c = cmp(arr, pa.scalar(bound).cast(arr.type))
+                    m = c if m is None else pa.compute.and_kleene(m, c)
         else:  # pragma: no cover - spec built by scan_encoded
             raise ValueError(f"unknown pushdown op {op[0]!r}")
         return np.asarray(pa.compute.fill_null(m, False))
@@ -975,8 +1066,6 @@ def _eval_chunk_mask(
             raise ValueError("mask length != chunk n_rows")
         return mask
     except Exception:
-        import numpy as np  # local, mirrors top of function
-
         n = n_rows if n_rows is not None else (meta.get("n") or 0)
         if not n and meta.get("codec") == "zstd":
             n = (meta.get("child") or {}).get("n", 0)
@@ -1005,16 +1094,7 @@ def _make_filtered_decode_kernel(
     input partition); masks are SUPERSETS, the caller's residual filter
     restores exact semantics.
     """
-    if with_pos:
-        full_schema = pa.schema(
-            [
-                ("_part_id", pa.int64()),
-                ("_row_pos", pa.int64()),
-                *out_schema,
-            ]
-        )
-    else:
-        full_schema = out_schema
+    full_schema = _kernel_schema(out_schema, with_pos)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
@@ -1091,6 +1171,7 @@ def _make_filtered_decode_kernel(
                     arr = decoded_cache.pop((name, start), None)
                     if arr is None:
                         arr = decode_array(payload, json.loads(meta))
+                    _checked_rows(arr, n_rows, cur_part, name, start)
                     idx = matched[lo:hi] - start
                     vals.append(arr.take(pa.array(idx)))
                     got += hi - lo
@@ -1101,11 +1182,9 @@ def _make_filtered_decode_kernel(
                     )
                 tgt = out_schema.field(name).type
                 arr = (
-                    # cast pieces BEFORE concat: type widening can leave
-                    # this partition with mixed-dtype chunks
-                    pa.concat_arrays(
-                        [v if v.type == tgt else v.cast(tgt) for v in vals]
-                    )
+                    # conform pieces BEFORE concat (widening, logical
+                    # restore — see the plain kernel)
+                    pa.concat_arrays([_conform(v, tgt) for v in vals])
                     if vals
                     else pa.nulls(0, type=tgt)
                 )
@@ -1157,7 +1236,7 @@ def decode_dataframe(
     ``with_pos=True`` prepends ``(_part_id, _row_pos)`` — each row's
     logical partition and its exact global offset within it (from the
     chunks' ``row_start``) — the coordinates row-level delete tombstones
-    and the late-materialization fetch pass address rows by.
+    address rows by.
 
     ``pushdown`` pushes simple predicates INTO the decode kernel —
     ``{col: ("in", [v, ...])}`` / ``{col: ("range", lo, hi)}`` — which
@@ -1190,6 +1269,12 @@ def decode_dataframe(
     small aggregate over the chunk metadata (a full metadata pass at
     scale — pass the manifest on hot paths).
 
+    Nested/decimal ("logical") columns are stored as JSON/cast strings
+    and come back in their logical Spark type: the decode kernel itself
+    restores them (:func:`_conform`), so the plan has no
+    JVM-side ``from_json``/``cast`` step and every reader sharing the
+    kernel — ``format("choetl")`` included — returns the same values.
+
     Schema evolution: a column a later ingest run ADDED decodes as NULL
     in partitions encoded before it existed. Caveat: when EVERY
     requested column is late-added, those old partitions contribute no
@@ -1215,9 +1300,14 @@ def decode_dataframe(
     missing = [c for c in scan_cols if c not in types]
     if missing:
         raise KeyError(f"columns not in encoded table: {missing}")
-    out_schema = pa.schema([(c, types[c]) for c in cols])
+    out_schema = pa.schema(
+        [
+            (c, logical_arrow_type(logicals[c]) if logicals[c] else types[c])
+            for c in cols
+        ]
+    )
     ddl = ", ".join(
-        f"`{c}` {_spark_type_ddl(types[c])}" for c in cols
+        f"`{c}` {logicals[c] or _spark_type_ddl(types[c])}" for c in cols
     )
     if with_pos:
         if "_part_id" in cols or "_row_pos" in cols:
@@ -1250,18 +1340,7 @@ def decode_dataframe(
         kernel = _make_decode_kernel(
             cols, out_schema, batch_rows, with_pos=with_pos
         )
-    decoded = shuffled.mapInArrow(kernel, ddl)
-    # restore nested logical types from their JSON-string storage form
-    restores = {}
-    for c in cols:
-        ddl_l = logicals.get(c)
-        if not ddl_l:
-            continue
-        if ddl_l.startswith(("array<", "map<", "struct<")):
-            restores[c] = F.from_json(F.col(c), ddl_l)
-        else:
-            restores[c] = F.col(c).cast(ddl_l)
-    return decoded.withColumns(restores) if restores else decoded
+    return shuffled.mapInArrow(kernel, ddl)
 
 
 def _spark_type_ddl(t: pa.DataType) -> str:
@@ -1396,7 +1475,7 @@ def prune_partitions_by_bloom(
     Bloom pruning entirely and returns ``enc_df`` unchanged — each
     probed value adds k nested bit-test expressions, so an unbounded
     IN-list would blow up the Catalyst expression tree / codegen method
-    size (same cap-and-skip fallback as ``lookup.point_lookup``); the
+    size (the same cap ``scan_encoded`` applies to its chunk probe); the
     caller's residual filter keeps semantics exact either way.
     """
     vals = (
@@ -1437,13 +1516,14 @@ def bloom_probe_frame(
     ``value`` (missing/legacy blooms answer True — over-keep, never
     over-skip). Chunk-granular, fully JVM-side — the shared probe
     behind partition pruning (:func:`prune_partitions_by_bloom`) and
-    the late-materialization point lookup (:mod:`choetl_spark.lookup`),
-    which keeps only the hit CHUNKS of the key column.
+    ``scan_encoded``'s chunk pruning, which keeps only the hit CHUNKS
+    of the predicate column. (``format("choetl")`` probes the same
+    Blooms task-side with :func:`choetl_spark.bloom.bloom_maybe_contains`.)
 
     ``value`` may be a list/tuple/set (batch lookup): ``_bloom_hit``
     then means "may contain ANY of the values" — each value adds
     ``min(k, 8)`` bit-test expressions, so callers cap the batch size
-    (the lookup module falls back to no chunk pruning past its cap)."""
+    (``scan_encoded`` skips chunk pruning past 32 values)."""
     from choetl_spark.bloom import _hash_value
 
     values = (

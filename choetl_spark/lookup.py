@@ -1,212 +1,32 @@
-"""Late-materialization point lookups over the encoded store.
+"""Point lookups over the encoded store: a front-end over
+``spark.read.format("choetl")``.
 
-``scan_encoded`` prunes at PARTITION granularity and then decodes every
-surviving partition's chunks for all requested columns — for a point
-lookup (``url = X``) on a 10^12-document store that is still a lot of
-work: the partition holding X decodes all of its text/html chunk
-payloads to return one row. This module is the columnar-DBMS "late
-materialization" pattern (Abadi et al., "Materialization Strategies in
-a Column-Oriented DBMS", ICDE 2007 — public work) over our chunk
-table:
+A point lookup (``url = X``, or a batch ``url IN (...)``) is a filtered
+read of the store, and the ``choetl`` reader already does the work the
+lookup needs (see :mod:`choetl_spark.datasource`):
 
-1. **key pass** — prune partitions by the key column's Blooms, then go
-   CHUNK-granular: keep only the key chunks whose Bloom may contain the
-   probe (chunks decode independently, so no cross-column alignment is
-   needed yet), decode just those with their global row positions
-   (``row_start + offset``), and filter ``key == value`` exactly;
-2. **fetch pass** — for each requested column, read ONLY the chunks
-   whose ``[row_start, row_start + n_rows)`` range covers a matching
-   position (a broadcast range-semi-join against the tiny match set),
-   decode those, keep the matching positions, and stitch the columns
-   back together on ``(part_id, row_pos)``.
+- **chunk-granular Bloom skipping** — key-column chunks whose Bloom
+  filter excludes every probe value are dropped from the chunk
+  metadata before any payload is read, and a split with no surviving
+  key chunk reads no payload at all;
+- **late materialization** — the engine's filtered decode kernel
+  evaluates the key predicate over the surviving key chunks, decodes
+  the other columns only for chunks that cover a matching row, and
+  ships only the matching rows to the JVM (Abadi et al.,
+  "Materialization Strategies in a Column-Oriented DBMS", ICDE 2007);
+- positional and equality deletes, time travel (``as_of``), renamed
+  columns and late-added (null) columns, exactly as every other read.
 
-Cost at scale: O(Bloom-hit key chunks) decoded + O(matches) value
-chunks fetched, instead of O(all chunks of surviving partitions × all
-requested columns). For a wide store with multi-MB html/text chunk
-payloads that is the difference between a point READ and a partition
-SCAN. The reference's closest analog is Parquet.Net row-group
+So the lookup is one filtered ``format("choetl")`` read, collected in
+one pass. The reference's closest analog is Parquet.Net row-group
 stats+bloom skipping inside ChoParquetReader's ignored-field pruning
-(reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137);
-neither reads less than a full row group per matching row.
-
-Row positions are exact because every chunk row carries ``row_start``
-(its global offset within the logical partition) and decode order
-inside a chunk is the encode order — the same alignment contract the
-multi-column decode path relies on.
+(reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137).
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from choetl_spark.codecs import decode_array
-from choetl_spark.codecs.base import str_to_type
-from choetl_spark.engine import (
-    _column_metas,
-    _meta_storage_type,
-    _spark_type_ddl,
-    bloom_probe_frame,
-    prune_partitions_by_bloom,
-)
-from choetl_spark.ledger import manifest_as_of, read_encoded, read_manifest
-
-
-def _make_pos_kernel(name: str, out_type: pa.DataType):
-    """Decode chunk rows to (part_id, row_pos, value) — chunk-wise
-    independent, so the plan needs NO shuffle and no per-partition
-    grouping. The Python loop is per CHUNK (metadata rows), never per
-    value row."""
-
-    schema = pa.schema(
-        [
-            ("part_id", pa.int64()),
-            ("row_pos", pa.int64()),
-            (name, out_type),
-        ]
-    )
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pids = batch.column(0).to_pylist()
-            starts = batch.column(1).to_pylist()
-            payloads = batch.column(2)
-            metas = batch.column(3).to_pylist()
-            for i in range(len(pids)):
-                arr = decode_array(payloads[i].as_py(), json.loads(metas[i]))
-                n = len(arr)
-                if arr.type != out_type:
-                    arr = arr.cast(out_type)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.full(n, pids[i], dtype=np.int64),
-                            type=pa.int64(),
-                        ),
-                        pa.array(
-                            starts[i] + np.arange(n, dtype=np.int64),
-                            type=pa.int64(),
-                        ),
-                        arr,
-                    ],
-                    schema=schema,
-                )
-
-    return kernel
-
-
-def decode_chunks_with_pos(
-    chunks: DataFrame, column: str, dtype: pa.DataType, logical: str | None
-) -> DataFrame:
-    """Decode an arbitrary SUBSET of one column's chunk rows to
-    ``(part_id, row_pos, <column>)``. Unlike ``decode_dataframe`` this
-    needs no complete partitions and no alignment — any chunk set is
-    valid — which is what makes chunk-granular pruning sound."""
-    ddl = f"part_id long, row_pos long, `{column}` {_spark_type_ddl(dtype)}"
-    out = chunks.select("part_id", "row_start", "payload", "meta").mapInArrow(
-        _make_pos_kernel(column, dtype), ddl
-    )
-    if logical:
-        if logical.startswith(("array<", "map<", "struct<")):
-            out = out.withColumn(column, F.from_json(F.col(column), logical))
-        else:
-            out = out.withColumn(column, F.col(column).cast(logical))
-    return out
-
-
-def _make_fetch_kernel(
-    positions_by_part: dict[int, list[int]],
-    columns: list[str],
-    types: dict[str, pa.DataType],
-):
-    """Assemble the matched rows from an arbitrary chunk SUBSET in one
-    pass: for each partition, take each column's values at the target
-    positions (``arr.take(pos - row_start)`` per covering chunk) and
-    align them on the sorted position list. Positions ride in the
-    closure (bounded by ``max_matches``), so the kernel needs no join
-    — one Python stage for the whole fetch, however many columns.
-    A position no chunk covers (late-added column in an old partition)
-    yields null, matching ``decode_dataframe``'s null-fill."""
-    schema = pa.schema(
-        [
-            ("part_id", pa.int64()),
-            ("row_pos", pa.int64()),
-            *[(c, types[c]) for c in columns],
-        ]
-    )
-    targets = {
-        int(p): np.sort(np.asarray(pos, dtype=np.int64))
-        for p, pos in positions_by_part.items()
-    }
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cur: int | None = None
-        acc: dict[str, list] = {}
-
-        def flush() -> Iterator[pa.RecordBatch]:
-            nonlocal acc
-            if cur is None:
-                return
-            tgt = targets[int(cur)]
-            n = len(tgt)
-            cols = []
-            for name in columns:
-                pieces = acc.get(name, [])
-                if not pieces:
-                    cols.append(pa.nulls(n, type=types[name]))
-                    continue
-                vals = pa.concat_arrays(
-                    [v.cast(types[name]) for _, v in pieces]
-                )
-                pos = np.concatenate([p for p, _ in pieces])
-                # scatter piece values into target order; uncovered
-                # slots stay null (masked take)
-                slot = np.full(n, 0, dtype=np.int64)
-                mask = np.ones(n, dtype=bool)
-                at = np.searchsorted(tgt, pos)
-                slot[at] = np.arange(len(pos), dtype=np.int64)
-                mask[at] = False
-                cols.append(vals.take(pa.array(slot, mask=mask)))
-            acc = {}
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.full(n, cur, dtype=np.int64)),
-                    pa.array(tgt),
-                    *cols,
-                ],
-                schema=schema,
-            )
-
-        for batch in batches:
-            pids = batch.column(0).to_pylist()
-            names = batch.column(1).to_pylist()
-            starts = batch.column(2).to_pylist()
-            payloads = batch.column(3)
-            metas = batch.column(4).to_pylist()
-            for i in range(len(pids)):
-                if pids[i] != cur:
-                    yield from flush()
-                    cur = pids[i]
-                tgt = targets[int(cur)]
-                arr = decode_array(payloads[i].as_py(), json.loads(metas[i]))
-                lo = int(np.searchsorted(tgt, starts[i], side="left"))
-                hi = int(
-                    np.searchsorted(tgt, starts[i] + len(arr), side="left")
-                )
-                if hi <= lo:
-                    continue  # chunk covers no target position
-                idx = tgt[lo:hi] - starts[i]
-                acc.setdefault(names[i], []).append(
-                    (tgt[lo:hi], arr.take(pa.array(idx)))
-                )
-        yield from flush()
-
-    return kernel
+from pyspark.sql.types import StructType
 
 
 def point_lookup(
@@ -217,135 +37,52 @@ def point_lookup(
     columns: list[str],
     as_of: int | None = None,
     max_matches: int = 100_000,
-    bloom_probe_cap: int = 32,
 ) -> DataFrame:
     """Fetch ``columns`` of the rows where ``key == value`` (or
     ``key IN value`` for a list — the batch shape a decontamination or
-    sample-inspection pass needs) from an encoded store, decoding only
-    the chunks the lookup actually needs (module docstring has the
-    two-pass shape). ``key`` should be a ``EncodeConfig.bloom_columns``
-    column — without blooms, or for batches larger than
-    ``bloom_probe_cap`` (each probed value adds k bit-test expressions
-    to the chunk-metadata filter), the key pass degrades gracefully to
-    decoding every key chunk of every partition (still never the
-    payload columns — that is the bulk of the late-materialization win).
+    sample-inspection pass needs). ``key`` should be a
+    ``EncodeConfig.bloom_columns`` column so most key chunks are
+    skipped unread; any other key (an int column, a column without
+    Blooms) still reads exactly, decoding every key chunk but never
+    the other columns' chunks that hold no match.
 
-    Eager at the match step: the matching ``(part_id, row_pos)`` set is
-    collected to the driver (a point lookup matches few rows by
-    definition; ``max_matches`` guards against misuse — a predicate
-    matching more than that belongs in ``scan_encoded``). ``as_of``
-    time-travels to a ledger epoch.
+    Eager: at most ``max_matches + 1`` matching rows are collected to
+    the driver in one pass and returned as a local DataFrame (Spark's
+    limit collect runs one job per round of splits it scans — one for a
+    single-split store). A point lookup matches few rows by definition;
+    ``max_matches`` guards against misuse — a predicate matching more
+    than that belongs in ``scan_encoded``.
+    ``as_of`` time-travels to a ledger epoch.
     """
+    from choetl_spark.datasource import register
+
     values = (
         list(value) if isinstance(value, (list, tuple, set)) else [value]
     )
-    enc = read_encoded(spark, out_dir, as_of=as_of)
-    # snapshot-scoped schema: key/column names resolve against the
-    # epoch's schema under as_of (manifest_as_of)
-    manifest = manifest_as_of(read_manifest(out_dir), as_of)
-    if manifest is not None:
-        items = [
-            (c, m) for c, m in manifest.items() if not c.startswith("_")
-        ]  # skip metadata sections (_dropped) kept by schema evolution
-        types = {c: str_to_type(m["dtype"]) for c, m in items}
-        logicals = {c: m.get("logical") for c, m in items}
-    else:
-        metas = _column_metas(enc)
-        types = {c: _meta_storage_type(m) for c, m in metas.items()}
-        logicals = {c: m.get("logical") for c, m in metas.items()}
-    missing = [c for c in [key, *columns] if c not in types]
+    sources = spark._jsparkSession.sessionState().dataSourceManager()
+    if not sources.dataSourceExists("choetl"):
+        register(spark)
+    reader = spark.read.format("choetl")
+    if as_of is not None:
+        reader = reader.option("as_of", int(as_of))
+    store = reader.load(out_dir)
+    missing = [c for c in [key, *columns] if c not in store.columns]
     if missing:
         raise KeyError(f"columns not in encoded store: {missing}")
-    out_ddl = ", ".join(
-        f"`{c}` {logicals.get(c) or _spark_type_ddl(types[c])}"
-        for c in columns
-    )
+    schema = StructType([store.schema[c] for c in columns])
     if not values:
-        return spark.createDataFrame([], out_ddl)
-
-    # -- key pass: partition prune, then CHUNK-granular bloom prune ----
-    from choetl_spark.engine import bloom_probeable
-
-    if len(values) <= bloom_probe_cap and bloom_probeable(values):
-        enc_k = prune_partitions_by_bloom(enc, key, values)
-        key_chunks = bloom_probe_frame(enc_k, key, values).filter(
-            "_bloom_hit"
-        )
-    else:
-        # past the cap — or a non-str/bytes key (int/timestamp) no
-        # stored bloom can answer — fall back to the full key-column
-        # decode; the exact isin() below keeps semantics
-        key_chunks = enc.filter(F.col("column") == key)
-    keyed = decode_chunks_with_pos(
-        key_chunks, key, types[key], logicals.get(key)
+        return spark.createDataFrame([], schema)
+    # Arrow both ways: no Python-object round trip (timestamps stay
+    # UTC instants) and no Python worker to rebuild the DataFrame
+    rows = (
+        store.filter(F.col(key).isin(values))
+        .select(*columns)
+        .limit(max_matches + 1)
+        .toArrow()
     )
-    hits = keyed.filter(F.col(key).isin(values)).select("part_id", "row_pos")
-    # merge-on-read: rows tombstoned by delete_where (at or before the
-    # as_of epoch) must not surface — anti-join BEFORE the fetch pass so
-    # deleted rows also cost nothing to materialize
-    from choetl_spark.eqdeletes import all_delete_positions
-
-    tombstones = all_delete_positions(spark, out_dir, as_of=as_of)
-    if tombstones is not None:
-        hits = hits.join(
-            F.broadcast(tombstones), ["part_id", "row_pos"], "left_anti"
-        )
-    matches = hits.limit(max_matches + 1).collect()
-    if len(matches) > max_matches:
+    if rows.num_rows > max_matches:
         raise ValueError(
             f"point_lookup matched more than max_matches={max_matches} "
             f"rows for {key!r}; use scan_encoded for wide predicates"
         )
-    if not matches:
-        return spark.createDataFrame([], out_ddl)
-    positions: dict[int, list[int]] = {}
-    for r in matches:
-        positions.setdefault(int(r["part_id"]), []).append(int(r["row_pos"]))
-    m = F.broadcast(
-        spark.createDataFrame(matches, "part_id long, row_pos long")
-    )
-
-    # -- fetch pass: only chunks whose row range covers a match, ALL
-    # requested columns in one broadcast range-semi-join + one
-    # position-aware kernel (the match positions ride in the closure,
-    # so no per-column joins — one Python stage total) ----------------
-    ch = enc.filter(F.col("column").isin(list(columns))).alias("ch")
-    sel = ch.join(
-        m.alias("m"),
-        (F.col("ch.part_id") == F.col("m.part_id"))
-        & (F.col("m.row_pos") >= F.col("ch.row_start"))
-        & (F.col("m.row_pos") < F.col("ch.row_start") + F.col("ch.n_rows")),
-        "semi",
-    )
-    fetch_ddl = "part_id long, row_pos long, " + ", ".join(
-        f"`{c}` {_spark_type_ddl(types[c])}" for c in columns
-    )
-    fetched = (
-        sel.select("part_id", "column", "row_start", "payload", "meta")
-        # the selected chunk set is tiny (covers <= max_matches rows);
-        # one small exchange co-locates each partition's chunks for the
-        # grouped kernel
-        .repartition(1 + len(positions) // 64, "part_id")
-        .sortWithinPartitions("part_id")
-        .mapInArrow(
-            _make_fetch_kernel(positions, list(columns), types), fetch_ddl
-        )
-    )
-    # a matched row whose partition has NO chunk of ANY requested
-    # column (every requested column late-added after that partition
-    # was written) never reaches the kernel — left-joining the match
-    # coordinates back restores decode_dataframe's null-fill semantics
-    # (two <= max_matches-row frames, broadcast join, no extra action)
-    fetched = m.join(fetched, ["part_id", "row_pos"], "left")
-    restores = {}
-    for c in columns:
-        ddl_l = logicals.get(c)
-        if not ddl_l:
-            continue
-        if ddl_l.startswith(("array<", "map<", "struct<")):
-            restores[c] = F.from_json(F.col(c), ddl_l)
-        else:
-            restores[c] = F.col(c).cast(ddl_l)
-    if restores:
-        fetched = fetched.withColumns(restores)
-    return fetched.select(*columns)
+    return spark.createDataFrame(rows, schema)

@@ -15,8 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from choetl_spark.datasource import (
-    _apply_masks,
-    _compile_masks,
+    _bloom_kept,
+    _pushdown_spec,
     register,
 )
 from choetl_spark.deletes import delete_where
@@ -157,20 +157,25 @@ def test_writer_rejects_caller_part_id(ds_spark, tmp_path):
         )
 
 
-def test_out_of_range_in_mask_is_skipped():
-    import pyarrow as pa
+def _chunk_mask(arr: pa.Array, op: tuple, codec: str = "auto"):
+    from choetl_spark.codecs import encode_array
+    from choetl_spark.engine import _eval_chunk_mask
 
-    from pyspark.sql.datasource import In
+    payload, meta = encode_array(arr, codec=codec)
+    return _eval_chunk_mask(payload, meta, op, n_rows=len(arr)).tolist()
+
+
+def test_out_of_range_in_mask_is_skipped():
+    from pyspark.sql.datasource import GreaterThan, In
 
     items = [("i", {"dtype": "int8"})]
-    _, masks = _compile_masks([In(("i",), (300, 1))], items)
-    assert masks == []  # 300 cannot build an int8 value set -> skipped
-    # range comparisons promote safely in Arrow (exact all-False here);
-    # the apply-time guard only matters if a kernel refuses — either
-    # way the call must not kill the task
-    batch = pa.record_batch({"i": pa.array([1, 2], pa.int8())})
-    out = _apply_masks(batch, [("gt", "i", 3000)])
-    assert len(out) == 0  # exact: nothing exceeds 3000
+    # 300 cannot build an int8 value set -> no mask at all
+    assert _pushdown_spec([In(("i",), (300, 1))], items) == {}
+    # a range bound the storage type cannot hold keeps the whole chunk
+    # (the evaluator must never drop a row, nor kill the task)
+    spec = _pushdown_spec([GreaterThan(("i",), 3000)], items)
+    assert spec == {"i": ("range", 3000, None)}
+    assert _chunk_mask(pa.array([1, 2], pa.int8()), spec["i"]) == [True, True]
 
 
 def test_rename_is_followed(ds_spark, store):
@@ -198,38 +203,101 @@ def test_pushdown_filter_parity(ds_spark, store):
 
 
 def test_mask_units_are_exact():
-    """The task-side masks must match Spark's filter semantics exactly
-    on the families they claim (nulls drop under eq/range, stay under
-    isnull) and skip floats/timestamps entirely."""
+    """Filter -> spec translation plus the engine's chunk mask: a mask
+    never drops a row Spark's filter keeps (nulls drop under eq/range),
+    IN/EqualTo masks are exact, strict comparisons widen to inclusive
+    bounds, and floats, timestamps, null checks and nested/decimal
+    columns are never masked."""
+    from pyspark.sql.datasource import (
+        EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan,
+        LessThanOrEqual,
+    )
+
     items = [
         ("s", {"dtype": "string"}),
         ("i", {"dtype": "int64"}),
+        ("b", {"dtype": "bool"}),
         ("f", {"dtype": "float64"}),
+        ("t", {"dtype": "timestamp[us][UTC]"}),
+        ("d", {"dtype": "string", "logical": "decimal(12,2)"}),
     ]
-    from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNull
-
-    filters = [
-        EqualTo(("s",), "x"),
-        In(("i",), (1, 3)),
-        GreaterThan(("f",), 0.0),  # float: must NOT mask
+    unmasked = [
+        GreaterThan(("f",), 0.0),
+        EqualTo(("t",), 1),
         IsNull(("s",)),
+        EqualTo(("d",), "1.00"),
     ]
-    back, masks = _compile_masks(filters, items)
-    assert list(back) == filters  # everything returned for re-apply
-    ops = {m[0] for m in masks}
-    assert ops == {"eq", "in", "isnull"}
-    batch = pa.record_batch(
-        {
-            "s": pa.array(["x", None, "y"]),
-            "i": pa.array([1, 3, 2]),
-            "f": pa.array([1.0, -1.0, float("nan")]),
-        }
+    assert _pushdown_spec(unmasked, items) == {}
+    data = {
+        "s": pa.array(["x", None, "y", "x", "w"]),
+        "i": pa.array([1, 3, None, 2, 5], pa.int64()),
+        "b": pa.array([True, None, False, True, False]),
+    }
+    cases = [
+        (EqualTo(("s",), "x"), lambda v: v == "x"),
+        (In(("s",), ("y", "zz")), lambda v: v in ("y", "zz")),
+        (In(("i",), (1, 3)), lambda v: v in (1, 3)),
+        (EqualTo(("b",), True), lambda v: v is True),
+        (GreaterThan(("i",), 2), lambda v: v > 2),
+        (GreaterThanOrEqual(("s",), "x"), lambda v: v >= "x"),
+        (LessThan(("i",), 3), lambda v: v < 3),
+        (LessThanOrEqual(("s",), "x"), lambda v: v <= "x"),
+    ]
+    for f, keeps in cases:
+        (col, op), = _pushdown_spec([f], items).items()
+        assert col == f.attribute[0]
+        spark_keeps = [
+            v is not None and keeps(v) for v in data[col].to_pylist()
+        ]
+        for codec in ("auto", "plain", "dict"):
+            if codec == "dict" and col == "b":
+                continue
+            mask = _chunk_mask(data[col], op, codec)
+            dropped = [k and not m for m, k in zip(mask, spark_keeps)]
+            assert not any(dropped), (f, codec)
+            if op[0] == "in":
+                assert mask == spark_keeps, (f, codec)
+    # ranges on one column merge; an IN on the column beats the range
+    both = [GreaterThan(("i",), 1), LessThanOrEqual(("i",), 4)]
+    assert _pushdown_spec(both, items) == {"i": ("range", 1, 4)}
+    assert _pushdown_spec([*both, In(("i",), (2,))], items) == {
+        "i": ("in", [2])
+    }
+    assert _pushdown_spec(
+        [EqualTo(("s",), "x"), In(("i",), (1,))], items
+    ) == {"s": ("in", ["x"]), "i": ("in", [1])}
+
+
+def test_bloom_chunk_selection(ds_spark, tmp_path):
+    """Task-side Bloom skipping: a present url keeps fewer than half of
+    the store's url chunks (its own among them); a chunk without a
+    Bloom is always kept; chunks of other columns are never dropped."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "bstore")
+    pages = webpages(ds_spark, 600, partitions=3)
+    encode_with_resume(
+        ds_spark, pages, out,
+        EncodeConfig(**CFG, bloom_columns=("url",)), run_id="b1",
     )
-    # eq + isnull together match nothing; each alone matches exactly
-    assert len(_apply_masks(batch, [("eq", "s", "x")])) == 1
-    assert len(_apply_masks(batch, [("isnull", "s")])) == 1
-    assert len(_apply_masks(batch, [("in", "i", [1, 3])])) == 2
-    assert len(_apply_masks(batch, [("notnull", "s")])) == 2
+    chunks = pa.concat_tables(
+        pq.read_table(p, columns=["column", "stats"])
+        for p in sorted(glob.glob(os.path.join(out, "chunks", "*.parquet")))
+    )
+    names = chunks.column("column").to_pylist()
+    target = pages.select("url").orderBy("url").first()["url"]
+    kept = _bloom_kept(chunks, names, {"url": [target]})
+    url_kept = [k for n, k in zip(names, kept) if n == "url"]
+    assert 1 <= sum(url_kept) < len(url_kept) / 2
+    assert all(k for n, k in zip(names, kept) if n != "url")
+    # strip every Bloom: nothing may be skipped any more
+    bare = chunks.set_column(
+        1, "stats", pa.array(["{}"] * chunks.num_rows, pa.string())
+    )
+    assert all(_bloom_kept(bare, names, {"url": [target]}))
 
 
 def test_writer_roundtrip_append_and_overwrite(ds_spark, tmp_path):

@@ -360,3 +360,45 @@ def test_deterministic_sort_stable_with_duplicate_keys(spark):
     b = payload_map(list(reversed(rows)))
     assert a.keys() == b.keys()
     assert all(a[k] == b[k] for k in a)
+
+
+def test_decode_kernels_reject_short_chunk():
+    """A chunk that decodes to fewer rows than its ``n_rows`` is an
+    integrity error in both decode kernels, not a short partition: a
+    zstd-off rle payload cut in half decodes silently short on its
+    own, and the kernels must refuse it, naming part, column and
+    row_start."""
+    import numpy as np
+    import pyarrow as pa
+
+    from choetl_spark.codecs import decode_array, encode_array
+    from choetl_spark.engine import (
+        _make_decode_kernel,
+        _make_filtered_decode_kernel,
+    )
+
+    arr = pa.array((np.arange(5000) // 100 % 7).astype(np.int32))
+    payload, meta = encode_array(arr, codec="rle", zstd="off")
+    cut = payload[: len(payload) // 2]
+    assert 0 < len(decode_array(cut, meta)) < 5000  # short, no error
+
+    feed = pa.record_batch(
+        {
+            "part_id": pa.array([7], pa.int64()),
+            "column": ["c"],
+            "payload": pa.array([cut], pa.binary()),
+            "meta": [json.dumps(meta)],
+            "row_start": pa.array([0], pa.int64()),
+            "n_rows": pa.array([5000], pa.int64()),
+        }
+    )
+    schema = pa.schema([("c", pa.int32())])
+    kernels = [
+        _make_decode_kernel(["c"], schema, 8192),
+        _make_filtered_decode_kernel(["c"], schema, 8192, {"c": ("in", [3])}),
+    ]
+    for kernel in kernels:
+        with pytest.raises(
+            ValueError, match="part 7 column 'c' chunk at row_start 0"
+        ):
+            list(kernel(iter([feed])))

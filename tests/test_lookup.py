@@ -1,8 +1,9 @@
-"""Late-materialization point lookups (choetl_spark/lookup.py).
+"""Point lookups (choetl_spark/lookup.py), a front-end over the
+``format("choetl")`` reader.
 
-The contract: exact results (bit-identical to the source row), while
-decoding only Bloom-hit key chunks plus the value chunks covering the
-matching row positions — never a partition-wide multi-column decode.
+The contract: exact results (bit-identical to the source row) from one
+filtered read that skips key chunks by Bloom and decodes the other
+columns only where a row matches.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from choetl_spark.engine import EncodeConfig, bloom_probe_frame
 from choetl_spark.ledger import encode_with_resume, read_encoded
-from choetl_spark.lookup import decode_chunks_with_pos, point_lookup
+from choetl_spark.lookup import point_lookup
 from choetl_spark.synth import webpages
 
 
@@ -66,31 +67,28 @@ def test_point_lookup_decodes_only_bloom_hit_key_chunks(spark, store):
     assert 1 <= hit < total / 2  # few false positives at ~1-2% fp rate
 
 
-def test_point_lookup_no_shuffle_in_chunk_decode(spark, store):
-    """decode_chunks_with_pos is chunk-independent: its plan has no
-    Exchange (the whole point — a point lookup must not pay a shuffle
-    to decode a handful of chunks)."""
-    import os
-
-    import pyarrow as pa
-
-    out, _ = store
-    # plain chunk scan (the ledger commit semi-join's metadata side has
-    # its own tiny aggregate exchange; the PAYLOAD path is what must
-    # not shuffle)
-    chunks = spark.read.parquet(os.path.join(out, "chunks")).filter(
-        F.col("column") == "url"
-    )
-    plan = decode_chunks_with_pos(
-        chunks, "url", pa.large_string(), None
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+def test_point_lookup_hit_runs_at_most_two_jobs(spark, store):
+    """A hit lookup is one filtered read plus the collect of its
+    result: at most 2 Spark jobs in its job group."""
+    out, pages = store
+    row = pages.orderBy(F.desc("url")).limit(1).collect()[0]
+    sc = spark.sparkContext
+    sc.setJobGroup("point-lookup-jobs", "hit lookup")
+    try:
+        got = point_lookup(
+            spark, out, "url", row["url"], ["url", "text"]
+        ).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r["text"] for r in got] == [row["text"]]
+    jobs = sc.statusTracker().getJobIdsForGroup("point-lookup-jobs")
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_point_lookup_multi_match_and_guard(spark, store):
     """A key matching several rows returns all of them (lang has no
-    bloom — the key pass degrades to decoding every lang chunk, still
-    never a payload column); max_matches raises on wide predicates."""
+    bloom, so every lang chunk is decoded); max_matches raises on wide
+    predicates."""
     out, pages = store
     lang = pages.groupBy("lang").count().orderBy("count").limit(1).collect()[0]
     got = point_lookup(spark, out, "lang", lang["lang"], ["url", "lang"])
@@ -104,20 +102,17 @@ def test_point_lookup_multi_match_and_guard(spark, store):
 
 def test_point_lookup_batch_keys(spark, store):
     """A list value is an IN-list lookup (batch fetch): all matching
-    rows return with exact contents, via EITHER key-pass path — the
-    multi-value Bloom chunk probe (batch <= bloom_probe_cap) and the
-    no-bloom fallback (cap exceeded) must agree."""
+    rows return with exact contents, for a small batch and for a
+    40-key batch (Blooms are probed task-side, so no batch size
+    falls back to an unpruned read)."""
     out, pages = store
-    want = {
-        r["url"]: r["text"]
-        for r in pages.orderBy("url").limit(5).collect()
-    }
-    urls = list(want) + ["https://absent.example/none"]
-    for cap in (32, 2):  # bloom-probed path, then the fallback path
-        got = point_lookup(
-            spark, out, "url", urls, ["url", "text"], bloom_probe_cap=cap
-        ).collect()
-        assert {r["url"]: r["text"] for r in got} == want, cap
+    ordered = pages.orderBy("url").collect()
+    for n in (5, 40):
+        want = {r["url"]: r["text"] for r in ordered[:n]}
+        urls = list(want) + ["https://absent.example/none"]
+        got = point_lookup(spark, out, "url", urls, ["url", "text"]).collect()
+        assert len(got) == n
+        assert {r["url"]: r["text"] for r in got} == want, n
     # empty batch: empty result with the right schema, zero jobs needed
     empty = point_lookup(spark, out, "url", [], ["url", "text"])
     assert empty.count() == 0 and empty.columns == ["url", "text"]
@@ -207,9 +202,8 @@ def test_point_lookup_all_late_added_columns_emits_null_row(
 ):
     """A matched row whose partition has NO chunk of ANY requested
     column (every requested column added by a later ingest) must still
-    surface as an all-null row — decode_dataframe's null-fill contract.
-    The fetch kernel never sees chunkless partitions, so the match
-    coordinates are left-joined back."""
+    surface as an all-null row — decode_dataframe's null-fill contract
+    (the key column's chunks carry the row)."""
     out = str(tmp_path / "store_latecols")
     cfg = EncodeConfig(num_partitions=2, chunk_rows=64,
                        bloom_columns=("url",))
