@@ -256,13 +256,15 @@ def _bench_store(spark, sf_dir: str) -> dict:
 
 
 def bench_pruned_lookup(spark, sf_dir: str) -> None:
-    """Point lookup through scan_encoded: Bloom metadata prune -> decode
-    only surviving partitions -> exact filter. At sf0.1 BOTH scan
-    queries are scheduler-constant-bound (~1-2 s of fixed stages on a
-    ~0.5 GB store), so the wall-clock gap understates the mechanism —
-    the JSON's prune_evidence records partitions kept vs total (the
-    data-proportional term pruning removes; at 100 TB that term is the
-    whole scan)."""
+    """Point lookup through scan_encoded, a front-end over
+    format("choetl"): the url equality becomes a pushed filter, so the
+    reader skips Bloom-excluded url chunks unread, decodes the other
+    columns only where a url matches, and Spark re-applies the filter
+    exactly. At sf0.1 the scan queries are scheduler-constant-bound
+    (~1-2 s of fixed stages on a ~0.5 GB store), so the wall-clock gap
+    understates the mechanism — the JSON's prune_evidence records
+    partitions kept vs total (the data-proportional term pruning
+    removes; at 100 TB that term is the whole scan)."""
     from choetl_spark.ledger import scan_encoded
 
     st = _bench_store(spark, sf_dir)
@@ -276,10 +278,9 @@ def bench_point_lookup(spark, sf_dir: str) -> None:
     """Late-materialization lookup (choetl_spark/lookup.py, a filtered
     format("choetl") read): task-side Bloom skipping of key chunks, then
     the filtered decode kernel decodes the other columns only for chunks
-    covering a match. vs pruned_point_lookup (scan_encoded), which still
-    decodes every chunk of the surviving partitions for all three
-    columns. It runs one Spark job for the read plus one for the local
-    result's count, so wall clock is fixed-stage-bound and understates
+    covering a match — the same read pruned_point_lookup makes through
+    scan_encoded, collected eagerly. It runs one Spark job for the read
+    plus one for the local result's count, so wall clock is fixed-stage-bound and understates
     the mechanism — the JSON's
     key_chunks_bloom_hit / key_chunks_total ratio is the
     data-proportional term (decoded bytes), which at 10^12 docs is the
@@ -311,13 +312,16 @@ def bench_full_scan_filter(spark, sf_dir: str) -> None:
 
 
 def bench_selective_scan(spark, sf_dir: str) -> None:
-    """Range scan through the FILTERED decode kernel (predicate pushdown
-    / partition-local late materialization): a ~5% warc_ts window over
-    the salted store, where zone maps cannot prune (every partition
-    spans the whole time range) so the win is pure kernel-side — only
-    matching rows are fully decoded and shipped back to the JVM. The
-    control (selective_scan_residual) decodes everything and filters
-    after; at 10^12 rows the gap is the transfer itself."""
+    """Range scan through scan_encoded, a front-end over
+    format("choetl"): the ~5% warc_ts window over the salted store
+    becomes a pushed filter, and the reader's FILTERED decode kernel
+    masks each task's warc_ts chunks (timestamp masks take the aware
+    bounds Spark passes) before decoding the other columns — only
+    matching rows are fully decoded and shipped to the JVM. Zone maps
+    could not prune here anyway (every partition spans the whole time
+    range). The control (selective_scan_residual) decodes everything
+    through the chunk-table path and filters after; at 10^12 rows the
+    gap is the transfer itself."""
     from choetl_spark.ledger import scan_encoded
 
     st = _bench_store(spark, sf_dir)

@@ -31,23 +31,19 @@ ONE file — the store's standard crash protocol (chunks first, ledger
 second; orphans are invisible) means a failed/speculative task attempt
 can never corrupt the table.
 
-Semantics parity is pinned by tests that diff every path against the
-primary readers (``scan_encoded`` / ``read_encoded``): commit
-resolution on ``(part_id, attempt_id)``, time travel (``as_of`` /
-``ref`` options), retired-partition invisibility, schema-evolution
-renames + late-added-column nulls + type widening, positional-delete
-subtraction, EQUALITY-delete subtraction (value sets are O(deleted
-keys) — they load driver-side, ride the splits, and apply task-side
-under the data-seq < delete-seq rule; splits whose partitions all
-post-date every delete skip the probe), and WAP-staged invisibility
-all behave identically. Nested/decimal ("logical") columns read back
-in their logical type: the shared decode kernel restores their
-JSON/cast storage strings.
-
-One scope guard remains: equality deletes whose key column was DROPPED
-after the delete raise with a pointer to ``scan_encoded`` (a RENAMED
-key resolves through the schema log's physical chunk key and keeps
-applying, same as the primary reader).
+This reader is the store's one row-read path: ``scan_encoded`` and
+``point_lookup`` are front-ends over it (:func:`load_store`). It
+resolves commits on ``(part_id, attempt_id)``, time travel (``as_of``
+/ ``ref``), retired and WAP-staged invisibility, renames,
+late-added-column nulls and type widening. Positional and EQUALITY
+deletes subtract task-side; equality value sets are O(deleted keys),
+load driver-side and ride the splits (data-seq < delete-seq; splits
+whose partitions all post-date every delete skip the probe). A lost
+delete table or an equality key dropped after its delete refuses to
+read rather than resurrect rows. Nested/decimal ("logical") columns
+come back in their logical type (the decode kernel restores them).
+Column pruning is Spark's own ``.schema()``: the reader decodes only
+the columns it names, in its order.
 
 Filter pushdown: ``pushFilters`` translates simple predicates into the
 engine's pushdown spec (``=``/``IN`` become ``("in", values)``,
@@ -62,9 +58,10 @@ filter excludes every value are dropped before any payload is read,
 and a split left with no predicate-column chunk reads no payload at
 all — the late materialization :func:`choetl_spark.lookup.point_lookup`
 relies on. Every filter is also RETURNED to Spark, which re-applies
-it, so a mask only has to be a superset; only ints, strings, bools and
-binary are masked (float NaN ordering and timestamp tz conversion
-differ between Arrow and Spark).
+it, so a mask only has to be a superset. Ints, strings, bools, binary,
+dates and timestamps are masked; a timestamp only against an aware
+literal, which is what Spark passes (in the session zone). Floats are
+not (NaN ordering differs between Arrow and Spark).
 
 The streaming reader exposes ledger epochs as micro-batch offsets —
 Iceberg's streaming-read contract: an offset is a committed
@@ -84,6 +81,7 @@ format registry.
 
 from __future__ import annotations
 
+import datetime as _dt
 import glob
 import json
 import os
@@ -121,18 +119,19 @@ from choetl_spark.engine import (
     _spark_type_ddl,
     bloom_probeable,
 )
-from choetl_spark.deletes import _deletes_dir
-from choetl_spark.eqdeletes import _eq_dir
+from choetl_spark.deletes import _deletes_dir, refuse_lost_tombstones
+from choetl_spark.eqdeletes import _eq_dir, resolve_eq_key
 from choetl_spark.ledger import (
     LEDGER_SCHEMA_DDL,
     _chunks_dir,
     _ledger_dir,
     _widened_dtype,
+    manifest_as_of,
     manifest_data_items,
-    min_time_travel_seq,
     physical_name,
     read_manifest,
     reserved_physicals,
+    resolve_snapshot,
     write_manifest,
 )
 
@@ -177,13 +176,9 @@ def _ledger_table(out_dir: str) -> pa.Table | None:
 
 def _ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     """Driver-side snapshot resolution — the pure-pyarrow mirror of
-    :func:`choetl_spark.ledger.read_encoded`'s ledger joins. Returns
-    live commit keys, delete commits, eq-delete presence, max epoch."""
-    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
-        raise ValueError(
-            f"snapshot as_of={as_of} has been expired; the oldest "
-            f"readable epoch is {min_time_travel_seq(out_dir)}"
-        )
+    :func:`choetl_spark.ledger.read_encoded`'s ledger joins, at an
+    ``as_of`` already checked by ``resolve_snapshot``. Returns live
+    commit keys, delete commits, eq-delete presence, max epoch."""
     t = _ledger_table(out_dir)
     state = {
         "live": {},  # part_id -> set of attempt_id (None = legacy row)
@@ -235,14 +230,14 @@ def _ledger_state(out_dir: str, as_of: int | None = None) -> dict:
 
 def _delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
     """Committed positional tombstones per part_id (numpy arrays) —
-    the broadcast-bitmap shape, loaded driver-side like the primary
-    reader's broadcast anti-join side."""
+    the broadcast-bitmap shape, loaded driver-side."""
     import numpy as np
 
     if not state["delete_ids"]:
         return {}
     t = _read_parquet_dir(_deletes_dir(out_dir))
     if t is None:
+        refuse_lost_tombstones(out_dir)
         return {}
     ids = t.column("delete_id").to_pylist()
     keep = [i for i, d in enumerate(ids) if d in state["delete_ids"]]
@@ -261,56 +256,23 @@ def _delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
     return out
 
 
-def _eq_value_maps(
-    out_dir: str, state: dict, items: list[tuple[str, dict]]
-) -> dict[str, dict]:
+def _eq_value_maps(out_dir: str, state: dict, view: dict) -> dict[str, dict]:
     """Committed equality-delete value sets, per key column: ``{col:
     {value: newest delete epoch}}`` — loaded driver-side with pyarrow
     (the value tables are O(deleted keys), tiny by the eq-delete
     write contract). A row dies iff its partition's first-done epoch
-    is STRICTLY BEFORE the newest delete epoch naming its key value —
-    the same data-seq < delete-seq rule the primary reader resolves
-    lazily with a Spark decode; here the sets ride the splits and the
-    subtraction happens task-side on already-decoded batches."""
+    is STRICTLY BEFORE the newest delete epoch naming its key value;
+    the sets ride the splits. Keys resolve into ``view``, the reader's
+    schema, through :func:`choetl_spark.eqdeletes.resolve_eq_key`."""
     if not state["eq_commits"]:
         return {}
-    from choetl_spark.ledger import manifest_as_of, physical_name
-
-    display = {c for c, _ in items}
     manifest = read_manifest(out_dir)
-
-    def to_items_name(col: str, seq: int) -> str:
-        # a key renamed after its delete resolves through the schema
-        # log's shared physical chunk key into THIS reader's schema
-        # (the epoch view under as_of, the current one otherwise); a
-        # dropped key still refuses loudly
-        entry = (manifest_as_of(manifest, seq) or {}).get(col)
-        if col in display:
-            # same physical-key check as resolve_eq_key: a live name
-            # can front a DIFFERENT physical column after a
-            # rename-chain reuses it ("Z->A, delete on A, A->B, C->A")
-            cur = dict(items)[col]
-            if entry is None or physical_name(entry, col) == physical_name(
-                cur, col
-            ):
-                return col
-        if entry is not None:
-            phys = physical_name(entry, col)
-            for c, m in items:
-                if physical_name(m, c) == phys:
-                    return c
-        raise ValueError(
-            f"equality-delete key column {col!r} (recorded at epoch "
-            f"{seq}) does not resolve to a column of this store's "
-            "schema (dropped after the delete) — read via scan_encoded"
-        )
-
     # grouped by (reader-schema name, recorded name): the value table
     # lives under the recorded name on disk
     by_col: dict[tuple[str, str], list[tuple[str, int]]] = {}
     for did, seq, col in state["eq_commits"]:
         by_col.setdefault(
-            (to_items_name(col, int(seq)), col), []
+            (resolve_eq_key(manifest, col, int(seq), view), col), []
         ).append((did, seq))
     out: dict[str, dict] = {}
     for (cur, col), commits in by_col.items():
@@ -322,42 +284,19 @@ def _eq_value_maps(
                 "table — refusing to read (it would resurrect rows)"
             )
         seq_of = dict(commits)
-        vmap: dict = {}
+        vmap = out.setdefault(cur, {})
         for did, val in zip(
             t.column("delete_id").to_pylist(),
             t.column("value").to_pylist(),
         ):
             s = seq_of.get(did)
-            if s is not None and (val not in vmap or vmap[val] < s):
+            if s is not None and vmap.get(val, 0) < s:
                 vmap[val] = s
-        if cur in out:
-            for val, sq in vmap.items():
-                if val not in out[cur] or out[cur][val] < sq:
-                    out[cur][val] = sq
-        else:
-            out[cur] = vmap
     return out
 
 
-def _as_of_from_options(options: dict) -> int | None:
-    """Resolve the options' as_of/ref pair to a ledger epoch (or None
-    for the current snapshot)."""
-    as_of = options.get("as_of")
-    ref = options.get("ref")
-    if ref is not None:
-        if as_of is not None:
-            raise ValueError("pass as_of or ref, not both")
-        from choetl_spark.refs import resolve_ref
-
-        as_of = resolve_ref(options["path"], ref)
-    return int(as_of) if as_of is not None else None
-
-
-def _manifest_columns(
-    out_dir: str, as_of: int | None = None
-) -> list[tuple[str, dict]]:
-    from choetl_spark.ledger import manifest_as_of
-
+def _manifest_view(out_dir: str, as_of: int | None = None) -> dict:
+    """The manifest view a reader at ``as_of`` resolves names against."""
     manifest = manifest_as_of(read_manifest(out_dir), as_of)
     if manifest is None:
         raise FileNotFoundError(
@@ -365,14 +304,58 @@ def _manifest_columns(
             "write one with df.write.format('choetl') or "
             "encode_with_resume)"
         )
-    return manifest_data_items(manifest)
+    return manifest
 
 
-def _store_schema_ddl(out_dir: str, as_of: int | None = None) -> str:
+def _schema_ddl(items: list[tuple[str, dict]]) -> str:
     return ", ".join(
         f"`{c}` {m.get('logical') or _spark_type_ddl(str_to_type(m['dtype']))}"
-        for c, m in _manifest_columns(out_dir, as_of)
+        for c, m in items
     )
+
+
+def _snapshot(out_dir: str, as_of: int | None, view: dict) -> tuple:
+    """The snapshot's ledger state, tombstones and equality-delete
+    value sets (pure pyarrow, zero Spark jobs)."""
+    state = _ledger_state(out_dir, as_of)
+    return (
+        state,
+        _delete_positions(out_dir, state),
+        _eq_value_maps(out_dir, state, view),
+    )
+
+
+def load_store(
+    spark,
+    out_dir: str,
+    columns: list[str] | None,
+    as_of: int | None = None,
+    ref: str | None = None,
+):
+    """``spark.read.format("choetl").schema(...)`` of ``columns``
+    (``None``: all, in name order) at ``as_of`` / ``ref``. A data
+    source's errors reach the caller as ``AnalysisException``, so the
+    snapshot is resolved here first and its errors raise typed:
+    ``ValueError`` (as_of with ref, unknown ref, expired as_of),
+    ``KeyError`` (unknown column, dropped equality-delete key),
+    ``RuntimeError`` (lost delete table)."""
+    as_of = resolve_snapshot(out_dir, as_of, ref)
+    view = _manifest_view(out_dir, as_of)
+    entries = dict(manifest_data_items(view))
+    names = list(dict.fromkeys(columns or sorted(entries)))
+    missing = [c for c in names if c not in entries]
+    if missing:
+        raise KeyError(f"columns not in encoded store: {missing}")
+    _snapshot(out_dir, as_of, view)
+    sources = spark._jsparkSession.sessionState().dataSourceManager()
+    if not sources.dataSourceExists("choetl"):
+        register(spark)
+    reader = spark.read.format("choetl").schema(
+        _schema_ddl([(c, entries[c]) for c in names])
+    )
+    if as_of is not None:
+        reader = reader.option("as_of", as_of)
+    return reader.load(out_dir)
 
 
 def _out_schema(items: list[tuple[str, dict]], schema) -> pa.Schema:
@@ -541,14 +524,27 @@ def _decode_split(
     batch_rows: int,
     out_schema: pa.Schema,
     pushdown: dict[str, tuple] | None = None,
+    store_items: list[tuple[str, dict]] = (),
 ) -> Iterator[pa.RecordBatch]:
     """Decode one split: read the chunk metadata, drop the chunk rows
     the pushdown spec rules out (Bloom skipping, then partitions left
     without a chunk of some predicate column — the filtered kernel
     would emit nothing for them), read payloads for the rest only, then
-    run the shared decode kernel and subtract deletes."""
+    run the shared decode kernel and subtract deletes. An
+    equality-delete key in ``store_items`` but not in the output
+    ``items`` decodes for the subtraction only."""
     import numpy as np
 
+    n_out = len(items)
+    keys = [
+        (c, m) for c, m in store_items
+        if c in split.eq and c not in out_schema.names
+    ]
+    if keys:
+        items = items + keys
+        out_schema = pa.schema(
+            [*out_schema, *((c, str_to_type(m["dtype"])) for c, m in keys)]
+        )
     phys_to_display = {physical_name(m, c): c for c, m in items}
     col_order = [c for c, _ in items]
     probes = {
@@ -658,8 +654,8 @@ def _decode_split(
                     )
                     mask &= ~(pseq_np < vseq)
             batch = pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(2, batch.num_columns)],
-                schema=pa.schema(list(batch.schema)[2:]),
+                [batch.column(i) for i in range(2, 2 + n_out)],
+                schema=pa.schema(list(batch.schema)[2:2 + n_out]),
             ).filter(pa.array(mask))
         if len(batch):
             yield batch
@@ -674,17 +670,33 @@ def _attempt_ok(row_att: str | None, committed: frozenset) -> bool:
 # filter pushdown: Spark filters -> the engine's pushdown spec
 # ---------------------------------------------------------------------------
 
-_MASKABLE = (int, str, bool, bytes)
 _LOWER = (GreaterThan, GreaterThanOrEqual)
 _UPPER = (LessThan, LessThanOrEqual)
+
+
+def _maskable(v, t: pa.DataType) -> bool:
+    """Whether a mask of storage type ``t`` against literal ``v``
+    provably agrees with Spark's comparison."""
+    if pa.types.is_timestamp(t):
+        # aware literals are instants on both sides; a naive one means
+        # a zone the kernel cannot know
+        return isinstance(v, _dt.datetime) and v.tzinfo is not None
+    if pa.types.is_date(t):
+        return isinstance(v, _dt.date) and not isinstance(v, _dt.datetime)
+    return isinstance(v, (int, str, bool, bytes)) and (
+        pa.types.is_integer(t)
+        or pa.types.is_string(t) or pa.types.is_large_string(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_binary(t) or pa.types.is_large_binary(t)
+    )
 
 
 def _pushdown_spec(filters: list[Filter], items) -> dict[str, tuple]:
     """The engine pushdown spec (``{col: ("in", values)}`` /
     ``{col: ("range", lo, hi)}``, inclusive, ``None`` = open) for the
     filters whose masks provably agree with Spark: int/string/bool/
-    binary storage columns and literals only — floats (NaN ordering),
-    timestamps (tz conversion) and nested/decimal columns never mask.
+    binary/date storage columns, and timestamps against aware literals
+    — floats (NaN ordering) and nested/decimal columns never mask.
     Strict comparisons widen to inclusive bounds and an IN-list literal
     the storage type cannot hold (300 against int8) gives no mask: the
     spec only has to be a superset, because Spark re-applies every
@@ -698,23 +710,16 @@ def _pushdown_spec(filters: list[Filter], items) -> dict[str, tuple]:
         if not attr or len(attr) != 1 or attr[0] not in types:
             continue
         col, t = attr[0], types[attr[0]]
-        if not (
-            pa.types.is_integer(t)
-            or pa.types.is_string(t) or pa.types.is_large_string(t)
-            or pa.types.is_boolean(t)
-            or pa.types.is_binary(t) or pa.types.is_large_binary(t)
-        ):
-            continue
         if isinstance(f, (EqualTo, In)):
             vals = [f.value] if isinstance(f, EqualTo) else list(f.value)
-            if not all(isinstance(v, _MASKABLE) for v in vals):
+            if not all(_maskable(v, t) for v in vals):
                 continue
             try:
                 pa.array(vals, t)
             except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
                 continue
             spec[col] = ("in", vals)  # the tighter mask wins over a range
-        elif isinstance(f, _LOWER + _UPPER) and isinstance(f.value, _MASKABLE):
+        elif isinstance(f, _LOWER + _UPPER) and _maskable(f.value, t):
             prev = spec.get(col, ("range", None, None))
             if prev[0] == "in":
                 continue
@@ -737,10 +742,17 @@ class ChoetlBatchReader(DataSourceReader):
         self._dir = options["path"]
         self._batch_rows = int(options.get("batch_rows", 8192))
         self._target = int(options.get("target_split_bytes", 128 << 20))
-        self._as_of = _as_of_from_options(options)
+        self._as_of = resolve_snapshot(
+            self._dir, options.get("as_of"), options.get("ref")
+        )
         # snapshot-scoped schema: column names (and the decode plan)
         # resolve against the epoch's schema under as_of
-        self._items = _manifest_columns(self._dir, self._as_of)
+        self._view = _manifest_view(self._dir, self._as_of)
+        self._store_items = manifest_data_items(self._view)
+        # decode only the schema's columns, in ITS order: Spark reads
+        # the batch columns positionally
+        entries = dict(self._store_items)
+        self._items = [(n, entries[n]) for n in schema.names]
         self._out_schema = _out_schema(self._items, schema)
         self._pushdown: dict[str, tuple] = {}
 
@@ -750,9 +762,7 @@ class ChoetlBatchReader(DataSourceReader):
         return filters  # all of them: Spark re-applies every filter
 
     def partitions(self):
-        state = _ledger_state(self._dir, self._as_of)
-        tomb = _delete_positions(self._dir, state)
-        eq = _eq_value_maps(self._dir, state, self._items)
+        state, tomb, eq = _snapshot(self._dir, self._as_of, self._view)
         return plan_store_splits(
             self._dir, state, tomb, eq, self._target
         )
@@ -764,7 +774,7 @@ class ChoetlBatchReader(DataSourceReader):
             return
         yield from _decode_split(
             partition, self._items, self._batch_rows, self._out_schema,
-            self._pushdown,
+            self._pushdown, self._store_items,
         )
 
 
@@ -782,7 +792,7 @@ class ChoetlStreamReader(DataSourceStreamReader):
         self._skip_changes = str(
             options.get("skip_change_commits", "false")
         ).lower() in ("true", "1")
-        self._items = _manifest_columns(self._dir)
+        self._items = manifest_data_items(_manifest_view(self._dir))
         self._out_schema = _out_schema(self._items, schema)
 
     def initialOffset(self):  # noqa: N802
@@ -1116,9 +1126,11 @@ class ChoetlDataSource(DataSource):
         return "choetl"
 
     def schema(self):
-        return _store_schema_ddl(
-            self.options["path"], _as_of_from_options(self.options)
+        path = self.options["path"]
+        as_of = resolve_snapshot(
+            path, self.options.get("as_of"), self.options.get("ref")
         )
+        return _schema_ddl(manifest_data_items(_manifest_view(path, as_of)))
 
     def reader(self, schema) -> ChoetlBatchReader:
         return ChoetlBatchReader(self.options, schema)

@@ -10,10 +10,9 @@ column-pruned positional decode), writes their coordinates as TOMBSTONES
     (part_id, row_pos, del_seq, delete_id)
 
 to ``out_dir/_deletes``, and commits them with a ledger row of
-``status="delete"`` at the next ``run_seq`` epoch. Readers
-(:func:`choetl_spark.ledger.scan_encoded`,
-:func:`choetl_spark.lookup.point_lookup`) subtract committed tombstones
-with a broadcast anti-join on ``(part_id, row_pos)`` — the in-memory
+``status="delete"`` at the next ``run_seq`` epoch. Readers subtract
+committed tombstones by ``(part_id, row_pos)`` — ``format("choetl")``
+task-side, maintenance paths with a broadcast anti-join — the in-memory
 positional-delete-bitmap shape Iceberg readers use per data file.
 
 Crash safety mirrors the chunk commit protocol exactly: tombstone files
@@ -54,6 +53,25 @@ def _deletes_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_deletes")
 
 
+def refuse_lost_tombstones(out_dir: str) -> None:
+    """For a store with delete commits but no readable ``_deletes``
+    table: raise (reading would resurrect every deleted row) unless the
+    expiry sidecar exists — ``expire_snapshots`` legitimately drops the
+    table, and writes its sidecar first."""
+    from choetl_spark.ledger import _expiry_path
+
+    if not os.path.exists(_expiry_path(out_dir)):
+        raise RuntimeError(
+            f"store at {out_dir} has committed delete epochs in "
+            "its ledger but no readable _deletes tombstone table "
+            "— refusing to read (it would resurrect deleted "
+            "rows). Restore the _deletes directory (a crashed "
+            "maintenance run may have left a _deletes_trash_* "
+            "or _deletes_compact_* sibling) or expire the "
+            "delete snapshots explicitly."
+        )
+
+
 def read_delete_positions(
     spark: SparkSession, out_dir: str, as_of: int | None = None
 ) -> DataFrame | None:
@@ -71,15 +89,9 @@ def read_delete_positions(
     diffs, or ``n_deleted`` counts.
 
     A store whose ledger carries delete commits but whose ``_deletes``
-    table cannot be read raises instead of returning ``None`` —
-    treating lost tombstones as "no deletes" would silently resurrect
-    every deleted row. The one legitimate tombstone-free-with-commits
-    state is post-``expire_snapshots`` (it drops the table when every
-    survivor pointed at expired partitions), which is recognized by the
-    expiry sidecar it always writes first."""
-    import os as _os
-
-    from choetl_spark.ledger import _expiry_path, commit_meta, read_ledger
+    table cannot be read raises (:func:`refuse_lost_tombstones`)
+    instead of returning ``None``."""
+    from choetl_spark.ledger import commit_meta, read_ledger
 
     # commit_meta is driver-cached per ledger version: the common
     # no-deletes store answers "has_delete?" with zero Spark jobs per
@@ -98,18 +110,8 @@ def read_delete_positions(
     try:
         tomb = spark.read.parquet(_deletes_dir(out_dir))
     except Exception:
-        if ledger is not None and not _os.path.exists(
-            _expiry_path(out_dir)
-        ):
-            raise RuntimeError(
-                f"store at {out_dir} has committed delete epochs in "
-                "its ledger but no readable _deletes tombstone table "
-                "— refusing to read (it would resurrect deleted "
-                "rows). Restore the _deletes directory (a crashed "
-                "maintenance run may have left a _deletes_trash_* "
-                "or _deletes_compact_* sibling) or expire the "
-                "delete snapshots explicitly."
-            )
+        if ledger is not None:
+            refuse_lost_tombstones(out_dir)
         return None
     if ledger is None:
         return None

@@ -909,13 +909,12 @@ def normalize_predicate_value(v):
     """Naive datetime predicate values -> the aware UTC instant Spark's
     own literal conversion produces for them (py4j DatetimeConverter /
     TimestampType.toInternal: ``time.mktime`` on the DRIVER'S OS
-    timezone). Applied once at the query entry (scan_encoded /
-    delete_where), so the zone-map pruner, the decode kernel, and the
-    residual Spark filter all evaluate the SAME instant on any driver
-    tz — a naive bound interpreted as UTC by the kernel but as a
-    non-UTC OS tz by the residual would make the kernel mask a
-    non-superset and silently drop matching rows. Aware datetimes and
-    non-datetimes pass through unchanged."""
+    timezone). Applied once at the query entry (``scan_encoded`` /
+    ``delete_where``), so pruner, kernel mask and residual Spark filter
+    all evaluate the SAME instant on any driver tz — a naive bound read
+    as UTC by the kernel but as a non-UTC OS tz by the residual would
+    make the mask a non-superset and silently drop matching rows.
+    Aware datetimes and non-datetimes pass through unchanged."""
     import datetime as _dt
     import time as _time
 
@@ -946,13 +945,9 @@ def _pushdown_values_compatible(vals: list, t: pa.DataType) -> bool:
             return False
         # naive datetimes are interpreted as UTC by Arrow's cast but
         # via the driver's OS timezone (time.mktime) by Spark's
-        # literal — those disagree on any non-UTC driver, which would
-        # break the kernel mask's superset contract, so naive values
-        # never push down (the residual filter still answers exactly;
-        # scan_encoded/delete_where normalize naive bounds to aware
-        # instants up front via normalize_predicate_value, so the
-        # pruning loss only affects direct decode_dataframe callers).
-        # Aware datetimes convert identically on both sides.
+        # literal, so they never push down (delete_where normalizes
+        # naive bounds first; Spark hands format("choetl") aware
+        # instants). Aware datetimes convert identically on both sides.
         return all(v.tzinfo is not None for v in vals)
     if pa.types.is_date(t):
         return all(
@@ -989,6 +984,8 @@ def _eval_chunk_mask(
     column is never rebuilt. Chunks whose symbol table misses every
     probe value short-circuit to all-False without touching indices.
     """
+    import datetime as _dt
+
     import numpy as np
 
     from choetl_spark.codecs import zstd as _zstd
@@ -1009,7 +1006,15 @@ def _eval_chunk_mask(
             # guarantee, so refuse and let the except-arm pass all rows
             raise TypeError("pushdown value family mismatch")
         if op[0] == "in":
-            vs = pa.array(vals).cast(arr.type)
+            # pa.array stores a non-UTC aware datetime's WALL time as
+            # UTC (pyarrow 16); the same instant in UTC converts exactly
+            vs = pa.array(
+                [
+                    v.astimezone(_dt.timezone.utc)
+                    if isinstance(v, _dt.datetime) else v
+                    for v in vals
+                ]
+            ).cast(arr.type)
             m = pa.compute.is_in(arr, value_set=vs)
         elif op[0] == "range":
             m = None
@@ -1020,7 +1025,7 @@ def _eval_chunk_mask(
                 if bound is not None:
                     c = cmp(arr, pa.scalar(bound).cast(arr.type))
                     m = c if m is None else pa.compute.and_kleene(m, c)
-        else:  # pragma: no cover - spec built by scan_encoded
+        else:  # pragma: no cover - spec built by the readers
             raise ValueError(f"unknown pushdown op {op[0]!r}")
         return np.asarray(pa.compute.fill_null(m, False))
 
@@ -1247,7 +1252,7 @@ def decode_dataframe(
     the JVM (see :func:`_make_filtered_decode_kernel`). Masks are
     SUPERSETS (anything the kernel cannot evaluate passes through), so
     callers must re-apply the predicate on the decoded result —
-    :func:`choetl_spark.ledger.scan_encoded` does. Predicate columns
+    :func:`choetl_spark.deletes.delete_where` does. Predicate columns
     need not be in ``columns``.
 
     Column pruning happens BEFORE the shuffle — unrequested columns'
@@ -1382,7 +1387,7 @@ def prune_partitions_by_stats(
     prefix under-estimates the true bound).
 
     ``dtype`` is the column's STORAGE type ("timestamp" / "date" / ...,
-    from the manifest — ``scan_encoded`` passes it automatically). It
+    from the manifest — ``delete_where`` passes it automatically). It
     disambiguates ``datetime.date`` bounds: timestamp zone maps hold
     MICROS since epoch, date zone maps hold DAYS, and converting a date
     bound to days against a micros map would prune every partition
@@ -1475,8 +1480,8 @@ def prune_partitions_by_bloom(
     Bloom pruning entirely and returns ``enc_df`` unchanged — each
     probed value adds k nested bit-test expressions, so an unbounded
     IN-list would blow up the Catalyst expression tree / codegen method
-    size (the same cap ``scan_encoded`` applies to its chunk probe); the
-    caller's residual filter keeps semantics exact either way.
+    size; the caller's residual filter keeps semantics exact either
+    way.
     """
     vals = (
         list(value) if isinstance(value, (list, tuple, set)) else [value]
@@ -1508,22 +1513,21 @@ def bloom_probeable(vals: list) -> bool:
     return all(isinstance(v, (str, bytes, bytearray)) for v in vals)
 
 
-def bloom_probe_frame(
-    enc_df: DataFrame, column: str, value, restrict: bool = True
-) -> DataFrame:
+def bloom_probe_frame(enc_df: DataFrame, column: str, value) -> DataFrame:
     """``column``'s chunk-metadata rows with a boolean ``_bloom_hit``:
     False ONLY when the chunk's Bloom filter definitely excludes
     ``value`` (missing/legacy blooms answer True — over-keep, never
-    over-skip). Chunk-granular, fully JVM-side — the shared probe
-    behind partition pruning (:func:`prune_partitions_by_bloom`) and
-    ``scan_encoded``'s chunk pruning, which keeps only the hit CHUNKS
-    of the predicate column. (``format("choetl")`` probes the same
-    Blooms task-side with :func:`choetl_spark.bloom.bloom_maybe_contains`.)
+    over-skip). Chunk-granular, fully JVM-side — the probe behind
+    partition pruning (:func:`prune_partitions_by_bloom`), which
+    ``delete_where`` and equality-delete resolution use. (Reads through
+    ``format("choetl")`` probe the same Blooms task-side with
+    :func:`choetl_spark.bloom.bloom_maybe_contains`.)
 
     ``value`` may be a list/tuple/set (batch lookup): ``_bloom_hit``
     then means "may contain ANY of the values" — each value adds
     ``min(k, 8)`` bit-test expressions, so callers cap the batch size
-    (``scan_encoded`` skips chunk pruning past 32 values)."""
+    (:func:`prune_partitions_by_bloom` skips the probe past
+    ``probe_cap`` values)."""
     from choetl_spark.bloom import _hash_value
 
     values = (
@@ -1531,15 +1535,7 @@ def bloom_probe_frame(
     )
     if not values:
         raise ValueError("bloom probe needs at least one value")
-    target = enc_df if not restrict else enc_df.filter(
-        F.col("column") == column
-    )
-    # ``restrict=False`` keeps EVERY chunk row and just annotates —
-    # single-pass callers filter `(column != c) | _bloom_hit` instead of
-    # paying a second scan + union of the chunk table; rows of other
-    # columns probe their own (irrelevant) blooms and are kept by the
-    # caller's disjunct
-    target = target.withColumns(
+    target = enc_df.filter(F.col("column") == column).withColumns(
         {
             "_b": F.from_json(
                 "stats", "bloom struct<m:bigint,k:int,bits:string>"

@@ -9,15 +9,15 @@ scan at WRITE time to pin exact row coordinates. An equality delete
     out_dir/_eq_deletes/<column>/<delete_id>.parquet   (value rows)
 
 plus a ledger commit row (``status="eqdelete"``) — O(keys) write cost,
-no store scan at all. Readers resolve the values to row coordinates
-lazily (:func:`eq_delete_positions`): decode just the key column of the
-partitions committed BEFORE the delete (Iceberg's rule — an equality
-delete applies to rows whose data sequence number is strictly lower
-than the delete's), Bloom-pruned by the deleted values when the value
-set is small, and subtract the matches with the same broadcast
-anti-join as positional tombstones. A key re-inserted AFTER the delete
-therefore survives, which is exactly what makes streaming CDC upserts
-O(changed keys) instead of O(store).
+no store scan at all. ``format("choetl")`` (and so ``scan_encoded`` and
+``point_lookup``) loads the value sets and subtracts task-side; the
+Spark-plan readers resolve them lazily (:func:`eq_delete_positions`):
+decode just the key column of the partitions committed BEFORE the
+delete (Iceberg's rule — an equality delete applies to rows whose data
+sequence number is strictly lower than the delete's), Bloom-pruned,
+and anti-join the matches like positional tombstones. A key
+re-inserted AFTER the delete therefore survives, which is exactly what
+makes streaming CDC upserts O(changed keys) instead of O(store).
 
 Crash safety is the shared protocol: value files land BEFORE the
 ledger row; readers semi-join on committed ``delete_id``s, so a crash
@@ -149,13 +149,15 @@ def delete_by_key(
             "delete_id": delete_id}
 
 
-def resolve_eq_key(manifest: dict | None, col: str, seq: int) -> str:
-    """The CURRENT display name of an equality-delete key recorded as
-    ``col`` at commit epoch ``seq``. A key renamed AFTER the delete
-    resolves through the schema log's shared physical chunk key (so old
-    deletes keep applying — the Iceberg field-id contract); a key
-    DROPPED after the delete still refuses loudly (silently skipping it
-    would resurrect deleted rows)."""
+def resolve_eq_key(
+    manifest: dict | None, col: str, seq: int, current: dict | None = None
+) -> str:
+    """The name in ``current`` (default: the current schema) of an
+    equality-delete key recorded as ``col`` at commit epoch ``seq``. A
+    key renamed AFTER the delete resolves through the schema log's
+    shared physical chunk key (so old deletes keep applying — the
+    Iceberg field-id contract); a key DROPPED after the delete still
+    refuses loudly (silently skipping it would resurrect rows)."""
     from choetl_spark.ledger import (
         manifest_as_of,
         manifest_data_items,
@@ -164,19 +166,20 @@ def resolve_eq_key(manifest: dict | None, col: str, seq: int) -> str:
 
     if manifest is None:
         return col
+    current = manifest if current is None else current
     entry = (manifest_as_of(manifest, seq) or {}).get(col)
-    if col in manifest:
+    if col in current:
         # a live name alone is not proof: after "Z->A, delete on A,
         # A->B, C->A" the name 'A' now fronts C's chunks, and trusting
         # it would delete C's rows while resurrecting B's — require the
         # epoch entry's physical chunk key to match the current one
         if entry is None or physical_name(entry, col) == physical_name(
-            manifest[col], col
+            current[col], col
         ):
             return col
     if entry is not None:
         phys = physical_name(entry, col)
-        for c, m in manifest_data_items(manifest):
+        for c, m in manifest_data_items(current):
             if physical_name(m, c) == phys:
                 return c
     raise KeyError(

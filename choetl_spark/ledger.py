@@ -75,6 +75,27 @@ def min_time_travel_seq(out_dir: str) -> int:
         return 1
 
 
+def resolve_snapshot(
+    out_dir: str, as_of: int | None = None, ref: str | None = None
+) -> int | None:
+    """The epoch ``as_of`` or the ref named ``ref`` selects (``None``:
+    the latest). ``ValueError`` for both at once, an unknown ref, or an
+    epoch :func:`expire_snapshots` reclaimed."""
+    if ref is not None:
+        if as_of is not None:
+            raise ValueError("pass as_of or ref, not both")
+        from choetl_spark.refs import resolve_ref
+
+        as_of = resolve_ref(out_dir, ref)
+    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
+        raise ValueError(
+            f"snapshot as_of={as_of} has been expired; the oldest "
+            f"readable epoch is {min_time_travel_seq(out_dir)} "
+            "(expire_snapshots reclaimed earlier history)"
+        )
+    return None if as_of is None else int(as_of)
+
+
 def read_manifest(out_dir: str) -> dict | None:
     """Per-column storage manifest persisted at encode time (a tiny
     driver-side sidecar — the Iceberg-catalog analog of table-property
@@ -521,18 +542,7 @@ def read_encoded(
     that for maintenance passes that persist chunk rows verbatim
     (``compact_store``/``expire_snapshots``), which must keep the
     physical keys or later renames would orphan the rewritten chunks."""
-    if ref is not None:
-        if as_of is not None:
-            raise ValueError("pass as_of or ref, not both")
-        from choetl_spark.refs import resolve_ref
-
-        as_of = resolve_ref(out_dir, ref)
-    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
-        raise ValueError(
-            f"snapshot as_of={as_of} has been expired; the oldest "
-            f"readable epoch is {min_time_travel_seq(out_dir)} "
-            "(expire_snapshots reclaimed earlier history)"
-        )
+    as_of = resolve_snapshot(out_dir, as_of, ref)
     lsig = _ledger_signature(out_dir)
     csig = _chunks_signature(out_dir)
     # the manifest drives _display_remap, and rename_column/drop_column
@@ -793,58 +803,28 @@ def scan_encoded(
     as_of: int | None = None,
     ref: str | None = None,
 ) -> DataFrame:
-    """Query the encoded store with metadata pruning AND kernel-level
-    predicate pushdown in one call: read committed chunks (ledger
-    semi-join), prune partitions by the chunk stats —
-    ``ranges={col: (lo, hi)}`` via the min/max zone maps,
-    ``equals={col: value_or_list}`` via the per-chunk Bloom filters —
-    then decode only ``columns`` WITH the predicates pushed into the
-    decode kernel (partition-local late materialization: dict chunks
-    evaluate over their symbol tables, non-predicate columns decode
-    only chunks overlapping a surviving row, and only matching rows
-    cross the Python->JVM boundary), and finally re-apply the
-    predicates EXACTLY (partition pruning is coarse, Blooms admit
-    false positives, and kernel masks are supersets; the residual
-    filter restores precise semantics — the same contract as Parquet
-    row-group skipping + post-filter).
+    """Query the encoded store: ``columns`` (default: all, in name
+    order) of the rows where ``lo <= col <= hi`` for each ``ranges={col:
+    (lo, hi)}`` and ``col == value`` (``IN`` for a list) for each
+    ``equals={col: value_or_list}``; predicate columns need not be in
+    ``columns``; a string/binary column's range with a non-string bound
+    matches nothing. ``as_of`` time-travels to a ledger epoch and ``ref``
+    reads the snapshot a tag/branch names (:mod:`choetl_spark.refs`).
 
-    Predicate columns are auto-added to the decode set, so
-    ``scan_encoded(spark, p, ["text"], equals={"url": u})`` works.
-    ``as_of`` time-travels to a ledger epoch (see ``read_encoded``);
-    ``ref`` reads the snapshot a named tag/branch points at
-    (:mod:`choetl_spark.refs`); row-level delete tombstones committed at
-    later epochs are likewise invisible (a delete is a snapshot like any
-    other).
-
-    Merge-on-read: tombstones from :func:`choetl_spark.deletes.
-    delete_where` are subtracted with a broadcast anti-join on
-    ``(part_id, row_pos)``; a store with no tombstones skips the
-    positional decode entirely (zero overhead).
+    A front-end over ``spark.read.format("choetl")``
+    (:func:`choetl_spark.datasource.load_store`): the load decodes only
+    the requested and predicate columns, and the predicates are plain
+    Spark filters the reader pushes into its tasks (Bloom chunk
+    skipping, kernel masks before the other columns decode) and Spark
+    re-applies exactly. Errors are typed and raised before the load:
+    ``ValueError`` for ``as_of`` with ``ref``, an unknown ref or an
+    expired ``as_of``; ``KeyError`` for an unknown column;
+    ``RuntimeError`` when a lost delete table would resurrect rows.
     """
-    from choetl_spark.deletes import apply_delete_filter
-    from choetl_spark.eqdeletes import all_delete_positions
-    from choetl_spark.engine import (
-        decode_dataframe,
-        prune_partitions_by_bloom,
-        prune_partitions_by_stats,
-    )
-
-    from choetl_spark.engine import bloom_probe_frame
-
+    from choetl_spark.datasource import load_store
     from choetl_spark.engine import normalize_predicate_value as _norm
 
-    if ref is not None:
-        if as_of is not None:
-            raise ValueError("pass as_of or ref, not both")
-        from choetl_spark.refs import resolve_ref
-
-        as_of = resolve_ref(out_dir, ref)
-    enc = read_encoded(spark, out_dir, as_of=as_of)
-    # snapshot-scoped schema: column names in predicates/projections
-    # resolve against the epoch's schema under as_of (manifest_as_of)
-    manifest = manifest_as_of(read_manifest(out_dir), as_of)
     # naive datetime bounds -> the aware instants Spark's literals mean
-    # (one interpretation for the pruner, kernel AND residual filter)
     ranges = {
         c: (_norm(lo), _norm(hi)) for c, (lo, hi) in (ranges or {}).items()
     }
@@ -856,62 +836,21 @@ def scan_encoded(
         )
         for c, v in (equals or {}).items()
     }
-    for col, (lo, hi) in ranges.items():
-        # the manifest dtype disambiguates the zone-map unit for
-        # date/datetime bounds (micros vs days — see the pruner)
-        dtype = (manifest or {}).get(col, {}).get("dtype")
-        enc = prune_partitions_by_stats(enc, col, lo, hi, dtype=dtype)
-    for col, value in equals.items():
-        enc = prune_partitions_by_bloom(enc, col, value)
-        # chunk-granular on top of partition-granular: predicate-column
-        # chunks whose Bloom definitely excludes the probe never ship
-        # to the Python workers at all — the filtered kernel treats a
-        # missing predicate chunk as matching nothing, which is exactly
-        # what the Bloom proved (missing/legacy blooms keep; the probe
-        # only over-keeps)
-        from choetl_spark.engine import bloom_probeable
-
-        vals = (
-            list(value)
-            if isinstance(value, (list, tuple, set))
-            else [value]
-        )
-        if 0 < len(vals) <= 32 and bloom_probeable(vals):
-            enc = (
-                bloom_probe_frame(enc, col, vals, restrict=False)
-                .filter((F.col("column") != col) | F.col("_bloom_hit"))
-                .drop("_bloom_hit")
-            )
-    dec_cols = columns
-    if columns is not None:
-        dec_cols = list(
-            dict.fromkeys([*columns, *ranges, *equals])
-        )  # ordered union
-    tombstones = all_delete_positions(spark, out_dir, as_of=as_of)
-    # push the predicates INTO the decode kernel (partition-local late
-    # materialization): only matching rows are decoded in full and ship
-    # back to the JVM. Kernel masks are supersets; the residual filters
-    # below keep the semantics exact.
-    pushdown: dict[str, tuple] = {
-        **{c: ("range", lo, hi) for c, (lo, hi) in ranges.items()},
-        **{
-            c: ("in", list(v) if isinstance(v, (list, tuple, set)) else [v])
-            for c, v in equals.items()
-        },
-    }
-    # manifest sidecar (written by encode_with_resume): decode plans
-    # build with ZERO Spark jobs instead of a chunk-metadata aggregate
-    out = decode_dataframe(
-        enc,
-        columns=dec_cols,
-        manifest=manifest,
-        with_pos=tombstones is not None,
-        pushdown=pushdown or None,
+    out = load_store(
+        spark, out_dir,
+        None if columns is None else [*columns, *ranges, *equals],
+        as_of=as_of, ref=ref,
     )
-    if tombstones is not None:
-        out = apply_delete_filter(out, tombstones)
     for col, (lo, hi) in ranges.items():
-        out = out.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        typ = out.schema[col].dataType.typeName()
+        if typ in ("string", "binary") and not all(
+            isinstance(b, (str, bytes)) for b in (lo, hi)
+        ):
+            # no order between stored strings and a non-string bound
+            # (Spark would cast every stored value): nothing matches
+            out = out.filter(F.lit(False))
+        else:
+            out = out.filter((F.col(col) >= lo) & (F.col(col) <= hi))
     for col, value in equals.items():
         if isinstance(value, (list, tuple, set)):
             out = out.filter(F.col(col).isin(list(value)))
@@ -1116,11 +1055,7 @@ def store_partitions(
     for skew checks ('is a partition oversized?'), delete-debt triage
     ('which partitions want rewrite_partitions?'), and storage
     accounting — all driver-light, O(partitions) metadata."""
-    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
-        raise ValueError(
-            f"snapshot as_of={as_of} has been expired; the oldest "
-            f"readable epoch is {min_time_travel_seq(out_dir)}"
-        )
+    resolve_snapshot(out_dir, as_of)
     from choetl_spark.eqdeletes import all_delete_positions
 
     empty_ddl = (

@@ -2,31 +2,20 @@
 ``spark.read.format("choetl")``.
 
 A point lookup (``url = X``, or a batch ``url IN (...)``) is a filtered
-read of the store, and the ``choetl`` reader already does the work the
-lookup needs (see :mod:`choetl_spark.datasource`):
-
-- **chunk-granular Bloom skipping** — key-column chunks whose Bloom
-  filter excludes every probe value are dropped from the chunk
-  metadata before any payload is read, and a split with no surviving
-  key chunk reads no payload at all;
-- **late materialization** — the engine's filtered decode kernel
-  evaluates the key predicate over the surviving key chunks, decodes
-  the other columns only for chunks that cover a matching row, and
-  ships only the matching rows to the JVM (Abadi et al.,
-  "Materialization Strategies in a Column-Oriented DBMS", ICDE 2007);
-- positional and equality deletes, time travel (``as_of``), renamed
-  columns and late-added (null) columns, exactly as every other read.
-
-So the lookup is one filtered ``format("choetl")`` read, collected in
-one pass. The reference's closest analog is Parquet.Net row-group
-stats+bloom skipping inside ChoParquetReader's ignored-field pruning
-(reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137).
+read of the store, and the ``choetl`` reader already does the work it
+needs (see :mod:`choetl_spark.datasource`): key-column chunks whose
+Bloom filter excludes every probe value are skipped unread, the filtered
+decode kernel decodes the other columns only for chunks that cover a
+matching row (late materialization — Abadi et al., "Materialization
+Strategies in a Column-Oriented DBMS", ICDE 2007), and deletes, time
+travel and schema evolution apply as in every other read. The
+reference's closest analog is Parquet.Net row-group stats+bloom
+skipping (reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame, SparkSession
 
 
 def point_lookup(
@@ -54,35 +43,22 @@ def point_lookup(
     than that belongs in ``scan_encoded``.
     ``as_of`` time-travels to a ledger epoch.
     """
-    from choetl_spark.datasource import register
+    from choetl_spark.ledger import scan_encoded
 
     values = (
         list(value) if isinstance(value, (list, tuple, set)) else [value]
     )
-    sources = spark._jsparkSession.sessionState().dataSourceManager()
-    if not sources.dataSourceExists("choetl"):
-        register(spark)
-    reader = spark.read.format("choetl")
-    if as_of is not None:
-        reader = reader.option("as_of", int(as_of))
-    store = reader.load(out_dir)
-    missing = [c for c in [key, *columns] if c not in store.columns]
-    if missing:
-        raise KeyError(f"columns not in encoded store: {missing}")
-    schema = StructType([store.schema[c] for c in columns])
+    hits = scan_encoded(
+        spark, out_dir, columns, equals={key: values}, as_of=as_of
+    )
     if not values:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], hits.schema)
     # Arrow both ways: no Python-object round trip (timestamps stay
     # UTC instants) and no Python worker to rebuild the DataFrame
-    rows = (
-        store.filter(F.col(key).isin(values))
-        .select(*columns)
-        .limit(max_matches + 1)
-        .toArrow()
-    )
+    rows = hits.limit(max_matches + 1).toArrow()
     if rows.num_rows > max_matches:
         raise ValueError(
             f"point_lookup matched more than max_matches={max_matches} "
             f"rows for {key!r}; use scan_encoded for wide predicates"
         )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, hits.schema)

@@ -6,10 +6,10 @@
         [--columns url,text] [--as-of 3] [--ref v1] \
         [--equals lang=en] [--range warc_ts=2024-01-01,2024-06-30]
 
-The read side is `scan_encoded` — zone-map + Bloom metadata pruning,
-column-pruned decode, kernel predicate pushdown, exact residual filter
-— so an export of one language or one time slice decodes only the
-chunks that can match, not the store. The write side reuses the
+The read side is `scan_encoded` — a `format("choetl")` read with
+column-pruned decode, Bloom chunk skipping, kernel predicate pushdown
+and an exact residual filter — so an export of one language or one
+time slice ships only the matching rows, not the store. The write side reuses the
 format writers (`choetl_spark.sources`): the decode→re-encode bridge a
 user needs to hand curated data to a training stack that reads plain
 parquet/JSONL/CSV.

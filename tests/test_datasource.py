@@ -2,10 +2,12 @@
 ``spark.read.format("choetl")`` / ``df.write.format("choetl")`` /
 ``spark.readStream.format("choetl")`` over the encoded store.
 
-The invariant throughout: every datasource path must agree EXACTLY
-with the primary readers (``scan_encoded`` / ``read_encoded`` +
-``decode_dataframe``) on the same store — commit resolution, time
-travel, deletes, renames, and the bytes themselves.
+The reader is the store's one row-read path (``scan_encoded`` and
+``point_lookup`` are front-ends over it), so the invariant throughout
+is behavioural: a read returns exactly the rows, bytes and column types
+of the source data it stores, after commit resolution, time travel,
+deletes and renames — checked against the source DataFrame, never
+against another reader.
 """
 
 from __future__ import annotations
@@ -53,13 +55,60 @@ def store(ds_spark, tmp_path):
     pages.unpersist()
 
 
-def test_batch_read_matches_scan_encoded(ds_spark, store):
+def test_batch_read_matches_source(ds_spark, store):
     out, pages = store
     got = ds_spark.read.format("choetl").load(out)
     assert _key_rows(got) == _key_rows(pages)
-    # and column-by-column schema agreement with the primary reader
-    ref = scan_encoded(ds_spark, out)
-    assert dict(got.dtypes) == dict(ref.dtypes)
+    # and column-by-column type agreement with the source
+    assert dict(got.dtypes) == dict(pages.dtypes)
+    # scan_encoded's default projection: every column, in name order
+    assert scan_encoded(ds_spark, out).columns == sorted(pages.columns)
+
+
+def test_projected_read_skips_unrequested_eq_key(ds_spark, store):
+    """A ``.schema()`` naming only ``url`` decodes just that column;
+    an equality delete keyed on the unprojected ``lang`` still
+    subtracts (the key decodes for the subtraction, then drops)."""
+    from choetl_spark.eqdeletes import delete_by_key
+
+    out, pages = store
+    victim = pages.select("lang").first()["lang"]
+    delete_by_key(ds_spark, out, "lang", [victim])
+    got = ds_spark.read.format("choetl").schema("`url` string").load(out)
+    assert got.columns == ["url"]
+    want = pages.filter(F.col("lang") != victim)
+    assert sorted(r["url"] for r in got.collect()) == sorted(
+        r["url"] for r in want.select("url").collect()
+    )
+    # and in a different column order than the store's
+    two = ds_spark.read.format("choetl").schema(
+        "`text` string, `url` string"
+    ).load(out)
+    assert sorted(tuple(r) for r in two.collect()) == sorted(
+        tuple(r) for r in want.select("text", "url").collect()
+    )
+
+
+def test_range_scan_runs_at_most_two_jobs(ds_spark, store):
+    """A 1% ``warc_ts`` range through ``scan_encoded`` is one
+    ``format("choetl")`` read: at most 2 Spark jobs, exact rows."""
+    out, pages = store
+    ts = sorted(r["warc_ts"] for r in pages.select("warc_ts").collect())
+    lo, hi = ts[300], ts[305]
+    sc = ds_spark.sparkContext
+    sc.setJobGroup("range-scan-jobs", "1% range")
+    try:
+        got = scan_encoded(
+            ds_spark, out, ["url", "warc_ts"], ranges={"warc_ts": (lo, hi)}
+        ).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("range-scan-jobs")
+    assert len(jobs) <= 2, jobs
+    want = pages.filter(F.col("warc_ts").between(lo, hi))
+    assert sorted(r["url"] for r in got) == sorted(
+        r["url"] for r in want.select("url").collect()
+    )
 
 
 def test_as_of_time_travel_and_append(ds_spark, store):
@@ -206,12 +255,18 @@ def test_mask_units_are_exact():
     """Filter -> spec translation plus the engine's chunk mask: a mask
     never drops a row Spark's filter keeps (nulls drop under eq/range),
     IN/EqualTo masks are exact, strict comparisons widen to inclusive
-    bounds, and floats, timestamps, null checks and nested/decimal
-    columns are never masked."""
+    bounds, and floats, null checks, nested/decimal columns and
+    timestamps against anything but an aware literal are never
+    masked."""
+    import datetime as dt
+    from zoneinfo import ZoneInfo
+
     from pyspark.sql.datasource import (
         EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan,
         LessThanOrEqual,
     )
+
+    from conftest import driver_tz
 
     items = [
         ("s", {"dtype": "string"}),
@@ -266,6 +321,115 @@ def test_mask_units_are_exact():
     assert _pushdown_spec(
         [EqualTo(("s",), "x"), In(("i",), (1,))], items
     ) == {"s": ("in", ["x"]), "i": ("in", [1])}
+
+    # timestamps and dates. Spark hands pushFilters aware datetimes in
+    # the SESSION zone (a non-UTC one here) and dates as datetime.date;
+    # the driver's OS zone must not matter. Naive ``timestamp[us]``
+    # storage holds micros Spark reads as UTC instants.
+    utc, la = dt.timezone.utc, ZoneInfo("America/Los_Angeles")
+    base = dt.datetime(2023, 7, 22, 21, 43, 20, 773236, tzinfo=utc)
+    inst = [base + dt.timedelta(hours=h) for h in (-30, -1, 0, 1, 30)]
+    titems = [
+        ("t", {"dtype": "timestamp[us][UTC]"}),
+        ("tn", {"dtype": "timestamp[us]"}),
+        ("dd", {"dtype": "date32"}),
+    ]
+    tdata = {
+        "t": pa.array([*inst, None], pa.timestamp("us", tz="UTC")),
+        "tn": pa.array(
+            [*(v.replace(tzinfo=None) for v in inst), None],
+            pa.timestamp("us"),
+        ),
+        "dd": pa.array([*(v.date() for v in inst), None], pa.date32()),
+    }
+
+    def as_instant(v):
+        return v.replace(tzinfo=utc) if v.tzinfo is None else v
+
+    pivot, far = inst[2].astimezone(la), inst[4].astimezone(la)
+    day = inst[2].date()
+    assert _pushdown_spec(
+        [GreaterThan(("t",), pivot.replace(tzinfo=None)),
+         EqualTo(("dd",), inst[2])],
+        titems,
+    ) == {}  # naive timestamp literal; datetime against a date column
+    tcases = [
+        (GreaterThanOrEqual(("t",), pivot), lambda v: v >= pivot),
+        (LessThan(("t",), pivot), lambda v: v < pivot),
+        (EqualTo(("t",), pivot), lambda v: v == pivot),
+        (In(("t",), (pivot, far)), lambda v: v in (pivot, far)),
+        (GreaterThan(("tn",), pivot), lambda v: as_instant(v) > pivot),
+        (LessThanOrEqual(("tn",), pivot), lambda v: as_instant(v) <= pivot),
+        (EqualTo(("tn",), pivot), lambda v: as_instant(v) == pivot),
+        (GreaterThanOrEqual(("dd",), day), lambda v: v >= day),
+        (LessThan(("dd",), day), lambda v: v < day),
+        (In(("dd",), (day,)), lambda v: v == day),
+    ]
+    with driver_tz("Asia/Tokyo"):
+        for f, keeps in tcases:
+            (col, op), = _pushdown_spec([f], titems).items()
+            spark_keeps = [
+                v is not None and keeps(v) for v in tdata[col].to_pylist()
+            ]
+            assert any(spark_keeps) and not all(spark_keeps), f
+            for codec in ("auto", "plain", "dict"):
+                mask = _chunk_mask(tdata[col], op, codec)
+                dropped = [k and not m for m, k in zip(mask, spark_keeps)]
+                assert not any(dropped), (f, codec)
+                if op[0] == "in":
+                    assert mask == spark_keeps, (f, codec)
+
+
+def test_time_masks_keep_every_row_spark_keeps(ds_spark, tmp_path):
+    """End to end under a non-UTC session zone and driver OS zone:
+    comparisons and IN on a timestamp column (zoned and naive storage)
+    and on a date column return exactly the rows the same predicate
+    keeps over an unfiltered read, which no mask touches."""
+    from conftest import driver_tz
+
+    src = webpages(ds_spark, 300, partitions=2).select(
+        "url",
+        "warc_ts",
+        F.to_date("warc_ts").alias("day"),
+        F.col("warc_ts").cast("timestamp_ntz").alias("wall"),
+    )
+    zoned = str(tmp_path / "zoned")
+    encode_with_resume(
+        ds_spark, src.drop("wall"), zoned, EncodeConfig(**CFG), run_id="z1"
+    )
+    naive = str(tmp_path / "naive")
+    src.select("url", "wall").write.format("choetl").mode("append").save(
+        naive
+    )
+    prev = ds_spark.conf.get("spark.sql.session.timeZone")
+    ds_spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        with driver_tz("Asia/Tokyo"):
+            for path, col in (
+                (zoned, "warc_ts"), (zoned, "day"), (naive, "wall")
+            ):
+                df = ds_spark.read.format("choetl").load(path)
+                as_int = (F.unix_date if col == "day" else F.unix_micros)(
+                    F.col(col)
+                )
+                ints = sorted(r[0] for r in df.select(as_int).collect())
+                p, q = ints[len(ints) // 2], ints[-3]
+                pv, qv = (
+                    df.filter(as_int == x).select(col).first()[0]
+                    for x in (p, q)
+                )
+                for pred, keep in (
+                    (F.col(col) >= pv, lambda v: v >= p),
+                    (F.col(col) < pv, lambda v: v < p),
+                    (F.col(col) == pv, lambda v: v == p),
+                    (F.col(col).isin(pv, qv), lambda v: v in (p, q)),
+                ):
+                    got = sorted(
+                        r[0] for r in df.filter(pred).select(as_int).collect()
+                    )
+                    assert got == [v for v in ints if keep(v)], (col, pred)
+    finally:
+        ds_spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 def test_bloom_chunk_selection(ds_spark, tmp_path):

@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from choetl_spark.datasource import register
 from choetl_spark.deletes import (
     compact_deletes,
     delete_matching,
@@ -350,24 +351,36 @@ def test_upsert_replaces_matched_keys(spark, store):
 
 
 def test_scan_without_tombstones_pays_zero_delete_overhead(spark, store):
-    """The merge-on-read tax is opt-in: a store with NO tombstones must
-    scan through the plain (positionless, no anti-join) decode plan —
-    the hot 100TB read path cannot pay for a feature it doesn't use."""
+    """The merge-on-read tax is opt-in: a store with NO tombstones plans
+    splits that carry no delete positions, so its tasks decode without
+    row positions — the hot 100TB read path cannot pay for a feature it
+    doesn't use. Once a delete commits, only the touched partition's
+    split carries positions, and the plan never gains a join: the
+    reader subtracts deletes task-side."""
+    from choetl_spark.datasource import (
+        _delete_positions,
+        _ledger_state,
+        plan_store_splits,
+    )
     from choetl_spark.plans import explain_str
 
     out, _ = store
-    plan = explain_str(scan_encoded(spark, out, ["url", "text"]), "simple")
-    assert "_row_pos" not in plan and "_part_id" not in plan, plan
-    # once tombstones exist the anti-join appears — as a BROADCAST join
+
+    def parts_with_tombstones():
+        state = _ledger_state(out)
+        tomb = _delete_positions(out, state)
+        splits = plan_store_splits(out, state, tomb, target_split_bytes=1)
+        return {p for s in splits for p in s.tombstones}
+
+    assert parts_with_tombstones() == set()
     delete_where(spark, out, equals={"url": ["nonexistent-url"]})
-    # (an all-miss predicate commits nothing: still the plain plan)
-    plan2 = explain_str(scan_encoded(spark, out, ["url", "text"]), "simple")
-    assert "_row_pos" not in plan2, plan2
+    # (an all-miss predicate commits nothing: still no positions)
+    assert parts_with_tombstones() == set()
     urls = [r["url"] for r in scan_encoded(spark, out, ["url"]).limit(1).collect()]
     delete_where(spark, out, equals={"url": urls})
-    plan3 = explain_str(scan_encoded(spark, out, ["url", "text"]), "simple")
-    assert "_row_pos" in plan3, plan3
-    assert "BroadcastHashJoin" in plan3 and "LeftAnti" in plan3, plan3
+    assert len(parts_with_tombstones()) == 1
+    plan = explain_str(scan_encoded(spark, out, ["url", "text"]), "simple")
+    assert "Join" not in plan, plan
 
 
 def test_decode_with_pos_exact_coordinates(spark, store):
@@ -464,6 +477,13 @@ def test_tombstone_loss_refuses_loudly(spark, tmp_path):
     shutil.rmtree(_deletes_dir(out))
     with pytest.raises(RuntimeError, match="resurrect"):
         scan_encoded(spark, out, ["url"]).collect()
+    # point_lookup raises the same typed error; a plain format("choetl")
+    # read refuses too (Spark wraps a data source's error)
+    with pytest.raises(RuntimeError, match="resurrect"):
+        point_lookup(spark, out, "url", victim, ["url"])
+    register(spark)
+    with pytest.raises(Exception, match="resurrect"):
+        spark.read.format("choetl").load(out).count()
 
 
 def test_tombstone_duplicate_files_are_harmless(spark, tmp_path):
