@@ -25,11 +25,13 @@ row groups with pyarrow, filters chunk rows to its committed
 kernel (:func:`choetl_spark.engine._make_decode_kernel`) — payload
 bytes cross the JVM boundary exactly once, as final decoded Arrow
 batches. The write path mirrors it: each task runs the shared encode
-kernel (:func:`choetl_spark.engine._make_encode_kernel`) and writes its
-chunk file directly; the driver ``commit()`` appends the ledger rows in
-ONE file — the store's standard crash protocol (chunks first, ledger
-second; orphans are invisible) means a failed/speculative task attempt
-can never corrupt the table.
+kernel inside the store's one task-side chunk writer
+(:func:`choetl_spark.engine._make_writing_wrapper`) under a hidden
+staging name; the driver ``commit()`` moves the successful attempts'
+files into place and appends the ledger rows in ONE file —
+the store's standard crash protocol (chunks first, ledger second;
+orphans are invisible) means a failed/speculative task attempt can
+never corrupt the table.
 
 This reader is the store's one row-read path: ``scan_encoded`` and
 ``point_lookup`` are front-ends over it (:func:`load_store`). It
@@ -111,27 +113,29 @@ from pyspark.sql.datasource import (
 from choetl_spark.bloom import bloom_maybe_contains
 from choetl_spark.codecs.base import str_to_type
 from choetl_spark.engine import (
-    _SPARK_TO_STORAGE,
     EncodeConfig,
     _make_decode_kernel,
     _make_encode_kernel,
     _make_filtered_decode_kernel,
+    _make_writing_wrapper,
     _spark_type_ddl,
     bloom_probeable,
+    publish_chunk_files,
+    schema_manifest,
 )
 from choetl_spark.deletes import _deletes_dir, refuse_lost_tombstones
 from choetl_spark.eqdeletes import _eq_dir, resolve_eq_key
 from choetl_spark.ledger import (
-    LEDGER_SCHEMA_DDL,
     _chunks_dir,
     _ledger_dir,
-    _widened_dtype,
+    append_ledger_rows,
     manifest_as_of,
     manifest_data_items,
+    merge_manifest,
     physical_name,
     read_manifest,
-    reserved_physicals,
     resolve_snapshot,
+    summary_ledger_rows,
     write_manifest,
 )
 
@@ -862,68 +866,30 @@ class ChoetlStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _TaskResult(WriterCommitMessage):
-    chunk_file: str
     attempt_id: str
-    parts: list  # [(part_id, n_rows, raw, enc, n_chunks, codec_map, fp)]
-    dtypes: dict  # column -> storage dtype string observed by the task
-
-
-_LEDGER_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int64()), ("fingerprint", pa.int64()),
-        ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()), ("n_chunks", pa.int64()),
-        ("codec_map", pa.string()), ("run_id", pa.string()),
-        ("run_seq", pa.int64()), ("status", pa.string()),
-        ("attempt_id", pa.string()),
-    ]
-)
-assert set(_LEDGER_PA_SCHEMA.names) == {
-    s.strip().split(" ")[0] for s in LEDGER_SCHEMA_DDL.split(",")
-}
-
-
-def _schema_manifest_fallback(schema, tz: str) -> dict:
-    """Manifest entries from a Spark StructType — used only when a
-    write commits ZERO rows into a store with no prior manifest (tasks
-    normally report the exact Arrow storage types they encoded)."""
-    out = {}
-    for f in schema.fields:
-        t = f.dataType.typeName()
-        if t in _SPARK_TO_STORAGE:
-            out[f.name] = {"dtype": _SPARK_TO_STORAGE[t], "logical": None}
-        elif t == "timestamp":
-            out[f.name] = {"dtype": f"timestamp[us][{tz}]", "logical": None}
-        elif t == "timestamp_ntz":
-            out[f.name] = {"dtype": "timestamp[us]", "logical": None}
-        elif t == "array" and (
-            f.dataType.elementType.typeName() in _SPARK_TO_STORAGE
-        ):
-            inner = _SPARK_TO_STORAGE[f.dataType.elementType.typeName()]
-            out[f.name] = {"dtype": f"list[{inner}]", "logical": None}
-        else:
-            raise NotImplementedError(
-                f"column {f.name!r}: nested/decimal types store as JSON "
-                "via encode_dataframe/encode_with_resume, not the "
-                "datasource writer"
-            )
-    return out
+    # the chunk writer's summary rows (dicts), one per logical partition
+    parts: list
 
 
 class ChoetlWriter(DataSourceArrowWriter):
     """Distributed encode into the store. Each task = one scan-local
     logical partition (``base + task_id`` — the base clears every
     existing part_id driver-side at plan time, the streaming sink's
-    namespacing rule, same single-writer caveat). ``mode("append")``
-    commits an append snapshot; ``mode("overwrite")`` additionally
-    retires every previously-live partition in the SAME ledger append —
-    an atomic replace snapshot (readers see old or new, never both)."""
+    namespacing rule, same single-writer caveat) and runs the shared
+    encode kernel inside the store's chunk writer
+    (:func:`choetl_spark.engine._make_writing_wrapper`) under a fresh
+    per-task ``attempt_id``; ``commit()`` publishes the successful
+    tasks' staging files (:func:`choetl_spark.engine.
+    publish_chunk_files`) before the manifest and the ledger append.
+    ``mode("append")`` commits an append snapshot; ``mode("overwrite")``
+    additionally retires every previously-live partition in the SAME
+    ledger append — an atomic replace snapshot (readers see old or new,
+    never both). Schemas the writer cannot store refuse here, before any
+    task writes."""
 
     def __init__(self, options: dict, schema, overwrite: bool):
         self._dir = options["path"]
         self._overwrite = overwrite
-        self._tz = options.get("timezone", "UTC")
-        self._schema = schema
         profile = options.get("optimize_for", "speed")
         kw = {"optimize_for": profile, "shuffle": "none"}
         if "chunk_bytes" in options:
@@ -938,173 +904,95 @@ class ChoetlWriter(DataSourceArrowWriter):
                 "assigns partition ids itself — drop the column, or "
                 "use encode_with_resume for caller-planned part ids"
             )
-        # fail fast on unsupported schemas (driver, before any task)
-        _schema_manifest_fallback(schema, self._tz)
-        state = _ledger_state(self._dir)
-        self._base = state["max_part"] + 1
+        self._manifest = schema_manifest(
+            schema, options.get("timezone", "UTC")
+        )
+        nested = [c for c, m in self._manifest.items() if m["logical"]]
+        if nested:
+            raise NotImplementedError(
+                f"columns {nested}: nested/decimal types store as JSON "
+                "via encode_dataframe/encode_with_resume, not the "
+                "datasource writer"
+            )
+        prior = read_manifest(self._dir) or {}
+        for c, m in self._manifest.items():
+            old = prior.get(c, {}).get("dtype", "")
+            if old.startswith("timestamp[us][") and m["dtype"].startswith(
+                "timestamp[us]["
+            ):
+                # the zone comes from the ``timezone`` option, not the
+                # session: an append keeps the store's tag (both store
+                # UTC micros)
+                m["dtype"] = old
+        merged = merge_manifest(prior, self._manifest)
+        if any(physical_name(merged[c], c) != c for c in self._manifest):
+            raise NotImplementedError(
+                "datasource writer into a store with renamed/re-added "
+                "columns (their chunks need a fresh physical key) — use "
+                "encode_with_resume"
+            )
+        self._base = _ledger_state(self._dir)["max_part"] + 1
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _TaskResult:
         from pyspark import TaskContext
 
         part_id = self._base + TaskContext.get().partitionId()
         attempt = uuid.uuid4().hex
-        kernel = _make_encode_kernel(self._cfg, {})
 
         def with_pid(batches):
             for b in batches:
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([part_id] * len(b), pa.int64()),
-                        *[b.column(i) for i in range(b.num_columns)],
-                    ],
+                    [pa.array([part_id] * len(b), pa.int64()), *b.columns],
                     names=["part_id", *b.schema.names],
                 )
 
-        out = list(kernel(with_pid(iterator)))
-        if not out:
-            return _TaskResult("", attempt, [], {})
-        chunks = pa.Table.from_batches(out)
-        chunks = chunks.append_column(
-            "attempt_id", pa.array([attempt] * chunks.num_rows, pa.string())
+        writer = _make_writing_wrapper(
+            _make_encode_kernel(self._cfg, {}), _chunks_dir(self._dir),
+            attempt,
         )
-        os.makedirs(_chunks_dir(self._dir), exist_ok=True)
-        fname = os.path.join(
-            _chunks_dir(self._dir), f"ds-{attempt}-{part_id}.parquet"
-        )
-        pq.write_table(chunks, fname)
-        metas = sorted(chunks.column("meta").to_pylist())
-        import hashlib
-
-        fp = int.from_bytes(
-            hashlib.md5(",".join(metas).encode()).digest()[:8],
-            "big", signed=True,
-        )
-        pairs = sorted(
-            {
-                (c, k)
-                for c, k in zip(
-                    chunks.column("column").to_pylist(),
-                    chunks.column("codec").to_pylist(),
-                )
-            }
-        )
-        codec_map = json.dumps(
-            [{"column": c, "codec": k} for c, k in pairs],
-            separators=(",", ":"),
-        )
-        n_cols = len({c for c, _ in pairs})
-        rows_x_cols = sum(chunks.column("n_rows").to_pylist())
-        dtypes = {}
-        for c, m in zip(
-            chunks.column("column").to_pylist(),
-            chunks.column("meta").to_pylist(),
-        ):
-            if c not in dtypes:
-                meta = json.loads(m)
-                child = meta["child"] if meta["codec"] == "zstd" else meta
-                dtypes[c] = child["dtype"]
         return _TaskResult(
-            chunk_file=fname,
-            attempt_id=attempt,
-            parts=[
-                (
-                    part_id,
-                    rows_x_cols // max(n_cols, 1),
-                    sum(chunks.column("raw_bytes").to_pylist()),
-                    sum(chunks.column("encoded_bytes").to_pylist()),
-                    chunks.num_rows,
-                    codec_map,
-                    fp,
-                )
-            ],
-            dtypes=dtypes,
+            attempt,
+            [r for b in writer(with_pid(iterator)) for r in b.to_pylist()],
         )
 
     def commit(self, messages):
         state = _ledger_state(self._dir)
         run_seq = state["max_seq"] + 1
         run_id = f"ds-write-{uuid.uuid4().hex[:12]}"
-        rows = []
-        observed: dict[str, str] = {}
-        for msg in messages:
-            if msg is None:
-                continue
-            for p, n, raw, enc, nch, cmap, fp in msg.parts:
-                rows.append(
-                    (p, fp, n, raw, enc, nch, cmap, run_id, run_seq,
-                     "done", msg.attempt_id)
-                )
-            for c, d in msg.dtypes.items():
-                prev = observed.get(c)
-                observed[c] = d if prev is None else (
-                    _widened_dtype(prev, d) or prev
-                )
+        done = [m for m in messages if m is not None]
+        rows = [
+            row
+            for m in done
+            for row in summary_ledger_rows(
+                m.parts, run_id, run_seq, "done", m.attempt_id
+            )
+        ]
         if self._overwrite:
             for p in sorted(state["live"]):
                 rows.append(
                     (p, None, 0, 0, 0, 0, None, run_id, run_seq,
                      "retired", uuid.uuid4().hex)
                 )
-        # manifest BEFORE the ledger append (readers resolving the new
-        # epoch must find every column's entry)
-        fallback = _schema_manifest_fallback(self._schema, self._tz)
-        new_cols = {
-            c: {"dtype": observed.get(c, m["dtype"]), "logical": None}
-            for c, m in fallback.items()
-        }
-        prior = read_manifest(self._dir) or {}
-        taken = reserved_physicals(prior)
-        for col, m in new_cols.items():
-            pm = prior.get(col)
-            if pm is not None:
-                if m["dtype"] != pm["dtype"]:
-                    wide = _widened_dtype(pm["dtype"], m["dtype"])
-                    if wide is None:
-                        raise ValueError(
-                            f"schema evolution: column {col!r} changes "
-                            f"storage type {pm['dtype']} -> {m['dtype']}"
-                        )
-                    m["dtype"] = wide
-                if "phys" in pm:
-                    m["phys"] = pm["phys"]
-                if physical_name(m, col) != col:
-                    raise NotImplementedError(
-                        "datasource writer into a store with renamed/"
-                        "re-added columns — use encode_with_resume"
-                    )
-            else:
-                if col in taken:
-                    raise NotImplementedError(
-                        f"column {col!r} would need a fresh physical key "
-                        "(a dropped column reserves it) — use "
-                        "encode_with_resume"
-                    )
-                taken.add(col)
-        merged = dict(prior)
-        merged.update(new_cols)
+        # chunk files, then the manifest, BEFORE the ledger append
+        # (readers resolving the new epoch must find every file and
+        # every column's entry)
+        publish_chunk_files(
+            _chunks_dir(self._dir), [r for m in done for r in m.parts]
+        )
         os.makedirs(self._dir, exist_ok=True)
-        write_manifest(self._dir, merged)
+        write_manifest(
+            self._dir, merge_manifest(read_manifest(self._dir), self._manifest)
+        )
         if rows:
-            os.makedirs(_ledger_dir(self._dir), exist_ok=True)
-            table = pa.Table.from_arrays(
-                [
-                    pa.array([r[i] for r in rows], _LEDGER_PA_SCHEMA.types[i])
-                    for i in range(len(_LEDGER_PA_SCHEMA.names))
-                ],
-                schema=_LEDGER_PA_SCHEMA,
-            )
-            pq.write_table(
-                table,
-                os.path.join(
-                    _ledger_dir(self._dir), f"ds-{uuid.uuid4().hex}.parquet"
-                ),
-            )
+            append_ledger_rows(self._dir, rows)
 
     def abort(self, messages):
-        for msg in messages:
-            if msg is not None and msg.chunk_file:
+        # the successful tasks' staging files (a failed task's own is
+        # left to vacuum's staging sweep)
+        for m in messages:
+            for r in (m.parts if m is not None else []):
                 try:
-                    os.unlink(msg.chunk_file)
+                    os.unlink(os.path.join(_chunks_dir(self._dir), r["file"]))
                 except OSError:
                     pass
 

@@ -15,8 +15,14 @@ FileSourceScanExec does), ships only the tiny split descriptors to the
 executors, and each Python task opens its split with ``pyarrow.parquet``
 and feeds Arrow batches straight into the shared codec kernel
 (:func:`choetl_spark.engine._encode_block`). Data bytes cross no
-JVM/Python boundary on the way IN; only the (compressed) encoded chunks
-cross on the way out.
+JVM/Python boundary on the way IN. On the way out, the store writes
+(:func:`write_parquet_direct`, :func:`encode_direct_with_resume`) run
+that kernel inside the store's one task-side chunk writer
+(:func:`choetl_spark.engine._make_writing_wrapper`): each task writes
+its split's chunk file with pyarrow, only a summary row reaches
+Spark, and the driver moves the successful tasks' files into place.
+:func:`encode_parquet_direct` instead returns the encoded chunk
+rows as a DataFrame, for callers that want them in Spark.
 
 The reference's analog is ChoETL's pull-based reader feeding its writer
 directly (reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:53-137
@@ -51,9 +57,12 @@ from pyspark.sql import DataFrame, SparkSession
 from choetl_spark.codecs.base import str_to_type
 from choetl_spark.engine import (
     ENCODED_SCHEMA_DDL,
+    WRITE_SUMMARY_SCHEMA,
     EncodeConfig,
     _encode_block,
+    _make_writing_wrapper,
     column_manifest,
+    publish_chunk_files,
 )
 
 _SPLIT_SCHEMA_DDL = (
@@ -168,14 +177,15 @@ def direct_manifest(
     return manifest
 
 
-def _make_direct_kernel(
-    cfg: EncodeConfig, dtypes: dict[str, str], columns: list[str]
-):
+def _make_direct_kernel(cfg: EncodeConfig, manifest: dict):
     """Kernel over split-descriptor rows: read the split with pyarrow,
     cast to the manifest storage types (what the standard path's Spark
     Arrow conversion would have produced — timestamps to the session-tz
     annotation, etc.), and run the shared encode kernel."""
-    target = pa.schema([(c, str_to_type(dtypes[c])) for c in columns])
+    columns = list(manifest)
+    target = pa.schema(
+        [(c, str_to_type(m["dtype"])) for c, m in manifest.items()]
+    )
     batch_rows = max(cfg.chunk_rows, 8192)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -228,151 +238,6 @@ def _make_direct_kernel(
     return kernel
 
 
-_WRITER_SUMMARY_DDL = (
-    "part_id long, n_chunks long, n_rows long, raw_bytes long, "
-    "encoded_bytes long"
-)
-
-
-def _make_direct_writer_kernel(
-    cfg: EncodeConfig,
-    dtypes: dict[str, str],
-    columns: list[str],
-    chunks_dir: str,
-    attempt_id: str,
-):
-    """Scan-direct kernel that also WRITES its split's encoded chunk
-    rows itself: pyarrow parquet straight into the store's chunk
-    directory (compression none — the payloads are already compressed),
-    yielding only a one-row summary per split.
-
-    With :func:`_make_direct_kernel` the encoded bytes still crossed
-    Python->JVM so Spark's writer could persist them — measured ~20-30%
-    of scan-direct wall at 2 pinned cores for pure ferrying. Here data
-    bytes cross the JVM boundary in NEITHER direction; this is exactly
-    how a native DataSource writer task behaves.
-
-    Crash contract (same as the Spark-written path): files land under a
-    dot-prefixed temp name and rename into place only when the split
-    completes, so readers (and the mergeSchema chunk scan) never see a
-    torn file; a completed-but-uncommitted file is invisible to readers
-    via the ledger semi-join and is reclaimed by ``vacuum``. Task
-    retries overwrite the same final name with identical bytes (the
-    kernel is deterministic per split)."""
-    from choetl_spark.engine import _ENCODED_PA_SCHEMA
-
-    target = pa.schema([(c, str_to_type(dtypes[c])) for c in columns])
-    batch_rows = max(cfg.chunk_rows, 8192)
-    out_schema = _ENCODED_PA_SCHEMA.append(
-        pa.field("attempt_id", pa.string())
-    )
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        # TASK-lifetime codec trial/pin cache, shared across this task's
-        # splits: splits are chunk-sized (one or two chunks per column),
-        # so a per-split cache would never reach the pin streak and
-        # every split would re-pay the full stats + sample-trial encode
-        # — at 400k splits per 100 TB that is pure per-split overhead
-        # for a column whose character does not change across splits.
-        trial_caches: dict[str, dict] = {}
-        for batch in batches:
-            part_ids = batch.column(0).to_pylist()
-            paths = batch.column(1).to_pylist()
-            rg_lists = batch.column(2).to_pylist()
-            for part_id, path, rgs in zip(part_ids, paths, rg_lists):
-                pf = pq.ParquetFile(path)
-                row_base = {c: 0 for c in columns}
-                seq_base = {c: 0 for c in columns}
-                buf: list[pa.RecordBatch] = []
-                buf_bytes = 0
-                writer = None
-                # tmp name includes the TASK attempt: speculative or
-                # retried attempts of the same split must never append
-                # to one staging file concurrently (the final rename
-                # target is shared — last completed attempt wins with
-                # identical bytes, the kernel is deterministic)
-                from pyspark import TaskContext
-
-                tc = TaskContext.get()
-                task_att = tc.taskAttemptId() if tc is not None else 0
-                tmp = os.path.join(
-                    chunks_dir,
-                    f".tmp-direct-{attempt_id}-{part_id:08d}"
-                    f"-{task_att}.parquet",
-                )
-                final = os.path.join(
-                    chunks_dir,
-                    f"direct-{attempt_id}-{part_id:08d}.parquet",
-                )
-                n_chunks = n_rows = raw_b = enc_b = 0
-
-                def flush():
-                    nonlocal buf, buf_bytes, writer
-                    nonlocal n_chunks, n_rows, raw_b, enc_b
-                    if not buf:
-                        return
-                    table = (
-                        pa.Table.from_batches(buf)
-                        .select(columns)
-                        .cast(target)
-                    )
-                    buf, buf_bytes = [], 0
-                    eb = _encode_block(
-                        part_id, table, row_base, seq_base, cfg,
-                        None, trial_caches,
-                    )
-                    att = pa.array(
-                        [attempt_id] * eb.num_rows, pa.string()
-                    )
-                    eb = pa.RecordBatch.from_arrays(
-                        [*eb.columns, att], schema=out_schema
-                    )
-                    if writer is None:
-                        writer = pq.ParquetWriter(
-                            tmp, out_schema, compression="none"
-                        )
-                    writer.write_batch(eb)
-                    n_chunks += eb.num_rows
-                    n_rows += table.num_rows
-                    raw_b += sum(
-                        v.as_py() for v in eb.column("raw_bytes")
-                    )
-                    enc_b += sum(
-                        v.as_py() for v in eb.column("encoded_bytes")
-                    )
-
-                for rb in pf.iter_batches(
-                    batch_size=batch_rows,
-                    row_groups=list(rgs),
-                    columns=columns,
-                ):
-                    buf.append(rb)
-                    buf_bytes += rb.nbytes
-                    if buf_bytes >= cfg.flush_bytes:
-                        flush()
-                flush()
-                if writer is not None:
-                    writer.close()
-                    os.replace(tmp, final)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([part_id], pa.int64()),
-                        pa.array([n_chunks], pa.int64()),
-                        pa.array([n_rows], pa.int64()),
-                        pa.array([raw_b], pa.int64()),
-                        pa.array([enc_b], pa.int64()),
-                    ],
-                    names=[
-                        "part_id", "n_chunks", "n_rows",
-                        "raw_bytes", "encoded_bytes",
-                    ],
-                )
-
-    return kernel
-
-
 def encode_parquet_direct(
     spark: SparkSession,
     src: str,
@@ -389,13 +254,30 @@ def encode_parquet_direct(
     ledger, and every downstream store operation work unchanged.
     """
     cfg = cfg or EncodeConfig()
-    manifest = direct_manifest(spark, src, cfg)
-    columns = list(manifest)
-    dtypes = {c: m["dtype"] for c, m in manifest.items()}
     if splits is None:
         splits = plan_parquet_splits(src, target_split_bytes)
     return _splits_dataframe(spark, splits).mapInArrow(
-        _make_direct_kernel(cfg, dtypes, columns), ENCODED_SCHEMA_DDL
+        _make_direct_kernel(cfg, direct_manifest(spark, src, cfg)),
+        ENCODED_SCHEMA_DDL,
+    )
+
+
+def _write_splits(
+    splits: DataFrame,
+    cfg: EncodeConfig,
+    manifest: dict,
+    chunks_dir: str,
+    attempt_id: str,
+) -> DataFrame:
+    """The scan-direct kernel inside the task-side chunk writer
+    (:func:`choetl_spark.engine._make_writing_wrapper`) over a split
+    descriptor frame: one staging chunk file and one summary row per
+    split (lazy)."""
+    return splits.mapInArrow(
+        _make_writing_wrapper(
+            _make_direct_kernel(cfg, manifest), chunks_dir, attempt_id
+        ),
+        WRITE_SUMMARY_SCHEMA,
     )
 
 
@@ -408,14 +290,16 @@ def write_parquet_direct(
     attempt_id: str | None = None,
     target_split_bytes: int = 128 << 20,
 ) -> DataFrame:
-    """Lazy storage-to-storage encode: each task reads its split with
-    pyarrow AND writes its encoded chunk file with pyarrow
-    (:func:`_make_direct_writer_kernel`) — payload bytes never cross
-    the JVM/Python boundary in either direction. Returns the one-row-
-    per-split summary frame; any action executes the write. For the
-    ledgered/resumable form use :func:`encode_direct_with_resume`
-    (``native_write=True``), which rides this kernel under the commit
-    protocol.
+    """Storage-to-storage encode: each task reads its split with
+    pyarrow AND writes its encoded chunk file with pyarrow — payload
+    bytes never cross the JVM/Python boundary in either direction. Runs
+    the write, publishes the tasks' files
+    (:func:`choetl_spark.engine.publish_chunk_files`) and returns the
+    summary rows as a local frame (``part_id, n_rows, n_chunks,
+    raw_bytes, encoded_bytes, codec_map, fingerprint, file`` per
+    split). For the ledgered/resumable form use
+    :func:`encode_direct_with_resume`, which runs the same writer under
+    the commit protocol.
 
     ``attempt_id`` defaults to a fresh uuid per call (it namespaces the
     chunk file names), so two invocations into the same ``chunks_dir``
@@ -426,18 +310,14 @@ def write_parquet_direct(
         import uuid
 
         attempt_id = uuid.uuid4().hex
-    manifest = direct_manifest(spark, src, cfg)
-    columns = list(manifest)
-    dtypes = {c: m["dtype"] for c, m in manifest.items()}
     if splits is None:
         splits = plan_parquet_splits(src, target_split_bytes)
-    os.makedirs(chunks_dir, exist_ok=True)
-    return _splits_dataframe(spark, splits).mapInArrow(
-        _make_direct_writer_kernel(
-            cfg, dtypes, columns, chunks_dir, attempt_id
-        ),
-        _WRITER_SUMMARY_DDL,
-    )
+    summary = _write_splits(
+        _splits_dataframe(spark, splits), cfg,
+        direct_manifest(spark, src, cfg), chunks_dir, attempt_id,
+    ).collect()
+    publish_chunk_files(chunks_dir, [r.asDict() for r in summary])
+    return spark.createDataFrame(summary, WRITE_SUMMARY_SCHEMA)
 
 
 def encode_direct_with_resume(
@@ -447,7 +327,6 @@ def encode_direct_with_resume(
     cfg: EncodeConfig | None = None,
     run_id: str | None = None,
     target_split_bytes: int = 128 << 20,
-    native_write: bool = True,
 ) -> dict:
     """Scan-direct encode into a ledgered store, resuming past splits.
 
@@ -459,63 +338,23 @@ def encode_direct_with_resume(
     the ledger and re-encodes only the splits that never committed.
     (Changing the split target between a crash and its resume re-plans
     the part_ids — resume then re-encodes everything into fresh ids;
-    keep the knob stable across retries of one logical run.)
-
-    ``native_write=True`` (default) uses the task-side chunk writer
-    (:func:`_make_direct_writer_kernel`): data bytes cross the
-    JVM/Python boundary in NEITHER direction — input is read with
-    pyarrow, encoded chunk files are written with pyarrow, and only
-    split descriptors (in) and one summary row per split (out) touch
-    Spark. ``False`` keeps the older shape where encoded chunk rows
-    ship back to the JVM and Spark's parquet writer persists them.
+    keep the knob stable across retries of one logical run.) Data bytes
+    cross the JVM/Python boundary in NEITHER direction: only split
+    descriptors (in) and one summary row per split (out) touch Spark.
     """
-    import os as _os
-
     from choetl_spark.ledger import _chunks_dir, encode_with_resume
 
     cfg = cfg or EncodeConfig()
     manifest = direct_manifest(spark, src, cfg)
-    columns = list(manifest)
-    dtypes = {c: m["dtype"] for c, m in manifest.items()}
-    splits = plan_parquet_splits(src, target_split_bytes)
-
-    if native_write:
-        chunks_dir = _chunks_dir(out_dir)
-
-        def writer_encoder(
-            pending: DataFrame, cfg_enc: EncodeConfig, attempt_id: str
-        ) -> DataFrame:
-            _os.makedirs(chunks_dir, exist_ok=True)
-            return pending.mapInArrow(
-                _make_direct_writer_kernel(
-                    cfg_enc, dtypes, columns, chunks_dir, attempt_id
-                ),
-                _WRITER_SUMMARY_DDL,
-            )
-
-        return encode_with_resume(
-            spark,
-            _splits_dataframe(spark, splits),
-            out_dir,
-            cfg,
-            run_id=run_id,
-            encoder=writer_encoder,
-            encoder_writes_chunks=True,
-            schema_df=spark.read.parquet(src),
-        )
-
-    def encoder(pending: DataFrame, cfg_enc: EncodeConfig) -> DataFrame:
-        return pending.mapInArrow(
-            _make_direct_kernel(cfg_enc, dtypes, columns),
-            ENCODED_SCHEMA_DDL,
-        )
-
+    chunks_dir = _chunks_dir(out_dir)
     return encode_with_resume(
         spark,
-        _splits_dataframe(spark, splits),
+        _splits_dataframe(spark, plan_parquet_splits(src, target_split_bytes)),
         out_dir,
         cfg,
         run_id=run_id,
-        encoder=encoder,
+        encoder=lambda pending, cfg_enc, attempt_id: _write_splits(
+            pending, cfg_enc, manifest, chunks_dir, attempt_id
+        ),
         schema_df=spark.read.parquet(src),
     )

@@ -7,9 +7,10 @@ reference src/ChoETL.Parquet/ChoParquetRecordWriter.cs:497-698):
       -> plan_partitions (stable data-derived part_id, hot-host salting)
       -> repartition(P, part_id) + sortWithinPartitions(part_id, key)
       -> mapInArrow(encode kernel)          # JVM->Python once per task
-      -> encoded-chunk DataFrame            # (part_id, column, chunk_seq,
+      -> encoded chunk rows                 # (part_id, column, chunk_seq,
                                             #  row_start, n_rows, codec, ...)
-      -> parquet/Iceberg append + ledger    # choetl_spark.ledger
+      -> task-side chunk file + summary row # _make_writing_wrapper
+      -> ledger commit                      # choetl_spark.ledger
 
 ChoETL's RowGroupSize row-count flush (ChoParquetRecordConfiguration.cs:42)
 becomes a BYTE-capped chunker: a chunk closes at ``chunk_rows`` rows or
@@ -35,6 +36,7 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from choetl_spark.codecs import decode_array, encode_array
 from choetl_spark.codecs.base import data_nbytes, str_to_type, type_to_str
@@ -90,12 +92,13 @@ class EncodeConfig:
     #     the same table snapshot).
     shuffle: str = "salted"
     # deterministic=True restores the within-partition sort by key_col in
-    # salted mode, making chunk contents (and therefore codec choices and
-    # per-chunk metrics) bit-stable across reruns — shuffle reads fetch
-    # map outputs in arbitrary order otherwise. Costs a string sort; row
-    # CONTENT round-trips identically either way, so this matters only
-    # when chunk-level artifacts must be reproducible (golden tests,
-    # cross-run fingerprint comparisons).
+    # salted mode (then a full-row hash; the hash alone when the frame
+    # has no key_col), making chunk contents (and therefore codec choices
+    # and per-chunk metrics) bit-stable across reruns — shuffle reads
+    # fetch map outputs in arbitrary order otherwise. Costs a string
+    # sort; row CONTENT round-trips identically either way, so this
+    # matters only when chunk-level artifacts must be reproducible
+    # (golden tests, cross-run fingerprint comparisons).
     deterministic: bool = False
     partition_by_host: bool = True
     hot_factor: float = 2.0
@@ -368,17 +371,17 @@ def _is_vector_column(dt) -> bool:
     )
 
 
-def _nested_columns(df: DataFrame) -> dict[str, str]:
-    """Columns whose Spark type the codec layer does not store natively
-    -> their DDL. These ride as JSON strings (the reference's own
-    fallback: any complex value JSON-serializes on write,
-    ChoParquetRecordWriter.cs:128-137) and the decode kernel restores the
-    type (:func:`_conform`). NaN/Infinity inside nested floats are not
-    JSON-portable — the one documented fidelity limit of this path.
-    array<numeric> columns are exempt: they store natively via the
-    veclist codec (which also keeps float NaN/Inf bit-exact)."""
+def _nested_columns(schema) -> dict[str, str]:
+    """Columns of a ``StructType`` whose Spark type the codec layer
+    does not store natively -> their DDL. These ride as JSON strings
+    (the reference's own fallback: any complex value JSON-serializes on
+    write, ChoParquetRecordWriter.cs:128-137) and the decode kernel
+    restores the type (:func:`_conform`). NaN/Infinity inside nested
+    floats are not JSON-portable — the one documented fidelity limit of
+    this path. array<numeric> columns are exempt: they store natively
+    via the veclist codec (which also keeps float NaN/Inf bit-exact)."""
     out = {}
-    for f in df.schema.fields:
+    for f in schema.fields:
         if f.dataType.typeName() not in _SIMPLE_SPARK_TYPES and not (
             _is_vector_column(f.dataType)
         ):
@@ -496,19 +499,18 @@ def _encode_upstream(
         # partition contiguous within a task; sorting by the row key too
         # costs a full string sort for no measured footprint gain (0.1780
         # ratio either way on the web-page table at sf-bench scale).
-        if cfg.deterministic and lead:
-            # rows tied on key_col (the key-unique contract violated)
-            # would otherwise keep their fetch-order nondeterminism, so
-            # a retried native-write attempt could overwrite a
-            # committed chunk with different bytes — a full-row
-            # xxhash64 tiebreaker pins their relative order too (rows
-            # that still tie are byte-identical duplicates, which are
-            # interchangeable; distinct tied rows need a 2^-64 hash
+        if cfg.deterministic:
+            # rows tied on key_col (the key-unique contract violated),
+            # or every row of a part when the frame has no key_col,
+            # would otherwise keep their fetch-order nondeterminism — a
+            # full-row xxhash64 tiebreaker pins their relative order too
+            # (rows that still tie are byte-identical duplicates, which
+            # are interchangeable; distinct tied rows need a 2^-64 hash
             # collision to escape)
             tiebreak = F.xxhash64(
                 *[F.col(c) for c in picked.columns if c != "part_id"]
             )
-            sort_cols = ["part_id", cfg.key_col, tiebreak]
+            sort_cols = ["part_id", *lead, tiebreak]
         else:
             sort_cols = ["part_id"]
         shuffled = picked.repartition(
@@ -524,47 +526,63 @@ def encode_dataframe(df: DataFrame, cfg: EncodeConfig | None = None) -> DataFram
     # nested columns (array/map/struct/decimal) ride as JSON strings —
     # the reference's own complex-value fallback; decode restores them
     logical = {
-        k: v for k, v in _nested_columns(df).items() if k in cols
+        k: v for k, v in _nested_columns(df.schema).items() if k in cols
     }
     return _encode_upstream(df, cfg, logical).mapInArrow(
         _make_encode_kernel(cfg, logical), ENCODED_SCHEMA_DDL
     )
 
 
-_WRITE_SUMMARY_DDL = "n_chunks long, raw_bytes long, encoded_bytes long"
+_WRITE_SUMMARY_PA_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("n_chunks", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("encoded_bytes", pa.int64()),
+        ("codec_map", pa.string()),
+        ("fingerprint", pa.int64()),
+        ("file", pa.string()),
+    ]
+)
+
+WRITE_SUMMARY_SCHEMA = from_arrow_schema(_WRITE_SUMMARY_PA_SCHEMA)
+
+_STAGING_PREFIX = ".tmp-"
 
 
 def _make_writing_wrapper(inner_kernel, chunks_dir: str, attempt_id: str):
     """Wrap an encode kernel so each TASK persists its own chunk file
-    (pyarrow parquet, compression none — payloads are already
-    compressed) and yields one summary row instead of shipping encoded
-    chunk rows back over the Python->JVM Arrow boundary for Spark's
-    writer. Same crash contract as the scan-direct writer kernel:
-    task-attempt-unique dot-prefixed staging name, atomic rename on
-    task completion, vacuum sweeps crashed attempts' staging files,
-    and the ledger semi-join keeps completed-but-uncommitted files
-    invisible. One file per task (Spark's own writer layout); a task
-    holding several logical partitions writes them into that one file,
-    which is fine — commit is all-or-nothing per run.
+    and yields one summary row per logical partition (``part_id,
+    n_rows, n_chunks, raw_bytes, encoded_bytes, codec_map, fingerprint,
+    file``) instead of shipping encoded chunk rows over the
+    Python->JVM Arrow boundary. This is the store's one chunk-file
+    writer: the standard encode (:func:`encode_dataframe_writing`),
+    scan-direct (:mod:`choetl_spark.direct`) and the ``format("choetl")``
+    writer all run their kernels inside it. Chunk rows stream to a
+    pyarrow parquet writer (compression none — payloads are already
+    compressed) as the kernel yields them, so a task holds one encode
+    block at a time. A task holding several logical partitions writes
+    them into its one file, which is fine — commit is all-or-nothing per
+    run.
 
-    Retry/speculation contract: the final name is keyed on (engine
-    attempt_id, partitionId) — NOT taskAttemptId — so a retried or
-    speculative attempt re-renames over the same file. That overwrite
-    is safe only when retries produce byte-identical files:
-    ``encode_with_resume(native_write=True)`` therefore forces the
-    deterministic within-partition sort under the salted shuffle
-    (shuffle reads are otherwise fetch-order nondeterministic), which
-    pins bytes via (key_col, full-row xxhash64) — key ties included,
-    so the web-page table's url-uniqueness contract is belt, not
-    load-bearing; scan-local mode (shuffle="none") is stable
-    because retries re-read the same split in scan order. Spark's own
-    writer solves the same race with output-commit coordination, which
-    Python task kernels cannot reach."""
+    Crash contract: the task writes under a dot-prefixed staging name
+    unique to its task ATTEMPT (``.tmp-{attempt_id}-{partition}-
+    {taskAttemptId}.parquet``, the summary's ``file``) and never renames
+    it: the driver moves only the files reported by the attempts Spark
+    counted as successful into place (:func:`publish_chunk_files`).
+    A task must not publish itself, because a failing upstream ends its
+    Arrow input cleanly — the task then finishes a PARTIAL file before
+    Spark fails it — and because a speculative or zombie attempt would
+    otherwise land its file after the commit. No reader (nor the
+    mergeSchema chunk scan) ever sees a torn or unreported file;
+    ``vacuum`` sweeps the staging leftovers."""
     out_schema = _ENCODED_PA_SCHEMA.append(
         pa.field("attempt_id", pa.string())
     )
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import hashlib
         import os
 
         import pyarrow.parquet as pq
@@ -574,43 +592,100 @@ def _make_writing_wrapper(inner_kernel, chunks_dir: str, attempt_id: str):
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
         task_att = tc.taskAttemptId() if tc is not None else 0
-        tmp = os.path.join(
-            chunks_dir,
-            f".tmp-std-{attempt_id}-{pid:08d}-{task_att}.parquet",
-        )
-        final = os.path.join(
-            chunks_dir, f"std-{attempt_id}-{pid:08d}.parquet"
-        )
+        name = f"{_STAGING_PREFIX}{attempt_id}-{pid:08d}-{task_att}.parquet"
         writer = None
-        n_chunks = raw_b = enc_b = 0
-        for eb in inner_kernel(batches):
-            if eb.num_rows == 0:
-                continue
-            att = pa.array([attempt_id] * eb.num_rows, pa.string())
-            rb = pa.RecordBatch.from_arrays(
-                [*eb.columns, att], schema=out_schema
-            )
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, out_schema, compression="none"
+        parts: dict[int, dict] = {}  # part_id -> its summary so far
+        try:
+            for eb in inner_kernel(batches):
+                if eb.num_rows == 0:
+                    continue
+                if writer is None:
+                    os.makedirs(chunks_dir, exist_ok=True)
+                    writer = pq.ParquetWriter(
+                        os.path.join(chunks_dir, name), out_schema,
+                        compression="none",
+                    )
+                att = pa.array([attempt_id] * eb.num_rows, pa.string())
+                writer.write_batch(
+                    pa.RecordBatch.from_arrays(
+                        [*eb.columns, att], schema=out_schema
+                    )
                 )
-            writer.write_batch(rb)
-            n_chunks += eb.num_rows
-            raw_b += sum(v.as_py() for v in eb.column("raw_bytes"))
-            enc_b += sum(v.as_py() for v in eb.column("encoded_bytes"))
-        if writer is not None:
-            writer.close()
-            os.replace(tmp, final)
-        yield pa.RecordBatch.from_arrays(
+                for p, c, n, raw, enc, codec, meta in zip(
+                    *(
+                        eb.column(k).to_pylist()
+                        for k in ("part_id", "column", "n_rows", "raw_bytes",
+                                  "encoded_bytes", "codec", "meta")
+                    )
+                ):
+                    s = parts.setdefault(
+                        p, {"rows_x_cols": 0, "n_chunks": 0, "raw_bytes": 0,
+                            "encoded_bytes": 0, "codecs": set(), "fp": 0}
+                    )
+                    s["rows_x_cols"] += n
+                    s["n_chunks"] += 1
+                    s["raw_bytes"] += raw
+                    s["encoded_bytes"] += enc
+                    s["codecs"].add((c, codec))
+                    # order-insensitive content fingerprint: the sum of
+                    # the chunk metas' 64-bit digests
+                    s["fp"] += int.from_bytes(
+                        hashlib.md5(meta.encode()).digest()[:8], "big"
+                    )
+        finally:
+            if writer is not None:
+                writer.close()
+        yield pa.RecordBatch.from_pylist(
             [
-                pa.array([n_chunks], pa.int64()),
-                pa.array([raw_b], pa.int64()),
-                pa.array([enc_b], pa.int64()),
+                {
+                    "part_id": p,
+                    # every column's chunks tile the same rows
+                    "n_rows": s["rows_x_cols"]
+                    // len({c for c, _ in s["codecs"]}),
+                    "n_chunks": s["n_chunks"],
+                    "raw_bytes": s["raw_bytes"],
+                    "encoded_bytes": s["encoded_bytes"],
+                    "codec_map": json.dumps(
+                        [{"column": c, "codec": k}
+                         for c, k in sorted(s["codecs"])],
+                        separators=(",", ":"),
+                    ),
+                    "fingerprint": (s["fp"] + (1 << 63)) % (1 << 64)
+                    - (1 << 63),
+                    "file": name,
+                }
+                for p, s in sorted(parts.items())
             ],
-            names=["n_chunks", "raw_bytes", "encoded_bytes"],
+            schema=_WRITE_SUMMARY_PA_SCHEMA,
         )
 
     return kernel
+
+
+def publish_chunk_files(chunks_dir: str, summary: list[dict]) -> None:
+    """Driver half of the chunk writer (:func:`_make_writing_wrapper`):
+    rename the staging files named by ``summary`` — the summary rows of
+    the task attempts Spark counted as successful, one per logical
+    partition — to their visible names (the staging name without its
+    ``.tmp-`` prefix, so a failed, retried or speculative attempt's own
+    file stays hidden). Every writer calls this before its ledger
+    commit; a file that is already gone (a ``vacuum`` with a grace
+    shorter than the write, or a compaction that swapped ``chunks/``)
+    raises before anything commits."""
+    import os
+
+    for name in sorted({r["file"] for r in summary}):
+        try:
+            os.replace(
+                os.path.join(chunks_dir, name),
+                os.path.join(chunks_dir, name[len(_STAGING_PREFIX):]),
+            )
+        except FileNotFoundError:
+            raise RuntimeError(
+                f"staged chunk file {name} is gone (vacuumed or swapped "
+                "out of chunks/ mid-write) — nothing was committed; "
+                "rerun the write"
+            ) from None
 
 
 def encode_dataframe_writing(
@@ -619,24 +694,23 @@ def encode_dataframe_writing(
     chunks_dir: str,
     attempt_id: str,
 ) -> DataFrame:
-    """:func:`encode_dataframe` with the task-side chunk writer wrapped
-    around the kernel: identical partitioning/shuffle/nested-column
-    handling, but encoded bytes never cross to the JVM — tasks write
-    their chunk files themselves and the returned (lazy) frame carries
-    one summary row per task. Used by ``encode_with_resume(
-    native_write=True)``; any action executes the write."""
-    import os
-
-    os.makedirs(chunks_dir, exist_ok=True)
+    """:func:`encode_dataframe` with the task-side chunk writer
+    (:func:`_make_writing_wrapper`) around the kernel: identical
+    partitioning/shuffle/nested-column handling, but encoded bytes never
+    cross to the JVM — tasks write their chunk files themselves and the
+    returned (lazy) frame carries one summary row per logical partition.
+    The default encoder of ``ledger.encode_with_resume``; an action
+    writes the staging files, and :func:`publish_chunk_files` over the
+    collected rows makes them visible."""
     cols = cfg.columns or [c for c in df.columns if c != "part_id"]
     logical = {
-        k: v for k, v in _nested_columns(df).items() if k in cols
+        k: v for k, v in _nested_columns(df.schema).items() if k in cols
     }
     return _encode_upstream(df, cfg, logical).mapInArrow(
         _make_writing_wrapper(
             _make_encode_kernel(cfg, logical), chunks_dir, attempt_id
         ),
-        _WRITE_SUMMARY_DDL,
+        WRITE_SUMMARY_SCHEMA,
     )
 
 
@@ -670,26 +744,37 @@ _SPARK_TO_STORAGE = {
 
 def column_manifest(df: DataFrame, cfg: EncodeConfig | None = None) -> dict:
     """Per-column storage manifest {col: {dtype, logical}} for a source
-    DataFrame about to be encoded — a pure function of the Spark schema
-    plus the session timezone, computed driver-side with ZERO Spark jobs.
+    DataFrame about to be encoded — :func:`schema_manifest` of its
+    schema and session timezone, computed driver-side with ZERO Spark
+    jobs.
 
     This is what lets :func:`decode_dataframe` build its plan without
     the eager ``groupBy("column").collect()`` over chunk metadata (at
     100 TB that collect is a full metadata pass per decode call — round-2
-    verdict #4). The mapping mirrors exactly what the encode kernel will
-    see from Spark's Arrow conversion: simple types per
-    ``_SPARK_TO_STORAGE``; timestamps arrive as ``timestamp[us]`` tagged
-    with the session timezone; nested/decimal columns ride as JSON/cast
-    strings with their original DDL recorded as ``logical``
-    (same rule as :func:`encode_dataframe`).
-    """
+    verdict #4)."""
     cfg = cfg or EncodeConfig()
-    cols = cfg.columns or [c for c in df.columns if c != "part_id"]
-    logical = {k: v for k, v in _nested_columns(df).items() if k in cols}
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", None)
+    return schema_manifest(
+        df.schema,
+        df.sparkSession.conf.get("spark.sql.session.timeZone", None),
+        cfg.columns or [c for c in df.columns if c != "part_id"],
+    )
+
+
+def schema_manifest(
+    schema, tz: str | None, cols: list[str] | None = None
+) -> dict:
+    """The storage manifest of a Spark ``StructType`` (restricted to
+    ``cols`` when given) whose timestamps arrive tagged with ``tz`` —
+    the store's one Spark->storage type map. It mirrors exactly what the
+    encode kernel will see from Spark's Arrow conversion: simple types
+    per ``_SPARK_TO_STORAGE``; timestamps arrive as ``timestamp[us]``
+    tagged with the session timezone; nested/decimal columns ride as
+    JSON/cast strings with their original DDL recorded as ``logical``
+    (same rule as :func:`encode_dataframe`)."""
+    logical = _nested_columns(schema)
     out: dict[str, dict] = {}
-    for f in df.schema.fields:
-        if f.name not in cols:
+    for f in schema.fields:
+        if f.name == "part_id" or (cols is not None and f.name not in cols):
             continue
         t = f.dataType.typeName()
         if f.name in logical:

@@ -38,7 +38,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from choetl_spark.engine import EncodeConfig, column_manifest, encode_dataframe
+from choetl_spark.engine import (
+    EncodeConfig,
+    column_manifest,
+    encode_dataframe_writing,
+    publish_chunk_files,
+)
 from choetl_spark.partitioning import plan_partitions
 
 LEDGER_SCHEMA_DDL = (
@@ -131,6 +136,91 @@ def _widened_dtype(old: str, new: str) -> str | None:
     if {old, new} == {"float32", "float64"}:
         return "float64"
     return None
+
+
+def merge_manifest(prior: dict | None, new: dict) -> dict:
+    """The store manifest after a write whose column manifest is
+    ``new`` lands on a store whose manifest is ``prior`` (schema
+    evolution: a later write may add columns — the Iceberg add-column
+    contract; partitions written before a column existed read it as
+    nulls). For columns present in both, a safe widening
+    (:func:`_widened_dtype`) promotes the manifest dtype — chunks keep
+    their own written dtype and the decode kernels cast up — while any
+    other type CHANGE raises ``ValueError``, not a silent rewrite; the
+    prior physical key (``phys``) is kept. NEW columns claim a free
+    PHYSICAL chunk key (the field-id analog, :mod:`choetl_spark.
+    schema_evolution`): the display name, unless a renamed or dropped
+    column's chunks already occupy it — re-adding a dropped name must
+    NOT resurrect the old bytes. Columns absent from ``new`` stay as
+    they were (still readable). Pure; neither input is modified."""
+    prior = prior or {}
+    merged = dict(prior)
+    taken = reserved_physicals(prior)
+    for col, entry in new.items():
+        m = dict(entry)
+        pm = prior.get(col)
+        if pm is not None:
+            if m["dtype"] != pm["dtype"]:
+                wide = _widened_dtype(pm["dtype"], m["dtype"])
+                if wide is None:
+                    raise ValueError(
+                        f"schema evolution: column {col!r} changes "
+                        f"storage type {pm['dtype']} -> {m['dtype']}; "
+                        "only safe widening (int->wider int, "
+                        "float32->float64) is metadata-only — other "
+                        "changes need a rewrite, not a resume"
+                    )
+                m["dtype"] = wide
+            if "phys" in pm:
+                m["phys"] = pm["phys"]
+        else:
+            phys, k = col, 2
+            while phys in taken:
+                phys, k = f"{col}#{k}", k + 1
+            if phys != col:
+                m["phys"] = phys
+            taken.add(phys)
+        merged[col] = m
+    return merged
+
+
+def summary_ledger_rows(
+    summary: list[dict], run_id: str, run_seq: int, status: str,
+    attempt_id: str,
+) -> list[tuple]:
+    """Ledger rows (``LEDGER_SCHEMA_DDL`` order) for the partitions one
+    write attempt completed, from the chunk writer's summary rows
+    (:func:`choetl_spark.engine._make_writing_wrapper`)."""
+    return [
+        (s["part_id"], s["fingerprint"], s["n_rows"], s["raw_bytes"],
+         s["encoded_bytes"], s["n_chunks"], s["codec_map"], run_id,
+         int(run_seq), status, attempt_id)
+        for s in summary
+    ]
+
+
+def append_ledger_rows(out_dir: str, rows: list[tuple]) -> None:
+    """Append one commit's ledger rows (``LEDGER_SCHEMA_DDL`` order) as
+    ONE ledger file, written with pyarrow on the driver under a hidden
+    name and renamed into place — the commit point of a write: readers
+    see all of its rows or none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    types = {"long": pa.int64(), "string": pa.string()}
+    table = pa.table(
+        {
+            name: pa.array([r[i] for r in rows], types[t])
+            for i, (name, t) in enumerate(
+                f.split() for f in LEDGER_SCHEMA_DDL.split(",")
+            )
+        }
+    )
+    d = _ledger_dir(out_dir)
+    os.makedirs(d, exist_ok=True)
+    name = f"{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, os.path.join(d, f".tmp-{name}"))
+    os.replace(os.path.join(d, f".tmp-{name}"), os.path.join(d, name))
 
 
 def manifest_data_items(manifest: dict | None) -> list[tuple[str, dict]]:
@@ -715,13 +805,15 @@ def vacuum(
     removed = 0
     reclaimed = 0
     cutoff = time.time() - grace_sec
-    # dot-prefixed staging leftovers from crashed native-write tasks
-    # (choetl_spark.direct's writer kernel renames these into place on
-    # success): invisible to every parquet reader, so the Spark orphan
-    # pass never lists them. Swept FIRST and unconditionally — it is a
-    # pure driver-side listdir needing no ledger, so crashed staging
-    # files in a never-committed store (no ledger yet) or behind a
-    # failing orphan listing still get reclaimed.
+    # dot-prefixed staging files of failed, speculative or uncommitted
+    # writer tasks (the chunk writer, engine._make_writing_wrapper,
+    # writes them; the driver renames only the successful attempts'
+    # files into place): invisible to every parquet reader, so the
+    # Spark orphan pass never lists them. Swept FIRST and
+    # unconditionally — it is a pure driver-side listdir needing no
+    # ledger, so crashed staging files in a never-committed store (no
+    # ledger yet) or behind a failing orphan listing still get
+    # reclaimed.
     try:
         names = os.listdir(_chunks_dir(out_dir))
     except OSError:
@@ -1780,15 +1872,21 @@ def encode_with_resume(
     staged: bool = False,
     encoder=None,
     schema_df: DataFrame | None = None,
-    encoder_writes_chunks: bool = False,
-    native_write: bool = False,
 ) -> dict:
     """Encode ``df`` to ``out_dir``, skipping partitions already done.
 
+    Tasks write their own chunk files under hidden staging names
+    (:func:`choetl_spark.engine.encode_dataframe_writing`, the task-side
+    writer), so encoded bytes never cross the Python->JVM boundary; the
+    driver collects the successful attempts' summary rows, moves their
+    files into place (:func:`choetl_spark.engine.publish_chunk_files`)
+    and commits those rows as this attempt's ledger rows.
     ``encoder`` swaps the encode plan while keeping every commit
-    mechanic (manifest merge, integrity gate, attempt-keyed ledger
-    append): a callable ``(pending_df, cfg) -> encoded-chunk DataFrame``
-    — the scan-direct path (:func:`choetl_spark.direct.
+    mechanic (manifest merge, publish, integrity gate, attempt-keyed
+    ledger append): a callable ``(pending_df, cfg, attempt_id) ->
+    summary DataFrame`` whose action writes this attempt's staging
+    files through :func:`choetl_spark.engine._make_writing_wrapper` —
+    the scan-direct path (:func:`choetl_spark.direct.
     encode_direct_with_resume`) passes split DESCRIPTORS as ``df`` and
     reads the data inside its own kernel. ``schema_df`` then supplies
     the source schema for the manifest (``df`` carries descriptors, not
@@ -1875,51 +1973,13 @@ def encode_with_resume(
         pending = planned.join(F.broadcast(done), "part_id", "left_anti")
     else:
         pending = planned
-    # manifest sidecar BEFORE the chunk write, MERGED with any existing
-    # manifest (schema evolution: a later ingest run may add columns —
-    # the Iceberg add-column contract; partitions encoded before the
-    # column existed decode it as nulls). For columns present in both,
-    # this run's storage type wins only if unchanged; a type CHANGE is
-    # an error, not a silent rewrite. NEW columns claim a free PHYSICAL
-    # chunk key (the field-id analog, :mod:`choetl_spark.
-    # schema_evolution`): the display name, unless a renamed or dropped
-    # column's chunks already occupy it — re-adding a dropped name must
-    # NOT resurrect the old bytes.
+    # manifest sidecar BEFORE the chunk write, merged with any existing
+    # manifest (:func:`merge_manifest`: widening, physical keys)
     os.makedirs(out_dir, exist_ok=True)
-    new_manifest = column_manifest(
-        schema_df if schema_df is not None else df, cfg
+    new_manifest = merge_manifest(
+        read_manifest(out_dir),
+        column_manifest(schema_df if schema_df is not None else df, cfg),
     )
-    prior = read_manifest(out_dir) or {}
-    taken = reserved_physicals(prior)
-    for col, m in list(new_manifest.items()):
-        pm = prior.get(col)
-        if pm is not None:
-            if m["dtype"] != pm["dtype"]:
-                wide = _widened_dtype(pm["dtype"], m["dtype"])
-                if wide is None:
-                    raise ValueError(
-                        f"schema evolution: column {col!r} changes "
-                        f"storage type {pm['dtype']} -> {m['dtype']}; "
-                        "only safe widening (int->wider int, "
-                        "float32->float64) is metadata-only — other "
-                        "changes need a rewrite, not a resume"
-                    )
-                # Iceberg type-promotion semantics: the manifest dtype
-                # becomes the WIDER type; chunks keep their own written
-                # dtype and the decode kernels cast up to the manifest
-                m["dtype"] = wide
-            if "phys" in pm:
-                m["phys"] = pm["phys"]
-        else:
-            phys, k = col, 2
-            while phys in taken:
-                phys, k = f"{col}#{k}", k + 1
-            if phys != col:
-                m["phys"] = phys
-            taken.add(phys)
-    for col, m in prior.items():
-        if col not in new_manifest:
-            new_manifest[col] = m  # dropped-from-df column stays readable
     write_manifest(out_dir, new_manifest)
     # encode under the PHYSICAL keys (only renamed/re-added columns
     # differ); cfg column references follow the rename
@@ -1967,88 +2027,31 @@ def encode_with_resume(
                 for c, v in cfg.codec_overrides.items()
             },
         )
-    if encoder_writes_chunks:
-        # the encoder's tasks persist their own chunk files (pyarrow,
-        # attempt-keyed names — see choetl_spark.direct's writer
-        # kernel) and yield only summary rows; count() executes the
-        # plan. Commit mechanics below are unchanged: ledger rows are
-        # derived by re-reading the chunk files this attempt wrote, so
-        # who wrote them is irrelevant to the crash contract.
-        if encoder is None:
-            raise ValueError(
-                "encoder_writes_chunks=True requires an encoder"
-            )
-        encoder(pending, cfg_enc, attempt_id).count()
-    elif native_write:
-        # standard-path analog of the scan-direct writer kernel: same
-        # encode plan, but each task writes its own chunk file and only
-        # summary rows cross back — encoded bytes never ride the
-        # Python->JVM Arrow stream. Commit mechanics below unchanged.
-        if encoder is not None:
-            raise ValueError(
-                "native_write composes with the built-in encoder only; "
-                "a custom encoder should use encoder_writes_chunks"
-            )
-        from choetl_spark.engine import encode_dataframe_writing
-
-        cfg_nw = cfg_enc
-        if cfg_enc.shuffle != "none" and not cfg_enc.deterministic:
-            # task-side writes need retry-stable bytes: a speculative
-            # or zombie attempt re-renames the shared final file AFTER
-            # this attempt's ledger rows may already be derived, so the
-            # overwrite must be byte-identical. Under the salted
-            # shuffle, reduce tasks fetch map outputs in arbitrary
-            # order — only the deterministic within-partition sort by
-            # key_col pins row order (and therefore chunk payloads,
-            # boundaries, stats, and the ledger fingerprint) across
-            # attempts. Scan-local mode (shuffle="none") is already
-            # stable: tasks re-read the same split in scan order.
-            import dataclasses as _dc
-
-            cfg_nw = _dc.replace(cfg_enc, deterministic=True)
-        if cfg_nw.key_col not in pending.columns and (
-            cfg_nw.shuffle != "none"
-        ):
-            speculation = (
-                spark.conf.get("spark.speculation", "false") == "true"
-            )
-            if speculation:
-                raise ValueError(
-                    "native_write with shuffle!='none' needs key_col "
-                    f"({cfg_nw.key_col!r}) in the frame to make task "
-                    "retries byte-identical; with spark.speculation "
-                    "enabled a late attempt could overwrite a committed "
-                    "chunk file with different bytes — use the default "
-                    "JVM-stream write path or add the key column"
-                )
-        encode_dataframe_writing(
-            pending, cfg_nw, _chunks_dir(out_dir), attempt_id
-        ).count()
-    else:
-        enc = (encoder or encode_dataframe)(pending, cfg_enc).withColumn(
-            "attempt_id", F.lit(attempt_id)
+    written = (
+        encoder(pending, cfg_enc, attempt_id)
+        if encoder is not None
+        else encode_dataframe_writing(
+            pending, cfg_enc, _chunks_dir(out_dir), attempt_id
         )
-        enc.write.mode("append").option("compression", "none").parquet(
-            _chunks_dir(out_dir)
-        )
-    # ledger rows for partitions completed by THIS attempt, derived from
-    # the chunks actually written (re-read is cheap: metadata + small
-    # columns). Filtering on attempt_id — not an anti-join against the
-    # ledger — means a prior crashed attempt's orphan chunks for the
-    # same partitions can't leak into the aggregates (they used to
-    # double n_rows and commit both copies)
-    new_chunks = _read_chunks(spark, out_dir).filter(
-        F.col("attempt_id") == attempt_id
     )
+    # the tasks write hidden staging files; only the successful
+    # attempts' files (the ones whose summary rows reach the driver)
+    # become visible chunk files
+    summary = [r.asDict() for r in written.collect()]
+    publish_chunk_files(_chunks_dir(out_dir), summary)
     # integrity gate BEFORE commit: each (part, column)'s chunks must
     # tile [0, N) exactly — sum(n_rows) == max(row_start + n_rows).
     # Catches the one silent misuse decode cannot detect: a caller-
     # provided part_id that is not co-located under shuffle="none"
     # (two tasks each number the part's rows from 0, so row counts
     # stay column-consistent while cross-column row ALIGNMENT is
-    # garbage). Metadata-scale aggregate over this attempt's chunks.
+    # garbage). Metadata-scale aggregate over this attempt's chunks;
+    # filtering on attempt_id keeps a prior crashed attempt's orphan
+    # chunks for the same partitions out of it.
     bad = (
-        new_chunks.groupBy("part_id", "column")
+        _read_chunks(spark, out_dir)
+        .filter(F.col("attempt_id") == attempt_id)
+        .groupBy("part_id", "column")
         .agg(
             F.sum("n_rows").alias("rows_sum"),
             F.max(F.col("row_start") + F.col("n_rows")).alias("end_max"),
@@ -2067,88 +2070,36 @@ def encode_with_resume(
             "co-located: repartition by part_id first, or use the "
             "salted shuffle mode)"
         )
-    ledger_rows = (
-        new_chunks.groupBy("part_id")
-        .agg(
-            # every column's chunks sum to the same row count, so the
-            # partition's true rows = sum over all chunks / column count
-            # (round-2 verdict #3: this used to report rows x cols)
-            F.sum("n_rows").alias("rows_x_cols"),
-            F.countDistinct("column").alias("n_cols"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-            F.count("*").alias("n_chunks"),
-            F.to_json(
-                F.sort_array(
-                    F.array_distinct(F.collect_list(F.struct("column", "codec")))
-                )
-            ).alias("codec_map"),
-            F.xxhash64(
-                F.concat_ws(",", F.sort_array(F.collect_list(F.col("meta"))))
-            ).alias("fingerprint"),
-        )
-        .select(
-            "part_id",
-            "fingerprint",
-            (F.col("rows_x_cols") / F.col("n_cols"))
-            .cast("long")
-            .alias("n_rows"),
-            "raw_bytes",
-            "encoded_bytes",
-            "n_chunks",
-            "codec_map",
-            F.lit(run_id).alias("run_id"),
-            F.lit(run_seq).cast("long").alias("run_seq"),
-            F.lit("staged" if staged else "done").alias("status"),
-            F.lit(attempt_id).alias("attempt_id"),
-        )
+    # ledger rows for partitions completed by THIS attempt (the
+    # published files' own summary rows), plus the retire/delete rows
+    # that ride the same append
+    rows = summary_ledger_rows(
+        summary, run_id, run_seq, "staged" if staged else "done",
+        attempt_id,
     )
-    if retire_part_ids:
-        retire_rows = spark.createDataFrame(
-            [
-                (int(p), None, 0, 0, 0, 0, None, run_id,
-                 int(run_seq), "retired", attempt_id)
-                for p in retire_part_ids
-            ],
-            LEDGER_SCHEMA_DDL,
-        )
-        ledger_rows = ledger_rows.unionByName(retire_rows)
-    if delete_commits:
-        delete_rows = spark.createDataFrame(
-            [
-                (-1, None, int(n), 0, 0, 0, None, run_id,
-                 int(run_seq), "delete", str(delete_id))
-                for delete_id, n in delete_commits
-            ],
-            LEDGER_SCHEMA_DDL,
-        )
-        ledger_rows = ledger_rows.unionByName(delete_rows)
-    if eq_delete_commits:
-        # (delete_id, n_values, key_column): value files a caller
-        # pre-wrote become visible at THIS epoch — the eq-delete MERGE
-        # half of :func:`choetl_spark.eqdeletes.upsert_by_key`. The
-        # strict data-seq < delete-seq rule means this run's own
-        # partitions (same run_seq) are never deleted by it.
-        eq_rows = spark.createDataFrame(
-            [
-                (-1, None, int(n), 0, 0, 0, str(col), run_id,
-                 int(run_seq), "eqdelete", str(delete_id))
-                for delete_id, n, col in eq_delete_commits
-            ],
-            LEDGER_SCHEMA_DDL,
-        )
-        ledger_rows = ledger_rows.unionByName(eq_rows)
-    before = ledger.count() if ledger is not None else 0
-    ledger_rows.write.mode("append").parquet(_ledger_dir(out_dir))
-    newly = (
-        read_ledger(spark, out_dir).count()
-        - before
-        - len(retire_part_ids or [])
-        - len(delete_commits or [])
-        - len(eq_delete_commits or [])
-    )
+    rows += [
+        (int(p), None, 0, 0, 0, 0, None, run_id, int(run_seq), "retired",
+         attempt_id)
+        for p in retire_part_ids or []
+    ]
+    rows += [
+        (-1, None, int(n), 0, 0, 0, None, run_id, int(run_seq), "delete",
+         str(delete_id))
+        for delete_id, n in delete_commits or []
+    ]
+    # (delete_id, n_values, key_column): value files a caller pre-wrote
+    # become visible at THIS epoch — the eq-delete MERGE half of
+    # :func:`choetl_spark.eqdeletes.upsert_by_key`. The strict data-seq
+    # < delete-seq rule means this run's own partitions (same run_seq)
+    # are never deleted by it.
+    rows += [
+        (-1, None, int(n), 0, 0, 0, str(col), run_id, int(run_seq),
+         "eqdelete", str(delete_id))
+        for delete_id, n, col in eq_delete_commits or []
+    ]
+    append_ledger_rows(out_dir, rows)
     return {
         "run_id": run_id,
         "partitions_already_done": already,
-        "partitions_encoded_this_run": newly,
+        "partitions_encoded_this_run": len(summary),
     }

@@ -70,12 +70,6 @@ def main(argv: list[str] | None = None) -> int:
         help="WET sidecar dir for --input-format warc (conversion "
         "records; joined to responses by url)",
     )
-    p.add_argument(
-        "--jvm-write", action="store_true",
-        help="persist encoded chunks through Spark's JVM parquet writer "
-        "instead of the default task-side pyarrow writer (native write: "
-        "encoded bytes never cross the Python->JVM boundary)",
-    )
     p.add_argument("--run-id", default=None)
     args = p.parse_args(argv)
 
@@ -125,12 +119,10 @@ def main(argv: list[str] | None = None) -> int:
         summary = encode_direct_with_resume(
             spark, args.input, args.output, cfg, run_id=args.run_id,
             target_split_bytes=args.split_bytes,
-            native_write=not args.jvm_write,
         )
     else:
         summary = encode_with_resume(
-            spark, df, args.output, cfg, run_id=args.run_id,
-            native_write=not args.jvm_write,
+            spark, df, args.output, cfg, run_id=args.run_id
         )
     report = compression_report(read_encoded(spark, args.output)).collect()
     summary["columns"] = [r.asDict() for r in report]

@@ -513,6 +513,91 @@ def test_writer_refuses_nested_columns(ds_spark, tmp_path):
         )
 
 
+def test_writer_appends_to_store_of_another_session_zone(ds_spark, tmp_path):
+    """A store whose timestamps were encoded in a non-UTC session takes a
+    ``format("choetl")`` append that names no ``timezone``: the zone tag
+    is display metadata over the same UTC micros, not a type change."""
+    out = str(tmp_path / "zstore")
+    pages = webpages(ds_spark, 40, partitions=1).cache()
+    half = F.xxhash64("url") % 2 == 0
+    first, second = pages.filter(half), pages.filter(~half)
+    prev = ds_spark.conf.get("spark.sql.session.timeZone")
+    ds_spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        encode_with_resume(ds_spark, first, out, EncodeConfig(**CFG))
+        second.write.format("choetl").mode("append").save(out)
+    finally:
+        ds_spark.conf.set("spark.sql.session.timeZone", prev)
+    assert _key_rows(scan_encoded(ds_spark, out)) == _key_rows(pages)
+    pages.unpersist()
+
+
+def _chunk_files(out: str) -> set[str]:
+    import os
+
+    return set(os.listdir(os.path.join(out, "chunks")))
+
+
+def test_writer_refuses_renamed_store_before_any_task(ds_spark, store):
+    """A write whose columns would need a fresh physical chunk key (a
+    renamed column's old name, or the renamed column itself) refuses
+    while the write is planned: no task runs, no chunk file appears."""
+    from choetl_spark.schema_evolution import rename_column
+
+    out, pages = store
+    rename_column(out, "lang", "language")
+    before = _chunk_files(out)
+    for df in (pages, pages.withColumnRenamed("lang", "language")):
+        with pytest.raises(Exception, match="NotImplementedError") as err:
+            df.write.format("choetl").mode("append").save(out)
+        assert "renamed" in str(err.value)
+    assert _chunk_files(out) == before
+    assert ds_spark.read.format("choetl").load(out).count() == 600
+
+
+def test_writer_task_failure_leaves_no_visible_file(ds_spark, store):
+    """A ``format("choetl")`` write whose input fails on a late row,
+    after the task has already written several chunks, leaves no
+    non-dot chunk file behind: readers keep reading the old content,
+    and vacuum reclaims the dead task's staging file."""
+    from pyspark.sql.functions import udf
+
+    from choetl_spark.ledger import vacuum
+
+    out, pages = store
+    before = _chunk_files(out)
+
+    @udf("long")
+    def fail_late(i):
+        if i >= 140:
+            raise RuntimeError("late row failure")
+        return i
+
+    # 1 MB rows: the encode kernel flushes (64 MB) twice, writing
+    # several 8 MB chunks, before row 140 kills the task
+    df = ds_spark.range(0, 150, numPartitions=1).select(
+        fail_late("id").alias("id"),
+        F.repeat(F.lit("x"), 1 << 20).alias("body"),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = ds_spark.conf.get(key)
+    ds_spark.conf.set(key, "8")
+    try:
+        with pytest.raises(Exception, match="late row failure"):
+            df.write.format("choetl").mode("append").save(out)
+    finally:
+        ds_spark.conf.set(key, prev)
+    new = _chunk_files(out) - before
+    assert all(n.startswith(".tmp-") for n in new), new
+    assert _key_rows(ds_spark.read.format("choetl").load(out)) == _key_rows(
+        pages
+    )
+    assert _key_rows(scan_encoded(ds_spark, out)) == _key_rows(pages)
+    vacuum(ds_spark, out, grace_sec=0.0)
+    assert not any(n.startswith(".tmp-") for n in _chunk_files(out))
+    assert _key_rows(scan_encoded(ds_spark, out)) == _key_rows(pages)
+
+
 def test_stream_reads_epochs(ds_spark, tmp_path):
     out = str(tmp_path / "sstore")
     first = webpages(ds_spark, 200, partitions=2)

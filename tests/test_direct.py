@@ -184,27 +184,36 @@ def test_direct_vector_columns_native(spark, tmp_path):
     assert src.exceptAll(decoded).count() == 0
 
 
-def test_direct_native_write_matches_legacy_mode(spark, pages_parquet, tmp_path):
-    """native_write=True (task-side pyarrow chunk files) and the legacy
-    Spark-written path commit byte-identical table CONTENT under the
-    same ledger contract."""
+def test_direct_store_content_equals_source(spark, pages_parquet, tmp_path):
+    """A scan-direct store holds exactly the source parquet's rows in
+    every column, written as one chunk file per split; the bare
+    writer's summary rows (one per split) count every input row."""
+    import glob
+    import os
+
+    from choetl_spark.direct import write_parquet_direct
     from choetl_spark.ledger import scan_encoded
 
     cfg = EncodeConfig(chunk_rows=512, chunk_bytes=2 << 20)
-    out_native = str(tmp_path / "native")
-    out_legacy = str(tmp_path / "legacy")
+    splits = plan_parquet_splits(pages_parquet, target_split_bytes=4 << 20)
+    out = str(tmp_path / "store")
     encode_direct_with_resume(
-        spark, pages_parquet, out_native, cfg, target_split_bytes=4 << 20
+        spark, pages_parquet, out, cfg, target_split_bytes=4 << 20
     )
-    encode_direct_with_resume(
-        spark, pages_parquet, out_legacy, cfg,
-        target_split_bytes=4 << 20, native_write=False,
+    src = spark.read.parquet(pages_parquet)
+    got = scan_encoded(spark, out, columns=src.columns)
+    assert src.exceptAll(got).count() == 0
+    assert got.exceptAll(src).count() == 0
+    assert len(glob.glob(os.path.join(out, "chunks", "*.parquet"))) == len(
+        splits
     )
-    cols = spark.read.parquet(pages_parquet).columns
-    a = scan_encoded(spark, out_native, columns=cols)
-    b = scan_encoded(spark, out_legacy, columns=cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+
+    summary = write_parquet_direct(
+        spark, pages_parquet, str(tmp_path / "bare"), cfg, splits=splits
+    ).collect()
+    assert sorted(r["part_id"] for r in summary) == [s.part_id for s in splits]
+    assert sum(r["n_rows"] for r in summary) == src.count()
+    assert all(r["n_chunks"] > 0 and r["codec_map"] for r in summary)
 
 
 def test_direct_native_write_tmp_files_invisible_and_vacuumed(

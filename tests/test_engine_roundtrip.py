@@ -362,6 +362,37 @@ def test_deterministic_sort_stable_with_duplicate_keys(spark):
     assert all(a[k] == b[k] for k in a)
 
 
+def test_store_write_byte_stable_without_key_column(spark, tmp_path):
+    """A caller-planned frame WITHOUT the key column, written to a store
+    by a deterministic encode under the salted shuffle, lands
+    byte-identical chunk payloads from two different input orders: the
+    full-row xxhash64 orders rows within each part when there is no key
+    to sort by."""
+    from choetl_spark.engine import EncodeConfig
+    from choetl_spark.ledger import encode_with_resume, read_encoded
+
+    rows = [(i % 3, i * 7 % 50, f"body {i % 11}") for i in range(150)]
+    ddl = "part_id long, n long, body string"
+    cfg = EncodeConfig(
+        num_partitions=4, chunk_rows=16, chunk_bytes=1 << 20,
+        shuffle="salted", deterministic=True,
+    )
+
+    def payload_map(order_rows, name):
+        out = str(tmp_path / name)
+        df = spark.createDataFrame(order_rows, ddl).repartition(8)
+        encode_with_resume(spark, df, out, cfg)
+        return {
+            (r["part_id"], r["column"], r["chunk_seq"]): bytes(r["payload"])
+            for r in read_encoded(spark, out).collect()
+        }
+
+    a = payload_map(rows, "fwd")
+    b = payload_map(list(reversed(rows)), "rev")
+    assert a.keys() == b.keys()
+    assert all(a[k] == b[k] for k in a)
+
+
 def test_decode_kernels_reject_short_chunk():
     """A chunk that decodes to fewer rows than its ``n_rows`` is an
     integrity error in both decode kernels, not a short partition: a

@@ -268,6 +268,57 @@ def test_vacuum_sweeps_staging_files_without_ledger(spark, tmp_path):
     assert rep["files_removed"] == 1 and rep["bytes_reclaimed"] > 0
 
 
+def test_encode_task_failure_leaves_no_visible_file(spark, tmp_path):
+    """An encode whose input fails on a late row, after its task has
+    already written several chunks, publishes nothing: ``chunks/``
+    gains no non-dot file, the committed rows still read back, and
+    vacuum reclaims the dead task's staging file."""
+    import os
+
+    from pyspark.sql.functions import udf
+
+    from choetl_spark.ledger import _chunks_dir, scan_encoded, vacuum
+
+    out = str(tmp_path / "store")
+    cfg = EncodeConfig(
+        shuffle="none", chunk_rows=8, chunk_bytes=1 << 20,
+        flush_bytes=1 << 20,
+    )
+
+    @udf("long")
+    def fail_late(i):
+        if i >= 140:
+            raise RuntimeError("late row failure")
+        return i
+
+    def frame(part_id, n):
+        # 64 KB rows: the kernel flushes every 16 rows, so the task has
+        # written several chunk blocks before row 140 kills it
+        return spark.range(0, n, numPartitions=1).select(
+            F.lit(part_id).cast("long").alias("part_id"),
+            fail_late("id").alias("id"),
+            F.repeat(F.lit("x"), 64 << 10).alias("body"),
+        )
+
+    encode_with_resume(spark, frame(0, 100), out, cfg)
+    before = set(os.listdir(_chunks_dir(out)))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        with pytest.raises(Exception, match="late row failure"):
+            encode_with_resume(spark, frame(1, 150), out, cfg)
+    finally:
+        spark.conf.set(key, prev)
+    new = set(os.listdir(_chunks_dir(out))) - before
+    assert new and all(n.startswith(".tmp-") for n in new), new
+    ids = sorted(r["id"] for r in scan_encoded(spark, out, ["id"]).collect())
+    assert ids == list(range(100))
+    vacuum(spark, out, grace_sec=0.0)
+    assert set(os.listdir(_chunks_dir(out))) == before
+    assert scan_encoded(spark, out, ["id"]).count() == 100
+
+
 def test_compact_store_rewrites_files_preserving_content(spark, tmp_path):
     """Small-file compaction: many per-run files -> few size-targeted
     files; committed content bit-identical, time-travel epochs intact,
@@ -523,33 +574,26 @@ def test_read_encoded_plan_cache_reuse_and_invalidation(spark, tmp_path):
     assert scan_encoded(spark, out, ["page_url"]).count() == 260
 
 
-def test_encode_with_resume_native_write_matches_spark_written(
+def test_encode_with_resume_store_equals_source_and_resumes(
     spark, pages, tmp_path
 ):
-    """native_write=True (task-side chunk files, standard encode path)
-    commits identical table content to the Spark-written default, under
-    both shuffle modes (salted puts several logical partitions in one
-    task file), and resume still recognizes the work as done."""
+    """Under both shuffle modes (salted puts several logical partitions
+    in one task's chunk file) the task-written store scans back to
+    exactly the source rows, and a rerun encodes nothing."""
     from choetl_spark.ledger import scan_encoded
 
     cols = ["url", "warc_ts", "html", "text", "lang"]
+    src = pages.select(*cols)
     for shuffle in ("none", "salted"):
         cfg = EncodeConfig(
             num_partitions=6, chunk_rows=256, chunk_bytes=1 << 20,
             shuffle=shuffle,
         )
-        a_dir = str(tmp_path / f"native_{shuffle}")
-        b_dir = str(tmp_path / f"jvm_{shuffle}")
-        r1 = encode_with_resume(
-            spark, pages, a_dir, cfg, run_id="n1", native_write=True
-        )
+        out = str(tmp_path / shuffle)
+        r1 = encode_with_resume(spark, pages, out, cfg, run_id="n1")
         assert r1["partitions_encoded_this_run"] > 0
-        encode_with_resume(spark, pages, b_dir, cfg, run_id="j1")
-        a = scan_encoded(spark, a_dir, columns=cols)
-        b = scan_encoded(spark, b_dir, columns=cols)
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-        r2 = encode_with_resume(
-            spark, pages, a_dir, cfg, run_id="n2", native_write=True
-        )
+        got = scan_encoded(spark, out, columns=cols)
+        assert src.exceptAll(got).count() == 0
+        assert got.exceptAll(src).count() == 0
+        r2 = encode_with_resume(spark, pages, out, cfg, run_id="n2")
         assert r2["partitions_encoded_this_run"] == 0
