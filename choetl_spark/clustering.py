@@ -39,7 +39,7 @@ import dataclasses
 import uuid
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, SparkSession, functions as F
 
 _ZBITS = 16
 
@@ -166,7 +166,7 @@ def rewrite_clustered(
     from choetl_spark.engine import EncodeConfig
     from choetl_spark.ledger import (
         encode_with_resume,
-        read_ledger,
+        ledger_state,
         scan_encoded,
     )
 
@@ -175,24 +175,13 @@ def rewrite_clustered(
         raise ValueError("rewrite_clustered needs at least one column")
     if zorder and not 2 <= len(by) <= 4:
         raise ValueError("zorder takes 2-4 columns")
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["max_seq"]:
         raise ValueError(f"no committed store at {out_dir}")
-    done = ledger.filter(F.col("status") == "done").select("part_id")
-    retired = (
-        ledger.filter(F.col("status") == "retired")
-        .select("part_id")
-        .distinct()
-    )
-    targets = [
-        r["part_id"]
-        for r in done.join(F.broadcast(retired), "part_id", "left_anti")
-        .distinct()
-        .collect()
-    ]
+    targets = sorted(state["live"])
     if not targets:
         return {"partitions_rewritten": 0, "partitions_after": 0}
-    base = (ledger.agg(F.max("part_id")).collect()[0][0] or 0) + 1
+    base = state["max_part"] + 1
     p = int(num_partitions or cfg.num_partitions)
 
     rows = scan_encoded(spark, out_dir)  # latest snapshot, tombstones out

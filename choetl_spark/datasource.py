@@ -17,9 +17,10 @@ wraps the chunk store that :mod:`choetl_spark.engine` /
 Architecture (the same no-JVM-boundary shape as
 :mod:`choetl_spark.direct`, in reverse): the DRIVER plans everything
 from sidecar metadata with **zero Spark jobs** — ledger parquet (tiny,
-read with pyarrow), the manifest JSON, and the chunk files' parquet
-FOOTERS (row-group ``part_id`` min/max = the split-pruning signal
-``compact_store`` clusters for). Each task then opens only its split's
+read with pyarrow by :func:`choetl_spark.ledger.ledger_state`), the
+manifest JSON, and the chunk files' parquet FOOTERS (row-group
+``part_id`` min/max = the split-pruning signal ``compact_store``
+clusters for). Each task then opens only its split's
 row groups with pyarrow, filters chunk rows to its committed
 ``(part_id, attempt_id)`` keys, and runs the shared pure-Python decode
 kernel (:func:`choetl_spark.engine._make_decode_kernel`) — payload
@@ -127,8 +128,10 @@ from choetl_spark.deletes import _deletes_dir, refuse_lost_tombstones
 from choetl_spark.eqdeletes import _eq_dir, resolve_eq_key
 from choetl_spark.ledger import (
     _chunks_dir,
-    _ledger_dir,
+    _ledger_table,
+    _read_parquet_dir,
     append_ledger_rows,
+    ledger_state,
     manifest_as_of,
     manifest_data_items,
     merge_manifest,
@@ -142,94 +145,6 @@ from choetl_spark.ledger import (
 # ---------------------------------------------------------------------------
 # driver-side metadata (pure pyarrow — zero Spark jobs)
 # ---------------------------------------------------------------------------
-
-_LEDGER_COLS = ["part_id", "attempt_id", "run_seq", "status", "codec_map"]
-
-
-def _read_parquet_dir(d: str, columns: list[str] | None = None) -> pa.Table | None:
-    """Schema-lenient union read of every parquet file in ``d`` (the
-    pyarrow analog of ``mergeSchema`` — stores resumed across engine
-    upgrades mix footers with/without newer columns)."""
-    paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    if not paths:
-        return None
-    tables = []
-    for p in paths:
-        t = pq.read_table(p)
-        if columns is not None:
-            keep = [c for c in columns if c in t.column_names]
-            t = t.select(keep)
-        tables.append(t)
-    return pa.concat_tables(tables, promote_options="default")
-
-
-def _ledger_table(out_dir: str) -> pa.Table | None:
-    t = _read_parquet_dir(_ledger_dir(out_dir), _LEDGER_COLS)
-    if t is None:
-        return None
-    names = t.column_names
-    n = t.num_rows
-    if "run_seq" not in names:
-        t = t.append_column("run_seq", pa.array([1] * n, pa.int64()))
-    if "attempt_id" not in names:
-        t = t.append_column("attempt_id", pa.nulls(n, pa.string()))
-    if "codec_map" not in names:
-        t = t.append_column("codec_map", pa.nulls(n, pa.string()))
-    return t
-
-
-def _ledger_state(out_dir: str, as_of: int | None = None) -> dict:
-    """Driver-side snapshot resolution — the pure-pyarrow mirror of
-    :func:`choetl_spark.ledger.read_encoded`'s ledger joins, at an
-    ``as_of`` already checked by ``resolve_snapshot``. Returns live
-    commit keys, delete commits, eq-delete presence, max epoch."""
-    t = _ledger_table(out_dir)
-    state = {
-        "live": {},  # part_id -> set of attempt_id (None = legacy row)
-        "delete_ids": set(),
-        "eq_commits": [],  # (delete_id, run_seq, key_col)
-        "part_seq": {},  # part_id -> first done epoch (eq eligibility)
-        "max_seq": 0,
-        "max_part": -1,  # over EVERY ledger row (writer id allocation)
-    }
-    if t is None:
-        return state
-    pid = t.column("part_id").to_pylist()
-    att = t.column("attempt_id").to_pylist()
-    seq = [s if s is not None else 1 for s in t.column("run_seq").to_pylist()]
-    status = t.column("status").to_pylist()
-    cmap = t.column("codec_map").to_pylist()
-    state["max_seq"] = max(seq, default=0)
-    state["max_part"] = max(
-        (p for p in pid if p is not None), default=-1
-    )
-    lim = int(as_of) if as_of is not None else None
-    done: dict[int, set] = {}
-    retired: set[int] = set()
-    for i in range(len(pid)):
-        if lim is not None and seq[i] > lim:
-            continue
-        st = status[i]
-        if st == "done":
-            done.setdefault(pid[i], set()).add(att[i])
-            prev = state["part_seq"].get(pid[i])
-            if prev is None or seq[i] < prev:
-                state["part_seq"][pid[i]] = seq[i]
-        elif st == "retired":
-            retired.add(pid[i])
-        elif st == "delete":
-            state["delete_ids"].add(att[i])
-        elif st == "eqdelete":
-            # codec_map carries the delete's key column name
-            state["eq_commits"].append((att[i], seq[i], cmap[i]))
-        # "staged" rows awaiting their WAP verdict are invisible to
-        # readers (published copies re-appear as "done"); "aborted"
-        # attempts never surface
-    for p, atts in done.items():
-        if p in retired:
-            continue
-        state["live"][p] = atts
-    return state
 
 
 def _delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
@@ -321,7 +236,7 @@ def _schema_ddl(items: list[tuple[str, dict]]) -> str:
 def _snapshot(out_dir: str, as_of: int | None, view: dict) -> tuple:
     """The snapshot's ledger state, tombstones and equality-delete
     value sets (pure pyarrow, zero Spark jobs)."""
-    state = _ledger_state(out_dir, as_of)
+    state = ledger_state(out_dir, as_of)
     return (
         state,
         _delete_positions(out_dir, state),
@@ -803,11 +718,7 @@ class ChoetlStreamReader(DataSourceStreamReader):
         return {"seq": self._start}
 
     def latestOffset(self):  # noqa: N802
-        t = _ledger_table(self._dir)
-        if t is None:
-            return {"seq": self._start}
-        seqs = [s or 1 for s in t.column("run_seq").to_pylist()]
-        return {"seq": max(max(seqs, default=0), self._start)}
+        return {"seq": max(ledger_state(self._dir)["max_seq"], self._start)}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["seq"]), int(end["seq"])
@@ -931,7 +842,7 @@ class ChoetlWriter(DataSourceArrowWriter):
                 "columns (their chunks need a fresh physical key) — use "
                 "encode_with_resume"
             )
-        self._base = _ledger_state(self._dir)["max_part"] + 1
+        self._base = ledger_state(self._dir)["max_part"] + 1
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _TaskResult:
         from pyspark import TaskContext
@@ -956,7 +867,7 @@ class ChoetlWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        state = _ledger_state(self._dir)
+        state = ledger_state(self._dir)
         run_seq = state["max_seq"] + 1
         run_id = f"ds-write-{uuid.uuid4().hex[:12]}"
         done = [m for m in messages if m is not None]

@@ -9,17 +9,20 @@ column-pruned positional decode), writes their coordinates as TOMBSTONES
 
     (part_id, row_pos, del_seq, delete_id)
 
-to ``out_dir/_deletes``, and commits them with a ledger row of
-``status="delete"`` at the next ``run_seq`` epoch. Readers subtract
-committed tombstones by ``(part_id, row_pos)`` — ``format("choetl")``
-task-side, maintenance paths with a broadcast anti-join — the in-memory
-positional-delete-bitmap shape Iceberg readers use per data file.
+to ``out_dir/_deletes`` (a Spark write), and commits them with one
+ledger row of ``status="delete"`` at the next ``run_seq`` epoch, appended
+on the driver by :func:`choetl_spark.ledger.append_ledger_rows` (no Spark
+job). Readers subtract committed tombstones by ``(part_id, row_pos)`` —
+``format("choetl")`` task-side, maintenance paths with a broadcast
+anti-join — the in-memory positional-delete-bitmap shape Iceberg readers
+use per data file.
 
 Crash safety mirrors the chunk commit protocol exactly: tombstone files
-are written BEFORE the ledger row, and readers semi-join tombstones
-against ledger delete commits on ``delete_id``, so a crash between the
-two leaves orphan tombstone files that never delete anything (and a
-retry re-computes them under a fresh ``delete_id``).
+are written BEFORE the ledger row, and readers keep only tombstones
+whose ``delete_id`` the ledger commits (the set
+:func:`choetl_spark.ledger.ledger_state` resolves on the driver), so a
+crash between the two leaves orphan tombstone files that never delete
+anything (and a retry re-computes them under a fresh ``delete_id``).
 
 Time travel composes: a delete commits at its own ledger epoch, so
 ``as_of`` an earlier epoch still sees the rows, ``as_of`` a later one
@@ -81,56 +84,43 @@ def read_delete_positions(
     anti-join (and, upstream, the positional decode) entirely.
 
     Orphan tombstone files (a crashed :func:`delete_where`) are
-    filtered out by the semi-join against ledger ``status="delete"``
-    commit rows on ``delete_id`` — the same commit discipline as
-    chunks. The output is DISTINCT positions, so exact-duplicate
-    tombstone rows (the survivable crash state of
+    filtered out: only rows whose ``delete_id`` has a ledger
+    ``status="delete"`` commit at ``as_of`` are kept — the same commit
+    discipline as chunks. The output is DISTINCT positions, so
+    exact-duplicate tombstone rows (the survivable crash state of
     :func:`replace_tombstone_files`) never skew anti-joins, changelog
     diffs, or ``n_deleted`` counts.
 
     A store whose ledger carries delete commits but whose ``_deletes``
     table cannot be read raises (:func:`refuse_lost_tombstones`)
     instead of returning ``None``."""
-    from choetl_spark.ledger import commit_meta, read_ledger
+    tomb = _committed_tombstones(spark, out_dir, as_of)
+    if tomb is None:
+        return None
+    return tomb.select("part_id", "row_pos").distinct()
 
-    # commit_meta is driver-cached per ledger version: the common
-    # no-deletes store answers "has_delete?" with zero Spark jobs per
-    # scan (round-3 fix: this used to be a limit(1).count() job inside
-    # EVERY scan_encoded/point_lookup/agg_encoded call)
-    meta = commit_meta(spark, out_dir)
-    if not meta["delete_seqs"]:
-        # no committed delete epochs: any tombstone files on disk are
-        # orphans of a crashed delete_where — invisible by the commit
-        # rule, so readers skip the tombstone read entirely
+
+def _committed_tombstones(
+    spark: SparkSession, out_dir: str, as_of: int | None = None
+) -> DataFrame | None:
+    """The tombstone rows, verbatim, of the delete commits visible at
+    ``as_of`` — the ledger's committed ``delete_id`` set, resolved on
+    the driver (:func:`choetl_spark.ledger.ledger_state`). ``None``
+    without such commits: tombstone files on disk are then orphans of a
+    crashed :func:`delete_where`, and readers skip the read entirely."""
+    from pyspark.errors import AnalysisException
+
+    from choetl_spark.ledger import ledger_state
+
+    ids = ledger_state(out_dir, as_of)["delete_ids"]
+    if not ids:
         return None
-    if as_of is not None and meta["delete_seqs"][0] > int(as_of):
-        # deletes exist but all committed after this snapshot
-        return None
-    ledger = read_ledger(spark, out_dir)
     try:
         tomb = spark.read.parquet(_deletes_dir(out_dir))
-    except Exception:
-        if ledger is not None:
-            refuse_lost_tombstones(out_dir)
+    except AnalysisException:  # no _deletes table (or no file in it)
+        refuse_lost_tombstones(out_dir)
         return None
-    if ledger is None:
-        return None
-    commits = ledger.filter(F.col("status") == "delete")
-    if as_of is not None:
-        commits = commits.filter(F.col("run_seq") <= int(as_of))
-    return (
-        tomb.join(
-            F.broadcast(
-                commits.select(
-                    F.col("attempt_id").alias("delete_id")
-                ).distinct()
-            ),
-            "delete_id",
-            "semi",
-        )
-        .select("part_id", "row_pos")
-        .distinct()
-    )
+    return tomb.filter(F.col("delete_id").isin(sorted(ids)))
 
 
 def delete_where(
@@ -161,13 +151,7 @@ def delete_where(
         prune_partitions_by_bloom,
         prune_partitions_by_stats,
     )
-    from choetl_spark.ledger import (
-        LEDGER_SCHEMA_DDL,
-        _ledger_dir,
-        read_encoded,
-        read_ledger,
-        read_manifest,
-    )
+    from choetl_spark.ledger import read_encoded, read_manifest
 
     from choetl_spark.engine import normalize_predicate_value as _n
 
@@ -274,8 +258,9 @@ def _commit_tombstones(
     defer_commit: bool = False,
 ) -> dict:
     """Shared delete commit: drop already-tombstoned coordinates
-    (idempotence), write tombstone files, THEN append the ledger
-    ``status="delete"`` row at the next epoch — the crash window
+    (idempotence), write tombstone files (a Spark write), THEN append
+    the ledger ``status="delete"`` row at the next epoch with
+    :func:`choetl_spark.ledger.append_ledger_rows` — the crash window
     between the two leaves orphans readers never see.
 
     ``defer_commit=True`` writes the tombstone FILES but skips the
@@ -287,15 +272,12 @@ def _commit_tombstones(
     MERGE snapshot; separate epochs would expose — and ``as_of`` time
     travel would permanently preserve — a state where matched keys
     have neither their old nor their new row)."""
-    from choetl_spark.ledger import LEDGER_SCHEMA_DDL, _ledger_dir, read_ledger
+    from choetl_spark.ledger import append_ledger_rows, ledger_state
 
     prior = read_delete_positions(spark, out_dir)
     if prior is not None:
         tomb = tomb.join(prior, ["part_id", "row_pos"], "left_anti")
-    ledger = read_ledger(spark, out_dir)
-    next_seq = 1
-    if ledger is not None:
-        next_seq = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    next_seq = ledger_state(out_dir)["max_seq"] + 1
     delete_id = uuid.uuid4().hex
     # del_seq in the FILES is informational (visibility is governed by
     # the ledger commit row's run_seq); a deferred commit doesn't know
@@ -329,26 +311,13 @@ def _commit_tombstones(
             "run_seq": None,
             "delete_id": delete_id,
         }
-    commit = spark.createDataFrame(
-        [
-            (
-                -1,  # part_id: a delete spans partitions; chunk readers
-                # only join status="done" rows so the sentinel is inert
-                None,
-                int(n),
-                0,
-                0,
-                0,
-                None,
-                run_id or delete_id,
-                int(next_seq),
-                "delete",
-                delete_id,
-            )
-        ],
-        LEDGER_SCHEMA_DDL,
+    # part_id -1: a delete spans partitions; readers resolve only
+    # status="done" rows to chunks, so the sentinel is inert
+    append_ledger_rows(
+        out_dir,
+        [(-1, None, int(n), 0, 0, 0, None, run_id or delete_id,
+          int(next_seq), "delete", delete_id)],
     )
-    commit.coalesce(1).write.mode("append").parquet(_ledger_dir(out_dir))
     return {
         "rows_deleted": int(n),
         "partitions_touched": int(parts),
@@ -368,17 +337,13 @@ def next_free_epoch(
     resume-skipped, dropping rows. Shared by :func:`upsert` and
     ``streaming.upsert_sink`` — the collision guard must not drift
     between the batch and streaming paths."""
-    from choetl_spark.ledger import read_ledger
+    from choetl_spark.ledger import ledger_state
 
-    ledger = read_ledger(spark, out_dir)
-    max_seq, max_part = 0, -1
-    if ledger is not None:
-        r = ledger.agg(
-            F.max("run_seq").alias("s"), F.max("part_id").alias("p")
-        ).collect()[0]
-        max_seq = r["s"] or 0
-        max_part = r["p"] if r["p"] is not None else -1
-    return max(max_seq, (max_part + num_partitions) // num_partitions) + 1
+    state = ledger_state(out_dir)
+    return max(
+        state["max_seq"],
+        (state["max_part"] + num_partitions) // num_partitions,
+    ) + 1
 
 
 def upsert(
@@ -516,8 +481,8 @@ def rewrite_partitions(
     from choetl_spark.engine import EncodeConfig, decode_dataframe
     from choetl_spark.ledger import (
         encode_with_resume,
+        ledger_state,
         read_encoded,
-        read_ledger,
         read_manifest,
     )
 
@@ -529,30 +494,20 @@ def rewrite_partitions(
     # re-commits at a NEWER epoch than any existing delete, so leaving
     # eq-deleted rows in would resurrect them permanently
     tomb = all_delete_positions(spark, out_dir)
-    ledger = read_ledger(spark, out_dir)
-    if tomb is None or ledger is None:
+    if tomb is None:
         return out
-    done = ledger.filter(F.col("status") == "done").select(
-        "part_id", "n_rows"
-    )
-    retired = ledger.filter(F.col("status") == "retired").select(
-        "part_id"
-    ).distinct()
-    visible = done.join(F.broadcast(retired), "part_id", "left_anti")
-    dels = tomb.groupBy("part_id").agg(F.count("*").alias("n_del"))
-    targets = [
+    state = ledger_state(out_dir)
+    live_rows = state["live_rows"]
+    targets = sorted(
         r["part_id"]
-        for r in visible.join(dels, "part_id")
-        .filter(
-            F.col("n_del") >= F.lit(min_deleted_fraction) * F.col("n_rows")
-        )
-        .select("part_id")
-        .collect()
-    ]
+        for r in tomb.groupBy("part_id").count().collect()
+        if live_rows.get(r["part_id"]) is not None
+        and r["count"] >= min_deleted_fraction * live_rows[r["part_id"]]
+    )
     if not targets:
         return out
     # fresh ids: dense range above every id the ledger has ever seen
-    base = (ledger.agg(F.max("part_id")).collect()[0][0] or 0) + 1
+    base = state["max_part"] + 1
     id_map = F.create_map(
         *[
             x
@@ -581,13 +536,7 @@ def rewrite_partitions(
     res = encode_with_resume(
         spark, survivors, out_dir, cfg, run_id=rid, retire_part_ids=targets
     )
-    n_rows = (
-        read_ledger(spark, out_dir)
-        .filter((F.col("run_id") == rid) & (F.col("status") == "done"))
-        .agg(F.sum("n_rows"))
-        .collect()[0][0]
-        or 0
-    )
+    n_rows = ledger_state(out_dir)["runs"].get(rid, {}).get("done", 0)
     return {
         "partitions_rewritten": len(targets),
         "rows_materialized": int(n_rows),
@@ -631,19 +580,18 @@ def rollback_to(
     """
     from choetl_spark.engine import EncodeConfig, decode_dataframe
     from choetl_spark.ledger import (
-        LEDGER_SCHEMA_DDL,
-        _ledger_dir,
+        append_ledger_rows,
         encode_with_resume,
+        ledger_state,
         min_time_travel_seq,
         read_encoded,
-        read_ledger,
         read_manifest,
     )
 
     cfg = cfg or EncodeConfig()
     to_seq = int(to_seq)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["max_seq"]:
         raise ValueError(f"no ledger at {out_dir}; nothing to roll back")
     floor = min_time_travel_seq(out_dir)
     if to_seq < floor:
@@ -652,7 +600,7 @@ def rollback_to(
             f"readable epoch is {floor} (expire_snapshots reclaimed "
             "earlier history)"
         )
-    latest = ledger.agg(F.max("run_seq")).collect()[0][0] or 0
+    latest = state["max_seq"]
     out = {
         "rolled_back_to": to_seq,
         "rollback_epoch": None,
@@ -662,35 +610,11 @@ def rollback_to(
     if to_seq >= latest:
         return out  # already at (or past) that snapshot — no-op
 
-    done = ledger.filter(F.col("status") == "done")
-    retired = ledger.filter(F.col("status") == "retired")
-
-    def visible(seq: int | None) -> DataFrame:
-        d, r = done, retired
-        if seq is not None:
-            d = d.filter(F.col("run_seq") <= seq)
-            r = r.filter(F.col("run_seq") <= seq)
-        return (
-            d.select("part_id")
-            .distinct()
-            .join(
-                F.broadcast(r.select("part_id").distinct()),
-                "part_id",
-                "left_anti",
-            )
-        )
-
-    p_t = visible(to_seq)
-    p_now = visible(None)
+    p_t = set(ledger_state(out_dir, to_seq)["live"])
+    p_now = set(state["live"])
     # all three sets are bounded by partitions CHURNED since to_seq
-    retire_only = [
-        r["part_id"]
-        for r in p_now.join(p_t, "part_id", "left_anti").collect()
-    ]
-    resurrect = [
-        r["part_id"]
-        for r in p_t.join(p_now, "part_id", "left_anti").collect()
-    ]
+    retire_only = p_now - p_t
+    resurrect = p_t - p_now
     # visible-at-both partitions with tombstones committed AFTER to_seq
     # (read through the hardened tombstone reader so a lost _deletes
     # table refuses instead of silently rolling deleted rows back in)
@@ -698,23 +622,18 @@ def rollback_to(
 
     pos_now = all_delete_positions(spark, out_dir)
     pos_t = all_delete_positions(spark, out_dir, as_of=to_seq)
-    dirty: list[int] = []
+    dirty: set[int] = set()
     if pos_now is not None:
         late = (
             pos_now.exceptAll(pos_t)
             if pos_t is not None
             else pos_now
         )
-        dirty = [
-            r["part_id"]
-            for r in late.select("part_id")
-            .distinct()
-            .join(p_t, "part_id", "semi")
-            .join(p_now, "part_id", "semi")
-            .collect()
-        ]
-    rewrite_targets = sorted(set(resurrect) | set(dirty))
-    retire_set = sorted(set(retire_only) | set(dirty))
+        dirty = {
+            r["part_id"] for r in late.select("part_id").distinct().collect()
+        } & p_t & p_now
+    rewrite_targets = sorted(resurrect | dirty)
+    retire_set = sorted(retire_only | dirty)
     if not rewrite_targets and not retire_set:
         return out  # nothing changed since to_seq that readers can see
 
@@ -725,14 +644,14 @@ def rollback_to(
         # pure-append history: the compensation is metadata only — one
         # retire-only ledger append at a fresh epoch
         attempt_id = uuid.uuid4().hex
-        spark.createDataFrame(
+        append_ledger_rows(
+            out_dir,
             [
                 (int(p), None, 0, 0, 0, 0, None, rid,
                  int(latest) + 1, "retired", attempt_id)
                 for p in retire_set
             ],
-            LEDGER_SCHEMA_DDL,
-        ).write.mode("append").parquet(_ledger_dir(out_dir))
+        )
         out["rollback_epoch"] = int(latest) + 1
         return out
 
@@ -761,7 +680,7 @@ def rollback_to(
             ["_part_id", "_row_pos"],
             "left_anti",
         )
-    base = (ledger.agg(F.max("part_id")).collect()[0][0] or 0) + 1
+    base = state["max_part"] + 1
     id_map = F.create_map(
         *[
             x
@@ -795,28 +714,10 @@ def compact_deletes(spark: SparkSession, out_dir: str) -> dict:
     travel are unchanged) and drops orphans from crashed deletes.
     Skipped (no-op) when an in-flight delete might be mid-commit —
     callers run this on a quiesced store, same as ``compact_store``."""
-    import shutil
-
     d = _deletes_dir(out_dir)
-    committed = read_delete_positions(spark, out_dir)
-    if committed is None:
+    keep = _committed_tombstones(spark, out_dir)
+    if keep is None:
         return {"files_before": 0, "files_after": 0}
-    try:
-        tomb = spark.read.parquet(d)
-    except Exception:
-        return {"files_before": 0, "files_after": 0}
-    from choetl_spark.ledger import read_ledger
-
-    ledger = read_ledger(spark, out_dir)
-    keep = tomb.join(
-        F.broadcast(
-            ledger.filter(F.col("status") == "delete")
-            .select(F.col("attempt_id").alias("delete_id"))
-            .distinct()
-        ),
-        "delete_id",
-        "semi",
-    )
 
     def _n_files(p: str) -> int:
         try:

@@ -8,8 +8,9 @@ scan at WRITE time to pin exact row coordinates. An equality delete
 
     out_dir/_eq_deletes/<column>/<delete_id>.parquet   (value rows)
 
-plus a ledger commit row (``status="eqdelete"``) — O(keys) write cost,
-no store scan at all. ``format("choetl")`` (and so ``scan_encoded`` and
+plus a ledger commit row (``status="eqdelete"``, appended on the driver
+by :func:`choetl_spark.ledger.append_ledger_rows`) — O(keys) write
+cost, no store scan at all. ``format("choetl")`` (and so ``scan_encoded`` and
 ``point_lookup``) loads the value sets and subtracts task-side; the
 Spark-plan readers resolve them lazily (:func:`eq_delete_positions`):
 decode just the key column of the partitions committed BEFORE the
@@ -106,9 +107,8 @@ def delete_by_key(
     Returns ``{"n_values", "run_seq", "delete_id"}``.
     """
     from choetl_spark.ledger import (
-        LEDGER_SCHEMA_DDL,
-        _ledger_dir,
-        read_ledger,
+        append_ledger_rows,
+        ledger_state,
         read_manifest,
     )
 
@@ -122,29 +122,14 @@ def delete_by_key(
     if wrote is None:
         return {"n_values": 0, "run_seq": None, "delete_id": None}
     delete_id, n = wrote
-    ledger = read_ledger(spark, out_dir)
-    next_seq = 1
-    if ledger is not None:
-        next_seq = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
-    commit = spark.createDataFrame(
-        [
-            (
-                -1,  # sentinel part_id: chunk readers join status="done"
-                None,
-                int(n),
-                0,
-                0,
-                0,
-                key,  # codec_map carries the delete column name
-                run_id or delete_id,
-                int(next_seq),
-                EQ_STATUS,
-                delete_id,
-            )
-        ],
-        LEDGER_SCHEMA_DDL,
+    next_seq = ledger_state(out_dir)["max_seq"] + 1
+    # sentinel part_id -1 (readers resolve only "done" rows to chunks);
+    # codec_map carries the delete column name
+    append_ledger_rows(
+        out_dir,
+        [(-1, None, int(n), 0, 0, 0, key, run_id or delete_id,
+          int(next_seq), EQ_STATUS, delete_id)],
     )
-    commit.coalesce(1).write.mode("append").parquet(_ledger_dir(out_dir))
     return {"n_values": int(n), "run_seq": int(next_seq),
             "delete_id": delete_id}
 
@@ -208,22 +193,16 @@ def eq_delete_positions(
         prune_partitions_by_bloom,
     )
     from choetl_spark.ledger import (
-        commit_meta,
+        ledger_state,
         read_encoded,
         read_ledger,
         read_manifest,
     )
 
-    # driver-cached per ledger version: a store with no equality
+    # resolved on the driver with pyarrow: a store with no equality
     # deletes (the common case) answers with zero Spark jobs per scan
-    # (round-3 fix: this used to be a collect() + limit(1).count()
-    # inside every reader call)
-    meta = commit_meta(spark, out_dir)
-    rows = [
-        (aid, seq, col)
-        for aid, seq, col in meta["eq_commits"]
-        if as_of is None or seq <= int(as_of)
-    ]
+    state = ledger_state(out_dir, as_of)
+    rows = state["eq_commits"]
     if not rows:
         return None
     if not os.path.isdir(_eq_root(out_dir)):
@@ -232,7 +211,7 @@ def eq_delete_positions(
             "but no readable _eq_deletes table — refusing to read (it "
             "would resurrect deleted rows)."
         )
-    if not meta["has_done"]:
+    if not state["has_done"]:
         return None  # nothing ingested yet — no rows to delete
     ledger = read_ledger(spark, out_dir)
     done = ledger.filter(F.col("status") == "done")
@@ -358,7 +337,7 @@ def upsert_by_key(
     """
     from choetl_spark.deletes import next_free_epoch
     from choetl_spark.engine import EncodeConfig
-    from choetl_spark.ledger import encode_with_resume, read_ledger
+    from choetl_spark.ledger import encode_with_resume, ledger_state
     from choetl_spark.partitioning import plan_partitions
 
     cfg = cfg or EncodeConfig()
@@ -366,21 +345,11 @@ def upsert_by_key(
     if fresh_epoch:
         epoch = next_free_epoch(spark, out_dir, cfg.num_partitions)
     rid = run_id or f"equpsert-{epoch}"
-    ledger = read_ledger(spark, out_dir)
     eq_commits = None
     n_vals = 0
-    prior = None
-    if ledger is not None:
-        prior = (
-            ledger.filter(
-                (F.col("status") == EQ_STATUS) & (F.col("run_id") == rid)
-            )
-            .select("n_rows")
-            .limit(1)
-            .collect()
-        )
-    if prior:
-        n_vals = int(prior[0]["n_rows"])  # first attempt's delete stands
+    prior = ledger_state(out_dir)["runs"].get(rid, {}).get(EQ_STATUS)
+    if prior is not None:
+        n_vals = int(prior)  # first attempt's delete stands
     else:
         wrote = _write_eq_values(spark, out_dir, key, df.select(key))
         if wrote is not None:

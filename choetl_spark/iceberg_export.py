@@ -71,15 +71,11 @@ def export_properties(
     enough for a reader of the Iceberg table alone to know which store
     snapshot it holds and how its bytes were encoded. Pure metadata —
     no Iceberg runtime needed (tested in this sandbox)."""
-    from choetl_spark.ledger import (
-        commit_meta,
-        max_committed_seq,
-        read_manifest,
-    )
+    from choetl_spark.ledger import ledger_state, read_manifest
 
-    epoch = int(as_of) if as_of is not None else max_committed_seq(out_dir)
+    state = ledger_state(out_dir)
+    epoch = int(as_of) if as_of is not None else state["committed_seq"]
     manifest = read_manifest(out_dir) or {}
-    meta = commit_meta(spark, out_dir)
     schema = {
         c: m.get("dtype", "")
         for c, m in manifest.items()
@@ -90,8 +86,8 @@ def export_properties(
         "choetl.snapshot-epoch": str(epoch),
         "choetl.schema": json.dumps(schema, sort_keys=True),
         "choetl.manifest": json.dumps(manifest, sort_keys=True),
-        "choetl.has-deletes": str(bool(meta["delete_seqs"])).lower(),
-        "choetl.has-eq-deletes": str(bool(meta["eq_commits"])).lower(),
+        "choetl.has-deletes": str(bool(state["delete_seqs"])).lower(),
+        "choetl.has-eq-deletes": str(bool(state["eq_commits"])).lower(),
         "format-version": "2",
     }
 

@@ -32,6 +32,7 @@ real cluster; the layout and join logic are Iceberg-ready (swap
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
@@ -251,48 +252,149 @@ def reserved_physicals(manifest: dict | None) -> set[str]:
     return taken
 
 
-def max_committed_seq(out_dir: str) -> int:
-    """Highest committed ledger epoch, read driver-side with pyarrow
-    (the ledger files are tiny metadata) — lets schema evolution stamp
-    its schema-log snapshots without needing a Spark session."""
+def _read_parquet_dir(
+    d: str, columns: list[str] | None = None
+) -> pa.Table | None:
+    """Schema-lenient union read of every parquet file in ``d`` (the
+    pyarrow analog of ``mergeSchema`` — stores resumed across engine
+    upgrades mix footers with/without newer columns). ``None`` only
+    when ``d`` holds no ``*.parquet``; an unreadable file raises."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    try:
-        names = [
-            n for n in os.listdir(_ledger_dir(out_dir))
-            if n.endswith(".parquet")
-        ]
-    except OSError:
-        return 0
-    best = 0
-    for n in names:
-        try:
-            t = pq.read_table(
-                os.path.join(_ledger_dir(out_dir), n),
-                columns=["run_seq", "status"],
-            )
-        except Exception:
-            continue
-        # committed statuses only: a 'staged' (in-flight WAP) or
-        # 'aborted' epoch must not stamp schema-log snapshots, or a
-        # rename during the WAP run lands its snapshot at the staged
-        # epoch and as_of at that epoch (if later published) serves the
-        # pre-rename schema even though the rename preceded publication
-        t = t.filter(
-            pc.is_in(
-                t.column("status"),
-                value_set=pa.array(
-                    ["done", "delete", "eqdelete", "retired"]
-                ),
+    paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    if not paths:
+        return None
+    tables = []
+    for p in paths:
+        t = pq.read_table(p)
+        if columns is not None:
+            t = t.select([c for c in columns if c in t.column_names])
+        tables.append(t)
+    return pa.concat_tables(tables, promote_options="default")
+
+
+_LEDGER_COLS = [f.split()[0] for f in LEDGER_SCHEMA_DDL.split(",")]
+_COMMITTED = ("done", "delete", "eqdelete", "retired")
+
+
+def _ledger_table(out_dir: str) -> pa.Table | None:
+    """Every ledger row with every ``LEDGER_SCHEMA_DDL`` column, read
+    with pyarrow; columns older ledger files lack read as null (a null
+    ``run_seq`` is epoch 1, the pre-snapshot store)."""
+    import pyarrow as pa
+
+    t = _read_parquet_dir(_ledger_dir(out_dir), _LEDGER_COLS)
+    if t is None:
+        return None
+    types = {"long": pa.int64(), "string": pa.string()}
+    for f in LEDGER_SCHEMA_DDL.split(","):
+        name, typ = f.split()
+        if name not in t.column_names:
+            t = t.append_column(name, pa.nulls(t.num_rows, types[typ]))
+    return t.select(_LEDGER_COLS)
+
+
+def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
+    """The store's commit state, resolved on the driver with pyarrow
+    (zero Spark jobs; the ledger files are tiny metadata) — the one
+    answer to every commit-state question, at an ``as_of`` already
+    checked by :func:`resolve_snapshot`. An unreadable ledger file
+    raises; a store with no ledger file gets the empty state.
+
+    Over the rows committed at or before ``as_of`` (``None``: all):
+
+    - ``live``: ``{part_id: {attempt_id, ...}}`` of partitions committed
+      ``"done"`` and not retired (``None`` = a legacy row);
+    - ``live_rows``: ``{part_id: n_rows}`` of the same partitions;
+    - ``retired``: the ids of partitions retired by a rewrite;
+    - ``part_seq``: ``{part_id: first done epoch}``;
+    - ``has_done``: any ``"done"`` row at all;
+    - ``delete_ids`` / ``delete_seqs``: positional-delete commits;
+    - ``eq_commits``: ``[(delete_id, run_seq, key_col)]`` equality
+      deletes (``codec_map`` carries the key column);
+    - ``staged``: ``{run_id: [row dict, ...]}`` of write-audit-publish
+      rows still awaiting their verdict (staged, and neither aborted
+      nor published under the same ``(part_id, attempt_id)``);
+    - ``runs``: ``{run_id: {status: summed n_rows}}``.
+
+    Over every row: ``max_seq`` (the latest epoch, staged included),
+    ``committed_seq`` (committed statuses only: a staged or aborted
+    WAP epoch must not stamp schema-log snapshots) and ``max_part``
+    (writer id allocation)."""
+    t = _ledger_table(out_dir)
+    state = {
+        "live": {},
+        "live_rows": {},
+        "retired": set(),
+        "part_seq": {},
+        "has_done": False,
+        "delete_ids": set(),
+        "delete_seqs": [],
+        "eq_commits": [],
+        "staged": {},
+        "runs": {},
+        "max_seq": 0,
+        "committed_seq": 0,
+        "max_part": -1,
+    }
+    if t is None:
+        return state
+    rows = list(
+        zip(
+            *(
+                t.column(c).to_pylist()
+                for c in (
+                    "part_id", "attempt_id", "run_seq", "status",
+                    "codec_map", "run_id", "n_rows",
+                )
             )
         )
-        if t.num_rows:
-            m = pc.max(t.column("run_seq")).as_py()
-            if m is not None:
-                best = max(best, int(m))
-    return best
+    )
+    lim = int(as_of) if as_of is not None else None
+    done: dict[int, set] = {}
+    n_rows: dict[int, int] = {}
+    staged, dead = [], set()
+    for i, (pid, att, seq, st, cmap, rid, n) in enumerate(rows):
+        seq = 1 if seq is None else seq
+        state["max_seq"] = max(state["max_seq"], seq)
+        if pid is not None:
+            state["max_part"] = max(state["max_part"], pid)
+        if st in _COMMITTED:
+            state["committed_seq"] = max(state["committed_seq"], seq)
+        if lim is not None and seq > lim:
+            continue
+        run = state["runs"].setdefault(rid, {})
+        run[st] = run.get(st, 0) + (n or 0)
+        if st == "done":
+            done.setdefault(pid, set()).add(att)
+            n_rows[pid] = n
+            prev = state["part_seq"].get(pid)
+            if prev is None or seq < prev:
+                state["part_seq"][pid] = seq
+        elif st == "retired":
+            state["retired"].add(pid)
+        elif st == "delete":
+            state["delete_ids"].add(att)
+            state["delete_seqs"].append(seq)
+        elif st == "eqdelete":
+            state["eq_commits"].append((att, seq, cmap))
+        elif st == "staged":
+            staged.append((pid, att, rid, i))
+        if st in ("done", "aborted"):
+            dead.add((pid, att))
+    state["has_done"] = bool(done)
+    state["delete_seqs"].sort()
+    state["eq_commits"].sort(key=lambda c: c[1])
+    for p, atts in done.items():
+        if p not in state["retired"]:
+            state["live"][p] = atts
+            state["live_rows"][p] = n_rows[p]
+    table = t.to_pylist() if staged else []
+    for pid, att, rid, i in staged:
+        if (pid, att) not in dead:
+            state["staged"].setdefault(rid, []).append(table[i])
+    return state
 
 
 def manifest_as_of(manifest: dict | None, as_of: int | None) -> dict | None:
@@ -408,8 +510,6 @@ def _chunks_signature(out_dir: str) -> tuple | None:
 # cached frame is exactly "the snapshot the signature names"; any new
 # commit changes the signature and falls through to a fresh read.
 _LEDGER_DF_CACHE: dict[tuple, tuple] = {}
-# {(app_id, abs out_dir): (signature, meta dict)} — see commit_meta()
-_COMMIT_META_CACHE: dict[tuple, tuple] = {}
 # {(app_id, abs out_dir, as_of, flags): ((ledger_sig, chunks_sig), df)}
 # — the committed-chunk PLAN per visible snapshot. Building it costs
 # ~0.3-0.5 s of driver Py4J round trips (a footer-merging parquet read
@@ -424,19 +524,23 @@ def _cache_key(spark: SparkSession, out_dir: str) -> tuple:
 
 
 def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The ledger as a Spark frame, for joins against chunk and
+    tombstone frames (every other commit-state question goes to
+    :func:`ledger_state`). ``None`` only when ``_ledger/`` holds no
+    ``*.parquet`` — the rule :func:`ledger_state` uses; an unreadable
+    ledger file raises rather than reading as an empty store."""
     path = _ledger_dir(out_dir)
+    if not glob.glob(os.path.join(path, "*.parquet")):
+        return None
     sig = _ledger_signature(out_dir)
     key = _cache_key(spark, out_dir)
     if sig is not None:
         hit = _LEDGER_DF_CACHE.get(key)
         if hit is not None and hit[0] == sig:
             return hit[1]
-    try:
-        # mergeSchema: ledger files are tiny and a store resumed across
-        # engine upgrades may mix footers with/without newer columns
-        ledger = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
-        return None
+    # mergeSchema: ledger files are tiny and a store resumed across
+    # engine upgrades may mix footers with/without newer columns
+    ledger = spark.read.option("mergeSchema", "true").parquet(path)
     if "run_seq" not in ledger.columns:  # pre-snapshot stores: one epoch
         ledger = ledger.withColumn("run_seq", F.lit(1))
     else:
@@ -448,82 +552,6 @@ def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
     if sig is not None:
         _LEDGER_DF_CACHE[key] = (sig, ledger)
     return ledger
-
-
-def commit_meta(spark: SparkSession, out_dir: str) -> dict:
-    """Tiny driver-cached summary of the ledger's commit rows — the
-    per-scan metadata questions ("are there delete commits?", "which
-    equality-delete commits exist?", "has anything been ingested?")
-    answered with ZERO Spark jobs after the first read of a given store
-    version. Keyed on :func:`_ledger_signature`, so invalidation is
-    automatic: every commit appends or rewrites ledger files. Remote
-    stores (no local listing) recompute each call — correct, just not
-    cached.
-
-    Returns ``{"exists", "has_done", "delete_seqs", "eq_commits"}``
-    where ``delete_seqs`` is the (small — one per delete call) sorted
-    list of positional-delete commit epochs and ``eq_commits`` is
-    ``[(attempt_id, run_seq, key_col)]`` for equality deletes. The two
-    collects behind them are O(delete commits), never O(partitions),
-    and run once per store version instead of once per scan — the
-    Iceberg-client metadata-caching move (scan planning reads the
-    snapshot pointer, not the table)."""
-    sig = _ledger_signature(out_dir)
-    key = _cache_key(spark, out_dir)
-    if sig is not None:
-        hit = _COMMIT_META_CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        meta = {
-            "exists": False,
-            "has_done": False,
-            "delete_seqs": [],
-            "eq_commits": [],
-        }
-    else:
-        rows = (
-            ledger.filter(
-                F.col("status").isin("delete", "eqdelete")
-                | (F.col("status") == "done")
-            )
-            .groupBy("status")
-            .agg(
-                F.count("*").alias("n"),
-                # delete/eqdelete commits are one ledger row per call —
-                # tiny; "done" rows are O(partitions) and are NOT
-                # collected (only counted)
-                F.collect_list(
-                    F.when(
-                        F.col("status").isin("delete", "eqdelete"),
-                        F.struct("attempt_id", "run_seq", "codec_map"),
-                    )
-                ).alias("commits"),
-            )
-            .collect()
-        )
-        by_status = {r["status"]: r for r in rows}
-        meta = {
-            "exists": True,
-            "has_done": by_status.get("done", {"n": 0})["n"] > 0,
-            "delete_seqs": sorted(
-                int(c["run_seq"])
-                for c in by_status.get("delete", {"commits": []})["commits"]
-            ),
-            "eq_commits": sorted(
-                (
-                    (c["attempt_id"], int(c["run_seq"]), c["codec_map"])
-                    for c in by_status.get("eqdelete", {"commits": []})[
-                        "commits"
-                    ]
-                ),
-                key=lambda t: t[1],
-            ),
-        }
-    if sig is not None:
-        _COMMIT_META_CACHE[key] = (sig, meta)
-    return meta
 
 
 def _read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -993,36 +1021,19 @@ def read_changes(
     from choetl_spark.eqdeletes import all_delete_positions
     from choetl_spark.engine import decode_dataframe
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    latest = ledger_state(out_dir)["max_seq"]
+    if not latest:
         raise ValueError(f"no committed store at {out_dir}")
-    if to_seq is None:
-        to_seq = (
-            ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-        )
-    from_seq, to_seq = int(from_seq), int(to_seq)
+    from_seq = int(from_seq)
+    to_seq = latest if to_seq is None else int(to_seq)
     if from_seq > 0 and from_seq < min_time_travel_seq(out_dir):
         raise ValueError(
             f"changelog from_seq={from_seq} has been expired; the "
             f"oldest readable epoch is {min_time_travel_seq(out_dir)}"
         )
 
-    def visible(seq: int) -> set[int]:
-        done = ledger.filter(
-            (F.col("status") == "done") & (F.col("run_seq") <= seq)
-        ).select("part_id")
-        ret = ledger.filter(
-            (F.col("status") == "retired") & (F.col("run_seq") <= seq)
-        ).select("part_id").distinct()
-        return {
-            r["part_id"]
-            for r in done.join(
-                F.broadcast(ret), "part_id", "left_anti"
-            ).collect()
-        }
-
-    v_from = visible(from_seq) if from_seq > 0 else set()
-    v_to = visible(to_seq)
+    v_from = set(ledger_state(out_dir, from_seq)["live"] if from_seq else {})
+    v_to = set(ledger_state(out_dir, to_seq)["live"])
     added = sorted(v_to - v_from)
     removed = sorted(v_from - v_to)
     stayed = v_from & v_to
@@ -1663,11 +1674,7 @@ def compact_store(
     """
     import math
 
-    ledger = read_ledger(spark, out_dir)
-    if (
-        ledger is None
-        or ledger.filter(F.col("status") == "done").limit(1).count() == 0
-    ):
+    if not ledger_state(out_dir)["has_done"]:
         # no commit record yet: a first run may be mid-flight and its
         # chunks (all "orphan" by the semi-join) must not be rewritten
         # away — same guard as vacuum()
@@ -1737,8 +1744,8 @@ def expire_snapshots(
         "files_before": 0,
         "files_after": 0,
     }
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir, older_than_seq)
+    if not state["max_seq"]:
         return res
     with open(_expiry_path(out_dir), "w", encoding="utf-8") as fh:
         json.dump({"min_as_of_seq": floor}, fh)
@@ -1757,16 +1764,7 @@ def expire_snapshots(
             else:
                 man.pop("_schema_log")
             write_manifest(out_dir, man)
-    expired = [
-        r["part_id"]
-        for r in ledger.filter(
-            (F.col("status") == "retired")
-            & (F.col("run_seq") <= int(older_than_seq))
-        )
-        .select("part_id")
-        .distinct()
-        .collect()
-    ]
+    expired = sorted(state["retired"])
     if not expired:
         return res
     keep = read_encoded(
@@ -1949,13 +1947,10 @@ def encode_with_resume(
             hot_factor=cfg.hot_factor,
             salt_buckets=cfg.salt_buckets,
         )
+    run_seq = ledger_state(out_dir)["max_seq"] + 1  # next commit epoch
     ledger = read_ledger(spark, out_dir)
     already = 0
-    run_seq = 1
     if ledger is not None:
-        run_seq = (
-            ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-        ) + 1  # next commit epoch (metadata-scale agg)
         # staged-live partitions occupy their part_id (a crashed staged
         # run resumes without re-encoding; publish/abort settle them)
         done = (

@@ -239,7 +239,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     """Decode a baseline sequential JFIF/JPEG payload to HxWx3 uint8
     (grayscale replicates into 3 channels, matching decode_image's
     contract). Raises NotImplementedError for progressive /
-    arithmetic / 12-bit streams."""
+    arithmetic / 12-bit streams and for baseline streams coded as one
+    scan per component (non-interleaved)."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -252,6 +253,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     while pos < n:
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker expected")
+        # any number of 0xFF fill bytes may precede a marker (T.81 B.1.1.2)
+        while pos + 1 < n and payload[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 1 >= n:
+            raise ValueError("truncated JPEG: marker id missing")
         marker = payload[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -315,6 +321,13 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
             ns = seg[0]
+            if ns != len(frame["comps"]):
+                # one scan per component (non-interleaved): the decoder
+                # reads one interleaved scan only
+                raise NotImplementedError(
+                    f"non-interleaved JPEG scan ({ns} of "
+                    f"{len(frame['comps'])} components) needs PIL/libjpeg"
+                )
             scan = []
             for i in range(ns):
                 cs = seg[1 + 2 * i]

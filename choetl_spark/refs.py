@@ -30,10 +30,11 @@ src/ChoETL/File/ChoFileRecordConfiguration.cs:33 Append mode); this is
 the capability a 10^12-document pipeline needs so a bad crawl batch is
 audited and dropped BEFORE consumers can read it.
 
-Scale shape: every function here is metadata-only — O(refs) JSON on the
-driver plus ledger-table aggregates (tiny parquet); nothing touches
-chunk payloads except ``read_staged`` (a normal pruned decode of just
-the staged partitions).
+Scale shape: every function here is metadata-only — O(refs) JSON plus
+the ledger state read with pyarrow on the driver
+(:func:`choetl_spark.ledger.ledger_state`), so none of them runs a
+Spark job; nothing touches chunk payloads except ``read_staged`` (a
+normal pruned decode of just the staged partitions).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _refs_path(out_dir: str) -> str:
@@ -66,26 +67,21 @@ def _write_refs(out_dir: str, refs: dict) -> None:
     os.replace(tmp, _refs_path(out_dir))
 
 
-def _latest_seq(spark: SparkSession, out_dir: str) -> int:
-    from choetl_spark.ledger import read_ledger
+def _validate_seq(out_dir: str, seq: int | None) -> int:
+    """``seq`` (``None``: the latest epoch), checked against the
+    expiry floor and the latest epoch."""
+    from choetl_spark.ledger import ledger_state, min_time_travel_seq
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    latest = ledger_state(out_dir)["max_seq"]
+    if not latest:
         raise ValueError(f"no ledger at {out_dir}; nothing to reference")
-    return ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-
-
-def _validate_seq(spark: SparkSession, out_dir: str, seq: int) -> int:
-    from choetl_spark.ledger import min_time_travel_seq
-
-    seq = int(seq)
+    seq = latest if seq is None else int(seq)
     floor = min_time_travel_seq(out_dir)
     if seq < floor:
         raise ValueError(
             f"epoch {seq} has been expired; the oldest readable epoch "
             f"is {floor}"
         )
-    latest = _latest_seq(spark, out_dir)
     if seq > latest:
         raise ValueError(f"epoch {seq} does not exist yet (latest {latest})")
     return seq
@@ -97,9 +93,7 @@ def create_tag(
     """Create an IMMUTABLE named pointer at epoch ``seq`` (default: the
     latest). Refuses to overwrite an existing ref — drop it first (the
     Iceberg tag contract: a tag names one snapshot forever)."""
-    seq = _validate_seq(
-        spark, out_dir, seq if seq is not None else _latest_seq(spark, out_dir)
-    )
+    seq = _validate_seq(out_dir, seq)
     refs = _read_refs(out_dir)
     if name in refs:
         raise ValueError(
@@ -115,9 +109,7 @@ def create_branch(
     spark: SparkSession, out_dir: str, name: str, seq: int | None = None
 ) -> dict:
     """Create a MOVABLE named pointer (see :func:`update_branch`)."""
-    seq = _validate_seq(
-        spark, out_dir, seq if seq is not None else _latest_seq(spark, out_dir)
-    )
+    seq = _validate_seq(out_dir, seq)
     refs = _read_refs(out_dir)
     if name in refs:
         raise ValueError(f"ref {name!r} already exists; drop_ref it first")
@@ -136,7 +128,7 @@ def update_branch(
         raise ValueError(f"no ref named {name!r}")
     if refs[name]["type"] != "branch":
         raise ValueError(f"ref {name!r} is a tag; tags are immutable")
-    seq = _validate_seq(spark, out_dir, seq)
+    seq = _validate_seq(out_dir, seq)
     refs[name]["run_seq"] = seq
     _write_refs(out_dir, refs)
     return {"name": name, "type": "branch", "run_seq": seq}
@@ -182,12 +174,6 @@ def list_refs(spark: SparkSession, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- WAP --
 
 
-def _staged_rows(ledger: DataFrame, run_id: str | None = None) -> DataFrame:
-    from choetl_spark.ledger import staged_live_rows
-
-    return staged_live_rows(ledger, run_id)
-
-
 def read_staged(
     spark: SparkSession,
     out_dir: str,
@@ -204,88 +190,83 @@ def read_staged(
         _read_chunks,
         read_ledger,
         read_manifest,
+        staged_live_rows,
     )
 
     ledger = read_ledger(spark, out_dir)
     chunks = _read_chunks(spark, out_dir)
     if ledger is None:
         return chunks.limit(0)
-    staged = _staged_rows(ledger, run_id)
+    staged = staged_live_rows(ledger, run_id)
     manifest = read_manifest(out_dir)
     enc = _display_remap(_commit_join(chunks, staged, "semi"), manifest)
     return decode_dataframe(enc, columns=columns, manifest=manifest)
 
 
 def publish_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
-    """Make a staged run visible — ONE ledger append re-committing its
+    """Make a staged run visible — ONE ledger append
+    (:func:`choetl_spark.ledger.append_ledger_rows`) re-committing its
     partitions with ``status="done"`` at a fresh epoch (the Iceberg
     cherry-pick of a ``wap.id`` snapshot). Atomic for readers: before
     the append they see the old table, after it the new one; a crash
     in between leaves the run staged (re-run to finish). Idempotent:
-    an already-published run returns without a second commit."""
-    from choetl_spark.ledger import _ledger_dir, read_ledger
+    an already-published run returns without a second commit. The
+    look-ups are :func:`choetl_spark.ledger.ledger_state`'s: no Spark
+    job runs."""
+    from choetl_spark.ledger import append_ledger_rows, ledger_state
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["max_seq"]:
         raise ValueError(f"no ledger at {out_dir}")
-    mine = ledger.filter(F.col("run_id") == run_id)
-    staged = _staged_rows(ledger, run_id).collect()
+    staged = state["staged"].get(run_id)
     if not staged:
-        if mine.filter(F.col("status") == "done").limit(1).count() > 0:
+        mine = state["runs"].get(run_id, {})
+        if "done" in mine:
             return {
                 "run_id": run_id,
                 "already_published": True,
                 "partitions_published": 0,
                 "publish_epoch": None,
             }
-        if mine.filter(F.col("status") == "aborted").limit(1).count() > 0:
+        if "aborted" in mine:
             raise ValueError(f"staged run {run_id!r} was aborted")
         raise ValueError(f"no staged partitions for run {run_id!r}")
-    epoch = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    epoch = state["max_seq"] + 1
     rows = [
         (
             r["part_id"], r["fingerprint"], r["n_rows"], r["raw_bytes"],
             r["encoded_bytes"], r["n_chunks"], r["codec_map"], r["run_id"],
-            int(epoch), "done", r["attempt_id"],
+            epoch, "done", r["attempt_id"],
         )
         for r in staged
     ]
-    from choetl_spark.ledger import LEDGER_SCHEMA_DDL
-
-    # one file, one append: the publish is a single atomic metadata move
-    spark.createDataFrame(rows, LEDGER_SCHEMA_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(_ledger_dir(out_dir))
+    append_ledger_rows(out_dir, rows)
     return {
         "run_id": run_id,
         "already_published": False,
         "partitions_published": len(rows),
-        "publish_epoch": int(epoch),
+        "publish_epoch": epoch,
     }
 
 
 def abort_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
-    """Mark a staged run dead (audit failed). Its chunks become
+    """Mark a staged run dead (audit failed) with one ledger append of
+    ``status="aborted"`` rows (no Spark job). Its chunks become
     unreachable immediately and reclaimable by the next
     ``compact_store``/``expire_snapshots``/``vacuum`` pass; a later
     ``publish_staged`` of the same run refuses. Refuses if the run was
     already published — retire/rollback handle visible data."""
-    from choetl_spark.ledger import (
-        LEDGER_SCHEMA_DDL,
-        _ledger_dir,
-        read_ledger,
-    )
+    from choetl_spark.ledger import append_ledger_rows, ledger_state
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["max_seq"]:
         raise ValueError(f"no ledger at {out_dir}")
-    mine = ledger.filter(F.col("run_id") == run_id)
-    if mine.filter(F.col("status") == "done").limit(1).count() > 0:
+    if "done" in state["runs"].get(run_id, {}):
         raise ValueError(
             f"run {run_id!r} is already published; use rollback_to / "
             "rewrite, not abort"
         )
-    staged = _staged_rows(ledger, run_id).collect()
+    staged = state["staged"].get(run_id)
     if not staged:
         return {"run_id": run_id, "partitions_aborted": 0}
     rows = [
@@ -295,7 +276,5 @@ def abort_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
         )
         for r in staged
     ]
-    spark.createDataFrame(rows, LEDGER_SCHEMA_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(_ledger_dir(out_dir))
+    append_ledger_rows(out_dir, rows)
     return {"run_id": run_id, "partitions_aborted": len(rows)}

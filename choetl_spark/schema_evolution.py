@@ -88,9 +88,9 @@ def _log_schema_snapshot(out_dir: str, manifest: dict) -> None:
     ``through_seq``; lookup takes the FIRST match, i.e. the schema that
     was live when that epoch committed. A store with no commits yet
     logs nothing (no snapshot can observe the pre-change schema)."""
-    from choetl_spark.ledger import max_committed_seq
+    from choetl_spark.ledger import ledger_state
 
-    seq = max_committed_seq(out_dir)
+    seq = ledger_state(out_dir)["committed_seq"]
     if seq < 1:
         return
     manifest.setdefault("_schema_log", []).append(

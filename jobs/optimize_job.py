@@ -149,29 +149,24 @@ def optimize_store(
     control rewrites exactly; otherwise the job infers the sketch
     columns (bloom/NDV/quantiles) from the existing chunks so
     maintenance never strips them."""
-    from pyspark.sql import functions as F
-
     from choetl_spark.deletes import compact_deletes, rewrite_partitions
     from choetl_spark.engine import EncodeConfig
     from choetl_spark.ledger import (
         compact_store,
         expire_snapshots,
+        ledger_state,
         min_time_travel_seq,
-        read_ledger,
-        snapshots,
         vacuum,
     )
 
     report: dict = {"store": store, "dry_run": dry_run, "steps": {}}
 
-    ledger = read_ledger(spark, store)
-    if ledger is None:
+    if not ledger_state(store)["max_seq"]:
         report["steps"]["skipped"] = "no ledger (store never committed)"
         return report
+
     def _expiry_target() -> tuple[int, int, int]:
-        mx = snapshots(spark, store).agg(
-            F.max("run_seq")
-        ).collect()[0][0] or 0
+        mx = ledger_state(store)["committed_seq"]
         fl = min_time_travel_seq(store)
         return mx, fl, max(mx - retain_last + 1, fl)
 
@@ -185,7 +180,7 @@ def optimize_store(
         max_epoch, floor, expire_to = _expiry_target()
         tomb = read_delete_positions(spark, store)
         n_tomb = tomb.count() if tomb is not None else 0
-        eq_rows = ledger.filter(F.col("status") == "eqdelete").count()
+        eq_rows = len(ledger_state(store)["eq_commits"])
         report["steps"]["rewrite_partitions"] = {
             "pending_delete_positions": n_tomb,
             "eq_delete_commits": eq_rows,

@@ -1,15 +1,16 @@
-"""Driver-side ledger-metadata cache (ledger.commit_meta / the cached
-read_ledger): the per-scan metadata questions must cost zero Spark jobs
-on a cache hit, and any commit must invalidate the cache (signature =
-ledger directory listing — the Iceberg metadata.json-pointer analog)."""
+"""Driver-side commit state (``ledger.ledger_state``, read with pyarrow)
+and the cached ``read_ledger`` frame: the per-scan metadata questions
+cost zero Spark jobs, and any commit is visible to the next call
+(the cached frame is keyed on the ledger directory listing — the
+Iceberg metadata.json-pointer analog)."""
 
 from __future__ import annotations
 
 from choetl_spark.deletes import delete_where, read_delete_positions
 from choetl_spark.engine import EncodeConfig
 from choetl_spark.ledger import (
-    commit_meta,
     encode_with_resume,
+    ledger_state,
     read_ledger,
     scan_encoded,
 )
@@ -27,23 +28,25 @@ def _ingest(spark, tmp_path, n=300):
     return out, pages
 
 
-def test_commit_meta_cached_and_invalidated_by_commits(spark, tmp_path):
+def test_ledger_state_tracks_commits_without_spark_jobs(spark, tmp_path):
     out, pages = _ingest(spark, tmp_path)
-    m1 = commit_meta(spark, out)
-    assert m1["exists"] and m1["has_done"]
-    assert m1["delete_seqs"] == [] and m1["eq_commits"] == []
-    # cache hit: identical object back, no recompute
-    assert commit_meta(spark, out) is m1
-    # the cached ledger DataFrame is reused too
+    sc = spark.sparkContext
+    sc.setJobGroup("ledger-state-jobs", "ledger_state")
+    try:
+        s1 = ledger_state(out)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("ledger-state-jobs") == []
+    assert s1["has_done"] and len(s1["live"]) == 3
+    assert s1["delete_seqs"] == [] and s1["eq_commits"] == []
+    # the cached ledger DataFrame is reused
     led1 = read_ledger(spark, out)
     assert read_ledger(spark, out) is led1
 
-    # a delete COMMIT must invalidate both caches via the signature
+    # a delete COMMIT is in the next state, and invalidates the cache
     target = pages.select("url").limit(1).collect()[0][0]
-    delete_where(spark, out, equals={"url": target})
-    m2 = commit_meta(spark, out)
-    assert m2 is not m1
-    assert len(m2["delete_seqs"]) == 1
+    info = delete_where(spark, out, equals={"url": target})
+    assert ledger_state(out)["delete_seqs"] == [info["run_seq"]]
     assert read_ledger(spark, out) is not led1
 
     # the new snapshot is what readers see
@@ -66,8 +69,7 @@ def test_no_delete_store_skips_tombstone_resolution(spark, tmp_path):
 
 def test_as_of_before_first_delete_returns_none(spark, tmp_path):
     out, pages = _ingest(spark, tmp_path)
-    pre = commit_meta(spark, out)
-    assert pre["delete_seqs"] == []
+    assert ledger_state(out)["delete_seqs"] == []
     target = pages.select("url").limit(1).collect()[0][0]
     info = delete_where(spark, out, equals={"url": target})
     # a snapshot strictly before the delete epoch sees no tombstones

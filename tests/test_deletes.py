@@ -357,17 +357,14 @@ def test_scan_without_tombstones_pays_zero_delete_overhead(spark, store):
     doesn't use. Once a delete commits, only the touched partition's
     split carries positions, and the plan never gains a join: the
     reader subtracts deletes task-side."""
-    from choetl_spark.datasource import (
-        _delete_positions,
-        _ledger_state,
-        plan_store_splits,
-    )
+    from choetl_spark.datasource import _delete_positions, plan_store_splits
+    from choetl_spark.ledger import ledger_state
     from choetl_spark.plans import explain_str
 
     out, _ = store
 
     def parts_with_tombstones():
-        state = _ledger_state(out)
+        state = ledger_state(out)
         tomb = _delete_positions(out, state)
         splits = plan_store_splits(out, state, tomb, target_split_bytes=1)
         return {p for s in splits for p in s.tombstones}

@@ -583,6 +583,39 @@ def test_decode_image_jpeg_baseline():
         decode_jpeg(bytes(prog))
 
 
+def test_jpeg_fill_bytes_and_non_interleaved_scan():
+    """Streams derived from the in-repo encoder: 0xFF fill bytes before
+    any marker (T.81 B.1.1.2) decode equal to the original, and a scan
+    rewritten to cover one of three components (the non-interleaved
+    layout, one scan per component) raises instead of decoding the
+    interleaved data as garbage."""
+    import struct
+
+    from choetl_spark.operators.jpeg_py import decode_jpeg, encode_jpeg
+
+    g = np.add.outer(np.arange(19) * 4, np.arange(21) * 3).astype(np.uint8)
+    rgb = np.stack([g, g // 2, 255 - g], axis=-1)
+    jpg = encode_jpeg(rgb, subsampling="420", restart_interval=2)
+    ref = decode_jpeg(jpg)
+    for marker in (b"\xff\xdb", b"\xff\xc0", b"\xff\xc4", b"\xff\xdd",
+                   b"\xff\xda", b"\xff\xd9"):
+        i = jpg.find(marker)
+        filled = jpg[:i] + b"\xff\xff" + jpg[i:]
+        assert np.array_equal(decode_jpeg(filled), ref), marker
+
+    i = jpg.find(b"\xff\xda")
+    (seglen,) = struct.unpack(">H", jpg[i + 2:i + 4])
+    ns = jpg[i + 4]
+    assert ns == 3
+    seg = jpg[i + 4:i + 2 + seglen]
+    one = (
+        b"\xff\xda" + struct.pack(">H", 8) + bytes([1]) + seg[1:3]
+        + seg[1 + 2 * ns:]
+    )
+    with pytest.raises(NotImplementedError, match="non-interleaved"):
+        decode_jpeg(jpg[:i] + one + jpg[i + 2 + seglen:])
+
+
 def test_decode_image_png_16bit_and_adam7():
     """16-bit PNG (high-byte scaling) and Adam7-interlaced PNG decode
     — fixtures built BY HAND from the RFC 2083 pass layout with numpy
