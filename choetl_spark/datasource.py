@@ -43,10 +43,22 @@ deletes subtract task-side; equality value sets are O(deleted keys),
 load driver-side and ride the splits (data-seq < delete-seq; splits
 whose partitions all post-date every delete skip the probe). A lost
 delete table or an equality key dropped after its delete refuses to
-read rather than resurrect rows. Nested/decimal ("logical") columns
-come back in their logical type (the decode kernel restores them).
-Column pruning is Spark's own ``.schema()``: the reader decodes only
-the columns it names, in its order.
+read rather than resurrect rows. The deletes come from the one
+pyarrow resolver (:func:`choetl_spark.deletes.delete_positions`,
+:func:`choetl_spark.eqdeletes.eq_value_maps`), and ``_decode_split`` is
+the only code that drops deleted rows. Nested/decimal ("logical")
+columns come back in their logical type (the decode kernel restores
+them). Column pruning is Spark's own ``.schema()``: the reader decodes
+only the columns it names, in its order.
+
+Two reserved hidden columns, ``_part_id`` and ``_row_pos`` (bigint),
+give each row's partition and its position in it — the coordinates
+tombstones address rows by. ``schema()`` never lists them; the reader
+emits them only when the read schema names them (``load_store`` accepts
+them in ``columns``). ``_part_id`` filters (``=``, ``IN``, comparisons)
+restrict the planned live set, so a read decodes only the partitions it
+names. Deletes, upserts, rewrites, rollback, the changelog and
+aggregate pushdown read rows this way.
 
 Filter pushdown: ``pushFilters`` translates simple predicates into the
 engine's pushdown spec (``=``/``IN`` become ``("in", values)``,
@@ -87,6 +99,7 @@ from __future__ import annotations
 import datetime as _dt
 import glob
 import json
+import operator
 import os
 import uuid
 from collections.abc import Iterator
@@ -124,12 +137,11 @@ from choetl_spark.engine import (
     publish_chunk_files,
     schema_manifest,
 )
-from choetl_spark.deletes import _deletes_dir, refuse_lost_tombstones
-from choetl_spark.eqdeletes import _eq_dir, resolve_eq_key
+from choetl_spark.deletes import delete_positions
+from choetl_spark.eqdeletes import eq_value_maps
 from choetl_spark.ledger import (
     _chunks_dir,
     _ledger_table,
-    _read_parquet_dir,
     append_ledger_rows,
     ledger_state,
     manifest_as_of,
@@ -147,71 +159,9 @@ from choetl_spark.ledger import (
 # ---------------------------------------------------------------------------
 
 
-def _delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
-    """Committed positional tombstones per part_id (numpy arrays) —
-    the broadcast-bitmap shape, loaded driver-side."""
-    import numpy as np
-
-    if not state["delete_ids"]:
-        return {}
-    t = _read_parquet_dir(_deletes_dir(out_dir))
-    if t is None:
-        refuse_lost_tombstones(out_dir)
-        return {}
-    ids = t.column("delete_id").to_pylist()
-    keep = [i for i, d in enumerate(ids) if d in state["delete_ids"]]
-    if not keep:
-        return {}
-    t = t.take(keep)
-    pid = t.column("part_id").to_numpy(zero_copy_only=False)
-    pos = t.column("row_pos").to_numpy(zero_copy_only=False)
-    out: dict[int, object] = {}
-    order = np.argsort(pid, kind="stable")
-    pid, pos = pid[order], pos[order]
-    bounds = np.flatnonzero(np.r_[True, pid[1:] != pid[:-1], True])
-    for i in range(len(bounds) - 1):
-        s, e = bounds[i], bounds[i + 1]
-        out[int(pid[s])] = np.unique(pos[s:e])
-    return out
-
-
-def _eq_value_maps(out_dir: str, state: dict, view: dict) -> dict[str, dict]:
-    """Committed equality-delete value sets, per key column: ``{col:
-    {value: newest delete epoch}}`` — loaded driver-side with pyarrow
-    (the value tables are O(deleted keys), tiny by the eq-delete
-    write contract). A row dies iff its partition's first-done epoch
-    is STRICTLY BEFORE the newest delete epoch naming its key value;
-    the sets ride the splits. Keys resolve into ``view``, the reader's
-    schema, through :func:`choetl_spark.eqdeletes.resolve_eq_key`."""
-    if not state["eq_commits"]:
-        return {}
-    manifest = read_manifest(out_dir)
-    # grouped by (reader-schema name, recorded name): the value table
-    # lives under the recorded name on disk
-    by_col: dict[tuple[str, str], list[tuple[str, int]]] = {}
-    for did, seq, col in state["eq_commits"]:
-        by_col.setdefault(
-            (resolve_eq_key(manifest, col, int(seq), view), col), []
-        ).append((did, seq))
-    out: dict[str, dict] = {}
-    for (cur, col), commits in by_col.items():
-        t = _read_parquet_dir(_eq_dir(out_dir, col))
-        if t is None:
-            raise RuntimeError(
-                f"store at {out_dir} has committed equality-delete "
-                f"epochs for column {col!r} but no readable value "
-                "table — refusing to read (it would resurrect rows)"
-            )
-        seq_of = dict(commits)
-        vmap = out.setdefault(cur, {})
-        for did, val in zip(
-            t.column("delete_id").to_pylist(),
-            t.column("value").to_pylist(),
-        ):
-            s = seq_of.get(did)
-            if s is not None and vmap.get(val, 0) < s:
-                vmap[val] = s
-    return out
+# reserved hidden columns: each row's partition and its position in it,
+# emitted only when the read schema names them (never by ``schema()``)
+HIDDEN_COLUMNS = ("_part_id", "_row_pos")
 
 
 def _manifest_view(out_dir: str, as_of: int | None = None) -> dict:
@@ -226,9 +176,10 @@ def _manifest_view(out_dir: str, as_of: int | None = None) -> dict:
     return manifest
 
 
-def _schema_ddl(items: list[tuple[str, dict]]) -> str:
+def _schema_ddl(items: list[tuple[str, dict | None]]) -> str:
+    """Spark DDL of ``(name, manifest entry)`` pairs (hidden: bigint)."""
     return ", ".join(
-        f"`{c}` {m.get('logical') or _spark_type_ddl(str_to_type(m['dtype']))}"
+        f"`{c}` {'bigint' if m is None else m.get('logical') or _spark_type_ddl(str_to_type(m['dtype']))}"
         for c, m in items
     )
 
@@ -239,8 +190,8 @@ def _snapshot(out_dir: str, as_of: int | None, view: dict) -> tuple:
     state = ledger_state(out_dir, as_of)
     return (
         state,
-        _delete_positions(out_dir, state),
-        _eq_value_maps(out_dir, state, view),
+        delete_positions(out_dir, state),
+        eq_value_maps(out_dir, state, view),
     )
 
 
@@ -252,7 +203,8 @@ def load_store(
     ref: str | None = None,
 ):
     """``spark.read.format("choetl").schema(...)`` of ``columns``
-    (``None``: all, in name order) at ``as_of`` / ``ref``. A data
+    (``None``: all, in name order) at ``as_of`` / ``ref``; ``columns``
+    may name the hidden ``_part_id`` / ``_row_pos`` columns. A data
     source's errors reach the caller as ``AnalysisException``, so the
     snapshot is resolved here first and its errors raise typed:
     ``ValueError`` (as_of with ref, unknown ref, expired as_of),
@@ -262,7 +214,9 @@ def load_store(
     view = _manifest_view(out_dir, as_of)
     entries = dict(manifest_data_items(view))
     names = list(dict.fromkeys(columns or sorted(entries)))
-    missing = [c for c in names if c not in entries]
+    missing = [
+        c for c in names if c not in entries and c not in HIDDEN_COLUMNS
+    ]
     if missing:
         raise KeyError(f"columns not in encoded store: {missing}")
     _snapshot(out_dir, as_of, view)
@@ -270,7 +224,7 @@ def load_store(
     if not sources.dataSourceExists("choetl"):
         register(spark)
     reader = spark.read.format("choetl").schema(
-        _schema_ddl([(c, entries[c]) for c in names])
+        _schema_ddl([(c, entries.get(c)) for c in names])
     )
     if as_of is not None:
         reader = reader.option("as_of", as_of)
@@ -449,12 +403,20 @@ def _decode_split(
     the pushdown spec rules out (Bloom skipping, then partitions left
     without a chunk of some predicate column — the filtered kernel
     would emit nothing for them), read payloads for the rest only, then
-    run the shared decode kernel and subtract deletes. An
-    equality-delete key in ``store_items`` but not in the output
-    ``items`` decodes for the subtraction only."""
+    run the shared decode kernel and subtract deletes — the one place
+    deleted rows leave decoded rows. ``out_schema`` is the output in
+    the read schema's order: ``items`` are its data columns, and the
+    hidden ``_part_id`` / ``_row_pos`` columns it names are the
+    kernel's row coordinates. An equality-delete key in
+    ``store_items`` but not in the output decodes for the subtraction
+    only."""
     import numpy as np
 
-    n_out = len(items)
+    names = out_schema.names
+    hidden = [n for n in names if n in HIDDEN_COLUMNS]
+    out_schema = pa.schema(
+        [f for f in out_schema if f.name not in HIDDEN_COLUMNS]
+    )
     keys = [
         (c, m) for c, m in store_items
         if c in split.eq and c not in out_schema.names
@@ -534,7 +496,8 @@ def _decode_split(
         [("part_id", "ascending"), ("column", "ascending"),
          ("row_start", "ascending")]
     )
-    with_pos = bool(split.tombstones) or bool(split.eq)
+    subtract = bool(split.tombstones) or bool(split.eq)
+    with_pos = subtract or bool(hidden)
     if pushdown:
         kernel = _make_filtered_decode_kernel(
             col_order, out_schema, batch_rows, pushdown, with_pos=with_pos
@@ -544,7 +507,7 @@ def _decode_split(
             col_order, out_schema, batch_rows, with_pos=with_pos
         )
     for batch in kernel(iter(feed.to_batches())):
-        if with_pos:
+        if subtract:
             parts_np = batch.column(0).to_numpy(zero_copy_only=False)
             pos_np = batch.column(1).to_numpy(zero_copy_only=False)
             mask = np.ones(len(batch), dtype=bool)
@@ -572,10 +535,9 @@ def _decode_split(
                         count=len(vals),
                     )
                     mask &= ~(pseq_np < vseq)
-            batch = pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(2, 2 + n_out)],
-                schema=pa.schema(list(batch.schema)[2:2 + n_out]),
-            ).filter(pa.array(mask))
+            batch = batch.filter(pa.array(mask))
+        if with_pos:
+            batch = batch.select(names)
         if len(batch):
             yield batch
 
@@ -608,6 +570,28 @@ def _maskable(v, t: pa.DataType) -> bool:
         or pa.types.is_boolean(t)
         or pa.types.is_binary(t) or pa.types.is_large_binary(t)
     )
+
+
+_PART_OPS = {
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+}
+
+
+def _kept_parts(parts, filters: list[Filter]) -> set:
+    """The ``parts`` that ``_part_id`` filters (``=``, ``IN``,
+    comparisons) keep — a read decodes only the partitions they name."""
+    keep = set(parts)
+    for f in filters:
+        if isinstance(f, EqualTo):
+            keep &= {f.value}
+        elif isinstance(f, In):
+            keep &= set(f.value)
+        elif type(f) in _PART_OPS:
+            keep = {p for p in keep if _PART_OPS[type(f)](p, f.value)}
+    return keep
 
 
 def _pushdown_spec(filters: list[Filter], items) -> dict[str, tuple]:
@@ -671,17 +655,36 @@ class ChoetlBatchReader(DataSourceReader):
         # decode only the schema's columns, in ITS order: Spark reads
         # the batch columns positionally
         entries = dict(self._store_items)
-        self._items = [(n, entries[n]) for n in schema.names]
-        self._out_schema = _out_schema(self._items, schema)
+        self._items = [
+            (n, entries[n]) for n in schema.names if n not in HIDDEN_COLUMNS
+        ]
+        data = _out_schema(self._items, schema)
+        self._out_schema = pa.schema(
+            [
+                (n, pa.int64()) if n in HIDDEN_COLUMNS else data.field(n)
+                for n in schema.names
+            ]
+        )
         self._pushdown: dict[str, tuple] = {}
+        self._part_filters: list[Filter] = []
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         filters = list(filters)
         self._pushdown = _pushdown_spec(filters, self._items)
+        self._part_filters = [
+            f for f in filters
+            if tuple(getattr(f, "attribute", ())) == ("_part_id",)
+        ]
         return filters  # all of them: Spark re-applies every filter
 
     def partitions(self):
         state, tomb, eq = _snapshot(self._dir, self._as_of, self._view)
+        if self._part_filters:
+            keep = _kept_parts(state["live"], self._part_filters)
+            state = {
+                **state,
+                "live": {p: a for p, a in state["live"].items() if p in keep},
+            }
         return plan_store_splits(
             self._dir, state, tomb, eq, self._target
         )

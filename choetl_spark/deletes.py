@@ -3,19 +3,24 @@ positional-delete (merge-on-read) contract.
 
 The chunk store is append-only — committed partitions are immutable,
 which is what makes resume, time travel, and vacuum sound. Row-level
-deletes therefore never rewrite data: :func:`delete_where` locates the
-matching rows with the store's own pruned machinery (zone maps, Blooms,
-column-pruned positional decode), writes their coordinates as TOMBSTONES
+deletes therefore never rewrite data: :func:`delete_where` reads the
+matching rows' hidden ``(_part_id, _row_pos)`` coordinates through
+``format("choetl")`` (column-pruned, Bloom-skipped, kernel-masked),
+writes them as TOMBSTONES
 
     (part_id, row_pos, del_seq, delete_id)
 
 to ``out_dir/_deletes`` (a Spark write), and commits them with one
 ledger row of ``status="delete"`` at the next ``run_seq`` epoch, appended
 on the driver by :func:`choetl_spark.ledger.append_ledger_rows` (no Spark
-job). Readers subtract committed tombstones by ``(part_id, row_pos)`` —
-``format("choetl")`` task-side, maintenance paths with a broadcast
-anti-join — the in-memory positional-delete-bitmap shape Iceberg readers
-use per data file.
+job).
+
+One delete-subtraction path: :func:`delete_positions` (with
+:func:`choetl_spark.eqdeletes.eq_value_maps`) resolves a snapshot's
+deletes on the driver with pyarrow, and ``format("choetl")`` tasks drop
+those rows as they decode — the in-memory positional-delete-bitmap
+shape Iceberg readers use per data file. Every library path reads rows
+there; :func:`deleted_counts` answers paths that need only counts.
 
 Crash safety mirrors the chunk commit protocol exactly: tombstone files
 are written BEFORE the ledger row, and readers keep only tombstones
@@ -32,9 +37,9 @@ ChoETL has no delete story at all — files are append/overwrite only,
 reference src/ChoETL/File/ChoFileRecordConfiguration.cs:33.)
 
 Scale shape at 10^12 docs: the tombstone table is O(rows ever deleted),
-read once per scan and broadcast; data chunks are untouched, so a
-delete of k rows costs O(pruned key chunks decoded) + O(k) written —
-independent of table size. A tombstone backlog that outgrows broadcast
+read once per scan on the driver; data chunks are untouched, so a
+delete of k rows costs O(key chunks decoded) + O(k) written —
+independent of table size. A tombstone backlog that outgrows the driver
 belongs in a partition rewrite (major compaction), the same escalation
 Iceberg prescribes; :func:`compact_deletes` handles the small-file side
 (many tiny delete commits -> one file) without changing visibility.
@@ -46,11 +51,6 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-DELETES_SCHEMA_DDL = (
-    "part_id long, row_pos long, del_seq long, delete_id string"
-)
-
 
 def _deletes_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_deletes")
@@ -75,52 +75,132 @@ def refuse_lost_tombstones(out_dir: str) -> None:
         )
 
 
-def read_delete_positions(
-    spark: SparkSession, out_dir: str, as_of: int | None = None
-) -> DataFrame | None:
-    """Committed delete tombstones visible at ledger epoch ``as_of``
-    (``None`` = latest), as ``(part_id, row_pos)``. Returns ``None``
-    when the store has no tombstones at all — readers then skip the
-    anti-join (and, upstream, the positional decode) entirely.
+def delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
+    """Committed positional tombstones per ``part_id`` (sorted unique
+    numpy row positions) of the snapshot ``state`` describes
+    (:func:`choetl_spark.ledger.ledger_state`) — the broadcast-bitmap
+    shape, read on the driver with pyarrow (zero Spark jobs). Together
+    with :func:`choetl_spark.eqdeletes.eq_value_maps` it is the one
+    delete resolver: ``format("choetl")`` splits carry its answer, and
+    counting callers read it directly.
 
-    Orphan tombstone files (a crashed :func:`delete_where`) are
-    filtered out: only rows whose ``delete_id`` has a ledger
-    ``status="delete"`` commit at ``as_of`` are kept — the same commit
-    discipline as chunks. The output is DISTINCT positions, so
-    exact-duplicate tombstone rows (the survivable crash state of
-    :func:`replace_tombstone_files`) never skew anti-joins, changelog
-    diffs, or ``n_deleted`` counts.
+    Orphan tombstone files (a crashed :func:`delete_where`) never
+    count: only rows whose ``delete_id`` the snapshot commits are kept,
+    and duplicate rows (the survivable crash state of
+    :func:`replace_tombstone_files`) collapse. A store whose ledger
+    carries delete commits but whose ``_deletes`` table cannot be read
+    raises (:func:`refuse_lost_tombstones`)."""
+    import numpy as np
 
-    A store whose ledger carries delete commits but whose ``_deletes``
-    table cannot be read raises (:func:`refuse_lost_tombstones`)
-    instead of returning ``None``."""
-    tomb = _committed_tombstones(spark, out_dir, as_of)
-    if tomb is None:
-        return None
-    return tomb.select("part_id", "row_pos").distinct()
+    from choetl_spark.ledger import _read_parquet_dir
+
+    if not state["delete_ids"]:
+        return {}
+    t = _read_parquet_dir(_deletes_dir(out_dir))
+    if t is None:
+        refuse_lost_tombstones(out_dir)
+        return {}
+    ids = t.column("delete_id").to_pylist()
+    keep = [i for i, d in enumerate(ids) if d in state["delete_ids"]]
+    if not keep:
+        return {}
+    t = t.take(keep)
+    pid = t.column("part_id").to_numpy(zero_copy_only=False)
+    pos = t.column("row_pos").to_numpy(zero_copy_only=False)
+    out: dict[int, object] = {}
+    order = np.argsort(pid, kind="stable")
+    pid, pos = pid[order], pos[order]
+    bounds = np.flatnonzero(np.r_[True, pid[1:] != pid[:-1], True])
+    for i in range(len(bounds) - 1):
+        s, e = bounds[i], bounds[i + 1]
+        out[int(pid[s])] = np.unique(pos[s:e])
+    return out
 
 
-def _committed_tombstones(
-    spark: SparkSession, out_dir: str, as_of: int | None = None
-) -> DataFrame | None:
-    """The tombstone rows, verbatim, of the delete commits visible at
-    ``as_of`` — the ledger's committed ``delete_id`` set, resolved on
-    the driver (:func:`choetl_spark.ledger.ledger_state`). ``None``
-    without such commits: tombstone files on disk are then orphans of a
-    crashed :func:`delete_where`, and readers skip the read entirely."""
-    from pyspark.errors import AnalysisException
-
+def deleted_counts(
+    spark: SparkSession,
+    out_dir: str,
+    as_of: int | None = None,
+    parts=None,
+) -> dict[int, int]:
+    """``{part_id: rows deleted}`` for the live partitions at ``as_of``
+    that have deleted rows (``parts`` limits the answer). Positional
+    counts come from :func:`delete_positions`. A partition an equality
+    delete can hit is counted exactly as its ledger row count minus the
+    rows ``format("choetl")`` returns for it (both kinds subtracted);
+    only the partitions :func:`choetl_spark.eqdeletes.eq_hittable_parts`
+    names are read, and of them only the key columns."""
+    from choetl_spark.datasource import load_store
+    from choetl_spark.eqdeletes import eq_hittable_parts
     from choetl_spark.ledger import ledger_state
 
-    ids = ledger_state(out_dir, as_of)["delete_ids"]
-    if not ids:
-        return None
-    try:
-        tomb = spark.read.parquet(_deletes_dir(out_dir))
-    except AnalysisException:  # no _deletes table (or no file in it)
-        refuse_lost_tombstones(out_dir)
-        return None
-    return tomb.filter(F.col("delete_id").isin(sorted(ids)))
+    state = ledger_state(out_dir, as_of)
+    live = {
+        p: n for p, n in state["live_rows"].items()
+        if parts is None or p in parts
+    }
+    counts = {
+        p: len(a)
+        for p, a in delete_positions(out_dir, state).items()
+        if p in live
+    }
+    keys, hit = eq_hittable_parts(out_dir, state, as_of)
+    hit = sorted(hit & set(live))
+    if hit:
+        kept = dict(
+            load_store(spark, out_dir, [*keys, "_part_id"], as_of=as_of)
+            .filter(F.col("_part_id").isin(hit))
+            .groupBy("_part_id")
+            .count()
+            .collect()
+        )
+        for p in hit:
+            counts[p] = live[p] - kept.get(p, 0)
+    return {p: n for p, n in counts.items() if n}
+
+
+def deletes_changed(
+    spark: SparkSession,
+    out_dir: str,
+    from_seq: int,
+    to_seq: int | None = None,
+    parts=None,
+) -> set[int]:
+    """The partitions live at ``to_seq`` (default: latest; ``parts``
+    limits them) whose deleted rows differ from those at ``from_seq``
+    (``0``: before any delete) — the one answer ``rollback_to``,
+    ``read_changes`` and ``agg_encoded`` share. A partition's deleted
+    rows only grow, so changed tombstones (:func:`delete_positions`)
+    settle it with no read; of the rest, those an equality delete
+    committed in the range can hit are changed iff their
+    :func:`deleted_counts` differ at the two epochs."""
+    import numpy as np
+
+    from choetl_spark.eqdeletes import eq_hittable_parts
+    from choetl_spark.ledger import ledger_state
+
+    state = ledger_state(out_dir, to_seq)
+    live = set(state["live"])
+    parts = live if parts is None else live & set(parts)
+    old = (
+        delete_positions(out_dir, ledger_state(out_dir, from_seq))
+        if from_seq else {}
+    )
+    new = delete_positions(out_dir, state)
+    none = np.empty(0, dtype=np.int64)
+    dirty = {
+        p for p in parts
+        if not np.array_equal(old.get(p, none), new.get(p, none))
+    }
+    late = (eq_hittable_parts(out_dir, state, to_seq, from_seq)[1]
+            & parts) - dirty
+    if late:
+        now_n = deleted_counts(spark, out_dir, to_seq, late)
+        then_n = (
+            deleted_counts(spark, out_dir, from_seq, late) if from_seq else {}
+        )
+        dirty |= {p for p in late if now_n.get(p) != then_n.get(p)}
+    return dirty
 
 
 def delete_where(
@@ -133,77 +213,29 @@ def delete_where(
     """Delete the rows matching the predicates from the encoded store —
     merge-on-read: data chunks are untouched; matching row coordinates
     are committed as tombstones readers subtract. Predicates are the
-    ``scan_encoded`` vocabulary: ``equals={col: value}`` (Bloom-pruned)
-    and ``ranges={col: (lo, hi)}`` (zone-map-pruned), ANDed together.
+    ``scan_encoded`` vocabulary: ``equals={col: value}`` and
+    ``ranges={col: (lo, hi)}``, ANDed together.
 
-    Only the PREDICATE columns are decoded (positionally, via
-    ``decode_dataframe(with_pos=True)``) and only in partitions the
-    metadata pruning keeps — payload columns never move. Rows already
-    tombstoned are excluded, so re-running the same delete is a no-op
-    (idempotent; returns ``rows_deleted=0``).
+    The rows come from ``scan_encoded`` of the hidden ``(_part_id,
+    _row_pos)`` columns: only the PREDICATE columns decode (Bloom chunk
+    skipping and kernel masks as in any filtered read), and rows a
+    committed delete — positional or equality — already hides are not
+    returned, so re-running the same delete is a no-op (returns
+    ``rows_deleted=0``).
 
     Returns ``{"rows_deleted", "partitions_touched", "run_seq",
     "delete_id"}``. The commit is the ledger append — a crash before it
     leaves invisible orphan tombstone files.
     """
-    from choetl_spark.engine import (
-        decode_dataframe,
-        prune_partitions_by_bloom,
-        prune_partitions_by_stats,
-    )
-    from choetl_spark.ledger import read_encoded, read_manifest
+    from choetl_spark.ledger import scan_encoded
 
-    from choetl_spark.engine import normalize_predicate_value as _n
-
-    # naive datetime bounds -> the aware instants Spark's literals mean
-    # (one interpretation for the pruner, kernel AND residual filter)
-    equals = {
-        c: (
-            [_n(x) for x in v]
-            if isinstance(v, (list, tuple, set))
-            else _n(v)
-        )
-        for c, v in (equals or {}).items()
-    }
-    ranges = {
-        c: (_n(lo), _n(hi)) for c, (lo, hi) in (ranges or {}).items()
-    }
     if not equals and not ranges:
         raise ValueError("delete_where needs at least one predicate")
-    enc = read_encoded(spark, out_dir)
-    manifest = read_manifest(out_dir)
-    for col, (lo, hi) in ranges.items():
-        dtype = (manifest or {}).get(col, {}).get("dtype")
-        enc = prune_partitions_by_stats(enc, col, lo, hi, dtype=dtype)
-    for col, value in equals.items():
-        enc = prune_partitions_by_bloom(enc, col, value)
-    pred_cols = list(dict.fromkeys([*ranges, *equals]))
-    # predicates ride into the decode kernel (superset masks): only
-    # candidate rows' coordinates ship back; the exact filters below
-    # keep the tombstone set precise
-    pushdown = {
-        **{c: ("range", lo, hi) for c, (lo, hi) in ranges.items()},
-        **{
-            c: ("in", list(v) if isinstance(v, (list, tuple, set)) else [v])
-            for c, v in equals.items()
-        },
-    }
-    pos = decode_dataframe(
-        enc, columns=pred_cols, manifest=manifest, with_pos=True,
-        pushdown=pushdown,
+    rows = scan_encoded(
+        spark, out_dir, ["_part_id", "_row_pos"], ranges=ranges,
+        equals=equals,
     )
-    for col, (lo, hi) in ranges.items():
-        pos = pos.filter((F.col(col) >= lo) & (F.col(col) <= hi))
-    for col, value in equals.items():
-        if isinstance(value, (list, tuple, set)):
-            pos = pos.filter(F.col(col).isin(list(value)))
-        else:
-            pos = pos.filter(F.col(col) == value)
-    tomb = pos.select(
-        F.col("_part_id").alias("part_id"),
-        F.col("_row_pos").alias("row_pos"),
-    )
-    return _commit_tombstones(spark, out_dir, tomb, run_id)
+    return _commit_tombstones(spark, out_dir, rows, run_id)
 
 
 def delete_matching(
@@ -217,49 +249,46 @@ def delete_matching(
 ) -> dict:
     """Delete every store row whose ``key`` appears in ``keys_df`` —
     the frame-predicate shape of :func:`delete_where` and the delete
-    half of :func:`upsert`. One positional decode of the KEY column
-    (never payloads) semi-joined against the broadcast key set; at
-    10^12 docs that is one narrow-column pass + O(matches) tombstones,
-    the same cost an Iceberg MERGE pays for its match scan.
+    half of :func:`upsert`. One ``format("choetl")`` read of the KEY
+    column (never payloads) and its hidden coordinates, semi-joined
+    against the broadcast key set; at 10^12 docs that is one
+    narrow-column pass + O(matches) tombstones, the same cost an
+    Iceberg MERGE pays for its match scan.
 
     ``exclude_part_range=(lo, hi)`` leaves partitions with
     ``lo <= part_id < hi`` untouched — :func:`upsert` passes its own
     epoch's partition range so a RETRY never tombstones the rows its
     first attempt already ingested."""
-    from choetl_spark.engine import decode_dataframe
-    from choetl_spark.ledger import read_encoded, read_manifest
+    from choetl_spark.datasource import load_store
+    from choetl_spark.ledger import ledger_state
 
-    enc = read_encoded(spark, out_dir)
+    rows = load_store(spark, out_dir, [key, "_part_id", "_row_pos"])
     if exclude_part_range is not None:
+        # an IN list of the ids outside the range prunes the read's
+        # splits, so the excluded partitions never decode
         lo, hi = exclude_part_range
-        enc = enc.filter(
-            (F.col("part_id") < int(lo)) | (F.col("part_id") >= int(hi))
-        )
-    manifest = read_manifest(out_dir)
-    keyed = decode_dataframe(
-        enc, columns=[key], manifest=manifest, with_pos=True
-    )
-    tomb = keyed.join(
+        rows = rows.filter(F.col("_part_id").isin(sorted(
+            p for p in ledger_state(out_dir)["live"] if not lo <= p < hi
+        )))
+    rows = rows.join(
         F.broadcast(keys_df.select(key).distinct()), key, "semi"
-    ).select(
-        F.col("_part_id").alias("part_id"),
-        F.col("_row_pos").alias("row_pos"),
     )
     return _commit_tombstones(
-        spark, out_dir, tomb, run_id, defer_commit=defer_commit
+        spark, out_dir, rows, run_id, defer_commit=defer_commit
     )
 
 
 def _commit_tombstones(
     spark: SparkSession,
     out_dir: str,
-    tomb: DataFrame,
+    rows: DataFrame,
     run_id: str | None,
     defer_commit: bool = False,
 ) -> dict:
-    """Shared delete commit: drop already-tombstoned coordinates
-    (idempotence), write tombstone files (a Spark write), THEN append
-    the ledger ``status="delete"`` row at the next epoch with
+    """Shared delete commit: write the ``(_part_id, _row_pos)`` of
+    ``rows`` — reader rows, so no already-deleted row is among them —
+    as tombstone files (a Spark write), THEN append the ledger
+    ``status="delete"`` row at the next epoch with
     :func:`choetl_spark.ledger.append_ledger_rows` — the crash window
     between the two leaves orphans readers never see.
 
@@ -274,54 +303,42 @@ def _commit_tombstones(
     have neither their old nor their new row)."""
     from choetl_spark.ledger import append_ledger_rows, ledger_state
 
-    prior = read_delete_positions(spark, out_dir)
-    if prior is not None:
-        tomb = tomb.join(prior, ["part_id", "row_pos"], "left_anti")
     next_seq = ledger_state(out_dir)["max_seq"] + 1
     delete_id = uuid.uuid4().hex
     # del_seq in the FILES is informational (visibility is governed by
     # the ledger commit row's run_seq); a deferred commit doesn't know
     # its final epoch yet
     file_seq = -1 if defer_commit else next_seq
-    tomb = (
-        tomb.withColumn("del_seq", F.lit(file_seq).cast("long"))
-        .withColumn("delete_id", F.lit(delete_id))
-        .persist()
-    )
+    tomb = rows.select(
+        F.col("_part_id").alias("part_id"),
+        F.col("_row_pos").alias("row_pos"),
+        F.lit(file_seq).cast("long").alias("del_seq"),
+        F.lit(delete_id).alias("delete_id"),
+    ).persist()
     try:
         stats = tomb.agg(
             F.count("*").alias("n"),
             F.countDistinct("part_id").alias("parts"),
         ).collect()[0]
-        n, parts = stats["n"], stats["parts"]
-        if n == 0:
-            return {
-                "rows_deleted": 0,
-                "partitions_touched": 0,
-                "run_seq": None,
-                "delete_id": delete_id,
-            }
-        tomb.write.mode("append").parquet(_deletes_dir(out_dir))
+        n, parts = int(stats["n"]), int(stats["parts"])
+        if n:
+            tomb.write.mode("append").parquet(_deletes_dir(out_dir))
     finally:
         tomb.unpersist()
-    if defer_commit:
-        return {
-            "rows_deleted": int(n),
-            "partitions_touched": int(parts),
-            "run_seq": None,
-            "delete_id": delete_id,
-        }
-    # part_id -1: a delete spans partitions; readers resolve only
-    # status="done" rows to chunks, so the sentinel is inert
-    append_ledger_rows(
-        out_dir,
-        [(-1, None, int(n), 0, 0, 0, None, run_id or delete_id,
-          int(next_seq), "delete", delete_id)],
-    )
+    run_seq = None
+    if n and not defer_commit:
+        # part_id -1: a delete spans partitions; readers resolve only
+        # status="done" rows to chunks, so the sentinel is inert
+        append_ledger_rows(
+            out_dir,
+            [(-1, None, n, 0, 0, 0, None, run_id or delete_id,
+              int(next_seq), "delete", delete_id)],
+        )
+        run_seq = int(next_seq)
     return {
-        "rows_deleted": int(n),
-        "partitions_touched": int(parts),
-        "run_seq": int(next_seq),
+        "rows_deleted": n,
+        "partitions_touched": parts,
+        "run_seq": run_seq,
         "delete_id": delete_id,
     }
 
@@ -432,23 +449,30 @@ def upsert(
             "upsert_epoch": int(epoch)}
 
 
-def apply_delete_filter(
-    decoded_with_pos: DataFrame, tombstones: DataFrame
-) -> DataFrame:
-    """Subtract tombstoned rows from a ``with_pos`` decode and drop the
-    coordinate columns — the reader-side half of merge-on-read. The
-    broadcast anti-join is the per-file delete-bitmap shape: rows of
-    untouched partitions pay one hash probe each, no shuffle of data."""
-    return decoded_with_pos.join(
-        F.broadcast(
-            tombstones.select(
-                F.col("part_id").alias("_part_id"),
-                F.col("row_pos").alias("_row_pos"),
-            )
-        ),
-        ["_part_id", "_row_pos"],
-        "left_anti",
-    ).drop("_part_id", "_row_pos")
+def _reencode(
+    spark: SparkSession, out_dir: str, rows: DataFrame, targets: list[int],
+    cfg, run_id: str, retire: list[int],
+) -> dict:
+    """Re-encode the reader ``rows`` (data columns plus ``_part_id``)
+    of partitions ``targets`` under fresh ids above every id the ledger
+    has seen, retiring ``retire`` in the same ledger append."""
+    from choetl_spark.ledger import encode_with_resume, ledger_state
+
+    base = ledger_state(out_dir)["max_part"] + 1
+    id_map = F.create_map(
+        *[
+            x
+            for old, new in zip(targets, range(base, base + len(targets)))
+            for x in (F.lit(int(old)), F.lit(int(new)))
+        ]
+    )
+    rows = rows.filter(F.col("_part_id").isin(targets)).withColumn(
+        "part_id", id_map[F.col("_part_id")].cast("long")
+    )
+    return encode_with_resume(
+        spark, rows.drop("_part_id"), out_dir, cfg, run_id=run_id,
+        retire_part_ids=retire,
+    )
 
 
 def rewrite_partitions(
@@ -463,7 +487,7 @@ def rewrite_partitions(
     ``rewrite_data_files`` over partitions with position deletes).
 
     Partitions whose deleted fraction reaches ``min_deleted_fraction``
-    are re-encoded WITHOUT their tombstoned rows under fresh partition
+    are re-encoded WITHOUT their deleted rows under fresh partition
     ids, and the old copies are retired in the SAME ledger append
     (``encode_with_resume(retire_part_ids=...)``) — one commit swaps
     readers from old+tombstones to clean new chunks, so there is no
@@ -472,69 +496,34 @@ def rewrite_partitions(
     the rewrite epoch still reads the retired copies with their
     tombstones applied (snapshot EXPIRY, not rewrite, reclaims them).
 
-    Candidate selection is metadata-only (tombstone counts vs ledger
-    row counts). Scale shape: cost is O(rows of rewritten partitions) —
-    exactly the partitions where scan-time anti-join overhead justifies
-    a rewrite; untouched partitions never move. Pass the store's
-    ``EncodeConfig`` so re-encoded partitions keep their Bloom columns
-    and codec profile."""
-    from choetl_spark.engine import EncodeConfig, decode_dataframe
+    Candidates come from :func:`deleted_counts`, and the survivors are
+    the targets' ``format("choetl")`` rows, so equality deletes
+    materialize too (a survivor re-commits at a NEWER epoch than every
+    delete, so an eq-deleted row left in would resurrect). Cost is
+    O(rows of rewritten partitions). Pass the store's ``EncodeConfig``
+    so re-encoded partitions keep their Bloom columns and codec
+    profile."""
+    from choetl_spark.datasource import load_store
+    from choetl_spark.engine import EncodeConfig
     from choetl_spark.ledger import (
-        encode_with_resume,
         ledger_state,
-        read_encoded,
+        manifest_data_items,
         read_manifest,
     )
 
-    from choetl_spark.eqdeletes import all_delete_positions
-
-    cfg = cfg or EncodeConfig()
-    out = {"partitions_rewritten": 0, "rows_materialized": 0}
-    # equality deletes materialize here too: a rewritten survivor
-    # re-commits at a NEWER epoch than any existing delete, so leaving
-    # eq-deleted rows in would resurrect them permanently
-    tomb = all_delete_positions(spark, out_dir)
-    if tomb is None:
-        return out
-    state = ledger_state(out_dir)
-    live_rows = state["live_rows"]
+    live_rows = ledger_state(out_dir)["live_rows"]
     targets = sorted(
-        r["part_id"]
-        for r in tomb.groupBy("part_id").count().collect()
-        if live_rows.get(r["part_id"]) is not None
-        and r["count"] >= min_deleted_fraction * live_rows[r["part_id"]]
+        p
+        for p, n in deleted_counts(spark, out_dir).items()
+        if n >= min_deleted_fraction * live_rows[p]
     )
     if not targets:
-        return out
-    # fresh ids: dense range above every id the ledger has ever seen
-    base = state["max_part"] + 1
-    id_map = F.create_map(
-        *[
-            x
-            for old, new in zip(targets, range(base, base + len(targets)))
-            for x in (F.lit(int(old)), F.lit(int(new)))
-        ]
-    )
-    enc = read_encoded(spark, out_dir).filter(F.col("part_id").isin(targets))
-    manifest = read_manifest(out_dir)
-    rows = decode_dataframe(enc, manifest=manifest, with_pos=True)
-    survivors = (
-        rows.join(
-            F.broadcast(
-                tomb.select(
-                    F.col("part_id").alias("_part_id"),
-                    F.col("row_pos").alias("_row_pos"),
-                )
-            ),
-            ["_part_id", "_row_pos"],
-            "left_anti",
-        )
-        .withColumn("part_id", id_map[F.col("_part_id")].cast("long"))
-        .drop("_part_id", "_row_pos")
-    )
+        return {"partitions_rewritten": 0, "rows_materialized": 0}
+    names = [c for c, _ in manifest_data_items(read_manifest(out_dir))]
     rid = run_id or f"rewrite-{uuid.uuid4().hex[:8]}"
-    res = encode_with_resume(
-        spark, survivors, out_dir, cfg, run_id=rid, retire_part_ids=targets
+    res = _reencode(
+        spark, out_dir, load_store(spark, out_dir, [*names, "_part_id"]),
+        targets, cfg or EncodeConfig(), rid, targets,
     )
     n_rows = ledger_state(out_dir)["runs"].get(rid, {}).get("done", 0)
     return {
@@ -568,27 +557,29 @@ def rollback_to(
       under fresh partition ids (their chunks still exist — snapshot
       expiry can only reclaim below the readable floor, and
       ``to_seq`` is validated against that floor);
-    - partitions visible at both epochs but TOMBSTONED after
-      ``to_seq`` → re-encoded from their ``as_of=to_seq`` rows and the
-      stale copies retired, so the late tombstones die with them.
+    - partitions visible at both epochs but with rows DELETED after
+      ``to_seq`` (positional or equality) → re-encoded from their
+      ``as_of=to_seq`` rows and the stale copies retired, so the late
+      deletes die with them.
 
-    Cost is O(rows churned since ``to_seq``), never O(store) —
-    untouched partitions don't move, and a pure-append history rolls
-    back with a metadata-only commit. Pass the store's ``EncodeConfig``
-    so re-encoded partitions keep their Bloom/NDV columns and codec
-    profile.
+    The restored rows are ``format("choetl")`` rows at ``to_seq`` under
+    the CURRENT column names (:func:`choetl_spark.ledger.
+    current_names_at`): rollback restores data, not schema, as in
+    Iceberg. Cost is O(rows churned since ``to_seq``) — a pure-append
+    history rolls back with a metadata-only commit. Pass the store's
+    ``EncodeConfig`` so re-encoded partitions keep their Bloom/NDV
+    columns and codec profile.
     """
-    from choetl_spark.engine import EncodeConfig, decode_dataframe
+    from choetl_spark.datasource import load_store
+    from choetl_spark.engine import EncodeConfig
     from choetl_spark.ledger import (
         append_ledger_rows,
-        encode_with_resume,
+        current_names_at,
         ledger_state,
         min_time_travel_seq,
-        read_encoded,
         read_manifest,
     )
 
-    cfg = cfg or EncodeConfig()
     to_seq = int(to_seq)
     state = ledger_state(out_dir)
     if not state["max_seq"]:
@@ -610,28 +601,14 @@ def rollback_to(
     if to_seq >= latest:
         return out  # already at (or past) that snapshot — no-op
 
-    p_t = set(ledger_state(out_dir, to_seq)["live"])
+    state_t = ledger_state(out_dir, to_seq)
+    p_t = set(state_t["live"])
     p_now = set(state["live"])
     # all three sets are bounded by partitions CHURNED since to_seq
     retire_only = p_now - p_t
     resurrect = p_t - p_now
-    # visible-at-both partitions with tombstones committed AFTER to_seq
-    # (read through the hardened tombstone reader so a lost _deletes
-    # table refuses instead of silently rolling deleted rows back in)
-    from choetl_spark.eqdeletes import all_delete_positions
-
-    pos_now = all_delete_positions(spark, out_dir)
-    pos_t = all_delete_positions(spark, out_dir, as_of=to_seq)
-    dirty: set[int] = set()
-    if pos_now is not None:
-        late = (
-            pos_now.exceptAll(pos_t)
-            if pos_t is not None
-            else pos_now
-        )
-        dirty = {
-            r["part_id"] for r in late.select("part_id").distinct().collect()
-        } & p_t & p_now
+    # visible-at-both partitions with rows deleted AFTER to_seq
+    dirty = deletes_changed(spark, out_dir, to_seq, parts=p_t & p_now)
     rewrite_targets = sorted(resurrect | dirty)
     retire_set = sorted(retire_only | dirty)
     if not rewrite_targets and not retire_set:
@@ -655,51 +632,16 @@ def rollback_to(
         out["rollback_epoch"] = int(latest) + 1
         return out
 
-    manifest = read_manifest(out_dir)
-    # current_schema: rollback restores DATA to the to_seq snapshot
-    # under the CURRENT schema (Iceberg rollback_to_snapshot does not
-    # revert schema evolution) — the re-encode below must write the
-    # current display names, and columns dropped since to_seq stay
-    # dropped (their chunks are masked by the current-manifest remap)
-    enc_t = read_encoded(
-        spark, out_dir, as_of=to_seq, current_schema=True
-    ).filter(
-        F.col("part_id").isin(rewrite_targets)
-    )
-    rows = decode_dataframe(enc_t, manifest=manifest, with_pos=True)
-    if pos_t is not None:
-        # to_seq-visible tombstones materialize into the restored copy
-        # (keep _part_id — the fresh-id remap below still needs it)
-        rows = rows.join(
-            F.broadcast(
-                pos_t.select(
-                    F.col("part_id").alias("_part_id"),
-                    F.col("row_pos").alias("_row_pos"),
-                )
-            ),
-            ["_part_id", "_row_pos"],
-            "left_anti",
-        )
-    base = state["max_part"] + 1
-    id_map = F.create_map(
-        *[
-            x
-            for old, new in zip(
-                rewrite_targets, range(base, base + len(rewrite_targets))
-            )
-            for x in (F.lit(int(old)), F.lit(int(new)))
-        ]
-    )
-    survivors = rows.withColumn(
-        "part_id", id_map[F.col("_part_id")].cast("long")
-    ).drop("_part_id", "_row_pos")
-    res = encode_with_resume(
-        spark,
-        survivors,
-        out_dir,
-        cfg,
-        run_id=rid,
-        retire_part_ids=retire_set,
+    # columns dropped since to_seq stay dropped; to_seq's deletes are
+    # already subtracted by the reader
+    names = current_names_at(read_manifest(out_dir), to_seq)
+    rows = load_store(
+        spark, out_dir, [*names.values(), "_part_id"], as_of=to_seq
+    ).select(*(F.col(old).alias(cur) for cur, old in names.items()),
+             "_part_id")
+    res = _reencode(
+        spark, out_dir, rows, rewrite_targets, cfg or EncodeConfig(), rid,
+        retire_set,
     )
     out["rollback_epoch"] = int(latest) + 1
     return {**out, **res}
@@ -714,9 +656,18 @@ def compact_deletes(spark: SparkSession, out_dir: str) -> dict:
     travel are unchanged) and drops orphans from crashed deletes.
     Skipped (no-op) when an in-flight delete might be mid-commit —
     callers run this on a quiesced store, same as ``compact_store``."""
+    from pyspark.errors import AnalysisException
+
+    from choetl_spark.ledger import ledger_state
+
     d = _deletes_dir(out_dir)
-    keep = _committed_tombstones(spark, out_dir)
-    if keep is None:
+    ids = ledger_state(out_dir)["delete_ids"]
+    if not ids:
+        return {"files_before": 0, "files_after": 0}
+    try:
+        tomb = spark.read.parquet(d)
+    except AnalysisException:  # no _deletes table (or no file in it)
+        refuse_lost_tombstones(out_dir)
         return {"files_before": 0, "files_after": 0}
 
     def _n_files(p: str) -> int:
@@ -729,7 +680,10 @@ def compact_deletes(spark: SparkSession, out_dir: str) -> dict:
     # full-row dedup collapses duplicates a previous crashed compaction
     # left behind (legitimate rows are unique: one delete_id tombstones
     # a given (part_id, row_pos) at most once)
-    replace_tombstone_files(spark, out_dir, keep.dropDuplicates())
+    replace_tombstone_files(
+        spark, out_dir,
+        tomb.filter(F.col("delete_id").isin(sorted(ids))).dropDuplicates(),
+    )
     return {"files_before": before, "files_after": _n_files(d)}
 
 

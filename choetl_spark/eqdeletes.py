@@ -10,35 +10,32 @@ scan at WRITE time to pin exact row coordinates. An equality delete
 
 plus a ledger commit row (``status="eqdelete"``, appended on the driver
 by :func:`choetl_spark.ledger.append_ledger_rows`) — O(keys) write
-cost, no store scan at all. ``format("choetl")`` (and so ``scan_encoded`` and
-``point_lookup``) loads the value sets and subtracts task-side; the
-Spark-plan readers resolve them lazily (:func:`eq_delete_positions`):
-decode just the key column of the partitions committed BEFORE the
-delete (Iceberg's rule — an equality delete applies to rows whose data
-sequence number is strictly lower than the delete's), Bloom-pruned,
-and anti-join the matches like positional tombstones. A key
-re-inserted AFTER the delete therefore survives, which is exactly what
-makes streaming CDC upserts O(changed keys) instead of O(store).
+cost, no store scan at all. :func:`eq_value_maps` loads the committed
+value sets with pyarrow, and ``format("choetl")`` subtracts them
+task-side from rows of partitions committed BEFORE the delete (Iceberg's
+rule: data-seq < delete-seq). A key re-inserted AFTER the delete
+therefore survives, which is what makes streaming CDC upserts O(changed
+keys) instead of O(store).
 
 Crash safety is the shared protocol: value files land BEFORE the
-ledger row; readers semi-join on committed ``delete_id``s, so a crash
+ledger row; readers keep only committed ``delete_id``s, so a crash
 between the two leaves orphan value files that never delete anything.
 Time travel composes (the commit is an epoch like any other);
 ``rewrite_partitions`` materializes equality deletes alongside
 positional ones (rewritten survivors re-commit at a NEWER epoch than
 the delete, so the delete correctly stops applying to them).
 
-Scale shape at 10^12 docs: the read-time resolution decodes ONE narrow
-column of the pre-delete partitions (zone-map/Bloom-pruned), exactly
-the cost Iceberg readers pay to apply equality deletes, and it is paid
-only while un-materialized equality deletes exist — `rewrite_partitions`
-(or the next major compaction) retires it. The reference ChoETL has no
+Scale shape at 10^12 docs: reads of the pre-delete partitions decode
+the key column too, exactly the cost Iceberg readers pay to apply
+equality deletes, paid only until `rewrite_partitions` (or the next
+major compaction) materializes them. The reference ChoETL has no
 delete story at all (append/overwrite only, reference
 src/ChoETL/File/ChoFileRecordConfiguration.cs:33).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -175,130 +172,113 @@ def resolve_eq_key(
     )
 
 
-def eq_delete_positions(
-    spark: SparkSession, out_dir: str, as_of: int | None = None
-) -> DataFrame | None:
-    """Resolve committed equality deletes visible at epoch ``as_of``
-    to ``(part_id, row_pos)`` coordinates — the lazy half of the
-    contract. Returns ``None`` when no equality deletes are committed
-    (the common case: zero overhead).
+def eq_value_maps(out_dir: str, state: dict, view: dict) -> dict[str, dict]:
+    """Committed equality-delete value sets of the snapshot ``state``
+    describes, per key column: ``{col: {value: newest delete epoch}}``
+    — read on the driver with pyarrow (zero Spark jobs; the value
+    tables are O(deleted keys), tiny by the eq-delete write contract).
+    A row dies iff its partition's first-done epoch is STRICTLY BEFORE
+    the newest delete epoch naming its key value; ``format("choetl")``
+    splits carry the sets. Keys resolve into ``view``, the reader's
+    schema, through :func:`resolve_eq_key`."""
+    from choetl_spark.ledger import _read_parquet_dir, read_manifest
 
-    Only partitions committed STRICTLY BEFORE a delete's epoch are
-    decoded (one narrow key column, ``with_pos``), Bloom-pruned by the
-    value set when it is small enough to probe; matches anti-join out
-    exactly like positional tombstones downstream."""
-    from choetl_spark.engine import (
-        bloom_probeable,
-        decode_dataframe,
-        prune_partitions_by_bloom,
-    )
+    if not state["eq_commits"]:
+        return {}
+    manifest = read_manifest(out_dir)
+    # grouped by (reader-schema name, recorded name): the value table
+    # lives under the recorded name on disk
+    by_col: dict[tuple[str, str], list[tuple[str, int]]] = {}
+    for did, seq, col in state["eq_commits"]:
+        by_col.setdefault(
+            (resolve_eq_key(manifest, col, int(seq), view), col), []
+        ).append((did, seq))
+    out: dict[str, dict] = {}
+    for (cur, col), commits in by_col.items():
+        t = _read_parquet_dir(_eq_dir(out_dir, col))
+        if t is None:
+            raise RuntimeError(
+                f"store at {out_dir} has committed equality-delete "
+                f"epochs for column {col!r} but no readable value "
+                "table — refusing to read (it would resurrect rows)"
+            )
+        seq_of = dict(commits)
+        vmap = out.setdefault(cur, {})
+        for did, val in zip(
+            t.column("delete_id").to_pylist(),
+            t.column("value").to_pylist(),
+        ):
+            s = seq_of.get(did)
+            if s is not None and vmap.get(val, 0) < s:
+                vmap[val] = s
+    return out
+
+
+def eq_hittable_parts(
+    out_dir: str, state: dict, as_of: int | None = None, after_seq: int = 0
+) -> tuple[list[str], set[int]]:
+    """``(keys, parts)``: the key columns (names at ``as_of``) of the
+    equality deletes ``state`` commits after ``after_seq``, and the
+    partitions they can hit — committed before the delete's epoch,
+    storing its physical key in their ledger ``codec_map`` (a legacy
+    row without one counts as storing it) and, for a value set small
+    enough to probe (at most 32 strings), holding a key chunk whose
+    Bloom filter may contain one of the values. Metadata only (pyarrow,
+    zero Spark jobs)."""
+    from choetl_spark.engine import bloom_probeable
     from choetl_spark.ledger import (
-        ledger_state,
-        read_encoded,
-        read_ledger,
+        manifest_as_of,
+        physical_name,
         read_manifest,
     )
 
-    # resolved on the driver with pyarrow: a store with no equality
-    # deletes (the common case) answers with zero Spark jobs per scan
-    state = ledger_state(out_dir, as_of)
-    rows = state["eq_commits"]
-    if not rows:
-        return None
-    if not os.path.isdir(_eq_root(out_dir)):
-        raise RuntimeError(
-            f"store at {out_dir} has committed equality-delete epochs "
-            "but no readable _eq_deletes table — refusing to read (it "
-            "would resurrect deleted rows)."
-        )
-    if not state["has_done"]:
-        return None  # nothing ingested yet — no rows to delete
-    ledger = read_ledger(spark, out_dir)
-    done = ledger.filter(F.col("status") == "done")
-    part_seq = done.groupBy("part_id").agg(
-        F.min("run_seq").alias("_pseq")
-    )
-    manifest = read_manifest(out_dir)
-    # keys recorded before a rename resolve to their CURRENT name via
-    # the schema log (same physical chunk key); grouped by (current,
-    # recorded) since the values table lives under the recorded name
-    groups: dict[tuple[str, str], list] = {}
-    for aid, seq, col in rows:
-        groups.setdefault(
-            (resolve_eq_key(manifest, col, int(seq)), col), []
-        ).append((aid, seq))
-    out: DataFrame | None = None
-    for (cur, col), commits_c in groups.items():
-        id_seq = spark.createDataFrame(
-            commits_c, "delete_id string, _eq_seq long"
-        )
-        vals = (
-            spark.read.parquet(_eq_dir(out_dir, col))
-            .join(F.broadcast(id_seq), "delete_id")
-            .select(F.col("value").alias("_eq_value"), "_eq_seq")
-            .distinct()
-        )
-        max_seq = max(s for _, s in commits_c)
-        # current_schema: positions are name-agnostic, so this internal
-        # pass stays in the current schema even under as_of (the key
-        # has already been resolved to its current name)
-        enc = read_encoded(
-            spark, out_dir, as_of=as_of, current_schema=True
-        )
-        # only partitions older than the newest delete can match
-        eligible = part_seq.filter(F.col("_pseq") < max_seq).select(
-            "part_id"
-        )
-        enc = enc.join(F.broadcast(eligible), "part_id", "semi")
-        probe = [
-            r["_eq_value"]
-            for r in vals.select("_eq_value").limit(33).collect()
-        ]
-        if 0 < len(probe) <= 32 and bloom_probeable(probe):
-            enc = prune_partitions_by_bloom(enc, cur, probe)
-        decoded = decode_dataframe(
-            enc, columns=[cur], manifest=manifest, with_pos=True
-        )
-        matched = (
-            decoded.join(
-                F.broadcast(
-                    part_seq.select(
-                        F.col("part_id").alias("_part_id"), "_pseq"
-                    )
-                ),
-                "_part_id",
-            )
-            .join(
-                F.broadcast(vals),
-                (F.col(cur) == F.col("_eq_value"))
-                & (F.col("_pseq") < F.col("_eq_seq")),
-                "semi",
-            )
-            .select(
-                F.col("_part_id").alias("part_id"),
-                F.col("_row_pos").alias("row_pos"),
-            )
-        )
-        out = matched if out is None else out.unionByName(matched)
-    return out.distinct() if out is not None else None
+    commits = [c for c in state["eq_commits"] if c[1] > after_seq]
+    if not commits:
+        return [], set()
+    view = manifest_as_of(read_manifest(out_dir), as_of)
+    vmaps = eq_value_maps(out_dir, {**state, "eq_commits": commits}, view)
+    parts: set[int] = set()
+    for cur, vmap in vmaps.items():
+        phys = physical_name(view[cur], cur)
+        newest = max(vmap.values(), default=0)
+        cand = {
+            p for p, cmap in state["codec_maps"].items()
+            if state["part_seq"].get(p, 1) < newest
+            and (not cmap or phys in {c["column"] for c in json.loads(cmap)})
+        }
+        vals = list(vmap)
+        if cand and len(vals) <= 32 and bloom_probeable(vals):
+            cand = _bloom_may_hold(out_dir, cand, phys, vals)
+        parts |= cand
+    return sorted(vmaps), parts
 
 
-def all_delete_positions(
-    spark: SparkSession, out_dir: str, as_of: int | None = None
-) -> DataFrame | None:
-    """Positional tombstones plus resolved equality deletes — the one
-    position set every reader subtracts. Stores using neither pay
-    nothing; stores using only positional deletes pay exactly what
-    they did before equality deletes existed."""
-    from choetl_spark.deletes import read_delete_positions
+def _bloom_may_hold(
+    out_dir: str, parts: set[int], phys: str, values: list
+) -> set[int]:
+    """The ``parts`` with a chunk of physical column ``phys`` whose
+    Bloom filter may contain one of ``values`` (a chunk without a
+    Bloom always may) — the chunk table's ``stats`` column read with
+    pyarrow, never a payload. A partition without such a chunk holds
+    no key value, so no equality delete hits it."""
+    import glob
 
-    pos = read_delete_positions(spark, out_dir, as_of=as_of)
-    eq = eq_delete_positions(spark, out_dir, as_of=as_of)
-    if pos is None:
-        return eq
-    if eq is None:
-        return pos
-    return pos.unionByName(eq).distinct()
+    import pyarrow.parquet as pq
+
+    from choetl_spark.datasource import _bloom_kept
+    from choetl_spark.ledger import _chunks_dir
+
+    keep: set[int] = set()
+    for path in sorted(glob.glob(os.path.join(_chunks_dir(out_dir), "*.parquet"))):
+        if "stats" not in pq.ParquetFile(path).schema_arrow.names:
+            return set(parts)  # legacy chunks carry no Bloom
+        t = pq.read_table(
+            path, columns=["part_id", "stats"],
+            filters=[("column", "=", phys), ("part_id", "in", sorted(parts))],
+        )
+        kept = _bloom_kept(t, [phys] * t.num_rows, {phys: values})
+        keep |= {p for p, k in zip(t.column("part_id").to_pylist(), kept) if k}
+    return keep
 
 
 def upsert_by_key(

@@ -307,6 +307,8 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     - ``live``: ``{part_id: {attempt_id, ...}}`` of partitions committed
       ``"done"`` and not retired (``None`` = a legacy row);
     - ``live_rows``: ``{part_id: n_rows}`` of the same partitions;
+    - ``codec_maps``: ``{part_id: codec_map JSON}`` of the same
+      partitions (the physical columns each one stores);
     - ``retired``: the ids of partitions retired by a rewrite;
     - ``part_seq``: ``{part_id: first done epoch}``;
     - ``has_done``: any ``"done"`` row at all;
@@ -326,6 +328,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     state = {
         "live": {},
         "live_rows": {},
+        "codec_maps": {},
         "retired": set(),
         "part_seq": {},
         "has_done": False,
@@ -354,6 +357,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     lim = int(as_of) if as_of is not None else None
     done: dict[int, set] = {}
     n_rows: dict[int, int] = {}
+    cmaps: dict[int, str | None] = {}
     staged, dead = [], set()
     for i, (pid, att, seq, st, cmap, rid, n) in enumerate(rows):
         seq = 1 if seq is None else seq
@@ -369,6 +373,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
         if st == "done":
             done.setdefault(pid, set()).add(att)
             n_rows[pid] = n
+            cmaps[pid] = cmap
             prev = state["part_seq"].get(pid)
             if prev is None or seq < prev:
                 state["part_seq"][pid] = seq
@@ -390,6 +395,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
         if p not in state["retired"]:
             state["live"][p] = atts
             state["live_rows"][p] = n_rows[p]
+            state["codec_maps"][p] = cmaps[p]
     table = t.to_pylist() if staged else []
     for pid, att, rid, i in staged:
         if (pid, att) not in dead:
@@ -431,6 +437,26 @@ def manifest_as_of(manifest: dict | None, as_of: int | None) -> dict | None:
     if masked:
         view["_dropped"] = masked
     return view
+
+
+def current_names_at(
+    manifest: dict | None, as_of: int | None
+) -> dict[str, str]:
+    """``{current name: name at as_of}`` for every current column the
+    ``as_of`` schema already had, matched by physical chunk key — how
+    multi-epoch machinery (``rollback_to``, ``read_changes``) reads an
+    old snapshot and speaks the CURRENT schema, as Iceberg rollback and
+    changelog do. Columns added since have no entry; columns dropped
+    since are not current."""
+    old = {
+        physical_name(m, c): c
+        for c, m in manifest_data_items(manifest_as_of(manifest, as_of))
+    }
+    return {
+        c: old[physical_name(m, c)]
+        for c, m in manifest_data_items(manifest)
+        if physical_name(m, c) in old
+    }
 
 
 def _display_remap(chunks: DataFrame, manifest: dict | None) -> DataFrame:
@@ -613,11 +639,17 @@ def read_encoded(
     include_staged: bool = False,
     ref: str | None = None,
     raw_columns: bool = False,
-    current_schema: bool = False,
 ) -> DataFrame:
     """Committed chunks only (semi-join against the ledger on the
     ``(part_id, attempt_id)`` commit key — see the module docstring for
     why part_id alone would duplicate rows after a crash-resume).
+
+    The chunk table as a Spark frame: chunk metadata and payloads, with
+    NO deletes applied — for chunk-level work (stats rollups, file
+    compaction, snapshot expiry, Bloom probes). Rows are read through
+    ``format("choetl")`` (:func:`choetl_spark.datasource.load_store`),
+    which subtracts deletes; decoding this frame with
+    :func:`choetl_spark.engine.decode_dataframe` does not.
 
     ``as_of`` is a snapshot read (Iceberg time-travel contract on an
     append-only store): only partitions committed at ledger epoch
@@ -637,13 +669,6 @@ def read_encoded(
     published/aborted (:mod:`choetl_spark.refs`) — maintenance must not
     reclaim a stage awaiting its audit; normal readers never see them.
     ``ref`` reads the snapshot a named tag/branch points at.
-
-    ``current_schema=True`` makes ``as_of`` govern ledger VISIBILITY
-    only while names resolve against the CURRENT schema — the shape
-    internal multi-epoch machinery needs (``rollback_to`` re-encodes
-    old-snapshot data under current names; ``read_changes`` unions
-    frames from two epochs), matching Iceberg where rollback and
-    changelog do not revert schema evolution.
 
     Plan caching: repeat calls for the SAME unchanged snapshot return
     the SAME DataFrame object (the plan build is driver-side file-stat
@@ -677,7 +702,6 @@ def read_encoded(
         cache_key = (
             *_cache_key(spark, out_dir),
             as_of, include_retired, include_staged, raw_columns,
-            current_schema,
         )
         hit = _ENCODED_DF_CACHE.get(cache_key)
         if hit is not None and hit[0] == (lsig, csig, msig):
@@ -703,13 +727,9 @@ def read_encoded(
     out = _commit_join(chunks, done, "semi")
     if not raw_columns:
         # as_of readers resolve display names against the SNAPSHOT's
-        # schema (manifest_as_of) — except when the caller is internal
-        # multi-epoch machinery (rollback / changelog) that must stay
-        # in the CURRENT schema: current_schema=True makes as_of govern
-        # ledger VISIBILITY only (Iceberg's rollback/changelog shape)
-        mf = read_manifest(out_dir)
+        # schema (manifest_as_of)
         out = _display_remap(
-            out, mf if current_schema else manifest_as_of(mf, as_of)
+            out, manifest_as_of(read_manifest(out_dir), as_of)
         )
     if cache_key is not None:
         # the signatures were stat'ed BEFORE the plan build; a writer
@@ -997,29 +1017,32 @@ def read_changes(
 
     so a downstream consumer (an index, a feature store, a training-set
     materializer) can stay in sync by reading only the delta —
-    O(changed partitions + tombstones in range), never O(store).
+    O(changed partitions), never O(store).
 
-    Composition rules (all derived from the ledger, no guessing):
+    Each half is ``format("choetl")`` rows at its epoch (deletes
+    subtracted) of the partitions it names (hidden ``_part_id``), under
+    the CURRENT column names (:func:`current_names_at`; a column added
+    later reads as null):
 
-    - partitions ADDED in the range emit their rows live at ``to_seq``
-      as inserts;
-    - partitions RETIRED in the range (rewrites, clustering) emit their
-      rows live at ``from_seq`` as deletes — together with the
-      replacement partitions' inserts this nets a rewrite to zero for
-      any consumer that applies both sides;
-    - partitions added AND retired inside the range net to nothing and
-      are skipped entirely;
-    - row-level tombstones committed in the range against partitions
-      that SURVIVE the range emit just those rows as deletes (decoded
-      by position, late-materialization style).
+    - partitions ADDED in the range: their rows at ``to_seq`` are
+      inserts;
+    - partitions RETIRED in the range (rewrites, clustering): their
+      rows at ``from_seq`` are deletes, which the replacements' inserts
+      net to zero; added-and-retired partitions are skipped;
+    - partitions that SURVIVE the range with rows deleted in it
+      (:func:`choetl_spark.deletes.deletes_changed`): their rows at
+      ``from_seq`` whose ``(_part_id, _row_pos)`` is gone at
+      ``to_seq`` are deletes.
 
     Needs the chunks of ``from_seq``-visible partitions to still exist:
     raises if ``expire_snapshots`` already reclaimed history at or
     before ``from_seq``. ``from_seq=0`` is a full bootstrap (everything
     at ``to_seq`` as inserts).
     """
-    from choetl_spark.eqdeletes import all_delete_positions
-    from choetl_spark.engine import decode_dataframe
+    from choetl_spark.codecs.base import str_to_type
+    from choetl_spark.datasource import load_store
+    from choetl_spark.deletes import deletes_changed
+    from choetl_spark.engine import _spark_type_ddl
 
     latest = ledger_state(out_dir)["max_seq"]
     if not latest:
@@ -1032,112 +1055,69 @@ def read_changes(
             f"oldest readable epoch is {min_time_travel_seq(out_dir)}"
         )
 
-    v_from = set(ledger_state(out_dir, from_seq)["live"] if from_seq else {})
-    v_to = set(ledger_state(out_dir, to_seq)["live"])
-    added = sorted(v_to - v_from)
-    removed = sorted(v_from - v_to)
-    stayed = v_from & v_to
+    s_from = ledger_state(out_dir, from_seq) if from_seq else None
+    s_to = ledger_state(out_dir, to_seq)
+    v_from, v_to = set(s_from["live"] if s_from else {}), set(s_to["live"])
 
     manifest = read_manifest(out_dir)
-    out_parts: list[DataFrame] = []
+    entries = dict(manifest_data_items(manifest))
+    cols = columns or sorted(entries)
+    missing = [c for c in cols if c not in entries]
+    if missing:
+        raise KeyError(f"columns not in encoded store: {missing}")
+    ddl = {
+        c: entries[c].get("logical")
+        or _spark_type_ddl(str_to_type(entries[c]["dtype"]))
+        for c in cols
+    }
 
-    def live_rows(part_ids: list[int], seq: int) -> DataFrame | None:
-        if not part_ids:
-            return None
-        # current_schema: the changelog speaks the CURRENT table
-        # schema at every epoch (Iceberg changelog contract) — and the
-        # insert/delete halves must unionByName
-        enc = read_encoded(
-            spark, out_dir, as_of=seq, current_schema=True
-        ).join(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(int(p),) for p in part_ids], "part_id long"
-                )
+    def rows_at(seq: int, parts: set, hidden: list[str]) -> DataFrame:
+        old = current_names_at(manifest, seq)
+        df = load_store(
+            spark, out_dir,
+            [*(old[c] for c in cols if c in old), "_part_id", *hidden],
+            as_of=seq,
+        ).filter(F.col("_part_id").isin(sorted(parts)))
+        return df.select(
+            *(
+                F.col(old[c]).alias(c) if c in old
+                else F.lit(None).cast(ddl[c]).alias(c)
+                for c in cols
             ),
-            "part_id",
-            "semi",
+            *hidden,
         )
-        tomb = all_delete_positions(spark, out_dir, as_of=seq)
-        df = decode_dataframe(
-            enc, columns=columns, manifest=manifest,
-            with_pos=tomb is not None,
+
+    out_parts: list[DataFrame] = []
+    if v_to - v_from:
+        out_parts.append(
+            rows_at(to_seq, v_to - v_from, [])
+            .withColumn("_change_type", F.lit("insert"))
         )
-        if tomb is not None:
-            from choetl_spark.deletes import apply_delete_filter
-
-            df = apply_delete_filter(df, tomb)
-        return df
-
-    ins = live_rows(added, to_seq)
-    if ins is not None:
-        out_parts.append(ins.withColumn("_change_type", F.lit("insert")))
-    rem = live_rows(removed, from_seq)
-    if rem is not None:
-        out_parts.append(rem.withColumn("_change_type", F.lit("delete")))
-
-    # positional deletes in range against surviving partitions
-    if stayed:
-        t_to = all_delete_positions(spark, out_dir, as_of=to_seq)
-        t_from = (
-            all_delete_positions(spark, out_dir, as_of=from_seq)
-            if from_seq > 0
-            else None
+    if v_from - v_to:
+        out_parts.append(
+            rows_at(from_seq, v_from - v_to, [])
+            .withColumn("_change_type", F.lit("delete"))
         )
-        if t_to is not None:
-            new_tombs = t_to
-            if t_from is not None:
-                new_tombs = t_to.exceptAll(t_from)
-            new_tombs = new_tombs.join(
-                F.broadcast(
-                    spark.createDataFrame(
-                        [(int(p),) for p in sorted(stayed)], "part_id long"
-                    )
-                ),
-                "part_id",
-                "semi",
-            )
-            enc = read_encoded(
-                spark, out_dir, as_of=from_seq or to_seq,
-                current_schema=True,
-            )
-            hit = decode_dataframe(
-                enc.join(
-                    F.broadcast(new_tombs.select("part_id").distinct()),
-                    "part_id",
-                    "semi",
-                ),
-                columns=columns,
-                manifest=manifest,
-                with_pos=True,
-            ).join(
-                F.broadcast(
-                    new_tombs.select(
-                        F.col("part_id").alias("_part_id"),
-                        F.col("row_pos").alias("_row_pos"),
-                    )
-                ),
-                ["_part_id", "_row_pos"],
-                "semi",
-            ).drop("_part_id", "_row_pos")
-            out_parts.append(
-                hit.withColumn("_change_type", F.lit("delete"))
-            )
+    stayed = v_from & v_to
+    changed = stayed and deletes_changed(
+        spark, out_dir, from_seq, to_seq, stayed
+    )
+    if changed:
+        pos = ["_part_id", "_row_pos"]
+        gone = rows_at(from_seq, changed, pos).join(
+            rows_at(to_seq, changed, pos).select(*pos), pos, "left_anti"
+        )
+        out_parts.append(
+            gone.drop(*pos).withColumn("_change_type", F.lit("delete"))
+        )
 
     if not out_parts:
-        from choetl_spark.codecs.base import str_to_type
-        from choetl_spark.engine import _spark_type_ddl
-
-        cols = columns or sorted(c for c, _ in manifest_data_items(manifest))
-        pieces = []
-        for c in cols:
-            m = (manifest or {}).get(c) or {}
-            ddl_c = m.get("logical") or _spark_type_ddl(
-                str_to_type(m.get("dtype", "string"))
-            )
-            pieces.append(f"`{c}` {ddl_c}")
-        pieces.append("`_change_type` string")
-        return spark.createDataFrame([], ", ".join(pieces))
+        return spark.createDataFrame(
+            [],
+            ", ".join(
+                [*(f"`{c}` {ddl[c]}" for c in cols), "`_change_type` string"]
+            ),
+        )
     res = out_parts[0]
     for p in out_parts[1:]:
         res = res.unionByName(p)
@@ -1148,18 +1128,17 @@ def store_partitions(
     spark: SparkSession, out_dir: str, as_of: int | None = None
 ) -> DataFrame:
     """Per-partition metadata rollup — the Iceberg ``.partitions``
-    metadata table analog, answered entirely from the ledger and the
-    tombstone table (no chunk payload, no chunk metadata scan):
-    ``(part_id, run_seq, n_rows, n_chunks, n_columns, raw_bytes,
-    encoded_bytes, n_deleted, live_rows)`` for every partition VISIBLE
-    at ``as_of`` (committed, not retired, in a readable epoch).
-    ``n_deleted`` counts committed tombstones at the same epoch;
+    metadata table analog: ``(part_id, run_seq, n_rows, n_chunks,
+    n_columns, raw_bytes, encoded_bytes, n_deleted, live_rows)`` for
+    every partition VISIBLE at ``as_of`` (committed, not retired, in a
+    readable epoch). ``n_deleted`` counts the rows deleted at the same
+    epoch, both kinds (:func:`choetl_spark.deletes.deleted_counts`);
     ``live_rows`` is what a scan would return. The operational surface
     for skew checks ('is a partition oversized?'), delete-debt triage
     ('which partitions want rewrite_partitions?'), and storage
     accounting — all driver-light, O(partitions) metadata."""
     resolve_snapshot(out_dir, as_of)
-    from choetl_spark.eqdeletes import all_delete_positions
+    from choetl_spark.deletes import deleted_counts
 
     empty_ddl = (
         "part_id long, run_seq long, n_rows long, n_chunks long, "
@@ -1193,14 +1172,11 @@ def store_partitions(
         "raw_bytes",
         "encoded_bytes",
     )
-    tomb = all_delete_positions(spark, out_dir, as_of=as_of)
-    if tomb is None:
-        dels = None
-    else:
-        dels = tomb.groupBy("part_id").agg(
-            F.count("*").alias("n_deleted")
+    counts = deleted_counts(spark, out_dir, as_of)
+    if counts:
+        dels = spark.createDataFrame(
+            sorted(counts.items()), "part_id long, n_deleted long"
         )
-    if dels is not None:
         live = live.join(F.broadcast(dels), "part_id", "left")
     else:
         live = live.withColumn("n_deleted", F.lit(None).cast("long"))
@@ -1365,16 +1341,21 @@ def agg_encoded(
     it is provably exact, everything else falls back to decoding
     precisely the affected slices:
 
-    - partitions with committed delete tombstones (their stats predate
-      the deletes) are re-aggregated EXACTLY by decoding just those
-      partitions with the tombstone anti-join applied — cost
-      O(tombstoned partitions), the merge-on-read tax, not O(store);
+    - partitions with deleted rows, positional or equality
+      (:func:`choetl_spark.deletes.deletes_changed`; their stats
+      predate the deletes), are re-aggregated EXACTLY from
+      ``format("choetl")`` rows of just those partitions, deletes
+      subtracted — cost O(deleted-from partitions), the merge-on-read
+      tax, not O(store);
     - string min/max falls back when any chunk's 64-char zone-map bound
       is truncated (a prefix under-estimates both bounds);
     - columns whose chunks predate a stat (older store) fall back for
       that aggregate;
     - ``sum`` is defined for integer and floating columns (int sums are
       exact at any magnitude — chunk stats carry decimal strings).
+
+    An aggregate the stats cannot answer exactly is computed over
+    ``format("choetl")`` rows of the whole snapshot instead.
 
     SQL semantics throughout: ``count(col)`` skips nulls, ``min``/
     ``max``/``sum`` ignore nulls, ``count(*)`` counts rows. Schema
@@ -1390,9 +1371,8 @@ def agg_encoded(
     from decimal import Decimal
 
     from choetl_spark.codecs.base import str_to_type
-    from choetl_spark.deletes import apply_delete_filter
-    from choetl_spark.eqdeletes import all_delete_positions
-    from choetl_spark.engine import decode_dataframe
+    from choetl_spark.datasource import load_store
+    from choetl_spark.deletes import deletes_changed
 
     import pyarrow as pa
 
@@ -1443,13 +1423,7 @@ def agg_encoded(
             raise ValueError(f"{alias}: min/max unsupported for {col}")
 
     enc = read_encoded(spark, out_dir, as_of=as_of)
-    tombstones = all_delete_positions(spark, out_dir, as_of=as_of)
-    dirty: list[int] = []
-    if tombstones is not None:
-        dirty = [
-            r["part_id"]
-            for r in tombstones.select("part_id").distinct().collect()
-        ]
+    dirty = sorted(deletes_changed(spark, out_dir, 0, as_of))
     enc_clean = (
         enc.filter(~F.col("part_id").isin(dirty)) if dirty else enc
     )
@@ -1517,18 +1491,29 @@ def agg_encoded(
         return (None if v is None else int(v)), not r["sum_missing"]
 
     clean: dict[str, object] = {}
-    fallback_cols: list[str] = []
     for alias, (fn, col) in aggs.items():
         v, exact = clean_value(fn, col)
         if exact:
             clean[alias] = v
-        else:
-            fallback_cols.append(col)
 
     # -- exact Spark aggregation for the slices stats cannot answer ----
-    def spark_agg(df: DataFrame, items: list[tuple[str, str, str]]) -> dict:
+    def reader_agg(aliases: list[str], parts: list[int] | None) -> dict:
+        """``aliases`` aggregated over ``format("choetl")`` rows
+        (deletes subtracted) of partitions ``parts`` (``None``: all)."""
+        # a pure count(*) spec still needs one decoded column for the
+        # row count — the manifest's first (original) column
+        cols = sorted({aggs[a][1] for a in aliases} - {"*"}) or [
+            manifest_data_items(manifest)[0][0]
+        ]
+        df = load_store(
+            spark, out_dir, cols + (["_part_id"] if parts else []),
+            as_of=as_of,
+        )
+        if parts:
+            df = df.filter(F.col("_part_id").isin(parts))
         exprs = []
-        for alias, fn, col in items:
+        for alias in aliases:
+            fn, col = aggs[alias]
             if col == "*":
                 exprs.append(F.count(F.lit(1)).alias(alias))
             elif fn == "count":
@@ -1546,47 +1531,20 @@ def agg_encoded(
             for k, v in row.items()
         }
 
-    need_cols = sorted(
-        {c for _, (fn, c) in aggs.items() if c != "*"}
-    )
-    fb_vals: dict[str, object] = {}
-    if fallback_cols:
-        fb_df = decode_dataframe(
-            enc_clean,
-            columns=sorted(set(fallback_cols)),
-            manifest=manifest,
-        )
-        fb_vals = spark_agg(
-            fb_df,
-            [
-                (alias, fn, col)
-                for alias, (fn, col) in aggs.items()
-                if alias not in clean
-            ],
-        )
-
-    dirty_vals: dict[str, object] = {}
-    if dirty:
-        d_df = decode_dataframe(
-            enc.filter(F.col("part_id").isin(dirty)),
-            # a pure count(*) spec still needs one decoded column for
-            # the row count — the manifest's first (original) column
-            columns=need_cols or [next(iter(manifest))],
-            manifest=manifest,
-            with_pos=True,
-        )
-        d_df = apply_delete_filter(d_df, tombstones)
-        dirty_vals = spark_agg(
-            d_df, [(a, fn, c) for a, (fn, c) in aggs.items()]
-        )
+    # exact aliases re-aggregate the dirty partitions and merge; the
+    # rest aggregate the whole snapshot
+    fallback = [a for a in aggs if a not in clean]
+    fb_vals = reader_agg(fallback, None) if fallback else {}
+    dirty_vals = reader_agg(list(clean), dirty) if dirty and clean else {}
 
     # -- merge and type the one-row result ------------------------------
     def merge(alias: str, fn: str) -> object:
         parts = [
             v
             for v in (
-                clean.get(alias, fb_vals.get(alias)),
-                dirty_vals.get(alias) if dirty else None,
+                [clean[alias], dirty_vals.get(alias)]
+                if alias in clean
+                else [fb_vals.get(alias)]
             )
             if v is not None
         ]

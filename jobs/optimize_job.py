@@ -171,16 +171,18 @@ def optimize_store(
         return mx, fl, max(mx - retain_last + 1, fl)
 
     if dry_run:
-        # METADATA only: the positional tombstone table is O(deleted
-        # rows); equality deletes are reported as commit counts
-        # (resolving them to positions decodes key columns — a data
-        # scan a dry run must never pay)
-        from choetl_spark.deletes import read_delete_positions
+        # METADATA only, zero Spark jobs: positional tombstones come
+        # from the pyarrow delete resolver; equality deletes are
+        # reported as commit counts (counting their hits reads key
+        # columns — a data scan a dry run must never pay)
+        from choetl_spark.deletes import delete_positions
 
         max_epoch, floor, expire_to = _expiry_target()
-        tomb = read_delete_positions(spark, store)
-        n_tomb = tomb.count() if tomb is not None else 0
-        eq_rows = len(ledger_state(store)["eq_commits"])
+        state = ledger_state(store)
+        n_tomb = sum(
+            len(a) for a in delete_positions(store, state).values()
+        )
+        eq_rows = len(state["eq_commits"])
         report["steps"]["rewrite_partitions"] = {
             "pending_delete_positions": n_tomb,
             "eq_delete_commits": eq_rows,

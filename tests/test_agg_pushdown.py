@@ -89,18 +89,18 @@ def test_agg_clean_path_decodes_nothing(spark, astore, monkeypatch):
     out, _ = astore
 
     def boom(*a, **k):  # pragma: no cover - the point is it never runs
-        raise AssertionError("decode_dataframe called on the stats path")
+        raise AssertionError("load_store called on the stats path")
 
-    import choetl_spark.engine as engine_mod
+    import choetl_spark.datasource as datasource_mod
 
-    monkeypatch.setattr(engine_mod, "decode_dataframe", boom)
+    monkeypatch.setattr(datasource_mod, "load_store", boom)
     r = agg_encoded(
         spark, out,
         {"n": ("count", "*"), "lo": ("min", "warc_ts"),
          "hi": ("max", "url"), "s": ("sum", "text_len")},
     ).collect()[0]
     assert r["n"] == 900
-    with pytest.raises(AssertionError, match="decode_dataframe called"):
+    with pytest.raises(AssertionError, match="load_store called"):
         agg_encoded(spark, out, {"m": ("min", "text")}).collect()
 
 

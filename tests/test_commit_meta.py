@@ -6,7 +6,7 @@ Iceberg metadata.json-pointer analog)."""
 
 from __future__ import annotations
 
-from choetl_spark.deletes import delete_where, read_delete_positions
+from choetl_spark.deletes import delete_positions, delete_where
 from choetl_spark.engine import EncodeConfig
 from choetl_spark.ledger import (
     encode_with_resume,
@@ -57,14 +57,14 @@ def test_ledger_state_tracks_commits_without_spark_jobs(spark, tmp_path):
 
 def test_no_delete_store_skips_tombstone_resolution(spark, tmp_path):
     out, _ = _ingest(spark, tmp_path)
-    # no delete commits: readers get None (no positional decode, no
-    # anti-join) — and orphan tombstone FILES without a commit row stay
-    # invisible through the same early exit
-    assert read_delete_positions(spark, out) is None
+    # no delete commits: the resolver answers empty (no positions ride
+    # the splits) — and orphan tombstone FILES without a commit row
+    # stay invisible through the same early exit
+    assert delete_positions(out, ledger_state(out)) == {}
     import os
 
     os.makedirs(os.path.join(out, "_deletes"), exist_ok=True)
-    assert read_delete_positions(spark, out) is None
+    assert delete_positions(out, ledger_state(out)) == {}
 
 
 def test_as_of_before_first_delete_returns_none(spark, tmp_path):
@@ -73,8 +73,7 @@ def test_as_of_before_first_delete_returns_none(spark, tmp_path):
     target = pages.select("url").limit(1).collect()[0][0]
     info = delete_where(spark, out, equals={"url": target})
     # a snapshot strictly before the delete epoch sees no tombstones
-    assert (
-        read_delete_positions(spark, out, as_of=info["run_seq"] - 1) is None
-    )
-    post = read_delete_positions(spark, out)
-    assert post is not None and post.count() >= 1
+    before = ledger_state(out, as_of=info["run_seq"] - 1)
+    assert delete_positions(out, before) == {}
+    post = delete_positions(out, ledger_state(out))
+    assert sum(len(a) for a in post.values()) >= 1

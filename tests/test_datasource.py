@@ -153,6 +153,44 @@ def test_positional_deletes_subtracted(ds_spark, store):
     assert _key_rows(pre) == _key_rows(pages)
 
 
+def test_hidden_coordinates_and_part_id_pushdown(ds_spark, store):
+    """``_part_id`` / ``_row_pos`` are emitted only when the read
+    schema names them, address each row exactly (a deleted row's
+    coordinates are gone), and a ``_part_id`` filter restricts the
+    planned partitions."""
+    from pyspark.sql.datasource import EqualTo, In
+
+    from choetl_spark.datasource import ChoetlBatchReader, load_store
+    from choetl_spark.ledger import read_manifest
+
+    out, pages = store
+    assert "_part_id" not in ds_spark.read.format("choetl").load(out).columns
+    cols = ["url", "_part_id", "_row_pos"]
+    before = {
+        (r["_part_id"], r["_row_pos"]): r["url"]
+        for r in load_store(ds_spark, out, cols).collect()
+    }
+    assert sorted(before.values()) == sorted(
+        r["url"] for r in pages.select("url").collect()
+    )
+    victim = sorted(before.values())[0]
+    delete_where(ds_spark, out, equals={"url": victim})
+    df = load_store(ds_spark, out, cols)
+    after = {(r["_part_id"], r["_row_pos"]): r["url"] for r in df.collect()}
+    assert after == {k: u for k, u in before.items() if u != victim}
+
+    part = min(p for p, _ in after)
+    reader = ChoetlBatchReader({"path": out}, df.schema)
+    for f in (EqualTo(("_part_id",), part), In(("_part_id",), (part,))):
+        reader.pushFilters([f])
+        assert {p for s in reader.partitions() for p in s.parts} == {part}
+    one = df.filter(F.col("_part_id") == part).collect()
+    assert sorted(r["url"] for r in one) == sorted(
+        u for (p, _), u in after.items() if p == part
+    )
+    assert read_manifest(out).keys().isdisjoint({"_part_id", "_row_pos"})
+
+
 def test_eq_deletes_subtracted_with_reinsert_and_rewrite(ds_spark, store):
     """Equality deletes apply task-side under the strict data-seq <
     delete-seq rule: deleted keys vanish, time travel sees pre-delete

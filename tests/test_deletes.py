@@ -18,14 +18,15 @@ from choetl_spark.datasource import register
 from choetl_spark.deletes import (
     compact_deletes,
     delete_matching,
+    delete_positions,
     delete_where,
-    read_delete_positions,
     rewrite_partitions,
     upsert,
 )
 from choetl_spark.engine import EncodeConfig, decode_dataframe
 from choetl_spark.ledger import (
     encode_with_resume,
+    ledger_state,
     read_encoded,
     scan_encoded,
 )
@@ -216,11 +217,7 @@ def test_rewrite_partitions_materializes_tombstones(spark, store):
     # rewritten rows live in a fresh part with NO tombstones pointing
     # at it (materialization happened)
     new_part = max(visible_parts)
-    tomb_parts = {
-        r["part_id"]
-        for r in read_delete_positions(spark, out).select("part_id")
-        .distinct().collect()
-    }
+    tomb_parts = set(delete_positions(out, ledger_state(out)))
     assert new_part not in tomb_parts
     # below-threshold partitions kept their original ids (never moved)
     assert (set(by_part) - {target_part}) <= visible_parts
@@ -274,14 +271,11 @@ def test_expire_snapshots_reclaims_retired_chunks(spark, store):
     assert leftover == 0  # every surviving chunk is latest-reachable
     # tombstones pointing at expired parts are gone too; the survivors
     # (none here — all deletes hit the rewritten parts) stay consistent
-    tomb = read_delete_positions(spark, out)
-    if tomb is not None:
-        assert (
-            tomb.join(
-                enc_visible.select("part_id").distinct(), "part_id", "left_anti"
-            ).count()
-            == 0
-        )
+    visible = {
+        r["part_id"]
+        for r in enc_visible.select("part_id").distinct().collect()
+    }
+    assert set(delete_positions(out, ledger_state(out))) <= visible
     # expired as_of refuses loudly
     with pytest.raises(ValueError, match="expired"):
         scan_encoded(spark, out, ["url"], as_of=1).count()
@@ -357,15 +351,14 @@ def test_scan_without_tombstones_pays_zero_delete_overhead(spark, store):
     doesn't use. Once a delete commits, only the touched partition's
     split carries positions, and the plan never gains a join: the
     reader subtracts deletes task-side."""
-    from choetl_spark.datasource import _delete_positions, plan_store_splits
-    from choetl_spark.ledger import ledger_state
+    from choetl_spark.datasource import plan_store_splits
     from choetl_spark.plans import explain_str
 
     out, _ = store
 
     def parts_with_tombstones():
         state = ledger_state(out)
-        tomb = _delete_positions(out, state)
+        tomb = delete_positions(out, state)
         splits = plan_store_splits(out, state, tomb, target_split_bytes=1)
         return {p for s in splits for p in s.tombstones}
 

@@ -11,16 +11,24 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from choetl_spark.deletes import delete_where, rewrite_partitions
+from choetl_spark.datasource import load_store
+from choetl_spark.deletes import (
+    deleted_counts,
+    delete_where,
+    deletes_changed,
+    rewrite_partitions,
+)
 from choetl_spark.engine import EncodeConfig
 from choetl_spark.eqdeletes import (
-    all_delete_positions,
     delete_by_key,
-    eq_delete_positions,
+    eq_hittable_parts,
+    eq_value_maps,
 )
 from choetl_spark.ledger import (
     encode_with_resume,
+    ledger_state,
     read_changes,
+    read_manifest,
     scan_encoded,
     snapshots,
 )
@@ -102,9 +110,8 @@ def test_eq_delete_lifecycle(spark, store):
         spark, out, ["url"], equals={"url": victims[0]}
     ).count() == 0
 
-    # composes with positional deletes in one position set
-    posns = all_delete_positions(spark, out)
-    assert posns.count() >= 4
+    # equality hits count alongside positional deletes
+    assert sum(deleted_counts(spark, out).values()) >= 4
     delete_where(spark, out, equals={"url": sorted(got)[1]})
     got2 = _urls(scan_encoded(spark, out, ["url"]))
     assert got2 == all_urls - set(victims) - {sorted(got)[1]}
@@ -115,6 +122,48 @@ def test_eq_delete_lifecycle(spark, store):
     # resolution cost disappears for the rewritten (new-epoch) parts:
     # the old parts are retired, so eq positions only cover retired ids
     assert _urls(scan_encoded(spark, out, ["url"], as_of=1)) == all_urls
+
+
+def test_rows_an_eq_delete_hid_are_not_deleted_again(spark, store):
+    """A positional delete of keys an equality delete already hides
+    finds no row: it commits nothing and the epoch does not move; an
+    upsert of the same keys reports no deleted row."""
+    from choetl_spark.deletes import upsert
+
+    out, pages, cfg = store
+    victims = sorted(_urls(pages))[:3]
+    delete_by_key(spark, out, "url", victims)
+    seq = ledger_state(out)["max_seq"]
+    res = delete_where(spark, out, equals={"url": victims})
+    assert res["rows_deleted"] == 0 and res["run_seq"] is None
+    assert ledger_state(out)["max_seq"] == seq
+    up = upsert(
+        spark, out, pages.filter(F.col("url").isin(victims)), "url", cfg=cfg
+    )
+    assert up["rows_deleted"] == 0
+    assert _urls(scan_encoded(spark, out, ["url"])) == _urls(pages)
+
+
+def test_small_eq_delete_dirties_only_the_partitions_it_hit(spark, store):
+    """A small equality delete names only the partitions whose key
+    Bloom filters may hold a deleted value, and the changed-partition
+    set agg_encoded, read_changes and rollback_to share is exactly the
+    partition it hit — not every partition that predates it."""
+    out, _, _ = store
+    by_part: dict[int, list] = {}
+    for r in load_store(spark, out, ["url", "_part_id"]).collect():
+        by_part.setdefault(r["_part_id"], []).append(r["url"])
+    assert len(by_part) == 4
+    p0 = sorted(by_part)[0]
+    victims = sorted(by_part[p0])[:2]
+    assert delete_by_key(spark, out, "url", victims)["run_seq"] == 2
+
+    assert eq_hittable_parts(out, ledger_state(out))[1] == {p0}
+    assert deleted_counts(spark, out) == {p0: 2}
+    assert deletes_changed(spark, out, 0) == {p0}
+    assert deletes_changed(spark, out, 1) == {p0}
+    assert deletes_changed(spark, out, 2) == set()
+    assert deletes_changed(spark, out, 1, parts=set(by_part) - {p0}) == set()
 
 
 def test_eq_delete_crash_orphans_and_empty(spark, store):
@@ -131,7 +180,9 @@ def test_eq_delete_crash_orphans_and_empty(spark, store):
     orphan.write.mode("append").parquet(
         os.path.join(out, "_eq_deletes", "url")
     )
-    assert eq_delete_positions(spark, out) is None  # no committed epochs
+    # no committed epochs: no value set, nothing counted as deleted
+    assert eq_value_maps(out, ledger_state(out), read_manifest(out)) == {}
+    assert deleted_counts(spark, out) == {}
     assert _urls(scan_encoded(spark, out, ["url"])) == all_urls
 
     assert delete_by_key(spark, out, "url", [])["n_values"] == 0

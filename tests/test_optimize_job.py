@@ -75,8 +75,14 @@ def test_optimize_store_chain(spark, tmp_path):
         )
     )
 
-    # dry run: reports candidates, changes nothing
-    dry = optimize_store(spark, out, dry_run=True, retain_last=1)
+    # dry run: reports candidates, changes nothing, runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("optimize-dry-run", "dry run")
+    try:
+        dry = optimize_store(spark, out, dry_run=True, retain_last=1)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("optimize-dry-run") == []
     assert dry["steps"]["rewrite_partitions"]["pending_delete_positions"] > 0
     assert min_time_travel_seq(out) == 1
     assert orphan_files <= set(glob.glob(f"{out}/chunks/*.parquet"))
