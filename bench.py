@@ -276,11 +276,12 @@ def bench_pruned_lookup(spark, sf_dir: str) -> None:
 
 def bench_point_lookup(spark, sf_dir: str) -> None:
     """Late-materialization lookup (choetl_spark/lookup.py, a filtered
-    format("choetl") read): task-side Bloom skipping of key chunks, then
+    read planned on the driver): Bloom skipping of key chunks, then
     the filtered decode kernel decodes the other columns only for chunks
     covering a match — the same read pruned_point_lookup makes through
-    scan_encoded, collected eagerly. It runs one Spark job for the read
-    plus one for the local result's count, so wall clock is fixed-stage-bound and understates
+    scan_encoded, collected eagerly. A read within the local-read budget
+    runs no Spark job; otherwise one for the read plus one for the local
+    result's count, so wall clock is fixed-stage-bound and understates
     the mechanism — the JSON's
     key_chunks_bloom_hit / key_chunks_total ratio is the
     data-proportional term (decoded bytes), which at 10^12 docs is the

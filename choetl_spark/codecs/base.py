@@ -187,9 +187,17 @@ def pack_uints(vals: np.ndarray, width: int) -> bytes:
 
 
 def unpack_uints(buf: bytes, n: int, width: int) -> np.ndarray:
-    """Inverse of :func:`pack_uints`; returns uint64 array of length n."""
+    """Inverse of :func:`pack_uints`; returns uint64 array of length n.
+    A buffer shorter than the ``(n * width + 7) // 8`` bytes
+    :func:`pack_uints` writes is truncated: ``ValueError``, never
+    zero-padded values."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
+    if len(buf) < (n * width + 7) // 8:
+        raise ValueError(
+            f"bit-packed buffer truncated: {len(buf)} bytes, {n} values "
+            f"of {width} bits need {(n * width + 7) // 8}"
+        )
     if width == 64:
         return np.frombuffer(buf, dtype="<u8", count=n).astype(np.uint64)
     if width in (8, 16, 32):

@@ -18,33 +18,41 @@ Architecture (the same no-JVM-boundary shape as
 :mod:`choetl_spark.direct`, in reverse): the DRIVER plans everything
 from sidecar metadata with **zero Spark jobs** — ledger parquet (tiny,
 read with pyarrow by :func:`choetl_spark.ledger.ledger_state`), the
-manifest JSON, and the chunk files' parquet FOOTERS (row-group
-``part_id`` min/max = the split-pruning signal ``compact_store``
-clusters for). Each task then opens only its split's
-row groups with pyarrow, filters chunk rows to its committed
-``(part_id, attempt_id)`` keys, and runs the shared pure-Python decode
-kernel (:func:`choetl_spark.engine._make_decode_kernel`) — payload
-bytes cross the JVM boundary exactly once, as final decoded Arrow
-batches. The write path mirrors it: each task runs the shared encode
-kernel inside the store's one task-side chunk writer
-(:func:`choetl_spark.engine._make_writing_wrapper`) under a hidden
-staging name; the driver ``commit()`` moves the successful attempts'
-files into place and appends the ledger rows in ONE file —
-the store's standard crash protocol (chunks first, ledger second;
-orphans are invisible) means a failed/speculative task attempt can
-never corrupt the table.
+manifest JSON, and the chunk table's metadata columns
+(:func:`chunk_rows`: ``part_id, column, row_start, n_rows, raw_bytes,
+attempt_id``, plus ``stats`` under a pushdown spec — never a payload;
+row groups whose footer ``part_id`` span holds no live partition are
+not read). Commit resolution on ``(part_id, attempt_id)`` happens
+there, so each split names exactly the chunk rows its task decodes;
+the task reads only those rows' payloads and runs the shared
+pure-Python decode kernel (:func:`choetl_spark.engine.
+_make_decode_kernel`) — payload bytes cross the JVM boundary exactly
+once, as final decoded Arrow batches. The write path mirrors it: each
+task runs the shared encode kernel inside the store's one task-side
+chunk writer (:func:`choetl_spark.engine._make_writing_wrapper`)
+under a hidden staging name; the driver ``commit()`` moves the
+successful attempts' files into place and appends the ledger rows in
+ONE file — the store's standard crash protocol (chunks first, ledger
+second; orphans are invisible) means a failed/speculative task attempt
+can never corrupt the table.
 
-This reader is the store's one row-read path: ``scan_encoded`` and
-``point_lookup`` are front-ends over it (:func:`load_store`). It
-resolves commits on ``(part_id, attempt_id)``, time travel (``as_of``
-/ ``ref``), retired and WAP-staged invisibility, renames,
+This reader is the store's one row-read path, with two executors for
+it. ``scan_encoded`` and ``point_lookup`` plan through it on the
+driver (:func:`read_store`): a read whose planned chunks decode to at
+most :data:`LOCAL_READ_BYTES` runs the same splits through the same
+``read()`` in the calling process and returns a local relation, which
+runs no Spark job; a larger read is the distributed
+``format("choetl")`` load (:func:`load_store`). The reader resolves
+commits on ``(part_id, attempt_id)``, time travel (``as_of`` /
+``ref``), retired and WAP-staged invisibility, renames,
 late-added-column nulls and type widening. Positional and EQUALITY
-deletes subtract task-side; equality value sets are O(deleted keys),
-load driver-side and ride the splits (data-seq < delete-seq; splits
-whose partitions all post-date every delete skip the probe). A lost
-delete table or an equality key dropped after its delete refuses to
-read rather than resurrect rows. The deletes come from the one
-pyarrow resolver (:func:`choetl_spark.deletes.delete_positions`,
+deletes subtract in ``_decode_split``; equality value sets are
+O(deleted keys), load driver-side and ride the splits (data-seq <
+delete-seq; splits whose partitions all post-date every delete skip
+the probe). A lost delete table or an equality key dropped after its
+delete refuses to read rather than resurrect rows. The deletes come
+from the one pyarrow resolver
+(:func:`choetl_spark.deletes.delete_positions`,
 :func:`choetl_spark.eqdeletes.eq_value_maps`), and ``_decode_split`` is
 the only code that drops deleted rows. Nested/decimal ("logical")
 columns come back in their logical type (the decode kernel restores
@@ -62,21 +70,24 @@ aggregate pushdown read rows this way.
 
 Filter pushdown: ``pushFilters`` translates simple predicates into the
 engine's pushdown spec (``=``/``IN`` become ``("in", values)``,
-comparisons an inclusive ``("range", lo, hi)``) and each task runs the
-engine's filtered decode kernel
+comparisons an inclusive ``("range", lo, hi)``). The planner prunes by
+it before any task runs (:func:`_prune_chunks`): a predicate column's
+chunk whose zone map (min/max; micros for timestamps, days for dates,
+a truncated string max unbounded) or Bloom filter (``IN`` on a
+string/binary column) rules the spec out is not planned, nor is any
+chunk that overlaps no kept chunk of every predicate column — so a
+partition left without one reads no payload at all, the late
+materialization :func:`choetl_spark.lookup.point_lookup` relies on.
+Each task then runs the engine's filtered decode kernel
 (:func:`choetl_spark.engine._make_filtered_decode_kernel`): the mask is
 evaluated per predicate-column chunk (dict chunks on their symbol
 table), other columns decode only where a row survives, and only
-surviving rows cross to the JVM. An ``IN`` on a string/binary column
-also skips whole chunks first: predicate-column chunks whose Bloom
-filter excludes every value are dropped before any payload is read,
-and a split left with no predicate-column chunk reads no payload at
-all — the late materialization :func:`choetl_spark.lookup.point_lookup`
-relies on. Every filter is also RETURNED to Spark, which re-applies
-it, so a mask only has to be a superset. Ints, strings, bools, binary,
-dates and timestamps are masked; a timestamp only against an aware
-literal, which is what Spark passes (in the session zone). Floats are
-not (NaN ordering differs between Arrow and Spark).
+surviving rows cross to the JVM. Every filter is also RETURNED to
+Spark, which re-applies it, so pruning and masks only have to keep a
+superset. Ints, strings, bools, binary, dates and timestamps are
+masked; a timestamp only against an aware literal, which is what Spark
+passes (in the session zone). Floats are not (NaN ordering differs
+between Arrow and Spark).
 
 The streaming reader exposes ledger epochs as micro-batch offsets —
 Iceberg's streaming-read contract: an offset is a committed
@@ -96,6 +107,7 @@ format registry.
 
 from __future__ import annotations
 
+import bisect
 import datetime as _dt
 import glob
 import json
@@ -104,6 +116,7 @@ import os
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import groupby
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -125,13 +138,14 @@ from pyspark.sql.datasource import (
 )
 
 from choetl_spark.bloom import bloom_maybe_contains
-from choetl_spark.codecs.base import str_to_type
+from choetl_spark.codecs.base import int_view, is_int_like, str_to_type
 from choetl_spark.engine import (
     EncodeConfig,
     _make_decode_kernel,
     _make_encode_kernel,
     _make_filtered_decode_kernel,
     _make_writing_wrapper,
+    _pushdown_values_compatible,
     _spark_type_ddl,
     bloom_probeable,
     publish_chunk_files,
@@ -195,6 +209,37 @@ def _snapshot(out_dir: str, as_of: int | None, view: dict) -> tuple:
     )
 
 
+def _read_schema(
+    out_dir: str, columns: list[str] | None, as_of: int | None, ref: str | None
+) -> tuple[int | None, dict, str]:
+    """``(as_of, manifest view, read-schema DDL)`` of a read of
+    ``columns`` (``None``: all, in name order; the hidden ``_part_id`` /
+    ``_row_pos`` allowed) at ``as_of`` / ``ref``. ``ValueError`` for
+    as_of with ref, an unknown ref or an expired as_of; ``KeyError``
+    for an unknown column."""
+    as_of = resolve_snapshot(out_dir, as_of, ref)
+    view = _manifest_view(out_dir, as_of)
+    entries = dict(manifest_data_items(view))
+    names = list(dict.fromkeys(columns or sorted(entries)))
+    missing = [
+        c for c in names if c not in entries and c not in HIDDEN_COLUMNS
+    ]
+    if missing:
+        raise KeyError(f"columns not in encoded store: {missing}")
+    return as_of, view, _schema_ddl([(c, entries.get(c)) for c in names])
+
+
+def _load(spark, out_dir: str, as_of: int | None, ddl: str):
+    """The lazy ``spark.read.format("choetl")`` frame of a read schema."""
+    sources = spark._jsparkSession.sessionState().dataSourceManager()
+    if not sources.dataSourceExists("choetl"):
+        register(spark)
+    reader = spark.read.format("choetl").schema(ddl)
+    if as_of is not None:
+        reader = reader.option("as_of", as_of)
+    return reader.load(out_dir)
+
+
 def load_store(
     spark,
     out_dir: str,
@@ -210,25 +255,58 @@ def load_store(
     ``ValueError`` (as_of with ref, unknown ref, expired as_of),
     ``KeyError`` (unknown column, dropped equality-delete key),
     ``RuntimeError`` (lost delete table)."""
-    as_of = resolve_snapshot(out_dir, as_of, ref)
-    view = _manifest_view(out_dir, as_of)
-    entries = dict(manifest_data_items(view))
-    names = list(dict.fromkeys(columns or sorted(entries)))
-    missing = [
-        c for c in names if c not in entries and c not in HIDDEN_COLUMNS
-    ]
-    if missing:
-        raise KeyError(f"columns not in encoded store: {missing}")
+    as_of, view, ddl = _read_schema(out_dir, columns, as_of, ref)
     _snapshot(out_dir, as_of, view)
-    sources = spark._jsparkSession.sessionState().dataSourceManager()
-    if not sources.dataSourceExists("choetl"):
-        register(spark)
-    reader = spark.read.format("choetl").schema(
-        _schema_ddl([(c, entries.get(c)) for c in names])
+    return _load(spark, out_dir, as_of, ddl)
+
+
+# A read whose planned chunks decode to at most this many bytes runs in
+# the calling process (:func:`read_store`): Spark's Python-data-source
+# round trips cost more CPU than decoding that much on one thread. It
+# also bounds the driver memory a local read takes.
+LOCAL_READ_BYTES = 64 << 20
+
+
+def read_store(
+    spark,
+    out_dir: str,
+    columns: list[str] | None,
+    filters: list[Filter],
+    as_of: int | None = None,
+    ref: str | None = None,
+):
+    """``(frame, rows)``: the rows :func:`load_store` reads, planned on
+    the driver under ``filters`` (the ``pyspark.sql.datasource`` filters
+    Spark would push for the caller's predicates) by the one reader,
+    :class:`ChoetlBatchReader`. When the planned splits decode to at
+    most :data:`LOCAL_READ_BYTES`, the reader runs them in this process
+    and the frame is a local relation over the decoded rows (``rows``
+    of them — a superset of the rows ``filters`` keep, since the caller
+    re-applies its predicates in Spark); otherwise the frame is the
+    distributed ``format("choetl")`` read and ``rows`` is ``None``.
+    Errors raise typed, as in :func:`load_store`, from the planning."""
+    from pyspark.sql.types import StructType
+
+    as_of, _, ddl = _read_schema(out_dir, columns, as_of, ref)
+    schema = StructType.fromDDL(ddl)
+    reader = ChoetlBatchReader({"path": out_dir, "as_of": as_of}, schema)
+    reader.pushFilters(filters)
+    splits = reader.partitions()
+    if sum(s.raw_bytes for s in splits) > LOCAL_READ_BYTES:
+        return _load(spark, out_dir, as_of, ddl), None
+    table = pa.Table.from_batches(
+        [b for s in splits for b in reader.read(s)], reader.out_schema
     )
-    if as_of is not None:
-        reader = reader.option("as_of", as_of)
-    return reader.load(out_dir)
+    # a zoneless timestamp column holds UTC micros, as Spark reads the
+    # reader's batches; untagged, createDataFrame would take its values
+    # for wall clocks in the session zone
+    utc = [
+        pa.field(f.name, pa.timestamp(f.type.unit, "UTC"))
+        if pa.types.is_timestamp(f.type) and f.type.tz is None else f
+        for f in table.schema
+    ]
+    table = table.cast(pa.schema(utc))
+    return spark.createDataFrame(table, schema), table.num_rows
 
 
 def _out_schema(items: list[tuple[str, dict]], schema) -> pa.Schema:
@@ -251,127 +329,107 @@ def _out_schema(items: list[tuple[str, dict]], schema) -> pa.Schema:
 
 
 # ---------------------------------------------------------------------------
-# split planning from chunk-file footers
+# split planning from chunk metadata (driver, pure pyarrow)
 # ---------------------------------------------------------------------------
 
 
 @dataclass
 class StoreSplit(InputPartition):
-    """One read task: a contiguous part_id range of the live set, plus
-    the (path, row-group) slices whose footer part_id span overlaps it."""
+    """One read task: the live partitions it decodes and the chunk rows
+    the driver planned for them (:func:`chunk_rows` rows without
+    ``stats``); the task reads those rows' payloads and nothing else."""
 
-    parts: tuple  # sorted live part_ids in this split
-    files: tuple  # ((path, (rg, ...)), ...)
-    attempts: dict  # part_id -> frozenset of committed attempt_ids
+    parts: tuple  # sorted part_ids with planned chunk rows
+    chunks: pa.Table  # planned chunk rows, in (path, rg, idx) order
+    raw_bytes: int  # decoded bytes of the planned chunks
     tombstones: dict  # part_id -> np.ndarray of deleted row_pos
     eq: dict  # key_col -> {value: newest delete epoch} (tiny)
     pseq: dict  # part_id -> first done epoch (eq eligibility)
 
 
-def _footer_spans(out_dir: str) -> list[tuple[str, int, int | None, int | None, int]]:
-    """(path, rg_index, part_min, part_max, nbytes) per row group; None
-    bounds when the footer has no part_id stats (overlaps everything)."""
-    spans = []
-    for path in sorted(glob.glob(os.path.join(_chunks_dir(out_dir), "*.parquet"))):
-        md = pq.ParquetFile(path).metadata
-        try:
-            pi = md.schema.to_arrow_schema().names.index("part_id")
-        except ValueError:
+# where a chunk row lives, then the metadata planning reads (no payload)
+_PLAN_SCHEMA = pa.schema(
+    [
+        ("path", pa.string()),
+        ("rg", pa.int32()),
+        ("idx", pa.int64()),
+        ("part_id", pa.int64()),
+        ("column", pa.string()),
+        ("row_start", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("attempt_id", pa.string()),
+    ]
+)
+
+
+def chunk_rows(
+    out_dir: str, live: dict, columns: set | None = None, stats: bool = False
+) -> pa.Table:
+    """The committed chunk-metadata rows of the partitions ``live`` maps
+    to their committed attempt ids, for the physical ``columns``
+    (``None``: every column): ``part_id, column, row_start, n_rows,
+    raw_bytes, attempt_id``, plus ``stats`` when asked, and where each
+    row lives (file ``path``, row group ``rg``, row ``idx`` in it). Read
+    once on the driver with pyarrow; never reads a payload, and skips
+    row groups whose footer ``part_id`` span holds no live partition."""
+    parts = sorted(live)
+    schema = (
+        _PLAN_SCHEMA.append(pa.field("stats", pa.string()))
+        if stats else _PLAN_SCHEMA
+    )
+    want = schema.names[3:]
+    pieces = []
+    files = glob.glob(os.path.join(_chunks_dir(out_dir), "*.parquet"))
+    for path in sorted(files):
+        pf = pq.ParquetFile(path)
+        names = pf.schema_arrow.names
+        if "part_id" not in names:
             continue
-        for rg in range(md.num_row_groups):
-            info = md.row_group(rg)
-            col = info.column(pi)
-            st = col.statistics
-            lo = st.min if st is not None and st.has_min_max else None
-            hi = st.max if st is not None and st.has_min_max else None
-            spans.append((path, rg, lo, hi, info.total_byte_size))
-    return spans
-
-
-def plan_store_splits(
-    out_dir: str,
-    state: dict,
-    tombstones: dict,
-    eq_maps: dict | None = None,
-    target_split_bytes: int = 128 << 20,
-) -> list[StoreSplit]:
-    """Greedy-pack the live part_ids into byte-balanced contiguous
-    ranges using footer row-group spans (proportional attribution) —
-    the same planning Spark's FileSourceScanExec does from footers,
-    kept deterministic (sorted files, sorted parts)."""
-    parts = sorted(state["live"])
-    if not parts:
-        return []
-    spans = _footer_spans(out_dir)
-    # proportional per-part byte estimate
-    est = {p: 0.0 for p in parts}
-    import bisect
-
-    for _, _, lo, hi, nbytes in spans:
-        lo = parts[0] if lo is None else lo
-        hi = parts[-1] if hi is None else hi
-        i = bisect.bisect_left(parts, lo)
-        j = bisect.bisect_right(parts, hi)
-        covered = parts[i:j]
-        if covered:
-            share = nbytes / len(covered)
-            for p in covered:
-                est[p] += share
-    splits: list[list[int]] = [[]]
-    acc = 0.0
-    for p in parts:
-        if splits[-1] and acc + est[p] > target_split_bytes:
-            splits.append([])
-            acc = 0.0
-        splits[-1].append(p)
-        acc += est[p]
-    out = []
-    for grp in splits:
-        lo, hi = grp[0], grp[-1]
-        files: dict[str, list[int]] = {}
-        for path, rg, smin, smax, _ in spans:
-            smin = lo if smin is None else smin
-            smax = hi if smax is None else smax
-            if smin <= hi and smax >= lo:
-                files.setdefault(path, []).append(rg)
-        gset = set(grp)
-        # eq sets ride a split only when one of its partitions predates
-        # a delete epoch (post-rewrite stores stop paying the probe)
-        pseq = {p: state["part_seq"].get(p, 1) for p in grp}
-        eq = eq_maps or {}
-        if eq:
-            max_eq = max(
-                (s for m in eq.values() for s in m.values()),
-                default=None,
+        pi = names.index("part_id")
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(pi).statistics
+            if st is not None and st.has_min_max:
+                i = bisect.bisect_left(parts, st.min)
+                if i == len(parts) or parts[i] > st.max:
+                    continue
+            t = pf.read_row_group(rg, columns=[c for c in want if c in names])
+            pid = t.column("part_id").to_pylist()
+            col = t.column("column").to_pylist()
+            att = (
+                t.column("attempt_id").to_pylist()
+                if "attempt_id" in names else [None] * t.num_rows
             )
-            if max_eq is None or not any(
-                s < max_eq for s in pseq.values()
-            ):
-                eq = {}
-        out.append(
-            StoreSplit(
-                parts=tuple(grp),
-                files=tuple((p, tuple(r)) for p, r in sorted(files.items())),
-                attempts={
-                    p: frozenset(state["live"][p]) for p in grp
-                },
-                tombstones={
-                    p: tombstones[p] for p in gset & set(tombstones)
-                },
-                eq=eq,
-                pseq=pseq if eq else {},
+            idx = [
+                i for i, p in enumerate(pid)
+                if p in live
+                and (columns is None or col[i] in columns)
+                and _attempt_ok(att[i], live[p])
+            ]
+            if not idx:
+                continue
+            t = t.take(idx)
+            pieces.append(
+                pa.Table.from_arrays(
+                    [
+                        pa.array([path] * len(idx), pa.string()),
+                        pa.array([rg] * len(idx), pa.int32()),
+                        pa.array(idx, pa.int64()),
+                        *(
+                            t.column(c) if c in names
+                            else pa.nulls(len(idx), schema.field(c).type)
+                            for c in want
+                        ),
+                    ],
+                    schema=schema,
+                )
             )
-        )
-    return out
+    return pa.concat_tables(pieces) if pieces else schema.empty_table()
 
 
-# ---------------------------------------------------------------------------
-# task-side decode
-# ---------------------------------------------------------------------------
-
-_CHUNK_META_COLS = [
-    "part_id", "column", "row_start", "n_rows", "meta", "attempt_id",
-]
+def _attempt_ok(row_att: str | None, committed) -> bool:
+    # the _commit_join leniency: null on either side matches
+    return row_att is None or None in committed or row_att in committed
 
 
 def _bloom_kept(
@@ -379,8 +437,6 @@ def _bloom_kept(
 ) -> list[bool]:
     """Per chunk row: False only for a probed column's chunk whose Bloom
     filter excludes every probe value (no/legacy Bloom keeps it)."""
-    if "stats" not in chunks.column_names:
-        return [True] * chunks.num_rows
     keep = []
     for name, st in zip(display, chunks.column("stats").to_pylist()):
         vals = probes.get(name)
@@ -391,6 +447,184 @@ def _bloom_kept(
     return keep
 
 
+def _zone_int(v, t: pa.DataType) -> int:
+    """``v`` in a zone map's int unit for storage type ``t`` (the chunk
+    stats' cast: micros or the storage unit for timestamps, days for
+    dates, 0/1 for bools); raises when ``t`` cannot hold ``v``."""
+    if isinstance(v, _dt.datetime):
+        # pa.array stores a non-UTC aware datetime's wall time as UTC
+        v = v.astimezone(_dt.timezone.utc)
+    arr = pa.array([v]).cast(t)
+    return int(v) if pa.types.is_integer(t) else int(int_view(arr)[0])
+
+
+def _zone_may_match(st: dict, op: tuple, t: pa.DataType) -> bool:
+    """Whether a chunk with stats ``st`` may hold a row ``op`` keeps —
+    the rules of :func:`choetl_spark.engine.prune_partitions_by_stats`:
+    int-like columns compare ``min_val``/``max_val``, strings
+    ``min_str``/``max_str`` bytewise with a truncated max unbounded
+    above. A missing bound, or a value the kernel would not mask
+    either, keeps the chunk."""
+    # the spec as inclusive intervals (None: open)
+    ivs = [(v, v) for v in op[1]] if op[0] == "in" else [op[1:]]
+    if not _pushdown_values_compatible(
+        [v for iv in ivs for v in iv if v is not None], t
+    ):
+        return True
+    if is_int_like(t):
+        lo, hi = st.get("min_val"), st.get("max_val")
+        try:
+            ivs = [
+                [None if v is None else _zone_int(v, t) for v in iv]
+                for iv in ivs
+            ]
+        except (pa.ArrowException, OverflowError):
+            return True
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        lo = st.get("min_str")
+        hi = None if st.get("max_str_trunc") else st.get("max_str")
+    else:
+        return True
+    return any(
+        (a is None or hi is None or a <= hi)
+        and (b is None or lo is None or lo <= b)
+        for a, b in ivs
+    )
+
+
+def _prune_chunks(
+    chunks: pa.Table, display: list[str], spec: dict, types: dict
+) -> list[bool]:
+    """The chunk rows a read under pushdown ``spec`` must decode. A
+    predicate column's chunk goes when its zone map
+    (:func:`_zone_may_match`) or its Bloom filter (:func:`_bloom_kept`)
+    rules the spec out; then any chunk goes that does not overlap a
+    kept chunk of EVERY predicate column in its partition, because no
+    row outside those can match. A partition left without a chunk of
+    some predicate column is dropped whole."""
+    probes = {
+        c: op[1] for c, op in spec.items()
+        if op[0] == "in" and bloom_probeable(op[1])
+    }
+    bloom = _bloom_kept(chunks, display, probes)
+    stats = chunks.column("stats").to_pylist()
+    kept = [
+        k and (
+            c not in spec or not st
+            or _zone_may_match(json.loads(st), spec[c], types[c])
+        )
+        for k, c, st in zip(bloom, display, stats)
+    ]
+    pid = chunks.column("part_id").to_pylist()
+    start = chunks.column("row_start").to_pylist()
+    end = [s + n for s, n in zip(start, chunks.column("n_rows").to_pylist())]
+    spans: dict[tuple, list] = {}
+    for i in sorted(range(len(kept)), key=start.__getitem__):
+        if kept[i] and display[i] in spec:
+            key = (pid[i], display[i])
+            spans.setdefault(key, []).append((start[i], end[i]))
+
+    def overlaps(i: int, col: str) -> bool:
+        sp = spans.get((pid[i], col), [])
+        j = bisect.bisect_left(sp, (end[i],)) - 1
+        return j >= 0 and sp[j][1] > start[i]
+
+    return [
+        k and all(overlaps(i, c) for c in spec) for i, k in enumerate(kept)
+    ]
+
+
+def plan_store_splits(
+    out_dir: str,
+    state: dict,
+    tombstones: dict,
+    eq_maps: dict | None = None,
+    target_split_bytes: int = 128 << 20,
+    items: list[tuple[str, dict]] | None = None,
+    pushdown: dict[str, tuple] | None = None,
+    store_items: list[tuple[str, dict]] = (),
+) -> list[StoreSplit]:
+    """Plan a read of the ``items`` columns (``None``: every stored
+    column) of ``state``'s live partitions on the driver, from chunk
+    metadata alone (:func:`chunk_rows`). Under a ``pushdown`` spec only
+    the chunk rows that may hold a match are planned
+    (:func:`_prune_chunks`), so a partition its zone maps or Blooms rule
+    out is never opened. The surviving partitions are greedy-packed, in
+    part_id order, into splits of about ``target_split_bytes`` planned
+    decoded bytes. An equality-delete key in ``store_items`` but not in
+    ``items`` is planned only into splits holding a partition that
+    predates a delete epoch: it decodes for the subtraction only."""
+    import pyarrow.compute as pc
+
+    if not state["live"]:
+        return []
+    eq = eq_maps or {}
+    display = keys = None
+    if items is not None:
+        display = {physical_name(m, c): c for c, m in items}
+        read = dict(items)
+        keys = {
+            physical_name(m, c): c for c, m in store_items
+            if c in eq and c not in read
+        }
+        display.update(keys)
+    chunks = chunk_rows(
+        out_dir, state["live"], None if display is None else set(display),
+        bool(pushdown),
+    )
+    if pushdown:
+        types = {
+            c: str_to_type(m["dtype"])
+            for c, m in items if not m.get("logical")
+        }
+        names = [display[c] for c in chunks.column("column").to_pylist()]
+        keep = _prune_chunks(chunks, names, pushdown, types)
+        chunks = chunks.filter(pa.array(keep, pa.bool_()))
+        chunks = chunks.drop_columns(["stats"])
+    size: dict[int, int] = {}
+    for p, b in zip(
+        chunks.column("part_id").to_pylist(),
+        chunks.column("raw_bytes").to_pylist(),
+    ):
+        size[p] = size.get(p, 0) + (b or 0)
+    groups: list[list[int]] = []
+    acc = 0
+    for p in sorted(size):
+        if not groups or (groups[-1] and acc + size[p] > target_split_bytes):
+            groups.append([])
+            acc = 0
+        groups[-1].append(p)
+        acc += size[p]
+    max_eq = max((s for m in eq.values() for s in m.values()), default=None)
+    out = []
+    for grp in groups:
+        # eq sets ride a split only when one of its partitions predates
+        # a delete epoch (post-rewrite stores stop paying the probe)
+        pseq = {p: state["part_seq"].get(p, 1) for p in grp}
+        use_eq = max_eq is not None and any(s < max_eq for s in pseq.values())
+        rows = pc.is_in(chunks.column("part_id"), pa.array(grp, pa.int64()))
+        if keys and not use_eq:
+            key_rows = pc.is_in(chunks.column("column"), pa.array(list(keys)))
+            rows = pc.and_(rows, pc.invert(key_rows))
+        t = chunks.filter(rows)
+        out.append(
+            StoreSplit(
+                parts=tuple(grp),
+                chunks=t,
+                raw_bytes=int(pc.sum(t.column("raw_bytes")).as_py() or 0),
+                tombstones={p: tombstones[p] for p in grp if p in tombstones},
+                eq=eq if use_eq else {},
+                pseq=pseq if use_eq else {},
+            )
+        )
+    return out
+
+
+# ---------------------------------------------------------------------------
+# task-side decode
+# ---------------------------------------------------------------------------
+
+
 def _decode_split(
     split: StoreSplit,
     items: list[tuple[str, dict]],
@@ -399,13 +633,11 @@ def _decode_split(
     pushdown: dict[str, tuple] | None = None,
     store_items: list[tuple[str, dict]] = (),
 ) -> Iterator[pa.RecordBatch]:
-    """Decode one split: read the chunk metadata, drop the chunk rows
-    the pushdown spec rules out (Bloom skipping, then partitions left
-    without a chunk of some predicate column — the filtered kernel
-    would emit nothing for them), read payloads for the rest only, then
-    run the shared decode kernel and subtract deletes — the one place
-    deleted rows leave decoded rows. ``out_schema`` is the output in
-    the read schema's order: ``items`` are its data columns, and the
+    """Decode one split: read the payload and ``meta`` of exactly the
+    chunk rows the driver planned, run the shared decode kernel (the
+    filtered one under a pushdown spec) and subtract deletes — the one
+    place deleted rows leave decoded rows. ``out_schema`` is the output
+    in the read schema's order: ``items`` are its data columns, and the
     hidden ``_part_id`` / ``_row_pos`` columns it names are the
     kernel's row coordinates. An equality-delete key in
     ``store_items`` but not in the output decodes for the subtraction
@@ -426,71 +658,37 @@ def _decode_split(
         out_schema = pa.schema(
             [*out_schema, *((c, str_to_type(m["dtype"])) for c, m in keys)]
         )
+    chunks = split.chunks
+    if not chunks.num_rows:
+        return
     phys_to_display = {physical_name(m, c): c for c, m in items}
     col_order = [c for c, _ in items]
-    probes = {
-        c: op[1]
-        for c, op in (pushdown or {}).items()
-        if op[0] == "in" and bloom_probeable(op[1])
-    }
-    want = _CHUNK_META_COLS + (["stats"] if probes else [])
-    part_set = set(split.parts)
-    pieces = []  # (ParquetFile, row groups, kept chunk rows, their indices)
-    for path, rgs in split.files:
-        pf = pq.ParquetFile(path)
-        t = pf.read_row_groups(
-            list(rgs), columns=[c for c in want if c in pf.schema_arrow.names]
-        )
-        if "attempt_id" not in t.column_names:
-            t = t.append_column(
-                "attempt_id", pa.nulls(t.num_rows, pa.string())
-            )
-        pid = t.column("part_id").to_pylist()
-        att = t.column("attempt_id").to_pylist()
-        name = t.column("column").to_pylist()
-        keep = [
-            i
-            for i in range(t.num_rows)
-            if pid[i] in part_set
-            and name[i] in phys_to_display
-            and _attempt_ok(att[i], split.attempts[pid[i]])
-        ]
-        if keep:
-            pieces.append((pf, rgs, t.take(keep), keep))
-    if not pieces:
-        return
-    chunks = pa.concat_tables([p[2] for p in pieces])
-    display = [
-        phys_to_display[n] for n in chunks.column("column").to_pylist()
-    ]
-    alive = np.ones(chunks.num_rows, dtype=bool)
-    if pushdown:
-        alive &= _bloom_kept(chunks, display, probes)
-        pids = chunks.column("part_id").to_pylist()
-        have: dict[int, set] = {}
-        for p, c, a in zip(pids, display, alive):
-            if a and c in pushdown:
-                have.setdefault(p, set()).add(c)
-        alive &= [len(have.get(p, ())) == len(pushdown) for p in pids]
-    payloads, at = [], 0
-    for pf, rgs, t, keep in pieces:
-        sel = np.flatnonzero(alive[at:at + t.num_rows])
-        at += t.num_rows
-        if len(sel):
-            col = pf.read_row_groups(list(rgs), columns=["payload"]).column(0)
-            payloads.extend(col.take(np.asarray(keep)[sel]).chunks)
-    if not payloads:
-        return  # nothing can match: not a byte of payload was read
-    alive = pa.array(alive)
-    kept = chunks.filter(alive)
+    files: dict[str, pq.ParquetFile] = {}
+    bodies, at = [], 0
+    for (path, rg), run in groupby(
+        zip(chunks.column("path").to_pylist(), chunks.column("rg").to_pylist())
+    ):
+        n = len(list(run))
+        if path not in files:
+            files[path] = pq.ParquetFile(path)
+        t = files[path].read_row_group(rg, columns=["payload", "meta"])
+        bodies.append(t.take(chunks.column("idx").slice(at, n)))
+        at += n
+    body = pa.concat_tables(bodies)
     feed = pa.table(
         {
-            "part_id": kept.column("part_id"),
-            "column": pa.array(display, pa.string()).filter(alive),
-            "payload": pa.chunked_array(payloads),
-            "meta": kept.column("meta"),
-            "row_start": kept.column("row_start"),
-            "n_rows": kept.column("n_rows"),
+            "part_id": chunks.column("part_id"),
+            "column": pa.array(
+                [
+                    phys_to_display[c]
+                    for c in chunks.column("column").to_pylist()
+                ],
+                pa.string(),
+            ),
+            "payload": body.column("payload"),
+            "meta": body.column("meta"),
+            "row_start": chunks.column("row_start"),
+            "n_rows": chunks.column("n_rows"),
         }
     ).sort_by(
         [("part_id", "ascending"), ("column", "ascending"),
@@ -540,11 +738,6 @@ def _decode_split(
             batch = batch.select(names)
         if len(batch):
             yield batch
-
-
-def _attempt_ok(row_att: str | None, committed: frozenset) -> bool:
-    # the _commit_join leniency: null on either side matches
-    return row_att is None or None in committed or row_att in committed
 
 
 # ---------------------------------------------------------------------------
@@ -659,7 +852,7 @@ class ChoetlBatchReader(DataSourceReader):
             (n, entries[n]) for n in schema.names if n not in HIDDEN_COLUMNS
         ]
         data = _out_schema(self._items, schema)
-        self._out_schema = pa.schema(
+        self.out_schema = pa.schema(
             [
                 (n, pa.int64()) if n in HIDDEN_COLUMNS else data.field(n)
                 for n in schema.names
@@ -686,7 +879,8 @@ class ChoetlBatchReader(DataSourceReader):
                 "live": {p: a for p, a in state["live"].items() if p in keep},
             }
         return plan_store_splits(
-            self._dir, state, tomb, eq, self._target
+            self._dir, state, tomb, eq, self._target, self._items,
+            self._pushdown, self._store_items,
         )
 
     def read(self, partition: StoreSplit):
@@ -695,7 +889,7 @@ class ChoetlBatchReader(DataSourceReader):
             # an empty store reads as an empty DataFrame, not a crash
             return
         yield from _decode_split(
-            partition, self._items, self._batch_rows, self._out_schema,
+            partition, self._items, self._batch_rows, self.out_schema,
             self._pushdown, self._store_items,
         )
 
@@ -715,7 +909,7 @@ class ChoetlStreamReader(DataSourceStreamReader):
             options.get("skip_change_commits", "false")
         ).lower() in ("true", "1")
         self._items = manifest_data_items(_manifest_view(self._dir))
-        self._out_schema = _out_schema(self._items, schema)
+        self.out_schema = _out_schema(self._items, schema)
 
     def initialOffset(self):  # noqa: N802
         return {"seq": self._start}
@@ -756,14 +950,14 @@ class ChoetlStreamReader(DataSourceStreamReader):
             ):
                 state["live"].setdefault(pid[i], set()).add(att[i])
         return plan_store_splits(
-            self._dir, state, {}, None, self._target
+            self._dir, state, {}, None, self._target, self._items
         )
 
     def read(self, partition: StoreSplit):
         if partition is None:
             return  # empty epoch range planned [] -> Spark sends None
         yield from _decode_split(
-            partition, self._items, self._batch_rows, self._out_schema
+            partition, self._items, self._batch_rows, self.out_schema
         )
 
     def commit(self, end):

@@ -1605,8 +1605,8 @@ def bloom_probe_frame(enc_df: DataFrame, column: str, value) -> DataFrame:
     over-skip). Chunk-granular, fully JVM-side — the probe behind
     partition pruning (:func:`prune_partitions_by_bloom`), which
     ``delete_where`` and equality-delete resolution use. (Reads through
-    ``format("choetl")`` probe the same Blooms task-side with
-    :func:`choetl_spark.bloom.bloom_maybe_contains`.)
+    ``format("choetl")`` probe the same Blooms in their driver-side
+    planner with :func:`choetl_spark.bloom.bloom_maybe_contains`.)
 
     ``value`` may be a list/tuple/set (batch lookup): ``_bloom_hit``
     then means "may contain ANY of the values" — each value adds

@@ -11,8 +11,8 @@ scan at WRITE time to pin exact row coordinates. An equality delete
 plus a ledger commit row (``status="eqdelete"``, appended on the driver
 by :func:`choetl_spark.ledger.append_ledger_rows`) — O(keys) write
 cost, no store scan at all. :func:`eq_value_maps` loads the committed
-value sets with pyarrow, and ``format("choetl")`` subtracts them
-task-side from rows of partitions committed BEFORE the delete (Iceberg's
+value sets with pyarrow, and the reader's ``_decode_split`` subtracts
+them from rows of partitions committed BEFORE the delete (Iceberg's
 rule: data-seq < delete-seq). A key re-inserted AFTER the delete
 therefore survives, which is what makes streaming CDC upserts O(changed
 keys) instead of O(store).
@@ -248,37 +248,27 @@ def eq_hittable_parts(
         }
         vals = list(vmap)
         if cand and len(vals) <= 32 and bloom_probeable(vals):
-            cand = _bloom_may_hold(out_dir, cand, phys, vals)
+            cand = _bloom_may_hold(
+                out_dir, {p: state["live"][p] for p in cand}, phys, vals
+            )
         parts |= cand
     return sorted(vmaps), parts
 
 
 def _bloom_may_hold(
-    out_dir: str, parts: set[int], phys: str, values: list
+    out_dir: str, live: dict, phys: str, values: list
 ) -> set[int]:
-    """The ``parts`` with a chunk of physical column ``phys`` whose
-    Bloom filter may contain one of ``values`` (a chunk without a
-    Bloom always may) — the chunk table's ``stats`` column read with
-    pyarrow, never a payload. A partition without such a chunk holds
-    no key value, so no equality delete hits it."""
-    import glob
+    """The partitions of ``live`` (``{part_id: committed attempt ids}``)
+    with a chunk of physical column ``phys`` whose Bloom filter may
+    contain one of ``values`` (a chunk without a Bloom always may) —
+    the reader's chunk-metadata planning read, never a payload. A
+    partition without such a chunk holds no key value, so no equality
+    delete hits it."""
+    from choetl_spark.datasource import _bloom_kept, chunk_rows
 
-    import pyarrow.parquet as pq
-
-    from choetl_spark.datasource import _bloom_kept
-    from choetl_spark.ledger import _chunks_dir
-
-    keep: set[int] = set()
-    for path in sorted(glob.glob(os.path.join(_chunks_dir(out_dir), "*.parquet"))):
-        if "stats" not in pq.ParquetFile(path).schema_arrow.names:
-            return set(parts)  # legacy chunks carry no Bloom
-        t = pq.read_table(
-            path, columns=["part_id", "stats"],
-            filters=[("column", "=", phys), ("part_id", "in", sorted(parts))],
-        )
-        kept = _bloom_kept(t, [phys] * t.num_rows, {phys: values})
-        keep |= {p for p, k in zip(t.column("part_id").to_pylist(), kept) if k}
-    return keep
+    t = chunk_rows(out_dir, live, {phys}, stats=True)
+    kept = _bloom_kept(t, [phys] * t.num_rows, {phys: values})
+    return {p for p, k in zip(t.column("part_id").to_pylist(), kept) if k}
 
 
 def upsert_by_key(

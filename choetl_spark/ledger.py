@@ -951,17 +951,42 @@ def scan_encoded(
     matches nothing. ``as_of`` time-travels to a ledger epoch and ``ref``
     reads the snapshot a tag/branch names (:mod:`choetl_spark.refs`).
 
-    A front-end over ``spark.read.format("choetl")``
-    (:func:`choetl_spark.datasource.load_store`): the load decodes only
-    the requested and predicate columns, and the predicates are plain
-    Spark filters the reader pushes into its tasks (Bloom chunk
-    skipping, kernel masks before the other columns decode) and Spark
-    re-applies exactly. Errors are typed and raised before the load:
-    ``ValueError`` for ``as_of`` with ``ref``, an unknown ref or an
-    expired ``as_of``; ``KeyError`` for an unknown column;
-    ``RuntimeError`` when a lost delete table would resurrect rows.
+    The store's one reader plans the read on the driver
+    (:func:`choetl_spark.datasource.read_store`): the predicates become
+    the filters Spark would push, zone maps and Blooms drop the chunks
+    and partitions that cannot match, and only the requested and
+    predicate columns are planned. A read that decodes to at most
+    ``datasource.LOCAL_READ_BYTES`` runs in this process and returns a
+    local relation (collecting it runs no Spark job); a larger one is
+    the distributed ``format("choetl")`` read. Either way the
+    predicates are plain Spark filters that Spark applies exactly.
+    Errors are typed and raised here, not at the action: ``ValueError``
+    for ``as_of`` with ``ref``, an unknown ref or an expired ``as_of``;
+    ``KeyError`` for an unknown column; ``RuntimeError`` when a lost
+    delete table would resurrect rows.
     """
-    from choetl_spark.datasource import load_store
+    return _scan(spark, out_dir, columns, ranges, equals, as_of, ref)[0]
+
+
+def _scan(
+    spark: SparkSession,
+    out_dir: str,
+    columns: list[str] | None,
+    ranges: dict | None,
+    equals: dict | None,
+    as_of: int | None = None,
+    ref: str | None = None,
+) -> tuple[DataFrame, int | None]:
+    """:func:`scan_encoded` and the row count of its local read (a
+    superset of the rows it returns; ``None`` when distributed)."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThanOrEqual,
+        In,
+        LessThanOrEqual,
+    )
+
+    from choetl_spark.datasource import read_store
     from choetl_spark.engine import normalize_predicate_value as _norm
 
     # naive datetime bounds -> the aware instants Spark's literals mean
@@ -976,10 +1001,18 @@ def scan_encoded(
         )
         for c, v in (equals or {}).items()
     }
-    out = load_store(
+    filters = [
+        f
+        for c, (lo, hi) in ranges.items()
+        for f in (GreaterThanOrEqual((c,), lo), LessThanOrEqual((c,), hi))
+    ] + [
+        In((c,), tuple(v)) if isinstance(v, list) else EqualTo((c,), v)
+        for c, v in equals.items()
+    ]
+    out, rows = read_store(
         spark, out_dir,
         None if columns is None else [*columns, *ranges, *equals],
-        as_of=as_of, ref=ref,
+        filters, as_of=as_of, ref=ref,
     )
     for col, (lo, hi) in ranges.items():
         typ = out.schema[col].dataType.typeName()
@@ -992,11 +1025,11 @@ def scan_encoded(
         else:
             out = out.filter((F.col(col) >= lo) & (F.col(col) <= hi))
     for col, value in equals.items():
-        if isinstance(value, (list, tuple, set)):
-            out = out.filter(F.col(col).isin(list(value)))
+        if isinstance(value, list):
+            out = out.filter(F.col(col).isin(value))
         else:
             out = out.filter(F.col(col) == value)
-    return out.select(*columns) if columns is not None else out
+    return (out.select(*columns) if columns is not None else out), rows
 
 
 def read_changes(

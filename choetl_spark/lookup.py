@@ -1,16 +1,19 @@
-"""Point lookups over the encoded store: a front-end over
-``spark.read.format("choetl")``.
+"""Point lookups over the encoded store: a front-end over the store's
+one reader, planned on the driver.
 
 A point lookup (``url = X``, or a batch ``url IN (...)``) is a filtered
-read of the store, and the ``choetl`` reader already does the work it
-needs (see :mod:`choetl_spark.datasource`): key-column chunks whose
-Bloom filter excludes every probe value are skipped unread, the filtered
-decode kernel decodes the other columns only for chunks that cover a
-matching row (late materialization — Abadi et al., "Materialization
-Strategies in a Column-Oriented DBMS", ICDE 2007), and deletes, time
-travel and schema evolution apply as in every other read. The
-reference's closest analog is Parquet.Net row-group stats+bloom
-skipping (reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137).
+read of the store, and the reader already does the work it needs (see
+:mod:`choetl_spark.datasource`): its driver-side planner drops the
+key-column chunks whose Bloom filter excludes every probe value, and
+every partition left without one, before any payload is read; the
+filtered decode kernel decodes the other columns only for chunks that
+cover a matching row (late materialization — Abadi et al.,
+"Materialization Strategies in a Column-Oriented DBMS", ICDE 2007);
+deletes, time travel and schema evolution apply as in every other
+read. A lookup whose surviving chunks fit the local-read budget runs
+in the calling process, with no Spark job. The reference's closest
+analog is Parquet.Net row-group stats+bloom skipping (reference
+src/ChoETL.Parquet/ChoParquetRecordReader.cs:108-137).
 """
 
 from __future__ import annotations
@@ -35,24 +38,27 @@ def point_lookup(
     Blooms) still reads exactly, decoding every key chunk but never
     the other columns' chunks that hold no match.
 
-    Eager: at most ``max_matches + 1`` matching rows are collected to
-    the driver in one pass and returned as a local DataFrame (Spark's
-    limit collect runs one job per round of splits it scans — one for a
-    single-split store). A point lookup matches few rows by definition;
-    ``max_matches`` guards against misuse — a predicate matching more
-    than that belongs in ``scan_encoded``.
-    ``as_of`` time-travels to a ledger epoch.
+    Eager, and planned on the driver like every read
+    (:func:`choetl_spark.ledger.scan_encoded`): when the Bloom-kept
+    partitions decode within the local-read budget, the matches are
+    found in this process and returned as a local relation, and
+    collecting it runs no Spark job. Otherwise at most
+    ``max_matches + 1`` matching rows are collected from the
+    distributed read and returned as a local DataFrame. A point lookup
+    matches few rows by definition; ``max_matches`` guards against
+    misuse — a predicate matching more than that belongs in
+    ``scan_encoded``. ``as_of`` time-travels to a ledger epoch.
     """
-    from choetl_spark.ledger import scan_encoded
+    from choetl_spark.ledger import _scan
 
     values = (
         list(value) if isinstance(value, (list, tuple, set)) else [value]
     )
-    hits = scan_encoded(
-        spark, out_dir, columns, equals={key: values}, as_of=as_of
+    hits, decoded = _scan(
+        spark, out_dir, columns, None, {key: values}, as_of=as_of
     )
-    if not values:
-        return spark.createDataFrame([], hits.schema)
+    if decoded is not None and decoded <= max_matches:
+        return hits  # already local, and no more rows than the guard
     # Arrow both ways: no Python-object round trip (timestamps stay
     # UTC instants) and no Python worker to rebuild the DataFrame
     rows = hits.limit(max_matches + 1).toArrow()

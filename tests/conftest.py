@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import time
+from unittest import mock
 
 import pytest
 
@@ -27,6 +29,23 @@ def driver_tz(tz: str):
         else:
             os.environ["TZ"] = prev
         time.tzset()
+
+
+def distributed(test):
+    """A copy of ``test`` with the local-read budget at 0, so every
+    ``scan_encoded`` / ``point_lookup`` it makes runs through Spark's
+    distributed ``format("choetl")`` read. Tests as written run at the
+    default budget, where small stores read in the driver process; a
+    twin ``test_x_distributed = distributed(test_x)`` keeps the other
+    executor covered by the same checks."""
+    from choetl_spark import datasource
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        with mock.patch.object(datasource, "LOCAL_READ_BYTES", 0):
+            return test(*args, **kwargs)
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -592,3 +592,23 @@ def test_veclist_codec_roundtrip_bit_identical():
     pz, _ = encode_array(emb, codec="veclist", zstd="on")
     pn, _ = encode_array(emb, codec="veclist", zstd="on", shuffle=False)
     assert len(pz) < len(pn) < emb.nbytes
+
+
+@pytest.mark.parametrize(
+    "codec,values",
+    [
+        ("bitpack", lambda r: r.integers(0, 1000, 1000)),
+        ("foref", lambda r: r.integers(10**6, 10**6 + 1000, 1000)),
+        ("delta", lambda r: np.cumsum(r.integers(1, 50, 1000))),
+        ("rle", lambda r: np.repeat(r.integers(0, 1000, 100), 10)),
+    ],
+)
+def test_truncated_bitpacked_payload_raises(codec, values):
+    """A bit-packed payload one byte short must raise, never decode
+    to zero-padded values at the right length."""
+    arr = pa.array(values(np.random.default_rng(7)))
+    payload, meta = encode_array(arr, codec=codec, zstd="off")
+    assert meta["codec"] == codec
+    assert decode_array(payload, meta).equals(arr)
+    with pytest.raises(ValueError, match="truncated"):
+        decode_array(payload[:-1], meta)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pytest
+from conftest import distributed
 from pyspark.sql import functions as F
 
 from choetl_spark.datasource import (
@@ -468,6 +469,68 @@ def test_time_masks_keep_every_row_spark_keeps(ds_spark, tmp_path):
                     assert got == [v for v in ints if keep(v)], (col, pred)
     finally:
         ds_spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_time_predicates_through_scan_encoded_keep_every_row(
+    ds_spark, tmp_path
+):
+    """``scan_encoded`` ranges and equals on a timestamp column (zoned
+    and naive storage) and a date column, under a non-UTC session zone
+    and driver OS zone: the filters the read pushes (and the zone maps
+    they prune by) keep exactly the rows the same bounds keep over an
+    unfiltered read."""
+    from conftest import driver_tz
+
+    src = webpages(ds_spark, 300, partitions=2).select(
+        "url",
+        "warc_ts",
+        F.to_date("warc_ts").alias("day"),
+        F.col("warc_ts").cast("timestamp_ntz").alias("wall"),
+    )
+    zoned = str(tmp_path / "zoned")
+    encode_with_resume(
+        ds_spark, src.drop("wall"), zoned, EncodeConfig(**CFG), run_id="z1"
+    )
+    naive = str(tmp_path / "naive")
+    src.select("url", "wall").write.format("choetl").mode("append").save(
+        naive
+    )
+    prev = ds_spark.conf.get("spark.sql.session.timeZone")
+    ds_spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        with driver_tz("Asia/Tokyo"):
+            for path, col in (
+                (zoned, "warc_ts"), (zoned, "day"), (naive, "wall")
+            ):
+                df = ds_spark.read.format("choetl").load(path)
+                as_int = (F.unix_date if col == "day" else F.unix_micros)(
+                    F.col(col)
+                )
+                ints = sorted(r[0] for r in df.select(as_int).collect())
+                lo, p, q = ints[0], ints[len(ints) // 2], ints[-3]
+                lov, pv, qv = (
+                    df.filter(as_int == x).select(col).first()[0]
+                    for x in (lo, p, q)
+                )
+                for kw, keep in (
+                    ({"ranges": {col: (pv, qv)}}, lambda v: p <= v <= q),
+                    ({"ranges": {col: (lov, pv)}}, lambda v: v <= p),
+                    ({"equals": {col: pv}}, lambda v: v == p),
+                    ({"equals": {col: [pv, qv]}}, lambda v: v in (p, q)),
+                ):
+                    got = sorted(
+                        r[0]
+                        for r in scan_encoded(ds_spark, path, [col], **kw)
+                        .select(as_int).collect()
+                    )
+                    assert got == [v for v in ints if keep(v)], (col, kw)
+    finally:
+        ds_spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+test_time_predicates_through_scan_encoded_keep_every_row_distributed = (
+    distributed(test_time_predicates_through_scan_encoded_keep_every_row)
+)
 
 
 def test_bloom_chunk_selection(ds_spark, tmp_path):

@@ -396,9 +396,9 @@ def test_store_write_byte_stable_without_key_column(spark, tmp_path):
 def test_decode_kernels_reject_short_chunk():
     """A chunk that decodes to fewer rows than its ``n_rows`` is an
     integrity error in both decode kernels, not a short partition: a
-    zstd-off rle payload cut in half decodes silently short on its
-    own, and the kernels must refuse it, naming part, column and
-    row_start."""
+    valid rle payload of half the rows decodes short without error on
+    its own (a truncated payload already raises in the codec), and the
+    kernels must refuse it, naming part, column and row_start."""
     import numpy as np
     import pyarrow as pa
 
@@ -409,9 +409,8 @@ def test_decode_kernels_reject_short_chunk():
     )
 
     arr = pa.array((np.arange(5000) // 100 % 7).astype(np.int32))
-    payload, meta = encode_array(arr, codec="rle", zstd="off")
-    cut = payload[: len(payload) // 2]
-    assert 0 < len(decode_array(cut, meta)) < 5000  # short, no error
+    cut, meta = encode_array(arr.slice(0, 2500), codec="rle", zstd="off")
+    assert len(decode_array(cut, meta)) == 2500  # short, no error
 
     feed = pa.record_batch(
         {

@@ -13,6 +13,7 @@ import datetime as dt
 from decimal import Decimal
 
 import pytest
+from conftest import distributed
 from pyspark.sql import functions as F
 
 from choetl_spark.datasource import register
@@ -105,3 +106,21 @@ def test_filters_on_logical_columns_stay_exact(spark, logical_store):
     ds = spark.read.format("choetl").load(out)
     pred = (F.col("x") < Decimal("-40")) & F.col("s.d").isNotNull()
     assert _sorted(ds.filter(pred)) == _sorted(src.filter(pred))
+
+
+def test_scan_filters_on_logical_columns_stay_exact(spark, logical_store):
+    """A ``scan_encoded`` range on a decimal column plans no mask and no
+    zone-map pruning for it; Spark's own filter answers it."""
+    out, src = logical_store
+    lo, hi = Decimal("-60"), Decimal("-40")
+    got = scan_encoded(spark, out, COLS, ranges={"x": (lo, hi)})
+    assert _sorted(got) == _sorted(src.filter(F.col("x").between(lo, hi)))
+
+
+# the same readers through the distributed executor
+test_every_reader_restores_logical_types_distributed = distributed(
+    test_every_reader_restores_logical_types
+)
+test_scan_filters_on_logical_columns_stay_exact_distributed = distributed(
+    test_scan_filters_on_logical_columns_stay_exact
+)

@@ -8,9 +8,13 @@ columns only where a row matches.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
+from conftest import distributed
 from pyspark.sql import functions as F
 
+from choetl_spark import datasource
 from choetl_spark.engine import EncodeConfig, bloom_probe_frame
 from choetl_spark.ledger import encode_with_resume, read_encoded
 from choetl_spark.lookup import point_lookup
@@ -67,13 +71,11 @@ def test_point_lookup_decodes_only_bloom_hit_key_chunks(spark, store):
     assert 1 <= hit < total / 2  # few false positives at ~1-2% fp rate
 
 
-def test_point_lookup_hit_runs_at_most_two_jobs(spark, store):
-    """A hit lookup is one filtered read plus the collect of its
-    result: at most 2 Spark jobs in its job group."""
+def _hit_lookup_jobs(spark, store, group):
     out, pages = store
     row = pages.orderBy(F.desc("url")).limit(1).collect()[0]
     sc = spark.sparkContext
-    sc.setJobGroup("point-lookup-jobs", "hit lookup")
+    sc.setJobGroup(group, "hit lookup")
     try:
         got = point_lookup(
             spark, out, "url", row["url"], ["url", "text"]
@@ -81,7 +83,22 @@ def test_point_lookup_hit_runs_at_most_two_jobs(spark, store):
     finally:
         sc.setJobGroup(None, None)
     assert [r["text"] for r in got] == [row["text"]]
-    jobs = sc.statusTracker().getJobIdsForGroup("point-lookup-jobs")
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_point_lookup_hit_runs_no_job(spark, store):
+    """A Bloom-pinned hit decodes within the local-read budget: the
+    lookup and the collect of its result run no Spark job."""
+    jobs = _hit_lookup_jobs(spark, store, "point-lookup-local-jobs")
+    assert len(jobs) == 0, jobs
+
+
+def test_point_lookup_hit_runs_at_most_two_jobs(spark, store):
+    """Over the local-read budget a hit lookup is one filtered
+    distributed read plus the collect of its result: 1-2 Spark jobs in
+    its job group."""
+    with mock.patch.object(datasource, "LOCAL_READ_BYTES", 0):
+        jobs = _hit_lookup_jobs(spark, store, "point-lookup-jobs")
     assert 1 <= len(jobs) <= 2, jobs
 
 
@@ -229,3 +246,27 @@ def test_point_lookup_all_late_added_columns_emits_null_row(
         spark, out, "url", "https://new.example/7", ["score"]
     ).collect()
     assert len(got2) == 1 and got2[0]["score"] == 7.0
+
+
+# the same lookups through the distributed reader
+test_point_lookup_returns_exact_row_distributed = distributed(
+    test_point_lookup_returns_exact_row
+)
+test_point_lookup_absent_key_empty_with_schema_distributed = distributed(
+    test_point_lookup_absent_key_empty_with_schema
+)
+test_point_lookup_multi_match_and_guard_distributed = distributed(
+    test_point_lookup_multi_match_and_guard
+)
+test_point_lookup_batch_keys_distributed = distributed(
+    test_point_lookup_batch_keys
+)
+test_point_lookup_positions_at_chunk_boundaries_distributed = distributed(
+    test_point_lookup_positions_at_chunk_boundaries
+)
+test_point_lookup_time_travel_and_late_column_distributed = distributed(
+    test_point_lookup_time_travel_and_late_column
+)
+test_point_lookup_all_late_added_columns_emits_null_row_distributed = (
+    distributed(test_point_lookup_all_late_added_columns_emits_null_row)
+)
