@@ -11,18 +11,19 @@ BENCH/BASELINE.md's ceiling argument).
 This module removes the boundary entirely, the way a native Spark data
 source would: the DRIVER plans row-group splits from the parquet footers
 (pure metadata, zero Spark jobs, the same planning Spark's own
-FileSourceScanExec does), ships only the tiny split descriptors to the
-executors, and each Python task opens its split with ``pyarrow.parquet``
-and feeds Arrow batches straight into the shared codec kernel
-(:func:`choetl_spark.engine._encode_block`). Data bytes cross no
-JVM/Python boundary on the way IN. On the way out, the store writes
-(:func:`write_parquet_direct`, :func:`encode_direct_with_resume`) run
-that kernel inside the store's one task-side chunk writer
+FileSourceScanExec does), ships the split list in the kernel's closure
+over a ``spark.range`` of split indices, and each Python task opens its
+split with ``pyarrow.parquet`` and feeds Arrow batches straight into the
+shared codec kernel (:func:`choetl_spark.engine._encode_block`). Data
+bytes cross no JVM/Python boundary on the way IN. On the way out, the
+store writes (:func:`write_parquet_direct`,
+:func:`encode_direct_with_resume`) run that kernel inside the store's
+one task-side chunk writer
 (:func:`choetl_spark.engine._make_writing_wrapper`): each task writes
-its split's chunk file with pyarrow, only a summary row reaches
-Spark, and the driver moves the successful tasks' files into place.
-:func:`encode_parquet_direct` instead returns the encoded chunk
-rows as a DataFrame, for callers that want them in Spark.
+its split's chunk file with pyarrow, only a summary row reaches Spark,
+and the driver moves the successful tasks' files into place.
+:func:`encode_parquet_direct` instead returns the encoded chunk rows
+as a DataFrame, for callers that want them in Spark.
 
 The reference's analog is ChoETL's pull-based reader feeding its writer
 directly (reference src/ChoETL.Parquet/ChoParquetRecordReader.cs:53-137
@@ -64,12 +65,6 @@ from choetl_spark.engine import (
     column_manifest,
     publish_chunk_files,
 )
-
-_SPLIT_SCHEMA_DDL = (
-    "part_id long, path string, row_groups array<int>, "
-    "n_rows long, split_bytes long"
-)
-
 
 @dataclass(frozen=True)
 class ParquetSplit:
@@ -143,17 +138,17 @@ def plan_parquet_splits(
 def _splits_dataframe(
     spark: SparkSession, splits: list[ParquetSplit]
 ) -> DataFrame:
-    """Split descriptors as a DataFrame with ONE split per input
-    partition. Built on a parallelized collection (not createDataFrame +
-    repartition) so there is no Exchange for AQE to coalesce — at
-    sandbox scale AQE would see a few KB of descriptors and merge every
-    split into one task, serializing the whole encode."""
-    rows = [
-        (s.part_id, s.path, list(s.row_groups), s.n_rows, s.split_bytes)
-        for s in splits
-    ]
-    rdd = spark.sparkContext.parallelize(rows, numSlices=max(len(rows), 1))
-    return spark.createDataFrame(rdd, _SPLIT_SCHEMA_DDL)
+    """The split descriptor frame: ``spark.range`` of the splits'
+    positions as ``part_id``, ONE split per partition; the splits
+    themselves ride in :func:`_make_direct_kernel`'s closure, so a
+    split's position must be its ``part_id`` (true of any prefix of a
+    :func:`plan_parquet_splits` plan). A Range scan has no Exchange for
+    AQE to coalesce (it would merge every split into one task) and,
+    unlike a Python RDD, no Python worker of its own."""
+    if any(s.part_id != i for i, s in enumerate(splits)):
+        raise ValueError("split part_ids must be their plan positions")
+    n = len(splits)
+    return spark.range(0, n, 1, max(n, 1)).withColumnRenamed("id", "part_id")
 
 
 def direct_manifest(
@@ -164,9 +159,7 @@ def direct_manifest(
     decode/ledger interop is byte-compatible. Driver-side footer/schema
     read only. Raises on nested struct/map/decimal columns — those need
     the standard path's Spark-side JSON fallback."""
-    cfg = cfg or EncodeConfig()
-    schema_df = spark.read.parquet(src)
-    manifest = column_manifest(schema_df, cfg)
+    manifest = column_manifest(spark.read.parquet(src), cfg or EncodeConfig())
     logical = [c for c, m in manifest.items() if m.get("logical")]
     if logical:
         raise TypeError(
@@ -177,11 +170,16 @@ def direct_manifest(
     return manifest
 
 
-def _make_direct_kernel(cfg: EncodeConfig, manifest: dict):
-    """Kernel over split-descriptor rows: read the split with pyarrow,
-    cast to the manifest storage types (what the standard path's Spark
-    Arrow conversion would have produced — timestamps to the session-tz
-    annotation, etc.), and run the shared encode kernel."""
+def _make_direct_kernel(
+    cfg: EncodeConfig, manifest: dict, splits: list[ParquetSplit]
+):
+    """Kernel over the descriptor frame's ``part_id`` rows: look the
+    split up in ``splits`` (PySpark broadcasts a pickled command over
+    1 MB, so a large plan ships once per executor), read it with
+    pyarrow, cast to the manifest storage types (what the standard
+    path's Spark Arrow conversion would have produced — timestamps to
+    the session-tz annotation, etc.), and run the shared encode
+    kernel."""
     columns = list(manifest)
     target = pa.schema(
         [(c, str_to_type(m["dtype"])) for c, m in manifest.items()]
@@ -199,11 +197,9 @@ def _make_direct_kernel(cfg: EncodeConfig, manifest: dict):
         # for a column whose character does not change across splits.
         trial_caches: dict[str, dict] = {}
         for batch in batches:
-            part_ids = batch.column(0).to_pylist()
-            paths = batch.column(1).to_pylist()
-            rg_lists = batch.column(2).to_pylist()
-            for part_id, path, rgs in zip(part_ids, paths, rg_lists):
-                pf = pq.ParquetFile(path)
+            for part_id in batch.column(0).to_pylist():
+                split = splits[part_id]
+                pf = pq.ParquetFile(split.path)
                 row_base = {c: 0 for c in columns}
                 seq_base = {c: 0 for c in columns}
                 buf: list[pa.RecordBatch] = []
@@ -226,7 +222,7 @@ def _make_direct_kernel(cfg: EncodeConfig, manifest: dict):
 
                 for rb in pf.iter_batches(
                     batch_size=batch_rows,
-                    row_groups=list(rgs),
+                    row_groups=list(split.row_groups),
                     columns=columns,
                 ):
                     buf.append(rb)
@@ -257,27 +253,8 @@ def encode_parquet_direct(
     if splits is None:
         splits = plan_parquet_splits(src, target_split_bytes)
     return _splits_dataframe(spark, splits).mapInArrow(
-        _make_direct_kernel(cfg, direct_manifest(spark, src, cfg)),
+        _make_direct_kernel(cfg, direct_manifest(spark, src, cfg), splits),
         ENCODED_SCHEMA_DDL,
-    )
-
-
-def _write_splits(
-    splits: DataFrame,
-    cfg: EncodeConfig,
-    manifest: dict,
-    chunks_dir: str,
-    attempt_id: str,
-) -> DataFrame:
-    """The scan-direct kernel inside the task-side chunk writer
-    (:func:`choetl_spark.engine._make_writing_wrapper`) over a split
-    descriptor frame: one staging chunk file and one summary row per
-    split (lazy)."""
-    return splits.mapInArrow(
-        _make_writing_wrapper(
-            _make_direct_kernel(cfg, manifest), chunks_dir, attempt_id
-        ),
-        WRITE_SUMMARY_SCHEMA,
     )
 
 
@@ -312,9 +289,10 @@ def write_parquet_direct(
         attempt_id = uuid.uuid4().hex
     if splits is None:
         splits = plan_parquet_splits(src, target_split_bytes)
-    summary = _write_splits(
-        _splits_dataframe(spark, splits), cfg,
-        direct_manifest(spark, src, cfg), chunks_dir, attempt_id,
+    kernel = _make_direct_kernel(cfg, direct_manifest(spark, src, cfg), splits)
+    summary = _splits_dataframe(spark, splits).mapInArrow(
+        _make_writing_wrapper(kernel, chunks_dir, attempt_id),
+        WRITE_SUMMARY_SCHEMA,
     ).collect()
     publish_chunk_files(chunks_dir, [r.asDict() for r in summary])
     return spark.createDataFrame(summary, WRITE_SUMMARY_SCHEMA)
@@ -340,21 +318,28 @@ def encode_direct_with_resume(
     the part_ids — resume then re-encodes everything into fresh ids;
     keep the knob stable across retries of one logical run.) Data bytes
     cross the JVM/Python boundary in NEITHER direction: only split
-    descriptors (in) and one summary row per split (out) touch Spark.
+    indices (in) and one summary row per split (out) touch Spark. The
+    whole ingest into a fresh store is two Spark jobs: the source's
+    schema inference (read once) and the write.
     """
     from choetl_spark.ledger import _chunks_dir, encode_with_resume
 
     cfg = cfg or EncodeConfig()
     manifest = direct_manifest(spark, src, cfg)
+    splits = plan_parquet_splits(src, target_split_bytes)
     chunks_dir = _chunks_dir(out_dir)
     return encode_with_resume(
         spark,
-        _splits_dataframe(spark, plan_parquet_splits(src, target_split_bytes)),
+        _splits_dataframe(spark, splits),
         out_dir,
         cfg,
         run_id=run_id,
-        encoder=lambda pending, cfg_enc, attempt_id: _write_splits(
-            pending, cfg_enc, manifest, chunks_dir, attempt_id
+        encoder=lambda pending, cfg_enc, attempt_id: pending.mapInArrow(
+            _make_writing_wrapper(
+                _make_direct_kernel(cfg_enc, manifest, splits), chunks_dir,
+                attempt_id,
+            ),
+            WRITE_SUMMARY_SCHEMA,
         ),
-        schema_df=spark.read.parquet(src),
+        source_manifest=manifest,
     )

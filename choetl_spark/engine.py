@@ -662,23 +662,25 @@ def _make_writing_wrapper(inner_kernel, chunks_dir: str, attempt_id: str):
     return kernel
 
 
-def publish_chunk_files(chunks_dir: str, summary: list[dict]) -> None:
+def publish_chunk_files(chunks_dir: str, summary: list[dict]) -> list[str]:
     """Driver half of the chunk writer (:func:`_make_writing_wrapper`):
     rename the staging files named by ``summary`` — the summary rows of
     the task attempts Spark counted as successful, one per logical
     partition — to their visible names (the staging name without its
     ``.tmp-`` prefix, so a failed, retried or speculative attempt's own
-    file stays hidden). Every writer calls this before its ledger
-    commit; a file that is already gone (a ``vacuum`` with a grace
-    shorter than the write, or a compaction that swapped ``chunks/``)
-    raises before anything commits."""
+    file stays hidden), and return those names. Every writer calls this
+    before its ledger commit; a file that is already gone (a ``vacuum``
+    with a grace shorter than the write, or a compaction that swapped
+    ``chunks/``) raises before anything commits."""
     import os
 
+    published = []
     for name in sorted({r["file"] for r in summary}):
+        published.append(name[len(_STAGING_PREFIX):])
         try:
             os.replace(
                 os.path.join(chunks_dir, name),
-                os.path.join(chunks_dir, name[len(_STAGING_PREFIX):]),
+                os.path.join(chunks_dir, published[-1]),
             )
         except FileNotFoundError:
             raise RuntimeError(
@@ -686,6 +688,7 @@ def publish_chunk_files(chunks_dir: str, summary: list[dict]) -> None:
                 "out of chunks/ mid-write) — nothing was committed; "
                 "rerun the write"
             ) from None
+    return published
 
 
 def encode_dataframe_writing(

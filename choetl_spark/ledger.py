@@ -1849,6 +1849,40 @@ def _swap_chunk_table(
     return {"files_before": before, "files_after": _n_files(chunks_dir)}
 
 
+def _tiling_violation(
+    chunks_dir: str, files: list[str], attempt_id: str
+) -> dict | None:
+    """The commit's integrity gate, a pyarrow fold (zero Spark jobs)
+    over the chunk ``files`` one write attempt published: each (part,
+    column)'s chunks of ``attempt_id`` must tile [0, N) exactly —
+    sum(n_rows) == max(row_start + n_rows). Catches the one silent
+    misuse decode cannot detect: a caller part_id not co-located under
+    shuffle="none" (tasks each number the part's rows from 0, so row
+    ALIGNMENT across columns is garbage). Returns the first violating
+    ``part_id, column, n_rows_sum, end_max`` group, or ``None``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if not files:
+        return None
+    t = pa.concat_tables(
+        pq.read_table(
+            os.path.join(chunks_dir, f),
+            columns=["part_id", "column", "row_start", "n_rows", "attempt_id"],
+        )
+        for f in files
+    )
+    t = t.filter(pc.equal(t["attempt_id"], attempt_id))
+    g = (
+        t.append_column("end", pc.add(t["row_start"], t["n_rows"]))
+        .group_by(["part_id", "column"])
+        .aggregate([("n_rows", "sum"), ("end", "max")])
+    )
+    bad = g.filter(pc.not_equal(g["n_rows_sum"], g["end_max"]))
+    return bad.slice(0, 1).to_pylist()[0] if bad.num_rows else None
+
+
 def encode_with_resume(
     spark: SparkSession,
     df: DataFrame,
@@ -1860,7 +1894,7 @@ def encode_with_resume(
     eq_delete_commits: list[tuple[str, int, str]] | None = None,
     staged: bool = False,
     encoder=None,
-    schema_df: DataFrame | None = None,
+    source_manifest: dict | None = None,
 ) -> dict:
     """Encode ``df`` to ``out_dir``, skipping partitions already done.
 
@@ -1877,9 +1911,9 @@ def encode_with_resume(
     files through :func:`choetl_spark.engine._make_writing_wrapper` —
     the scan-direct path (:func:`choetl_spark.direct.
     encode_direct_with_resume`) passes split DESCRIPTORS as ``df`` and
-    reads the data inside its own kernel. ``schema_df`` then supplies
-    the source schema for the manifest (``df`` carries descriptors, not
-    data columns).
+    reads the data inside its own kernel. ``source_manifest`` then
+    supplies the source's column manifest (``df`` carries descriptors,
+    not data columns).
 
     ``staged=True`` is the WRITE half of write-audit-publish
     (:mod:`choetl_spark.refs`): partitions commit with ledger status
@@ -1938,33 +1972,29 @@ def encode_with_resume(
             hot_factor=cfg.hot_factor,
             salt_buckets=cfg.salt_buckets,
         )
-    run_seq = ledger_state(out_dir)["max_seq"] + 1  # next commit epoch
-    ledger = read_ledger(spark, out_dir)
-    already = 0
-    if ledger is not None:
-        # staged-live partitions occupy their part_id (a crashed staged
-        # run resumes without re-encoding; publish/abort settle them)
-        done = (
-            ledger.filter(F.col("status") == "done")
-            .unionByName(staged_live_rows(ledger))
-            .select("part_id")
-            .distinct()
+    state = ledger_state(out_dir)
+    run_seq = state["max_seq"] + 1  # next commit epoch
+    # done partitions, plus staged-live ones (a crashed staged run
+    # resumes without re-encoding; publish/abort settle them)
+    done_ids = set(state["part_seq"]) | {
+        r["part_id"] for rs in state["staged"].values() for r in rs
+    }
+    already, pending = 0, planned
+    if done_ids:
+        done = F.broadcast(
+            spark.createDataFrame([(p,) for p in done_ids], "part_id long")
         )
         already = (
-            planned.select("part_id")
-            .distinct()
-            .join(F.broadcast(done), "part_id", "semi")
+            planned.select("part_id").distinct().join(done, "part_id", "semi")
             .count()
         )
-        pending = planned.join(F.broadcast(done), "part_id", "left_anti")
-    else:
-        pending = planned
+        pending = planned.join(done, "part_id", "left_anti")
     # manifest sidecar BEFORE the chunk write, merged with any existing
     # manifest (:func:`merge_manifest`: widening, physical keys)
     os.makedirs(out_dir, exist_ok=True)
     new_manifest = merge_manifest(
         read_manifest(out_dir),
-        column_manifest(schema_df if schema_df is not None else df, cfg),
+        source_manifest or column_manifest(df, cfg),
     )
     write_manifest(out_dir, new_manifest)
     # encode under the PHYSICAL keys (only renamed/re-added columns
@@ -2024,34 +2054,13 @@ def encode_with_resume(
     # attempts' files (the ones whose summary rows reach the driver)
     # become visible chunk files
     summary = [r.asDict() for r in written.collect()]
-    publish_chunk_files(_chunks_dir(out_dir), summary)
-    # integrity gate BEFORE commit: each (part, column)'s chunks must
-    # tile [0, N) exactly — sum(n_rows) == max(row_start + n_rows).
-    # Catches the one silent misuse decode cannot detect: a caller-
-    # provided part_id that is not co-located under shuffle="none"
-    # (two tasks each number the part's rows from 0, so row counts
-    # stay column-consistent while cross-column row ALIGNMENT is
-    # garbage). Metadata-scale aggregate over this attempt's chunks;
-    # filtering on attempt_id keeps a prior crashed attempt's orphan
-    # chunks for the same partitions out of it.
-    bad = (
-        _read_chunks(spark, out_dir)
-        .filter(F.col("attempt_id") == attempt_id)
-        .groupBy("part_id", "column")
-        .agg(
-            F.sum("n_rows").alias("rows_sum"),
-            F.max(F.col("row_start") + F.col("n_rows")).alias("end_max"),
-        )
-        .filter(F.col("rows_sum") != F.col("end_max"))
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        r = bad[0]
+    published = publish_chunk_files(_chunks_dir(out_dir), summary)
+    bad = _tiling_violation(_chunks_dir(out_dir), published, attempt_id)
+    if bad is not None:
         raise ValueError(
-            f"partition {r['part_id']} column {r['column']!r}: chunks "
-            f"cover {r['rows_sum']} rows but positions end at "
-            f"{r['end_max']} — the partition's rows were split across "
+            f"partition {bad['part_id']} column {bad['column']!r}: chunks "
+            f"cover {bad['n_rows_sum']} rows but positions end at "
+            f"{bad['end_max']} — the partition's rows were split across "
             "tasks (caller-provided part_id with shuffle='none' must be "
             "co-located: repartition by part_id first, or use the "
             "salted shuffle mode)"

@@ -1364,11 +1364,12 @@ def read_warc(
     ships .warc.gz of HTTP ``response`` records and .wet.gz of
     ``conversion`` text records; see :mod:`choetl_spark.sources.warc_py`
     for the spec provenance and the per-record-Python justification).
-    Plan shape: the driver lists files (metadata only), one descriptor
-    row per task partition (same no-Exchange recipe as
-    ``direct._splits_dataframe``), each task streams its file through
-    the pure-Python parser and emits Arrow batches — record payloads
-    never cross the JVM boundary on the way in.
+    Plan shape: the driver lists files (metadata only) into the
+    kernel's closure, and a ``spark.range`` of file indices gives one
+    task partition per file (same no-Exchange, no-Python-RDD recipe as
+    :func:`choetl_spark.direct._splits_dataframe`); each task streams
+    its file through the pure-Python parser and emits Arrow batches —
+    record payloads never cross the JVM boundary on the way in.
 
     A file is one task (WARC's gzip-member framing supports
     member-boundary splits on a cluster reader; a sandbox file is
@@ -1410,18 +1411,14 @@ def read_warc(
                 "decompresses inside one task; raise the cap "
                 "explicitly (max_file_bytes=None) or split the input."
             )
-    rdd = spark.sparkContext.parallelize(
-        [(f,) for f in files], numSlices=len(files)
-    )
-    desc = spark.createDataFrame(rdd, "file string")
-
     def kernel(batches):
         import pyarrow as pa
 
         from choetl_spark.sources.warc_py import read_warc_file
 
         for batch in batches:
-            for fname in batch.column(0).to_pylist():
+            for i in batch.column(0).to_pylist():
+                fname = files[i]
                 rows = list(read_warc_file(fname))
                 if not rows:
                     continue
@@ -1453,6 +1450,7 @@ def read_warc(
                     ],
                 )
 
+    desc = spark.range(0, len(files), 1, len(files))
     return desc.mapInArrow(kernel, _WARC_SCHEMA_DDL)
 
 

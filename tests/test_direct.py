@@ -96,10 +96,34 @@ def test_direct_chunks_tile_partitions(spark, pages_parquet):
 
 def test_direct_plan_has_no_exchange(spark, pages_parquet):
     """The encode plan must stay shuffle-free AND single-stage per split:
-    descriptors parallelize straight into mapInArrow."""
+    a JVM Range of split indices feeds mapInArrow straight, with no
+    Python RDD (and so no second Python worker per task) in front."""
     enc = encode_parquet_direct(spark, pages_parquet)
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    assert "Range" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_direct_ingest_runs_two_spark_jobs(spark, pages_parquet, tmp_path):
+    """A scan-direct ingest into a fresh store is the source's schema
+    inference plus the write: the commit's tiling gate and the resume
+    check run on the driver, and the source schema is read once."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"direct-ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        r = encode_direct_with_resume(
+            spark, pages_parquet, str(tmp_path / "store"),
+            EncodeConfig(chunk_rows=512, chunk_bytes=2 << 20),
+            target_split_bytes=4 << 20,
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert r["partitions_encoded_this_run"] > 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_direct_resume_skips_done_splits(spark, pages_parquet, tmp_path):

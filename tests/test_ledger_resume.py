@@ -11,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from choetl_spark.engine import EncodeConfig, decode_dataframe, verify_roundtrip
-from choetl_spark.ledger import encode_with_resume, read_encoded, read_ledger
+from choetl_spark.ledger import (
+    encode_with_resume,
+    read_encoded,
+    read_ledger,
+    scan_encoded,
+)
 from choetl_spark.partitioning import plan_partitions
 from choetl_spark.synth import webpages
 
@@ -597,3 +602,54 @@ def test_encode_with_resume_store_equals_source_and_resumes(
         assert got.exceptAll(src).count() == 0
         r2 = encode_with_resume(spark, pages, out, cfg, run_id="n2")
         assert r2["partitions_encoded_this_run"] == 0
+
+
+def _plant_orphan(out, columns, part_id, row_start, n_rows):
+    """A visible chunk file a crashed attempt left behind: one chunk per
+    column for ``part_id`` under another ``attempt_id``, never
+    committed."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from choetl_spark.engine import _ENCODED_PA_SCHEMA
+
+    schema = _ENCODED_PA_SCHEMA.append(pa.field("attempt_id", pa.string()))
+    rows = [
+        {"part_id": part_id, "column": c, "chunk_seq": 0,
+         "row_start": row_start, "n_rows": n_rows, "attempt_id": "crashed"}
+        for c in columns
+    ]
+    os.makedirs(os.path.join(out, "chunks"), exist_ok=True)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema),
+        os.path.join(out, "chunks", "crashed-00000000-0.parquet"),
+    )
+
+
+def test_tiling_gate_ignores_orphan_chunks(spark, tmp_path):
+    """The commit's tiling gate folds only this attempt's chunks: a
+    crashed attempt's orphan chunks for the same part ids neither trip
+    it on a sound write nor hide a real tiling error."""
+    pages = webpages(spark, 400, partitions=4)
+    cols = pages.columns
+    # sound write: counted with the orphan, part 0 would cover 7 rows
+    # more than its positions span
+    out = str(tmp_path / "sound")
+    _plant_orphan(out, cols, part_id=0, row_start=0, n_rows=7)
+    cfg = EncodeConfig(num_partitions=2, chunk_rows=64)
+    r = encode_with_resume(spark, pages, out, cfg, run_id="r1")
+    assert r["partitions_encoded_this_run"] == 2
+    assert read_ledger(spark, out).count() == 2
+    assert scan_encoded(spark, out, columns=["url"]).count() == 400
+    # non-co-located part 0 (four tasks each number rows from 0): its
+    # chunks sum to 400 rows while positions end near 100; counted with
+    # the orphan's empty chunk at 400, sum and end would agree
+    out = str(tmp_path / "split")
+    _plant_orphan(out, cols, part_id=0, row_start=400, n_rows=0)
+    bad = pages.withColumn("part_id", F.lit(0))
+    cfg = EncodeConfig(num_partitions=4, shuffle="none", chunk_rows=64)
+    with pytest.raises(ValueError, match="co-located"):
+        encode_with_resume(spark, bad, out, cfg, run_id="r1")
+    assert read_ledger(spark, out) is None
