@@ -12,16 +12,17 @@ This module removes the boundary entirely, the way a native Spark data
 source would: the DRIVER plans row-group splits from the parquet footers
 (pure metadata, zero Spark jobs, the same planning Spark's own
 FileSourceScanExec does), ships the split list in the kernel's closure
-over a ``spark.range`` of split indices, and each Python task opens its
-split with ``pyarrow.parquet`` and feeds Arrow batches straight into the
-shared codec kernel (:func:`choetl_spark.engine._encode_block`). Data
+over a ``spark.range`` of split indices packed into tasks by Spark's
+``maxSplitBytes`` rule, and each Python task opens its splits one after
+another with ``pyarrow.parquet`` and feeds Arrow batches straight into
+the shared codec kernel (:func:`choetl_spark.engine._encode_block`). Data
 bytes cross no JVM/Python boundary on the way IN. On the way out, the
 store writes (:func:`write_parquet_direct`,
 :func:`encode_direct_with_resume`) run that kernel inside the store's
 one task-side chunk writer
 (:func:`choetl_spark.engine._make_writing_wrapper`): each task writes
-its split's chunk file with pyarrow, only a summary row reaches Spark,
-and the driver moves the successful tasks' files into place.
+one chunk file for its splits with pyarrow, only summary rows reach
+Spark, and the driver moves the successful tasks' files into place.
 :func:`encode_parquet_direct` instead returns the encoded chunk rows
 as a DataFrame, for callers that want them in Spark.
 
@@ -54,6 +55,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from choetl_spark.codecs.base import str_to_type
 from choetl_spark.engine import (
@@ -135,20 +137,58 @@ def plan_parquet_splits(
     return splits
 
 
+def _packed_range(spark: SparkSession, sizes: list[int]) -> DataFrame:
+    """Item positions as an ``id`` column, one partition per bin of
+    Spark's own file packing of items of ``sizes`` bytes: the session's
+    ``FilePartition.maxSplitBytes`` cap (``min(maxPartitionBytes,
+    max(openCost, Σ(size + openCost) /
+    minPartitionNum-or-defaultParallelism))``), then next-fit bins in
+    plan order, so an item at or over the cap is a bin of its own. Every
+    Python task pays a fixed start-up cost (PySpark's
+    ``setup_spark_files`` re-reads each zipimporter's directory, ~0.24
+    s CPU), so a task runs its bin one item after another; it streams
+    them, so the cap sets balance, not task memory. The frame is a
+    ``spark.range`` of bin ids exploded into each bin's positions (a
+    JVM Generate): no Exchange for AQE to coalesce and, unlike a Python
+    RDD, no Python worker of its own."""
+    js = spark._jsparkSession
+    conf = js.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    cores = (
+        min_parts.get() if min_parts.isDefined()
+        else js.leafNodeDefaultParallelism()
+    )
+    cap = min(
+        conf.filesMaxPartitionBytes(),
+        max(open_cost, sum(b + open_cost for b in sizes) // cores),
+    )
+    starts, filled = [], None
+    for i, b in enumerate(sizes):
+        if filled is None or filled + b > cap:
+            starts.append(i)
+            filled = 0
+        filled += b + open_cost
+    bounds = F.array(*map(F.lit, starts + [len(sizes)])).cast("array<bigint>")
+    lo, hi = F.get(bounds, F.col("id")), F.get(bounds, F.col("id") + 1)
+    return spark.range(0, len(starts), 1, max(len(starts), 1)).select(
+        F.explode(F.sequence(lo, hi - 1)).alias("id")
+    )
+
+
 def _splits_dataframe(
     spark: SparkSession, splits: list[ParquetSplit]
 ) -> DataFrame:
-    """The split descriptor frame: ``spark.range`` of the splits'
-    positions as ``part_id``, ONE split per partition; the splits
+    """The split descriptor frame: :func:`_packed_range` of the splits'
+    ``split_bytes``, positions renamed ``part_id``; the splits
     themselves ride in :func:`_make_direct_kernel`'s closure, so a
     split's position must be its ``part_id`` (true of any prefix of a
-    :func:`plan_parquet_splits` plan). A Range scan has no Exchange for
-    AQE to coalesce (it would merge every split into one task) and,
-    unlike a Python RDD, no Python worker of its own."""
+    :func:`plan_parquet_splits` plan)."""
     if any(s.part_id != i for i, s in enumerate(splits)):
         raise ValueError("split part_ids must be their plan positions")
-    n = len(splits)
-    return spark.range(0, n, 1, max(n, 1)).withColumnRenamed("id", "part_id")
+    return _packed_range(
+        spark, [s.split_bytes for s in splits]
+    ).withColumnRenamed("id", "part_id")
 
 
 def direct_manifest(
@@ -173,13 +213,14 @@ def direct_manifest(
 def _make_direct_kernel(
     cfg: EncodeConfig, manifest: dict, splits: list[ParquetSplit]
 ):
-    """Kernel over the descriptor frame's ``part_id`` rows: look the
-    split up in ``splits`` (PySpark broadcasts a pickled command over
-    1 MB, so a large plan ships once per executor), read it with
-    pyarrow, cast to the manifest storage types (what the standard
-    path's Spark Arrow conversion would have produced — timestamps to
-    the session-tz annotation, etc.), and run the shared encode
-    kernel."""
+    """Kernel over the descriptor frame's ``part_id`` rows, a task's
+    bin of split ids (:func:`_packed_range`): for each id
+    in turn, look the split up in ``splits`` (PySpark broadcasts a
+    pickled command over 1 MB, so a large plan ships once per
+    executor), read it with pyarrow, cast to the manifest storage types
+    (what the standard path's Spark Arrow conversion would have
+    produced — timestamps to the session-tz annotation, etc.), and run
+    the shared encode kernel with one trial/pin cache per split."""
     columns = list(manifest)
     target = pa.schema(
         [(c, str_to_type(m["dtype"])) for c, m in manifest.items()]
@@ -189,15 +230,12 @@ def _make_direct_kernel(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        # TASK-lifetime codec trial/pin cache, shared across this task's
-        # splits: splits are chunk-sized (one or two chunks per column),
-        # so a per-split cache would never reach the pin streak and
-        # every split would re-pay the full stats + sample-trial encode
-        # — at 400k splits per 100 TB that is pure per-split overhead
-        # for a column whose character does not change across splits.
-        trial_caches: dict[str, dict] = {}
         for batch in batches:
             for part_id in batch.column(0).to_pylist():
+                # SPLIT-lifetime trial/pin cache: a split's codecs, and
+                # so its bytes, must not depend on which splits share
+                # its task (cluster parallelism, pending set on resume)
+                trial_caches: dict[str, dict] = {}
                 split = splits[part_id]
                 pf = pq.ParquetFile(split.path)
                 row_base = {c: 0 for c in columns}
@@ -267,8 +305,8 @@ def write_parquet_direct(
     attempt_id: str | None = None,
     target_split_bytes: int = 128 << 20,
 ) -> DataFrame:
-    """Storage-to-storage encode: each task reads its split with
-    pyarrow AND writes its encoded chunk file with pyarrow — payload
+    """Storage-to-storage encode: each task reads its splits with
+    pyarrow AND writes their encoded chunk file with pyarrow — payload
     bytes never cross the JVM/Python boundary in either direction. Runs
     the write, publishes the tasks' files
     (:func:`choetl_spark.engine.publish_chunk_files`) and returns the

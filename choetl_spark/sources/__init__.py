@@ -1365,18 +1365,20 @@ def read_warc(
     ``conversion`` text records; see :mod:`choetl_spark.sources.warc_py`
     for the spec provenance and the per-record-Python justification).
     Plan shape: the driver lists files (metadata only) into the
-    kernel's closure, and a ``spark.range`` of file indices gives one
-    task partition per file (same no-Exchange, no-Python-RDD recipe as
-    :func:`choetl_spark.direct._splits_dataframe`); each task streams
-    its file through the pure-Python parser and emits Arrow batches —
-    record payloads never cross the JVM boundary on the way in.
+    kernel's closure, and a ``spark.range`` of file indices is packed
+    into tasks by the files' on-disk sizes with Spark's own
+    ``maxSplitBytes`` rule (:func:`choetl_spark.direct._packed_range`,
+    the scan-direct recipe: no Exchange, no Python RDD); each task
+    streams its files one after another through the pure-Python parser
+    and emits Arrow batches — record payloads never cross the JVM
+    boundary on the way in.
 
-    A file is one task (WARC's gzip-member framing supports
+    A file is never split (WARC's gzip-member framing supports
     member-boundary splits on a cluster reader; a sandbox file is
     already task-sized). ``max_file_bytes`` guards task memory the same
-    way the wholetext formats do: a crawl file decompresses fully in
-    one task, so reject files whose COMPRESSED size already exceeds the
-    cap instead of OOMing mid-job; pass None to opt out.
+    way the wholetext formats do: a crawl file decompresses fully
+    inside its task, so reject files whose COMPRESSED size already
+    exceeds the cap instead of OOMing mid-job; pass None to opt out.
     """
     import glob as _glob
     import os as _os
@@ -1450,7 +1452,9 @@ def read_warc(
                     ],
                 )
 
-    desc = spark.range(0, len(files), 1, len(files))
+    from choetl_spark.direct import _packed_range
+
+    desc = _packed_range(spark, [_os.path.getsize(f) for f in files])
     return desc.mapInArrow(kernel, _WARC_SCHEMA_DDL)
 
 
