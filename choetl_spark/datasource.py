@@ -154,6 +154,7 @@ from choetl_spark.engine import (
 from choetl_spark.deletes import delete_positions
 from choetl_spark.eqdeletes import eq_value_maps
 from choetl_spark.ledger import (
+    _attempt_ok,
     _chunks_dir,
     _ledger_table,
     append_ledger_rows,
@@ -425,11 +426,6 @@ def chunk_rows(
                 )
             )
     return pa.concat_tables(pieces) if pieces else schema.empty_table()
-
-
-def _attempt_ok(row_att: str | None, committed) -> bool:
-    # the _commit_join leniency: null on either side matches
-    return row_att is None or None in committed or row_att in committed
 
 
 def _bloom_kept(

@@ -11,23 +11,24 @@ to a ledger table, and a restarted job left-anti-joins its partition plan
 against the ledger so completed partitions are never re-encoded.
 
 Crash safety: chunk files and ledger rows are appended in that order, so
-a crash between them leaves orphan chunks. Readers therefore go through
-:func:`read_encoded`, which semi-joins chunks against the ledger — the
-ledger is the commit record, orphan chunks are invisible and get
+a crash between them leaves orphan chunks. The ledger is the commit
+record, and one resolver reads it: :func:`ledger_state` (pyarrow, on the
+driver) names the visible commits, and every reader, the metadata tables
+and vacuum take visibility from it. Orphan chunks are invisible and get
 re-encoded (idempotent, since partition ids and intra-partition order are
 data-derived and deterministic). The commit key is
 ``(part_id, attempt_id)`` — every encode attempt stamps a fresh unique
 ``attempt_id`` on the chunk rows it writes and on the ledger rows it
 appends — so when a crashed attempt's orphan chunks share a ``part_id``
 with the successful re-encode, only the committed attempt's copy is ever
-visible (a part_id-only join would resurface the orphans as duplicate
+visible (a part_id-only match would resurface the orphans as duplicate
 rows the moment the partition commits). Chunks/ledger rows from stores
-written before ``attempt_id`` existed read as null and join leniently.
+written before ``attempt_id`` existed read as null and match leniently
+(:func:`_attempt_ok`).
 
 Storage is a parquet directory per table (append = new files), which is
 exactly the commit model an Iceberg catalog would make transactional on a
-real cluster; the layout and join logic are Iceberg-ready (swap
-``spark.read.parquet``/``append`` for ``spark.table``/``writeTo``).
+real cluster.
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import json
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from choetl_spark.engine import (
@@ -200,27 +203,29 @@ def summary_ledger_rows(
     ]
 
 
+def _rows_table(rows: list[tuple], ddl: str) -> pa.Table:
+    """``rows`` as an Arrow table of the ``long`` / ``string`` columns
+    ``ddl`` names, in order."""
+    types = {"long": pa.int64(), "string": pa.string()}
+    return pa.table(
+        {
+            name: pa.array([r[i] for r in rows], types[t])
+            for i, (name, t) in enumerate(f.split() for f in ddl.split(","))
+        }
+    )
+
+
 def append_ledger_rows(out_dir: str, rows: list[tuple]) -> None:
     """Append one commit's ledger rows (``LEDGER_SCHEMA_DDL`` order) as
     ONE ledger file, written with pyarrow on the driver under a hidden
     name and renamed into place — the commit point of a write: readers
     see all of its rows or none."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    types = {"long": pa.int64(), "string": pa.string()}
-    table = pa.table(
-        {
-            name: pa.array([r[i] for r in rows], types[t])
-            for i, (name, t) in enumerate(
-                f.split() for f in LEDGER_SCHEMA_DDL.split(",")
-            )
-        }
-    )
     d = _ledger_dir(out_dir)
     os.makedirs(d, exist_ok=True)
     name = f"{uuid.uuid4().hex}.parquet"
-    pq.write_table(table, os.path.join(d, f".tmp-{name}"))
+    pq.write_table(
+        _rows_table(rows, LEDGER_SCHEMA_DDL), os.path.join(d, f".tmp-{name}")
+    )
     os.replace(os.path.join(d, f".tmp-{name}"), os.path.join(d, name))
 
 
@@ -259,9 +264,6 @@ def _read_parquet_dir(
     pyarrow analog of ``mergeSchema`` — stores resumed across engine
     upgrades mix footers with/without newer columns). ``None`` only
     when ``d`` holds no ``*.parquet``; an unreadable file raises."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if not paths:
         return None
@@ -282,16 +284,13 @@ def _ledger_table(out_dir: str) -> pa.Table | None:
     """Every ledger row with every ``LEDGER_SCHEMA_DDL`` column, read
     with pyarrow; columns older ledger files lack read as null (a null
     ``run_seq`` is epoch 1, the pre-snapshot store)."""
-    import pyarrow as pa
-
     t = _read_parquet_dir(_ledger_dir(out_dir), _LEDGER_COLS)
     if t is None:
         return None
-    types = {"long": pa.int64(), "string": pa.string()}
-    for f in LEDGER_SCHEMA_DDL.split(","):
-        name, typ = f.split()
-        if name not in t.column_names:
-            t = t.append_column(name, pa.nulls(t.num_rows, types[typ]))
+    empty = _rows_table([], LEDGER_SCHEMA_DDL)
+    for f in empty.schema:
+        if f.name not in t.column_names:
+            t = t.append_column(f.name, pa.nulls(t.num_rows, f.type))
     return t.select(_LEDGER_COLS)
 
 
@@ -309,6 +308,9 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     - ``live_rows``: ``{part_id: n_rows}`` of the same partitions;
     - ``codec_maps``: ``{part_id: codec_map JSON}`` of the same
       partitions (the physical columns each one stores);
+    - ``done``: ``{part_id: {attempt_id, ...}}`` of every ``"done"``
+      commit, retired partitions included (what time travel and
+      maintenance may still reach);
     - ``retired``: the ids of partitions retired by a rewrite;
     - ``part_seq``: ``{part_id: first done epoch}``;
     - ``has_done``: any ``"done"`` row at all;
@@ -327,6 +329,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     t = _ledger_table(out_dir)
     state = {
         "live": {},
+        "done": {},
         "live_rows": {},
         "codec_maps": {},
         "retired": set(),
@@ -355,7 +358,7 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
         )
     )
     lim = int(as_of) if as_of is not None else None
-    done: dict[int, set] = {}
+    done = state["done"]
     n_rows: dict[int, int] = {}
     cmaps: dict[int, str | None] = {}
     staged, dead = [], set()
@@ -403,6 +406,40 @@ def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
     return state
 
 
+def _attempt_ok(row_att: str | None, committed) -> bool:
+    """The commit-key rule: a chunk row stamped ``row_att`` belongs to a
+    partition committed under the attempt ids ``committed`` when they
+    match. Null on either side matches (stores written before
+    ``attempt_id`` existed); two ids must be equal, which keeps a
+    crashed attempt's orphan chunks invisible once the same partition
+    commits under another attempt."""
+    return row_att is None or None in committed or row_att in committed
+
+
+def _staged_keys(
+    state: dict, run_id: str | None = None, base: dict | None = None
+) -> dict[int, set]:
+    """``base`` (a copy; ``{part_id: {attempt_id, ...}}``, the ``live``
+    shape) plus the commit keys of the write-audit-publish rows still
+    staged in ``state`` (every run's, or ``run_id``'s)."""
+    keys = {p: set(a) for p, a in (base or {}).items()}
+    for rid, rows in state["staged"].items():
+        if run_id in (None, rid):
+            for r in rows:
+                keys.setdefault(r["part_id"], set()).add(r["attempt_id"])
+    return keys
+
+
+def _ledger_rows(out_dir: str) -> list[dict]:
+    """Every ledger row as a dict, a null ``run_seq`` read as epoch 1."""
+    t = _ledger_table(out_dir)
+    rows = [] if t is None else t.to_pylist()
+    for r in rows:
+        if r["run_seq"] is None:
+            r["run_seq"] = 1
+    return rows
+
+
 def manifest_as_of(manifest: dict | None, as_of: int | None) -> dict | None:
     """The manifest view an ``as_of`` reader resolves display names
     against — the Iceberg snapshots-pin-their-schema contract.
@@ -426,7 +463,7 @@ def manifest_as_of(manifest: dict | None, as_of: int | None) -> dict | None:
     view: dict = {c: dict(m) for c, m in snap["columns"].items()}
     # chunks stored under physical keys outside this epoch's schema
     # (columns added / renamed-in / re-added later) mask exactly like
-    # dropped ones; the as_of ledger semi-join already hides their
+    # dropped ones; the as_of commit filter already hides their
     # partitions — this keeps the remap total as defense in depth
     live_phys = {physical_name(m, c) for c, m in view.items()}
     masked = [
@@ -531,17 +568,12 @@ def _chunks_signature(out_dir: str) -> tuple | None:
     return tuple(sig)
 
 
-# {(app_id, abs out_dir): (signature, ledger DataFrame)} — a Spark
-# parquet DataFrame pins the file listing taken at read() time, so a
-# cached frame is exactly "the snapshot the signature names"; any new
-# commit changes the signature and falls through to a fresh read.
-_LEDGER_DF_CACHE: dict[tuple, tuple] = {}
 # {(app_id, abs out_dir, as_of, flags): ((ledger_sig, chunks_sig), df)}
 # — the committed-chunk PLAN per visible snapshot. Building it costs
 # ~0.3-0.5 s of driver Py4J round trips (a footer-merging parquet read
-# + ledger semi-join + display remap) with zero Spark jobs; interactive
-# scans (point lookups) pay that per query without this. One entry per
-# (snapshot, read-flags) variant — bounded by the store's epoch count.
+# + commit-key semi-join + display remap); interactive scans pay that
+# per query without this. One entry per (snapshot, read-flags)
+# variant — bounded by the store's epoch count.
 _ENCODED_DF_CACHE: dict[tuple, tuple] = {}
 
 
@@ -549,86 +581,35 @@ def _cache_key(spark: SparkSession, out_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, os.path.abspath(out_dir))
 
 
-def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The ledger as a Spark frame, for joins against chunk and
-    tombstone frames (every other commit-state question goes to
-    :func:`ledger_state`). ``None`` only when ``_ledger/`` holds no
-    ``*.parquet`` — the rule :func:`ledger_state` uses; an unreadable
-    ledger file raises rather than reading as an empty store."""
-    path = _ledger_dir(out_dir)
-    if not glob.glob(os.path.join(path, "*.parquet")):
-        return None
-    sig = _ledger_signature(out_dir)
-    key = _cache_key(spark, out_dir)
-    if sig is not None:
-        hit = _LEDGER_DF_CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    # mergeSchema: ledger files are tiny and a store resumed across
-    # engine upgrades may mix footers with/without newer columns
-    ledger = spark.read.option("mergeSchema", "true").parquet(path)
-    if "run_seq" not in ledger.columns:  # pre-snapshot stores: one epoch
-        ledger = ledger.withColumn("run_seq", F.lit(1))
-    else:
-        # a pre-snapshot store resumed after the upgrade: old ledger
-        # files lack the column, parquet schema union reads them as null
-        ledger = ledger.withColumn(
-            "run_seq", F.coalesce(F.col("run_seq"), F.lit(1)).cast("long")
-        )
-    if sig is not None:
-        _LEDGER_DF_CACHE[key] = (sig, ledger)
-    return ledger
-
-
-def _read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
+def _read_chunks(
+    spark: SparkSession, out_dir: str, live: dict | None = None
+) -> DataFrame:
+    """The chunk table as a Spark frame; with ``live`` (``{part_id:
+    {attempt_id, ...}}``, :func:`ledger_state`'s shape) only the chunk
+    rows whose commit key it names (:func:`_attempt_ok`'s rule). The
+    keys are a broadcast local relation built from an Arrow table, so
+    the filter starts no Python worker and plans no job."""
     # mergeSchema: a store resumed across engine upgrades may mix chunk
     # files with/without the attempt_id column
-    return spark.read.option("mergeSchema", "true").parquet(
+    chunks = spark.read.option("mergeSchema", "true").parquet(
         _chunks_dir(out_dir)
     )
-
-
-def staged_live_rows(ledger: DataFrame, run_id: str | None = None) -> DataFrame:
-    """Ledger rows staged by a write-audit-publish run and still awaiting
-    its verdict: status "staged" minus commit keys that were aborted and
-    minus keys already re-committed as "done" (a published stage must not
-    read twice). See :mod:`choetl_spark.refs` for the WAP flow."""
-    staged = ledger.filter(F.col("status") == "staged")
-    if run_id is not None:
-        staged = staged.filter(F.col("run_id") == run_id)
-    dead = ledger.filter(F.col("status").isin("aborted", "done")).select(
-        "part_id", "attempt_id"
-    )
-    return staged.join(
-        F.broadcast(dead.distinct()), ["part_id", "attempt_id"], "left_anti"
-    )
-
-
-def _commit_join(chunks: DataFrame, done: DataFrame, how: str) -> DataFrame:
-    """Join chunk rows against committed ledger rows on the commit key
-    ``(part_id, attempt_id)``.
-
-    Lenient on nulls (legacy stores predating attempt_id on either
-    side); strict when both sides carry one — that strictness is what
-    keeps a crashed attempt's orphan chunks invisible after the same
-    partition commits under a different attempt (otherwise every row
-    would decode twice). ``how`` is "semi" (readers) or "left"
-    (maintenance, marking)."""
-    commits = done.select(
-        F.col("part_id").alias("_c_part"),
-        (
-            F.col("attempt_id") if "attempt_id" in done.columns
-            else F.lit(None).cast("string")
-        ).alias("_c_att"),
-    ).distinct()
+    if live is None:
+        return chunks
     if "attempt_id" not in chunks.columns:
         chunks = chunks.withColumn("attempt_id", F.lit(None).cast("string"))
+    keys = spark.createDataFrame(
+        _rows_table(
+            [(p, a) for p, atts in live.items() for a in atts],
+            "_c_part long, _c_att string",
+        )
+    )
     cond = (F.col("part_id") == F.col("_c_part")) & (
         F.col("attempt_id").isNull()
         | F.col("_c_att").isNull()
         | (F.col("attempt_id") == F.col("_c_att"))
     )
-    return chunks.join(F.broadcast(commits), cond, how)
+    return chunks.join(F.broadcast(keys), cond, "left_semi")
 
 
 def read_encoded(
@@ -640,9 +621,10 @@ def read_encoded(
     ref: str | None = None,
     raw_columns: bool = False,
 ) -> DataFrame:
-    """Committed chunks only (semi-join against the ledger on the
-    ``(part_id, attempt_id)`` commit key — see the module docstring for
-    why part_id alone would duplicate rows after a crash-resume).
+    """Committed chunks only: the chunk rows whose ``(part_id,
+    attempt_id)`` commit key :func:`ledger_state` resolves as visible
+    (see the module docstring for why part_id alone would duplicate rows
+    after a crash-resume).
 
     The chunk table as a Spark frame: chunk metadata and payloads, with
     NO deletes applied — for chunk-level work (stats rollups, file
@@ -671,13 +653,14 @@ def read_encoded(
     ``ref`` reads the snapshot a named tag/branch points at.
 
     Plan caching: repeat calls for the SAME unchanged snapshot return
-    the SAME DataFrame object (the plan build is driver-side file-stat
-    + join construction; caching it keeps interactive/point-lookup
-    paths at zero Spark jobs). Callers must treat the returned frame
-    as shared and immutable: do not ``persist()``/``unpersist()``/
-    ``checkpoint()`` it — those mutate state on the object and would
-    leak across unrelated callers. Derive and cache your own
-    ``df.alias(...)`` if you need stateful handling.
+    the SAME DataFrame object (the plan build is driver-side file-stat,
+    ledger read and join construction, plus the chunk table's schema
+    merge; caching it keeps repeat calls at zero Spark jobs). Callers
+    must treat the returned frame as shared and immutable: do not
+    ``persist()``/``unpersist()``/``checkpoint()`` it — those mutate
+    state on the object and would leak across unrelated callers.
+    Derive and cache your own ``df.alias(...)`` if you need stateful
+    handling.
 
     Chunk ``column`` values are translated from physical storage keys to
     the manifest's current DISPLAY names (schema-evolution renames,
@@ -706,25 +689,11 @@ def read_encoded(
         hit = _ENCODED_DF_CACHE.get(cache_key)
         if hit is not None and hit[0] == (lsig, csig, msig):
             return hit[1]
-    chunks = _read_chunks(spark, out_dir)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        return chunks.limit(0)
-    done = ledger.filter(F.col("status") == "done")
-    if as_of is not None:
-        done = done.filter(F.col("run_seq") <= int(as_of))
+    state = ledger_state(out_dir, as_of)
+    keys = state["done"] if include_retired else state["live"]
     if include_staged:
-        done = done.unionByName(staged_live_rows(ledger))
-    if not include_retired:
-        retired = ledger.filter(F.col("status") == "retired")
-        if as_of is not None:
-            retired = retired.filter(F.col("run_seq") <= int(as_of))
-        done = done.join(
-            F.broadcast(retired.select("part_id").distinct()),
-            "part_id",
-            "left_anti",
-        )
-    out = _commit_join(chunks, done, "semi")
+        keys = _staged_keys(state, base=keys)
+    out = _read_chunks(spark, out_dir, keys)
     if not raw_columns:
         # as_of readers resolve display names against the SNAPSHOT's
         # schema (manifest_as_of)
@@ -753,79 +722,56 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     (a row-level tombstone commit; ``n_rows`` = rows deleted,
     ``n_partitions`` 0 since no partition was written). Pass a
     ``run_seq`` to
-    ``read_encoded``/``scan_encoded`` ``as_of=`` for time travel."""
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        return spark.createDataFrame(
-            [],
-            "run_seq long, run_id string, operation string,"
-            " n_partitions long, n_rows long,"
-            " raw_bytes long, encoded_bytes long",
-        )
+    ``read_encoded``/``scan_encoded`` ``as_of=`` for time travel.
+    Folded from the ledger rows on the driver: the frame is a local
+    relation, and collecting it runs no Spark job."""
+    rows = _ledger_rows(out_dir)
     # an epoch that both commits new partitions AND retires old ones is
     # an atomic replace snapshot (overwrite / rewrite_partitions /
     # rollback-with-rewrite) — Iceberg's "replace" operation; a pure
     # ingest epoch is "append"
-    retire_seqs = (
-        ledger.filter(F.col("status") == "retired")
-        .select("run_seq")
-        .distinct()
-        .withColumn("has_retire", F.lit(True))
-    )
-    base = (
-        ledger.filter(F.col("status").isin("done", "delete", "eqdelete"))
-        .groupBy("run_seq", "run_id", "status")
-        .agg(
-            F.count("*").alias("n_parts_raw"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-        )
-        .join(F.broadcast(retire_seqs), "run_seq", "left")
-        .select(
-            "run_seq",
-            "run_id",
-            F.when(
-                (F.col("status") == "done")
-                & F.coalesce(F.col("has_retire"), F.lit(False)),
-                F.lit("replace"),
+    retire_seqs = {r["run_seq"] for r in rows if r["status"] == "retired"}
+    ops = {"done": "append", "delete": "delete", "eqdelete": "eqdelete"}
+    epochs: dict[tuple, list] = {}
+    for r in rows:
+        if r["status"] in ops:
+            e = epochs.setdefault(
+                (r["run_seq"], r["run_id"], r["status"]), [0, None, None, None]
             )
-            .when(F.col("status") == "done", F.lit("append"))
-            .when(F.col("status") == "delete", F.lit("delete"))
-            .otherwise(F.lit("eqdelete"))
-            .alias("operation"),
-            F.when(F.col("status") == "done", F.col("n_parts_raw"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_partitions"),
-            "n_rows",
-            "raw_bytes",
-            "encoded_bytes",
+            e[0] += 1
+            # Spark's sum: nulls are skipped, and all-null stays null
+            for k, c in enumerate(("n_rows", "raw_bytes", "encoded_bytes"), 1):
+                if r[c] is not None:
+                    e[k] = (e[k] or 0) + r[c]
+    out = [
+        (
+            seq, rid,
+            "replace" if st == "done" and seq in retire_seqs else ops[st],
+            n if st == "done" else 0, *sums,
         )
-    )
+        for (seq, rid, st), (n, *sums) in epochs.items()
+    ]
     # epochs holding ONLY "retired" rows (a metadata-only rollback) have
     # no done/delete row to surface them above — list them as "replace"
     # so the snapshot history shows where the table state changed
-    retire_only = (
-        ledger.filter(F.col("status") == "retired")
-        .join(
-            F.broadcast(base.select("run_seq").distinct()),
-            "run_seq",
-            "left_anti",
-        )
-        .groupBy("run_seq", "run_id")
-        .agg(F.count("*").alias("n_retired"))
-        .select(
-            "run_seq",
-            "run_id",
-            F.lit("replace").alias("operation"),
-            F.lit(0).cast("long").alias("n_partitions"),
-            F.lit(0).cast("long").alias("n_rows"),
-            F.lit(0).cast("long").alias("raw_bytes"),
-            F.lit(0).cast("long").alias("encoded_bytes"),
+    seen = {seq for seq, _, _ in epochs}
+    out += [
+        (seq, rid, "replace", 0, 0, 0, 0)
+        for seq, rid in {
+            (r["run_seq"], r["run_id"])
+            for r in rows
+            if r["status"] == "retired" and r["run_seq"] not in seen
+        }
+    ]
+    out.sort(key=lambda e: (e[0], e[1] or "", e[2]))
+    return spark.createDataFrame(
+        _rows_table(
+            out,
+            "run_seq long, run_id string, operation string,"
+            " n_partitions long, n_rows long,"
+            " raw_bytes long, encoded_bytes long",
         )
     )
-    return base.unionByName(retire_only).orderBy("run_seq")
 
 
 def vacuum(
@@ -833,9 +779,9 @@ def vacuum(
 ) -> dict:
     """Delete orphaned chunk FILES — files whose partitions never got a
     ledger commit row (a crashed run's leftovers). Readers already
-    ignore them (``read_encoded`` semi-joins the ledger), so vacuum is
-    pure storage reclamation, the ``remove_orphan_files`` action of an
-    Iceberg catalog.
+    ignore them (every reader takes commit keys from
+    :func:`ledger_state`), so vacuum is pure storage reclamation, the
+    ``remove_orphan_files`` action of an Iceberg catalog.
 
     File-granular and safe by construction: every chunk file is written
     by exactly one run, so a file either had ALL its partitions
@@ -845,8 +791,8 @@ def vacuum(
     tests/offline maintenance. No ledger at all = no commit record to
     judge against (a first run may be mid-flight) -> no-op.
 
-    The Spark pass is metadata-scale (distinct (file, part_id) pairs);
-    only the orphan FILE LIST reaches the driver.
+    Runs on the driver with pyarrow (:func:`_orphan_chunk_files` reads
+    two metadata columns per chunk file) and starts no Spark job.
     """
     import time
 
@@ -857,7 +803,7 @@ def vacuum(
     # writer tasks (the chunk writer, engine._make_writing_wrapper,
     # writes them; the driver renames only the successful attempts'
     # files into place): invisible to every parquet reader, so the
-    # Spark orphan pass never lists them. Swept FIRST and
+    # orphan pass never lists them. Swept FIRST and
     # unconditionally — it is a pure driver-side listdir needing no
     # ledger, so crashed staging files in a never-committed store (no
     # ledger yet) or behind a failing orphan listing still get
@@ -880,7 +826,7 @@ def vacuum(
         removed += 1
         reclaimed += size
     try:
-        orphans = _orphan_chunk_files(spark, out_dir)
+        orphans = _orphan_chunk_files(out_dir)
     except Exception:
         orphans = None  # unreadable store: keep the staging sweep's work
     for path in orphans or []:
@@ -896,42 +842,39 @@ def vacuum(
     return {"files_removed": removed, "bytes_reclaimed": reclaimed}
 
 
-def _orphan_chunk_files(spark: SparkSession, out_dir: str) -> list | None:
-    """Chunk FILES with no committed ``(part_id, attempt_id)`` — a
-    crashed or still-in-flight run's leftovers. ``None`` when there is
-    no ledger (no commit record to judge against). Local paths.
+def _orphan_chunk_files(out_dir: str) -> list | None:
+    """Chunk FILES none of whose rows carries a committed ``(part_id,
+    attempt_id)`` — a crashed or still-in-flight run's leftovers, or an
+    aborted stage's. ``None`` when there is no ledger (no commit record
+    to judge against). Local paths.
 
-    Metadata-scale Spark pass (distinct (file, commit-key) tuples);
-    only the file list reaches the driver."""
-    chunks = _read_chunks(spark, out_dir)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    Committed means a ``"done"`` commit (retired ones too: time travel
+    still reads them) or a stage awaiting its audit; an ABORTED stage
+    drops out, so its files become orphans here — that is how vacuum
+    reclaims a failed audit's bytes. One ledger read, then a pyarrow
+    pass over each chunk file's ``part_id`` and ``attempt_id``."""
+    if not glob.glob(os.path.join(_ledger_dir(out_dir), "*.parquet")):
         return None
-    # staged-but-unpublished WAP partitions are committed (their audit is
-    # pending, not their write); ABORTED stages drop out of the live set,
-    # so their files become orphans here — that is how vacuum reclaims a
-    # failed audit's bytes
-    done = ledger.filter(F.col("status") == "done").unionByName(
-        staged_live_rows(ledger)
-    )
-    pairs = chunks.select(
-        F.col("_metadata.file_path").alias("file"),
-        "part_id",
-        *(["attempt_id"] if "attempt_id" in chunks.columns else []),
-    ).distinct()
-    per_file = (
-        _commit_join(pairs, done, "left")
-        .groupBy("file")
-        .agg(
-            F.max(
-                F.when(F.col("_c_part").isNotNull(), 1).otherwise(0)
-            ).alias("any_committed")
+    state = ledger_state(out_dir)
+    committed = _staged_keys(state, base=state["done"])
+    orphans = []
+    files = glob.glob(os.path.join(_chunks_dir(out_dir), "*.parquet"))
+    for path in sorted(files):
+        pf = pq.ParquetFile(path)
+        names = pf.schema_arrow.names
+        cols = [c for c in ("part_id", "attempt_id") if c in names]
+        t = pf.read(columns=cols)
+        atts = (
+            t.column("attempt_id").to_pylist()
+            if "attempt_id" in cols else [None] * t.num_rows
         )
-    )
-    return [
-        r["file"].removeprefix("file://").removeprefix("file:")
-        for r in per_file.filter(F.col("any_committed") == 0).collect()
-    ]
+        # a zero-row file holds no commit key to judge: it is kept
+        if t.num_rows and not any(
+            p in committed and _attempt_ok(a, committed[p])
+            for p, a in zip(t.column("part_id").to_pylist(), atts)
+        ):
+            orphans.append(path)
+    return orphans
 
 
 def scan_encoded(
@@ -1169,57 +1112,37 @@ def store_partitions(
     ``live_rows`` is what a scan would return. The operational surface
     for skew checks ('is a partition oversized?'), delete-debt triage
     ('which partitions want rewrite_partitions?'), and storage
-    accounting — all driver-light, O(partitions) metadata."""
-    resolve_snapshot(out_dir, as_of)
+    accounting — folded from the ledger rows on the driver, a local
+    relation ordered by ``part_id``."""
+    as_of = resolve_snapshot(out_dir, as_of)
     from choetl_spark.deletes import deleted_counts
 
-    empty_ddl = (
-        "part_id long, run_seq long, n_rows long, n_chunks long, "
-        "n_columns long, raw_bytes long, encoded_bytes long, "
-        "n_deleted long, live_rows long"
-    )
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        return spark.createDataFrame([], empty_ddl)
-    done = ledger.filter(F.col("status") == "done")
-    retired = ledger.filter(F.col("status") == "retired")
-    if as_of is not None:
-        done = done.filter(F.col("run_seq") <= int(as_of))
-        retired = retired.filter(F.col("run_seq") <= int(as_of))
-    live = done.join(
-        F.broadcast(retired.select("part_id").distinct()),
-        "part_id",
-        "left_anti",
-    )
-    cmap = F.from_json(
-        "codec_map", "array<struct<column string, codec string>>"
-    )
-    live = live.select(
-        "part_id",
-        "run_seq",
-        "n_rows",
-        "n_chunks",
-        F.size(
-            F.array_distinct(F.transform(cmap, lambda x: x["column"]))
-        ).cast("long").alias("n_columns"),
-        "raw_bytes",
-        "encoded_bytes",
-    )
+    rows = [
+        r for r in _ledger_rows(out_dir)
+        if as_of is None or r["run_seq"] <= as_of
+    ]
+    retired = {r["part_id"] for r in rows if r["status"] == "retired"}
     counts = deleted_counts(spark, out_dir, as_of)
-    if counts:
-        dels = spark.createDataFrame(
-            sorted(counts.items()), "part_id long, n_deleted long"
+    out = []
+    for r in rows:
+        if r["status"] != "done" or r["part_id"] in retired:
+            continue
+        n_del = counts.get(r["part_id"], 0)
+        cmap = r["codec_map"]
+        out.append((
+            r["part_id"], r["run_seq"], r["n_rows"], r["n_chunks"],
+            len({c["column"] for c in json.loads(cmap)}) if cmap else None,
+            r["raw_bytes"], r["encoded_bytes"], n_del,
+            None if r["n_rows"] is None else r["n_rows"] - n_del,
+        ))
+    out.sort(key=lambda p: p[0])
+    return spark.createDataFrame(
+        _rows_table(
+            out,
+            "part_id long, run_seq long, n_rows long, n_chunks long, "
+            "n_columns long, raw_bytes long, encoded_bytes long, "
+            "n_deleted long, live_rows long",
         )
-        live = live.join(F.broadcast(dels), "part_id", "left")
-    else:
-        live = live.withColumn("n_deleted", F.lit(None).cast("long"))
-    return live.select(
-        "part_id", "run_seq", "n_rows", "n_chunks", "n_columns",
-        "raw_bytes", "encoded_bytes",
-        F.coalesce("n_deleted", F.lit(0)).cast("long").alias("n_deleted"),
-        (F.col("n_rows") - F.coalesce("n_deleted", F.lit(0)))
-        .cast("long")
-        .alias("live_rows"),
     )
 
 
@@ -1406,8 +1329,6 @@ def agg_encoded(
     from choetl_spark.codecs.base import str_to_type
     from choetl_spark.datasource import load_store
     from choetl_spark.deletes import deletes_changed
-
-    import pyarrow as pa
 
     # snapshot-scoped schema: column names resolve against the
     # epoch's schema under as_of (manifest_as_of)
@@ -1667,7 +1588,7 @@ def compact_store(
 
     if not ledger_state(out_dir)["has_done"]:
         # no commit record yet: a first run may be mid-flight and its
-        # chunks (all "orphan" by the semi-join) must not be rewritten
+        # chunks (all "orphan": nothing commits them) must not be rewritten
         # away — same guard as vacuum()
         return {"files_before": 0, "files_after": 0}
     # include_retired: a rewritten-away partition's chunks are still
@@ -1809,7 +1730,7 @@ def _swap_chunk_table(
     cutoff = time.time() - grace_sec
     young_orphans = [
         p
-        for p in (_orphan_chunk_files(spark, out_dir) or [])
+        for p in (_orphan_chunk_files(out_dir) or [])
         if os.path.exists(p) and os.path.getmtime(p) > cutoff
     ]
     snapshot_files = set(os.listdir(chunks_dir))
@@ -1860,9 +1781,7 @@ def _tiling_violation(
     shuffle="none" (tasks each number the part's rows from 0, so row
     ALIGNMENT across columns is garbage). Returns the first violating
     ``part_id, column, n_rows_sum, end_max`` group, or ``None``."""
-    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     if not files:
         return None

@@ -185,21 +185,18 @@ def read_staged(
     readers never see these rows; this is the only door in."""
     from choetl_spark.engine import decode_dataframe
     from choetl_spark.ledger import (
-        _commit_join,
         _display_remap,
         _read_chunks,
-        read_ledger,
+        _staged_keys,
+        ledger_state,
         read_manifest,
-        staged_live_rows,
     )
 
-    ledger = read_ledger(spark, out_dir)
-    chunks = _read_chunks(spark, out_dir)
-    if ledger is None:
-        return chunks.limit(0)
-    staged = staged_live_rows(ledger, run_id)
+    # no ledger (a first staged run that crashed before its commit)
+    # stages nothing: the frame is empty, in the store's row schema
+    keys = _staged_keys(ledger_state(out_dir), run_id)
     manifest = read_manifest(out_dir)
-    enc = _display_remap(_commit_join(chunks, staged, "semi"), manifest)
+    enc = _display_remap(_read_chunks(spark, out_dir, keys), manifest)
     return decode_dataframe(enc, columns=columns, manifest=manifest)
 
 

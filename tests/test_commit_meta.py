@@ -1,8 +1,6 @@
-"""Driver-side commit state (``ledger.ledger_state``, read with pyarrow)
-and the cached ``read_ledger`` frame: the per-scan metadata questions
-cost zero Spark jobs, and any commit is visible to the next call
-(the cached frame is keyed on the ledger directory listing — the
-Iceberg metadata.json-pointer analog)."""
+"""Driver-side commit state (``ledger.ledger_state``, read with pyarrow):
+the per-scan metadata questions cost zero Spark jobs, and any commit is
+visible to the next call."""
 
 from __future__ import annotations
 
@@ -11,7 +9,6 @@ from choetl_spark.engine import EncodeConfig
 from choetl_spark.ledger import (
     encode_with_resume,
     ledger_state,
-    read_ledger,
     scan_encoded,
 )
 from choetl_spark.synth import webpages
@@ -39,15 +36,11 @@ def test_ledger_state_tracks_commits_without_spark_jobs(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("ledger-state-jobs") == []
     assert s1["has_done"] and len(s1["live"]) == 3
     assert s1["delete_seqs"] == [] and s1["eq_commits"] == []
-    # the cached ledger DataFrame is reused
-    led1 = read_ledger(spark, out)
-    assert read_ledger(spark, out) is led1
 
-    # a delete COMMIT is in the next state, and invalidates the cache
+    # a delete COMMIT is in the next state
     target = pages.select("url").limit(1).collect()[0][0]
     info = delete_where(spark, out, equals={"url": target})
     assert ledger_state(out)["delete_seqs"] == [info["run_seq"]]
-    assert read_ledger(spark, out) is not led1
 
     # the new snapshot is what readers see
     assert scan_encoded(spark, out, ["url"]).filter(

@@ -408,7 +408,7 @@ def test_upsert_commits_one_atomic_epoch(spark, store):
     ingest's done rows share ONE run_seq (single ledger append), so no
     as_of epoch — and no concurrent-reader window — exists where
     matched keys have neither their old nor their new row."""
-    from choetl_spark.ledger import read_ledger
+    from choetl_spark.ledger import _ledger_table
 
     out, pages = store
     old = {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
@@ -420,20 +420,13 @@ def test_upsert_commits_one_atomic_epoch(spark, store):
     res = upsert(spark, out, updates, "url", EncodeConfig(num_partitions=4))
     assert res["rows_deleted"] == len(some)
 
-    led = read_ledger(spark, out)
-    del_seqs = [
-        r["run_seq"]
-        for r in led.filter(F.col("status") == "delete").collect()
-    ]
-    done_max = (
-        led.filter(F.col("status") == "done")
-        .agg(F.max("run_seq"))
-        .collect()[0][0]
-    )
+    led = _ledger_table(out).to_pylist()
+    del_seqs = [r["run_seq"] for r in led if r["status"] == "delete"]
+    done_max = max(r["run_seq"] for r in led if r["status"] == "done")
     assert del_seqs == [done_max]  # same epoch, single delete row
 
     # every historical snapshot shows each matched key exactly once
-    max_seq = led.agg(F.max("run_seq")).collect()[0][0]
+    max_seq = max(r["run_seq"] for r in led)
     for e in range(1, int(max_seq) + 1):
         snap = {
             r["url"]: r["text"]
