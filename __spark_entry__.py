@@ -1540,7 +1540,7 @@ def q_point_lookup_store(spark, sf_dir):
     """Point lookup over a checkpointed store (choetl_spark/lookup.py,
     a front-end over format("choetl")): the reader drops url chunks
     whose Bloom excludes the key before reading any payload, masks the
-    surviving chunks in the filtered decode kernel, and decodes the
+    surviving chunks in the decode kernel, and decodes the
     other columns only for chunks covering the match. The oracle
     recomputes the row from the documents table; a Bloom false
     negative, a mask dropping a matching row, or a misaligned column

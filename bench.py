@@ -277,7 +277,7 @@ def bench_pruned_lookup(spark, sf_dir: str) -> None:
 def bench_point_lookup(spark, sf_dir: str) -> None:
     """Late-materialization lookup (choetl_spark/lookup.py, a filtered
     read planned on the driver): Bloom skipping of key chunks, then
-    the filtered decode kernel decodes the other columns only for chunks
+    the decode kernel decodes the other columns only for chunks
     covering a match — the same read pruned_point_lookup makes through
     scan_encoded, collected eagerly. A read within the local-read budget
     runs no Spark job; otherwise one for the read plus one for the local

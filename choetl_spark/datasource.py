@@ -24,7 +24,7 @@ attempt_id``, plus ``stats`` under a pushdown spec — never a payload;
 row groups whose footer ``part_id`` span holds no live partition are
 not read). Commit resolution on ``(part_id, attempt_id)`` happens
 there, so each split names exactly the chunk rows its task decodes;
-the task reads only those rows' payloads and runs the shared
+the task reads only those rows' payloads and runs the engine's one
 pure-Python decode kernel (:func:`choetl_spark.engine.
 _make_decode_kernel`) — payload bytes cross the JVM boundary exactly
 once, as final decoded Arrow batches. The write path mirrors it: each
@@ -56,8 +56,8 @@ from the one pyarrow resolver
 :func:`choetl_spark.eqdeletes.eq_value_maps`), and ``_decode_split`` is
 the only code that drops deleted rows. Nested/decimal ("logical")
 columns come back in their logical type (the decode kernel restores
-them). Column pruning is Spark's own ``.schema()``: the reader decodes
-only the columns it names, in its order.
+them). Column pruning is Spark's own ``.schema()``: the batch and the
+stream reader decode only the columns it names, in its order.
 
 Two reserved hidden columns, ``_part_id`` and ``_row_pos`` (bigint),
 give each row's partition and its position in it — the coordinates
@@ -78,8 +78,7 @@ string/binary column) rules the spec out is not planned, nor is any
 chunk that overlaps no kept chunk of every predicate column — so a
 partition left without one reads no payload at all, the late
 materialization :func:`choetl_spark.lookup.point_lookup` relies on.
-Each task then runs the engine's filtered decode kernel
-(:func:`choetl_spark.engine._make_filtered_decode_kernel`): the mask is
+Each task then runs the decode kernel under the spec: the mask is
 evaluated per predicate-column chunk (dict chunks on their symbol
 table), other columns decode only where a row survives, and only
 surviving rows cross to the JVM. Every filter is also RETURNED to
@@ -143,7 +142,6 @@ from choetl_spark.engine import (
     EncodeConfig,
     _make_decode_kernel,
     _make_encode_kernel,
-    _make_filtered_decode_kernel,
     _make_writing_wrapper,
     _pushdown_values_compatible,
     _spark_type_ddl,
@@ -310,23 +308,31 @@ def read_store(
     return spark.createDataFrame(table, schema), table.num_rows
 
 
-def _out_schema(items: list[tuple[str, dict]], schema) -> pa.Schema:
-    """Decoded Arrow schema: storage types, except nested/decimal
-    columns, which decode to the Arrow form of their logical type in the
-    read schema (a ``StructType`` Spark hands the reader)."""
+def _read_columns(store_items: list[tuple[str, dict]], schema) -> tuple:
+    """``(items, out_schema)`` of a read schema (the ``StructType``
+    Spark hands a reader): the data columns it names, in ITS order —
+    Spark reads the batch columns positionally — and the decoded Arrow
+    schema. Storage types, except nested/decimal columns, which decode
+    to the Arrow form of their logical type in the read schema; the
+    hidden ``_part_id`` / ``_row_pos`` columns are bigint."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    return pa.schema(
+    entries = dict(store_items)
+    items = [(n, entries[n]) for n in schema.names if n not in HIDDEN_COLUMNS]
+    out_schema = pa.schema(
         [
-            (
-                c,
-                to_arrow_type(schema[c].dataType)
-                if m.get("logical")
-                else str_to_type(m["dtype"]),
+            (n, pa.int64())
+            if n in HIDDEN_COLUMNS
+            else (
+                n,
+                to_arrow_type(schema[n].dataType)
+                if entries[n].get("logical")
+                else str_to_type(entries[n]["dtype"]),
             )
-            for c, m in items
+            for n in schema.names
         ]
     )
+    return items, out_schema
 
 
 # ---------------------------------------------------------------------------
@@ -630,8 +636,8 @@ def _decode_split(
     store_items: list[tuple[str, dict]] = (),
 ) -> Iterator[pa.RecordBatch]:
     """Decode one split: read the payload and ``meta`` of exactly the
-    chunk rows the driver planned, run the shared decode kernel (the
-    filtered one under a pushdown spec) and subtract deletes — the one
+    chunk rows the driver planned, run the shared decode kernel (masking
+    under a pushdown spec) and subtract deletes — the one
     place deleted rows leave decoded rows. ``out_schema`` is the output
     in the read schema's order: ``items`` are its data columns, and the
     hidden ``_part_id`` / ``_row_pos`` columns it names are the
@@ -692,14 +698,9 @@ def _decode_split(
     )
     subtract = bool(split.tombstones) or bool(split.eq)
     with_pos = subtract or bool(hidden)
-    if pushdown:
-        kernel = _make_filtered_decode_kernel(
-            col_order, out_schema, batch_rows, pushdown, with_pos=with_pos
-        )
-    else:
-        kernel = _make_decode_kernel(
-            col_order, out_schema, batch_rows, with_pos=with_pos
-        )
+    kernel = _make_decode_kernel(
+        col_order, out_schema, batch_rows, pushdown, with_pos=with_pos
+    )
     for batch in kernel(iter(feed.to_batches())):
         if subtract:
             parts_np = batch.column(0).to_numpy(zero_copy_only=False)
@@ -841,18 +842,8 @@ class ChoetlBatchReader(DataSourceReader):
         # resolve against the epoch's schema under as_of
         self._view = _manifest_view(self._dir, self._as_of)
         self._store_items = manifest_data_items(self._view)
-        # decode only the schema's columns, in ITS order: Spark reads
-        # the batch columns positionally
-        entries = dict(self._store_items)
-        self._items = [
-            (n, entries[n]) for n in schema.names if n not in HIDDEN_COLUMNS
-        ]
-        data = _out_schema(self._items, schema)
-        self.out_schema = pa.schema(
-            [
-                (n, pa.int64()) if n in HIDDEN_COLUMNS else data.field(n)
-                for n in schema.names
-            ]
+        self._items, self.out_schema = _read_columns(
+            self._store_items, schema
         )
         self._pushdown: dict[str, tuple] = {}
         self._part_filters: list[Filter] = []
@@ -904,8 +895,9 @@ class ChoetlStreamReader(DataSourceStreamReader):
         self._skip_changes = str(
             options.get("skip_change_commits", "false")
         ).lower() in ("true", "1")
-        self._items = manifest_data_items(_manifest_view(self._dir))
-        self.out_schema = _out_schema(self._items, schema)
+        self._items, self.out_schema = _read_columns(
+            manifest_data_items(_manifest_view(self._dir)), schema
+        )
 
     def initialOffset(self):  # noqa: N802
         return {"seq": self._start}

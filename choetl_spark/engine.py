@@ -574,9 +574,9 @@ def _make_writing_wrapper(inner_kernel, chunks_dir: str, attempt_id: str):
     A task must not publish itself, because a failing upstream ends its
     Arrow input cleanly — the task then finishes a PARTIAL file before
     Spark fails it — and because a speculative or zombie attempt would
-    otherwise land its file after the commit. No reader (nor the
-    mergeSchema chunk scan) ever sees a torn or unreported file;
-    ``vacuum`` sweeps the staging leftovers."""
+    otherwise land its file after the commit. No reader (nor a Spark
+    scan of the chunk directory, which skips hidden names) ever sees a
+    torn or unreported file; ``vacuum`` sweeps the staging leftovers."""
     out_schema = _ENCODED_PA_SCHEMA.append(
         pa.field("attempt_id", pa.string())
     )
@@ -899,100 +899,6 @@ def _kernel_schema(out_schema: pa.Schema, with_pos: bool) -> pa.Schema:
     )
 
 
-def _make_decode_kernel(
-    col_order: list[str],
-    out_schema: pa.Schema,
-    batch_rows: int,
-    with_pos: bool = False,
-):
-    full_schema = _kernel_schema(out_schema, with_pos)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        cur_part: int | None = None
-        # per column: (row_start, decoded array) pieces in row_start order
-        acc: dict[str, list[tuple[int, pa.Array]]] = {}
-
-        def flush() -> Iterator[pa.RecordBatch]:
-            nonlocal acc
-            if not acc:
-                return
-            # schema evolution: a column with NO chunks in this
-            # partition (added to the store by a later ingest run)
-            # decodes as nulls; a PRESENT column with a row-count
-            # mismatch is still a hard integrity error
-            n = max(
-                sum(len(a) for _, a in pieces) for pieces in acc.values()
-            )
-            cols = []
-            pos: "np.ndarray | None" = None
-            for pieces in acc.values():
-                # global row positions from any full-coverage column's
-                # chunk row_starts (all PRESENT columns tile the same
-                # rows) — exact even when a partition's chunk rows are
-                # split across input slices, where arange(n) would
-                # restart at 0
-                if with_pos and sum(len(a) for _, a in pieces) == n:
-                    pos = np.concatenate(
-                        [
-                            s + np.arange(len(a), dtype=np.int64)
-                            for s, a in pieces
-                        ]
-                    )
-                    break
-            for name in col_order:
-                pieces = acc.get(name, [])
-                tgt = out_schema.field(name).type
-                arr = (
-                    pa.concat_arrays(
-                        # conform each piece BEFORE concat: type widening
-                        # (manifest promoted after these chunks were
-                        # written) leaves mixed dtypes, and nested/decimal
-                        # columns restore from their storage strings
-                        [_conform(a, tgt) for _, a in pieces]
-                    )
-                    if pieces
-                    else pa.nulls(n, type=tgt)
-                )
-                if len(arr) != n:
-                    raise ValueError(
-                        f"column {name}: {len(arr)} rows, expected {n} "
-                        f"(part {cur_part} incomplete?)"
-                    )
-                cols.append(arr)
-            if with_pos:
-                cols = [
-                    pa.array(np.full(n, cur_part, dtype=np.int64)),
-                    pa.array(pos),
-                    *cols,
-                ]
-            acc = {}
-            table = pa.Table.from_arrays(cols, schema=full_schema)
-            for offset in range(0, table.num_rows, batch_rows):
-                yield from table.slice(offset, batch_rows).to_batches()
-
-        for batch in batches:
-            pids = batch.column(0).to_pylist()  # part_id (small chunk rows)
-            names = batch.column(1).to_pylist()  # column
-            payloads = batch.column(2)  # payload
-            metas = batch.column(3).to_pylist()  # meta
-            starts = batch.column(4).to_pylist()  # row_start
-            nrows = batch.column(5).to_pylist()  # n_rows
-            for i in range(len(pids)):
-                if pids[i] != cur_part:
-                    yield from flush()
-                    cur_part = pids[i]
-                arr = _checked_rows(
-                    decode_array(payloads[i].as_py(), json.loads(metas[i])),
-                    nrows[i], cur_part, names[i], starts[i],
-                )
-                acc.setdefault(names[i], []).append((starts[i], arr))
-        yield from flush()
-
-    return kernel
-
-
 def normalize_predicate_value(v):
     """Naive datetime predicate values -> the aware UTC instant Spark's
     own literal conversion produces for them (py4j DatetimeConverter /
@@ -1165,29 +1071,38 @@ def _eval_chunk_mask(
         return np.ones(int(n), dtype=bool)
 
 
-def _make_filtered_decode_kernel(
+def _make_decode_kernel(
     col_order: list[str],
     out_schema: pa.Schema,
     batch_rows: int,
-    pushdown: dict[str, tuple],
+    pushdown: dict[str, tuple] | None = None,
     with_pos: bool = False,
 ):
-    """Decode kernel with partition-local late materialization: buffer a
-    logical partition's chunk rows UNDECODED, evaluate the pushdown
-    predicates over just the predicate columns' chunks (dict chunks via
-    their symbol tables — see :func:`_eval_chunk_mask`), intersect the
-    surviving row positions, then decode ONLY the chunks of the other
-    columns that overlap a surviving position and emit ONLY matching
-    rows. For a selective scan this cuts both the Python-side decode
-    work and — the dominant cost — the Arrow transfer back to the JVM
-    from O(partition rows x columns) to O(matches x columns).
+    """The decode kernel: chunk rows in (sorted by ``part_id, column,
+    row_start``), decoded rows of ``col_order`` out, one logical
+    partition at a time. ``with_pos`` prepends each row's
+    ``(_part_id, _row_pos)`` coordinates.
 
-    Same alignment contract as the plain kernel (all present columns of
-    a partition tile the same global row positions, co-located in one
-    input partition); masks are SUPERSETS, the caller's residual filter
-    restores exact semantics.
+    Partition-local late materialization: a partition's chunk rows are
+    buffered UNDECODED, then its matched row positions are fixed. With
+    no ``pushdown`` spec every row of every chunk matches, at the chunk
+    spans of the column that covers the most rows — exact when a
+    partition's chunks arrive in several input slices (``row_start >
+    0``); a late-added column (no chunks here) decodes as nulls.
+    Under a spec the predicates are evaluated over just the predicate
+    columns' chunks (dict chunks via their symbol tables — see
+    :func:`_eval_chunk_mask`) and the surviving positions intersected.
+    Only chunks that overlap a match are decoded, and only matching rows
+    are emitted: for a selective scan this cuts both the Python-side
+    decode work and — the dominant cost — the Arrow transfer back to
+    the JVM from O(partition rows x columns) to O(matches x columns).
+
+    All present columns of a partition tile the same global row
+    positions, co-located in one input partition; masks are SUPERSETS,
+    the caller's residual filter restores exact semantics.
     """
     full_schema = _kernel_schema(out_schema, with_pos)
+    pushdown = pushdown or {}
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
@@ -1201,13 +1116,11 @@ def _make_filtered_decode_kernel(
             nonlocal raw
             if not raw:
                 return
-            # 1. predicate pass: surviving global positions per pred col.
-            # Chunks the mask evaluation had to FULLY decode (plain/
-            # foref/... — everything but the dict symbol-table path) are
-            # kept for the fetch pass below, so a requested predicate
-            # column pays decode+inflate once, not twice; peak memory is
-            # one partition's predicate columns decoded, the same order
-            # as the unfiltered kernel's accumulation.
+            # 1. match pass: the surviving global positions. Chunks the
+            # mask evaluation had to FULLY decode (plain/foref/... —
+            # everything but the dict symbol-table path) are kept for
+            # the fetch pass below, so a requested predicate column pays
+            # decode+inflate once, not twice.
             decoded_cache: dict[tuple, pa.Array] = {}
             matched: "np.ndarray | None" = None
             for name, op in pushdown.items():
@@ -1235,17 +1148,22 @@ def _make_filtered_decode_kernel(
                 )
                 if matched.size == 0:
                     break
-            matched = (
-                matched
-                if matched is not None
-                else np.empty(0, dtype=np.int64)
-            )
+            if not pushdown:
+                spans = max(
+                    raw.values(), key=lambda ps: sum(nr for _, nr, _, _ in ps)
+                )
+                matched = np.concatenate(
+                    [s + np.arange(nr, dtype=np.int64) for s, nr, _, _ in spans]
+                )
             n_out = int(matched.size)
             # 2. fetch pass: decode only chunks overlapping a match
             cols = []
             for name in col_order:
                 pieces = raw.get(name, [])
                 if not pieces:
+                    # schema evolution: a column with NO chunks in this
+                    # partition (added to the store by a later ingest
+                    # run) decodes as nulls
                     cols.append(
                         pa.nulls(n_out, type=out_schema.field(name).type)
                     )
@@ -1253,11 +1171,11 @@ def _make_filtered_decode_kernel(
                 got = 0
                 vals: list[pa.Array] = []
                 for start, n_rows, payload, meta in pieces:
-                    lo = int(np.searchsorted(matched, start, side="left"))
-                    hi = int(
-                        np.searchsorted(
-                            matched, start + n_rows, side="left"
-                        )
+                    # no spec: every row of every chunk matches
+                    lo, hi = (
+                        np.searchsorted(matched, [start, start + n_rows])
+                        if pushdown
+                        else (0, n_rows)
                     )
                     if hi <= lo:
                         continue
@@ -1265,8 +1183,9 @@ def _make_filtered_decode_kernel(
                     if arr is None:
                         arr = decode_array(payload, json.loads(meta))
                     _checked_rows(arr, n_rows, cur_part, name, start)
-                    idx = matched[lo:hi] - start
-                    vals.append(arr.take(pa.array(idx)))
+                    if hi - lo < n_rows:
+                        arr = arr.take(pa.array(matched[lo:hi] - start))
+                    vals.append(arr)
                     got += hi - lo
                 if got != n_out:
                     raise ValueError(
@@ -1275,8 +1194,10 @@ def _make_filtered_decode_kernel(
                     )
                 tgt = out_schema.field(name).type
                 arr = (
-                    # conform pieces BEFORE concat (widening, logical
-                    # restore — see the plain kernel)
+                    # conform each piece BEFORE concat: type widening
+                    # (manifest promoted after these chunks were written)
+                    # leaves mixed dtypes, and nested/decimal columns
+                    # restore from their storage strings
                     pa.concat_arrays([_conform(v, tgt) for v in vals])
                     if vals
                     else pa.nulls(0, type=tgt)
@@ -1296,12 +1217,12 @@ def _make_filtered_decode_kernel(
                 yield from table.slice(offset, batch_rows).to_batches()
 
         for batch in batches:
-            pids = batch.column(0).to_pylist()
-            names = batch.column(1).to_pylist()
-            payloads = batch.column(2)
-            metas = batch.column(3).to_pylist()
-            starts = batch.column(4).to_pylist()
-            nrows = batch.column(5).to_pylist()
+            pids = batch.column(0).to_pylist()  # part_id
+            names = batch.column(1).to_pylist()  # column
+            payloads = batch.column(2)  # payload
+            metas = batch.column(3).to_pylist()  # meta
+            starts = batch.column(4).to_pylist()  # row_start
+            nrows = batch.column(5).to_pylist()  # n_rows
             for i in range(len(pids)):
                 if pids[i] != cur_part:
                     yield from flush()
@@ -1317,43 +1238,19 @@ def _make_filtered_decode_kernel(
 def decode_dataframe(
     enc_df: DataFrame,
     columns: list[str] | None = None,
-    num_partitions: int | None = None,
-    batch_rows: int = 8192,
-    assume_colocated: bool = False,
     manifest: dict | None = None,
-    with_pos: bool = False,
-    pushdown: dict[str, tuple] | None = None,
 ) -> DataFrame:
-    """Decode an encoded-chunk DataFrame back to source rows.
-
-    ``with_pos=True`` prepends ``(_part_id, _row_pos)`` — each row's
-    logical partition and its exact global offset within it (from the
-    chunks' ``row_start``) — the coordinates row-level delete tombstones
-    address rows by.
-
-    ``pushdown`` pushes simple predicates INTO the decode kernel —
-    ``{col: ("in", [v, ...])}`` / ``{col: ("range", lo, hi)}`` — which
-    then evaluates them partition-locally over just the predicate
-    columns (dict-coded chunks via their symbol tables, never
-    rebuilding the strings), decodes other columns only for chunks
-    overlapping a surviving row, and ships ONLY matching rows back to
-    the JVM (see :func:`_make_filtered_decode_kernel`). Masks are
-    SUPERSETS (anything the kernel cannot evaluate passes through), so
-    callers must re-apply the predicate on the decoded result —
-    :func:`choetl_spark.deletes.delete_where` does. Predicate columns
-    need not be in ``columns``.
+    """Decode an encoded-chunk DataFrame back to source rows. No deletes
+    are applied; a store's live rows, their ``_part_id`` / ``_row_pos``
+    coordinates and pushdown masks come from ``format("choetl")``.
 
     Column pruning happens BEFORE the shuffle — unrequested columns'
     payload bytes never move (the analog of the reference reader's
-    ignored-field pruning, ChoParquetRecordReader.cs:110-111).
-
-    Shuffle elision: a SINGLE-column decode never shuffles (each chunk
-    decodes independently; row alignment across columns is moot), and
-    ``assume_colocated=True`` skips the shuffle for multi-column reads
-    when the chunk table is already laid out with each part_id's chunks
-    in one input partition (true straight out of encode_dataframe, or
-    for storage written ``partitionBy("part_id")``) — at 100 TB that is
-    the difference between a read and a read-plus-reshuffle.
+    ignored-field pruning, ChoParquetRecordReader.cs:110-111). A
+    SINGLE-column decode never shuffles (each chunk decodes
+    independently; row alignment across columns is moot); a
+    multi-column decode repartitions by ``part_id`` over
+    ``spark.sql.shuffle.partitions``.
 
     ``manifest`` (from :func:`column_manifest` at encode time, or
     :func:`choetl_spark.ledger.read_manifest` for stored tables) supplies
@@ -1386,11 +1283,7 @@ def decode_dataframe(
         types = {c: _meta_storage_type(m) for c, m in metas.items()}
         logicals = {c: m.get("logical") for c, m in metas.items()}
     cols = columns or sorted(types)
-    pushdown = pushdown or {}
-    # predicate columns ride through the kernel input even when not
-    # requested; they are dropped from the output schema
-    scan_cols = list(dict.fromkeys([*cols, *pushdown]))
-    missing = [c for c in scan_cols if c not in types]
+    missing = [c for c in cols if c not in types]
     if missing:
         raise KeyError(f"columns not in encoded table: {missing}")
     out_schema = pa.schema(
@@ -1402,38 +1295,15 @@ def decode_dataframe(
     ddl = ", ".join(
         f"`{c}` {logicals[c] or _spark_type_ddl(types[c])}" for c in cols
     )
-    if with_pos:
-        if "_part_id" in cols or "_row_pos" in cols:
-            raise ValueError(
-                "with_pos=True reserves _part_id/_row_pos column names"
-            )
-        ddl = "`_part_id` bigint, `_row_pos` bigint, " + ddl
-    pruned = enc_df.filter(F.col("column").isin(scan_cols)).select(
+    pruned = enc_df.filter(F.col("column").isin(cols)).select(
         "part_id", "column", "payload", "meta", "row_start", "n_rows"
     )
-    # shuffle elision keys off the SCAN set: a one-column decode whose
-    # predicate touches a second column still needs its partitions'
-    # chunks co-located for the position intersect
-    if len(scan_cols) == 1 or assume_colocated:
-        shuffled = pruned.sortWithinPartitions(
-            "part_id", "column", "row_start"
-        )
-    else:
-        p = num_partitions or enc_df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"
-        )
-        shuffled = pruned.repartition(int(p), "part_id").sortWithinPartitions(
-            "part_id", "column", "row_start"
-        )
-    if pushdown:
-        kernel = _make_filtered_decode_kernel(
-            cols, out_schema, batch_rows, pushdown, with_pos=with_pos
-        )
-    else:
-        kernel = _make_decode_kernel(
-            cols, out_schema, batch_rows, with_pos=with_pos
-        )
-    return shuffled.mapInArrow(kernel, ddl)
+    if len(cols) > 1:
+        p = enc_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        pruned = pruned.repartition(int(p), "part_id")
+    return pruned.sortWithinPartitions(
+        "part_id", "column", "row_start"
+    ).mapInArrow(_make_decode_kernel(cols, out_schema, 8192), ddl)
 
 
 def _spark_type_ddl(t: pa.DataType) -> str:

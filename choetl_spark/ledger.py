@@ -43,6 +43,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from choetl_spark.engine import (
+    ENCODED_SCHEMA_DDL,
     EncodeConfig,
     column_manifest,
     encode_dataframe_writing,
@@ -523,81 +524,21 @@ def _display_remap(chunks: DataFrame, manifest: dict | None) -> DataFrame:
     )
 
 
-def _ledger_signature(out_dir: str) -> tuple | None:
-    """Content signature of the ledger DIRECTORY (sorted file names +
-    sizes + mtimes) — the local-filesystem analog of Iceberg's
-    metadata.json pointer. Every commit path (ingest append, delete
-    commit, replace/expiry rewrite) adds or replaces ledger files, so
-    any visible store change changes the signature. ``None`` means the
-    directory cannot be listed locally (no ledger yet, or a remote
-    filesystem) — callers must then skip caching, never treat it as a
-    cache key."""
-    try:
-        names = os.listdir(_ledger_dir(out_dir))
-    except OSError:
-        return None
-    sig = []
-    for n in sorted(names):
-        try:
-            st = os.stat(os.path.join(_ledger_dir(out_dir), n))
-        except OSError:
-            continue
-        sig.append((n, st.st_size, st.st_mtime_ns))
-    return tuple(sig)
-
-
-def _chunks_signature(out_dir: str) -> tuple | None:
-    """Same listing recipe as :func:`_ledger_signature` but over the
-    chunk-file directory. The committed-chunk plan cache keys on BOTH:
-    the ledger signature names the visible snapshot, and the chunks
-    signature catches physical file churn the ledger does not append
-    for (``vacuum`` reclaiming an aborted stage's orphans) — a cached
-    parquet frame pins its file listing, so re-executing one after a
-    listed file was deleted would fail mid-scan."""
-    try:
-        names = os.listdir(_chunks_dir(out_dir))
-    except OSError:
-        return None
-    sig = []
-    for n in sorted(names):
-        try:
-            st = os.stat(os.path.join(_chunks_dir(out_dir), n))
-        except OSError:
-            continue
-        sig.append((n, st.st_size, st.st_mtime_ns))
-    return tuple(sig)
-
-
-# {(app_id, abs out_dir, as_of, flags): ((ledger_sig, chunks_sig), df)}
-# — the committed-chunk PLAN per visible snapshot. Building it costs
-# ~0.3-0.5 s of driver Py4J round trips (a footer-merging parquet read
-# + commit-key semi-join + display remap); interactive scans pay that
-# per query without this. One entry per (snapshot, read-flags)
-# variant — bounded by the store's epoch count.
-_ENCODED_DF_CACHE: dict[tuple, tuple] = {}
-
-
-def _cache_key(spark: SparkSession, out_dir: str) -> tuple:
-    return (spark.sparkContext.applicationId, os.path.abspath(out_dir))
-
-
 def _read_chunks(
     spark: SparkSession, out_dir: str, live: dict | None = None
 ) -> DataFrame:
     """The chunk table as a Spark frame; with ``live`` (``{part_id:
     {attempt_id, ...}}``, :func:`ledger_state`'s shape) only the chunk
     rows whose commit key it names (:func:`_attempt_ok`'s rule). The
-    keys are a broadcast local relation built from an Arrow table, so
-    the filter starts no Python worker and plans no job."""
-    # mergeSchema: a store resumed across engine upgrades may mix chunk
-    # files with/without the attempt_id column
-    chunks = spark.read.option("mergeSchema", "true").parquet(
-        _chunks_dir(out_dir)
-    )
+    schema is the constant chunk schema, so building the frame runs no
+    Spark job; chunk files that predate ``attempt_id`` read it as null.
+    The keys are a broadcast local relation built from an Arrow table,
+    so the filter starts no Python worker and plans no job."""
+    chunks = spark.read.schema(
+        ENCODED_SCHEMA_DDL + ", attempt_id string"
+    ).parquet(_chunks_dir(out_dir))
     if live is None:
         return chunks
-    if "attempt_id" not in chunks.columns:
-        chunks = chunks.withColumn("attempt_id", F.lit(None).cast("string"))
     keys = spark.createDataFrame(
         _rows_table(
             [(p, a) for p, atts in live.items() for a in atts],
@@ -631,7 +572,9 @@ def read_encoded(
     compaction, snapshot expiry, Bloom probes). Rows are read through
     ``format("choetl")`` (:func:`choetl_spark.datasource.load_store`),
     which subtracts deletes; decoding this frame with
-    :func:`choetl_spark.engine.decode_dataframe` does not.
+    :func:`choetl_spark.engine.decode_dataframe` does not. Building the
+    frame runs no Spark job: visibility comes from the ledger through
+    pyarrow, and the chunk schema is a constant.
 
     ``as_of`` is a snapshot read (Iceberg time-travel contract on an
     append-only store): only partitions committed at ledger epoch
@@ -652,16 +595,6 @@ def read_encoded(
     reclaim a stage awaiting its audit; normal readers never see them.
     ``ref`` reads the snapshot a named tag/branch points at.
 
-    Plan caching: repeat calls for the SAME unchanged snapshot return
-    the SAME DataFrame object (the plan build is driver-side file-stat,
-    ledger read and join construction, plus the chunk table's schema
-    merge; caching it keeps repeat calls at zero Spark jobs). Callers
-    must treat the returned frame as shared and immutable: do not
-    ``persist()``/``unpersist()``/``checkpoint()`` it — those mutate
-    state on the object and would leak across unrelated callers.
-    Derive and cache your own ``df.alias(...)`` if you need stateful
-    handling.
-
     Chunk ``column`` values are translated from physical storage keys to
     the manifest's current DISPLAY names (schema-evolution renames,
     :mod:`choetl_spark.schema_evolution`) — ``raw_columns=True`` skips
@@ -669,26 +602,6 @@ def read_encoded(
     (``compact_store``/``expire_snapshots``), which must keep the
     physical keys or later renames would orphan the rewritten chunks."""
     as_of = resolve_snapshot(out_dir, as_of, ref)
-    lsig = _ledger_signature(out_dir)
-    csig = _chunks_signature(out_dir)
-    # the manifest drives _display_remap, and rename_column/drop_column
-    # rewrite ONLY that sidecar — no ledger/chunk file changes — so it
-    # must be part of the snapshot signature or a cached plan would keep
-    # serving pre-rename display names
-    try:
-        mst = os.stat(_manifest_path(out_dir))
-        msig = (mst.st_size, mst.st_mtime_ns)
-    except OSError:
-        msig = None
-    cache_key = None
-    if lsig is not None and csig is not None:
-        cache_key = (
-            *_cache_key(spark, out_dir),
-            as_of, include_retired, include_staged, raw_columns,
-        )
-        hit = _ENCODED_DF_CACHE.get(cache_key)
-        if hit is not None and hit[0] == (lsig, csig, msig):
-            return hit[1]
     state = ledger_state(out_dir, as_of)
     keys = state["done"] if include_retired else state["live"]
     if include_staged:
@@ -700,16 +613,6 @@ def read_encoded(
         out = _display_remap(
             out, manifest_as_of(read_manifest(out_dir), as_of)
         )
-    if cache_key is not None:
-        # the signatures were stat'ed BEFORE the plan build; a writer
-        # committing in between would cache a plan newer than its key.
-        # Benign (the next call sees changed signatures and rebuilds),
-        # but skip caching when a mismatch is already observable so the
-        # cache never serves a plan under a stale key.
-        if (_ledger_signature(out_dir), _chunks_signature(out_dir)) == (
-            lsig, csig,
-        ):
-            _ENCODED_DF_CACHE[cache_key] = ((lsig, csig, msig), out)
     return out
 
 

@@ -5,10 +5,11 @@ A point lookup (``url = X``, or a batch ``url IN (...)``) is a filtered
 read of the store, and the reader already does the work it needs (see
 :mod:`choetl_spark.datasource`): its driver-side planner drops the
 key-column chunks whose Bloom filter excludes every probe value, and
-every partition left without one, before any payload is read; the
-filtered decode kernel decodes the other columns only for chunks that
-cover a matching row (late materialization — Abadi et al.,
-"Materialization Strategies in a Column-Oriented DBMS", ICDE 2007);
+every partition left without one, before any payload is read; under
+the key's pushdown spec the decode kernel decodes the other columns
+only for chunks that cover a matching row (late materialization —
+Abadi et al., "Materialization Strategies in a Column-Oriented
+DBMS", ICDE 2007);
 deletes, time travel and schema evolution apply as in every other
 read. A lookup whose surviving chunks fit the local-read budget runs
 in the calling process, with no Spark job. The reference's closest

@@ -743,6 +743,27 @@ def test_stream_reads_epochs(ds_spark, tmp_path):
     assert _key_rows(ds_spark.table("ds_stream_tail")) == _key_rows(second)
 
 
+def test_stream_honours_read_schema(ds_spark, store):
+    """A stream read with a ``.schema()`` decodes just the columns it
+    names, in its order — the same rule as the batch reader."""
+    out, pages = store
+    q = (
+        ds_spark.readStream.format("choetl")
+        .schema("lang string, url string")
+        .load(out)
+        .writeStream.format("memory")
+        .queryName("ds_stream_projected")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = ds_spark.table("ds_stream_projected")
+    assert got.columns == ["lang", "url"]
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, pages.select("lang", "url").collect())
+    )
+
+
 def test_stream_change_commit_raises_unless_skipped(ds_spark, tmp_path):
     out = str(tmp_path / "cstore")
     first = webpages(ds_spark, 200, partitions=2)

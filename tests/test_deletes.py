@@ -14,7 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from choetl_spark.datasource import register
+from choetl_spark.datasource import load_store, register
 from choetl_spark.deletes import (
     compact_deletes,
     delete_matching,
@@ -23,7 +23,7 @@ from choetl_spark.deletes import (
     rewrite_partitions,
     upsert,
 )
-from choetl_spark.engine import EncodeConfig, decode_dataframe
+from choetl_spark.engine import EncodeConfig
 from choetl_spark.ledger import (
     encode_with_resume,
     ledger_state,
@@ -185,8 +185,7 @@ def test_rewrite_partitions_materializes_tombstones(spark, store):
     )
     # tombstone ~half of ONE partition's rows: pick the part that holds
     # a known url, then delete a stretch of its urls via the positions
-    enc = read_encoded(spark, out)
-    pos = decode_dataframe(enc, columns=["url"], manifest=None, with_pos=True)
+    pos = scan_encoded(spark, out, ["url", "_part_id"])
     by_part = {
         r["_part_id"]: r["n"]
         for r in pos.groupBy("_part_id").agg(F.count("*").alias("n")).collect()
@@ -374,12 +373,12 @@ def test_scan_without_tombstones_pays_zero_delete_overhead(spark, store):
 
 
 def test_decode_with_pos_exact_coordinates(spark, store):
-    """with_pos coordinates are the store's source of truth: positions
-    tile [0, n_part) per partition and every (part, pos, value) agrees
-    with the positionless decode row-for-row."""
+    """The hidden ``_part_id`` / ``_row_pos`` coordinates are the
+    store's source of truth: positions tile [0, n_part) per partition
+    and every (part, pos, value) agrees with the positionless read
+    row-for-row."""
     out, _ = store
-    enc = read_encoded(spark, out)
-    pos = decode_dataframe(enc, columns=["url"], with_pos=True)
+    pos = load_store(spark, out, ["url", "_part_id", "_row_pos"], as_of=1)
     bad_tiling = (
         pos.groupBy("_part_id")
         .agg(
@@ -396,7 +395,7 @@ def test_decode_with_pos_exact_coordinates(spark, store):
         .count()
     )
     assert bad_tiling == 0
-    plain = decode_dataframe(enc, columns=["url"])
+    plain = load_store(spark, out, ["url"], as_of=1)
     assert pos.count() == plain.count()
     assert (
         pos.select("url").exceptAll(plain.select("url")).count() == 0

@@ -80,7 +80,6 @@ def test_direct_roundtrip_bit_identical(spark, pages_parquet):
         enc,
         columns=["url", "warc_ts", "html", "text", "lang"],
         manifest=direct_manifest(spark, pages_parquet, cfg),
-        assume_colocated=True,
     )
     src = spark.read.parquet(pages_parquet)
     a = src.select(*sorted(src.columns))
@@ -374,7 +373,6 @@ def test_direct_vector_columns_native(spark, tmp_path):
         enc,
         columns=["id", "emb"],
         manifest=direct_manifest(spark, path, cfg),
-        assume_colocated=True,
     )
     src = spark.read.parquet(path)
     assert decoded.exceptAll(src).count() == 0

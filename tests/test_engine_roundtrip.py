@@ -207,14 +207,6 @@ def test_single_column_decode_no_shuffle_roundtrip(spark, pages, encoded):
     assert [tuple(r) for r in src] == [tuple(r) for r in got]
 
 
-def test_colocated_decode_roundtrip(spark, pages, encoded):
-    """assume_colocated on a freshly-encoded (cached) chunk table: chunks
-    of each part sit in one partition, so the shuffle-free multi-column
-    decode must still be bit-identical."""
-    decoded = decode_dataframe(encoded, assume_colocated=True)
-    assert verify_roundtrip(pages, decoded) == 0
-
-
 def test_speed_profile_roundtrip_and_footprint(spark, pages, encoded):
     """optimize_for="speed" (dict-or-plain + zstd, no token-dictionary /
     FSST string paths) must still decode bit-identical; its footprint
@@ -395,18 +387,16 @@ def test_store_write_byte_stable_without_key_column(spark, tmp_path):
 
 def test_decode_kernels_reject_short_chunk():
     """A chunk that decodes to fewer rows than its ``n_rows`` is an
-    integrity error in both decode kernels, not a short partition: a
-    valid rle payload of half the rows decodes short without error on
-    its own (a truncated payload already raises in the codec), and the
-    kernels must refuse it, naming part, column and row_start."""
+    integrity error in the decode kernel, with or without a pushdown
+    spec, not a short partition: a valid rle payload of half the rows
+    decodes short without error on its own (a truncated payload already
+    raises in the codec), and the kernel must refuse it, naming part,
+    column and row_start."""
     import numpy as np
     import pyarrow as pa
 
     from choetl_spark.codecs import decode_array, encode_array
-    from choetl_spark.engine import (
-        _make_decode_kernel,
-        _make_filtered_decode_kernel,
-    )
+    from choetl_spark.engine import _make_decode_kernel
 
     arr = pa.array((np.arange(5000) // 100 % 7).astype(np.int32))
     cut, meta = encode_array(arr.slice(0, 2500), codec="rle", zstd="off")
@@ -425,10 +415,72 @@ def test_decode_kernels_reject_short_chunk():
     schema = pa.schema([("c", pa.int32())])
     kernels = [
         _make_decode_kernel(["c"], schema, 8192),
-        _make_filtered_decode_kernel(["c"], schema, 8192, {"c": ("in", [3])}),
+        _make_decode_kernel(["c"], schema, 8192, {"c": ("in", [3])}),
     ]
     for kernel in kernels:
         with pytest.raises(
             ValueError, match="part 7 column 'c' chunk at row_start 0"
         ):
             list(kernel(iter([feed])))
+
+
+def test_decode_kernel_second_slice_positions_and_late_column():
+    """One partition's chunks arriving as a SECOND input slice (its
+    first chunk at ``row_start`` 1,024) with one requested column
+    absent (added to the store later): with no spec the kernel emits
+    every row at positions 1,024.. and the absent column as nulls;
+    under a spec, only the matches, at the same coordinates."""
+    import numpy as np
+    import pyarrow as pa
+
+    from choetl_spark.codecs import encode_array
+    from choetl_spark.engine import _make_decode_kernel
+
+    n, start = 300, 1024
+    k = pa.array(np.arange(start, start + n, dtype=np.int64))
+    lang = pa.array(["de" if i % 3 == 0 else "en" for i in range(n)])
+    rows = []
+    for name, col in (("k", k), ("lang", lang)):
+        for lo in (0, 128, 256):  # three chunks per column
+            piece = col.slice(lo, min(128, n - lo))
+            payload, meta = encode_array(piece)
+            rows.append((name, payload, json.dumps(meta), start + lo, len(piece)))
+    feed = pa.record_batch(
+        {
+            "part_id": pa.array([3] * len(rows), pa.int64()),
+            "column": [r[0] for r in rows],
+            "payload": pa.array([r[1] for r in rows], pa.binary()),
+            "meta": [r[2] for r in rows],
+            "row_start": pa.array([r[3] for r in rows], pa.int64()),
+            "n_rows": pa.array([r[4] for r in rows], pa.int64()),
+        }
+    )
+    schema = pa.schema(
+        [("k", pa.int64()), ("lang", pa.string()), ("extra", pa.string())]
+    )
+    cols = ["k", "lang", "extra"]
+
+    pos_schema = pa.schema(
+        [("_part_id", pa.int64()), ("_row_pos", pa.int64()), *schema]
+    )
+
+    def run(spec):
+        kernel = _make_decode_kernel(cols, schema, 100, spec, with_pos=True)
+        return pa.Table.from_batches(list(kernel(iter([feed]))), pos_schema)
+
+    every = run(None)
+    assert every.column_names == ["_part_id", "_row_pos", *cols]
+    assert every["_part_id"].to_pylist() == [3] * n
+    assert every["_row_pos"].to_pylist() == list(range(start, start + n))
+    assert every["k"].to_pylist() == every["_row_pos"].to_pylist()
+    assert every["lang"].to_pylist() == lang.to_pylist()
+    assert every["extra"].null_count == n
+
+    de = run({"lang": ("in", ["de"])})
+    want = [start + i for i in range(n) if i % 3 == 0]
+    assert de["_row_pos"].to_pylist() == want
+    assert de["k"].to_pylist() == want
+    assert set(de["lang"].to_pylist()) == {"de"}
+    assert de["extra"].null_count == len(want)
+    # an extra spec column no match survives on yields nothing
+    assert run({"extra": ("in", ["x"])}).num_rows == 0

@@ -1,8 +1,8 @@
 """One commit resolver: every visibility decision comes from
 ``ledger.ledger_state`` (pyarrow, on the driver).
 
-- The metadata tables and vacuum answer without Spark jobs, and building
-  the chunk frame costs only the chunk table's schema merge.
+- The metadata tables and vacuum answer without Spark jobs, and so does
+  building the chunk frame (its schema is a constant).
 - A store written before ``run_seq`` and ``attempt_id`` existed (ledger
   rows and chunk rows without them) still reads whole: a null attempt id
   matches any commit, and a null ``run_seq`` is epoch 1.
@@ -67,7 +67,7 @@ def _jobs(spark, fn):
 def test_metadata_reads_run_no_spark_jobs(spark, pages, tmp_path):
     out = _ingest(spark, pages, str(tmp_path / "store"))
     enc, n = _jobs(spark, lambda: read_encoded(spark, out))
-    assert n <= 1  # the chunk table's schema merge
+    assert n == 0
     snaps, n = _jobs(spark, lambda: snapshots(spark, out).collect())
     assert n == 0
     assert [(s["run_seq"], s["operation"], s["n_rows"]) for s in snaps] == [

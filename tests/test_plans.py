@@ -61,10 +61,6 @@ def test_decode_prunes_columns_before_shuffle(spark, pages):
     one = decode_dataframe(enc, columns=["lang"])
     plan1 = explain_str(one, "simple")
     assert "Exchange" not in plan1, plan1
-    # colocated multi-column read (straight out of encode): no shuffle
-    both = decode_dataframe(enc, columns=["lang", "url"], assume_colocated=True)
-    plan2 = explain_str(both, "simple")
-    assert "Exchange" not in plan2, plan2
     enc.unpersist()
 
 

@@ -2,9 +2,9 @@
 materialization): scan_encoded(equals=/ranges=) evaluates predicates
 INSIDE the decode kernel — dict-coded chunks via their symbol tables —
 decodes other columns only for chunks overlapping a surviving row, and
-ships only matching rows back to the JVM (engine._make_filtered_decode_
-kernel). The kernel mask is a SUPERSET; scan_encoded's residual filter
-keeps semantics exact.
+ships only matching rows back to the JVM (engine._make_decode_kernel
+under a pushdown spec). The kernel mask is a SUPERSET; scan_encoded's
+residual filter keeps semantics exact.
 
 Invariants: selective scans bit-match full-scan-plus-filter under every
 store feature they compose with (tombstones, time travel, IN-lists,
@@ -18,7 +18,14 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThanOrEqual,
+    In,
+    LessThanOrEqual,
+)
 
+from choetl_spark.datasource import read_store
 from choetl_spark.deletes import delete_where
 from choetl_spark.engine import (
     EncodeConfig,
@@ -115,26 +122,22 @@ def test_pushdown_scans_match_ground_truth(spark, pstore):
 
 
 def test_kernel_filters_before_transfer(spark, pstore):
-    """The transfer-reduction evidence: decode_dataframe with pushdown
-    and NO residual filter already returns exactly the matching rows —
-    the filtering happened inside the kernel, so only those rows crossed
-    the Python->JVM boundary."""
+    """The transfer-reduction evidence: the reader's decoded rows under
+    the pushed filters, before any residual Spark filter, are already
+    exactly the matching rows — the filtering happened inside the
+    kernel, so only those rows crossed the Python->JVM boundary."""
     out, pages = pstore
     urls = sorted(r["url"] for r in pages.select("url").collect())
-    enc = read_encoded(spark, out)
-    man = read_manifest(out)
-    raw = decode_dataframe(
-        enc, ["url", "text"], manifest=man,
-        pushdown={"url": ("in", urls[10:13])},
+    _, rows = read_store(
+        spark, out, ["url", "text"], [In(("url",), tuple(urls[10:13]))]
     )
-    assert raw.count() == 3
-    # predicate column NOT in the output set still drives the kernel
-    raw2 = decode_dataframe(
-        enc, ["text"], manifest=man, pushdown={"lang": ("in", ["de"])}
+    assert rows == 3
+    # a predicate on a column other than the payload one drives the
+    # kernel too
+    _, rows = read_store(
+        spark, out, ["lang", "text"], [EqualTo(("lang",), "de")]
     )
-    want = pages.filter(F.col("lang") == "de").count()
-    assert raw2.count() == want
-    assert raw2.columns == ["text"]
+    assert rows == pages.filter(F.col("lang") == "de").count()
 
 
 def test_pushdown_superset_fallback_never_drops_rows(spark, pstore):
@@ -142,13 +145,11 @@ def test_pushdown_superset_fallback_never_drops_rows(spark, pstore):
     column) must degrade to all-rows, and scan_encoded's residual filter
     must then restore the exact result — never a silent subset."""
     out, pages = pstore
-    enc = read_encoded(spark, out)
-    man = read_manifest(out)
-    total = pages.count()
-    raw = decode_dataframe(
-        enc, ["url"], manifest=man, pushdown={"url": ("range", 1, 2)}
+    _, rows = read_store(
+        spark, out, ["url"],
+        [GreaterThanOrEqual(("url",), 1), LessThanOrEqual(("url",), 2)],
     )
-    assert raw.count() == total  # superset: kernel passed everything
+    assert rows == pages.count()  # superset: kernel passed everything
     # the same predicate through scan_encoded is exact (empty here)
     assert (
         scan_encoded(spark, out, ["url"], ranges={"url": (1, 2)}).count() == 0
@@ -178,18 +179,15 @@ def test_pushdown_null_rows_never_match(spark, pstore):
     want = _rows(df.filter(F.col("v") == "v1").select("k"), "k")
     assert got == want and len(got) > 0
     # and the kernel alone (no residual) also excludes the nulls
-    raw = decode_dataframe(
-        read_encoded(spark, d), ["k", "v"], manifest=read_manifest(d),
-        pushdown={"v": ("in", ["v1"])},
-    )
-    assert raw.count() == len(want)
+    _, rows = read_store(spark, d, ["k", "v"], [EqualTo(("v",), "v1")])
+    assert rows == len(want)
 
 
 def test_pushdown_composes_with_deletes_and_time_travel(spark, tmp_path):
     """Selective scan over a store with tombstones: deleted rows stay
     invisible at latest, visible at the pre-delete epoch — positions
-    computed by the filtered kernel line up with the tombstone
-    anti-join's coordinates."""
+    computed by the masking kernel line up with the tombstones'
+    coordinates."""
     out = str(tmp_path / "store")
     pages = webpages(spark, 600, partitions=4).cache()
     pages.count()
@@ -250,29 +248,6 @@ def test_pushdown_schema_evolution_late_column(spark, tmp_path):
         scan_encoded(spark, out, ["k"], equals={"extra": "tagged"}), "k"
     )
     assert got == {(str(k),) for k in range(100, 200)}
-
-
-def test_pushdown_plan_shuffle_shape(spark, pstore):
-    """Shuffle elision keys off the SCAN set: one output column with a
-    predicate on the same column -> no exchange; a predicate on a
-    SECOND column forces the co-locating exchange (the position
-    intersect needs both columns' chunks together)."""
-    from choetl_spark.plans import explain_str
-
-    out, _ = pstore
-    enc = read_encoded(spark, out)
-    man = read_manifest(out)
-    # the ledger commit joins contribute ENSURE_REQUIREMENTS metadata
-    # exchanges; the DATA shuffle is the explicit repartition-by-part_id
-    # (REPARTITION_BY_NUM) — that is what shuffle elision removes
-    one = decode_dataframe(
-        enc, ["url"], manifest=man, pushdown={"url": ("in", ["x"])}
-    )
-    assert "REPARTITION_BY_NUM" not in explain_str(one, "simple")
-    two = decode_dataframe(
-        enc, ["text"], manifest=man, pushdown={"url": ("in", ["x"])}
-    )
-    assert "REPARTITION_BY_NUM" in explain_str(two, "simple")
 
 
 def test_eval_chunk_mask_dict_fast_path_unit():
