@@ -6,14 +6,14 @@ which is what makes resume, time travel, and vacuum sound. Row-level
 deletes therefore never rewrite data: :func:`delete_where` reads the
 matching rows' hidden ``(_part_id, _row_pos)`` coordinates through
 ``format("choetl")`` (column-pruned, Bloom-skipped, kernel-masked),
-writes them as TOMBSTONES
+publishes them on the driver as ONE file of TOMBSTONES
 
     (part_id, row_pos, del_seq, delete_id)
 
-to ``out_dir/_deletes`` (a Spark write), and commits them with one
-ledger row of ``status="delete"`` at the next ``run_seq`` epoch, appended
-on the driver by :func:`choetl_spark.ledger.append_ledger_rows` (no Spark
-job).
+in ``out_dir/_deletes`` (:func:`choetl_spark.ledger.publish_table`), and
+commits them with one ledger row of ``status="delete"`` at the next
+``run_seq`` epoch (:func:`choetl_spark.ledger.append_ledger_rows`) —
+pyarrow writes, no Spark job.
 
 One delete-subtraction path: :func:`delete_positions` (with
 :func:`choetl_spark.eqdeletes.eq_value_maps`) resolves a snapshot's
@@ -50,7 +50,10 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
 
 def _deletes_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_deletes")
@@ -68,9 +71,7 @@ def refuse_lost_tombstones(out_dir: str) -> None:
             f"store at {out_dir} has committed delete epochs in "
             "its ledger but no readable _deletes tombstone table "
             "— refusing to read (it would resurrect deleted "
-            "rows). Restore the _deletes directory (a crashed "
-            "maintenance run may have left a _deletes_trash_* "
-            "or _deletes_compact_* sibling) or expire the "
+            "rows). Restore the _deletes directory or expire the "
             "delete snapshots explicitly."
         )
 
@@ -235,7 +236,7 @@ def delete_where(
         spark, out_dir, ["_part_id", "_row_pos"], ranges=ranges,
         equals=equals,
     )
-    return _commit_tombstones(spark, out_dir, rows, run_id)
+    return _commit_tombstones(out_dir, rows, run_id)
 
 
 def delete_matching(
@@ -273,26 +274,24 @@ def delete_matching(
     rows = rows.join(
         F.broadcast(keys_df.select(key).distinct()), key, "semi"
     )
-    return _commit_tombstones(
-        spark, out_dir, rows, run_id, defer_commit=defer_commit
-    )
+    return _commit_tombstones(out_dir, rows, run_id, defer_commit=defer_commit)
 
 
 def _commit_tombstones(
-    spark: SparkSession,
     out_dir: str,
     rows: DataFrame,
     run_id: str | None,
     defer_commit: bool = False,
 ) -> dict:
-    """Shared delete commit: write the ``(_part_id, _row_pos)`` of
+    """Shared delete commit: collect the ``(_part_id, _row_pos)`` of
     ``rows`` — reader rows, so no already-deleted row is among them —
-    as tombstone files (a Spark write), THEN append the ledger
+    and publish them as one tombstone file (pyarrow, on the driver; the
+    collect is the only Spark job), THEN append the ledger
     ``status="delete"`` row at the next epoch with
     :func:`choetl_spark.ledger.append_ledger_rows` — the crash window
     between the two leaves orphans readers never see.
 
-    ``defer_commit=True`` writes the tombstone FILES but skips the
+    ``defer_commit=True`` writes the tombstone FILE but skips the
     ledger append (``run_seq`` comes back ``None``): the tombstones
     stay invisible orphans until the caller commits the returned
     ``delete_id`` itself — :func:`upsert` rides it in
@@ -301,7 +300,11 @@ def _commit_tombstones(
     MERGE snapshot; separate epochs would expose — and ``as_of`` time
     travel would permanently preserve — a state where matched keys
     have neither their old nor their new row)."""
-    from choetl_spark.ledger import append_ledger_rows, ledger_state
+    from choetl_spark.ledger import (
+        append_ledger_rows,
+        ledger_state,
+        publish_table,
+    )
 
     next_seq = ledger_state(out_dir)["max_seq"] + 1
     delete_id = uuid.uuid4().hex
@@ -314,17 +317,10 @@ def _commit_tombstones(
         F.col("_row_pos").alias("row_pos"),
         F.lit(file_seq).cast("long").alias("del_seq"),
         F.lit(delete_id).alias("delete_id"),
-    ).persist()
-    try:
-        stats = tomb.agg(
-            F.count("*").alias("n"),
-            F.countDistinct("part_id").alias("parts"),
-        ).collect()[0]
-        n, parts = int(stats["n"]), int(stats["parts"])
-        if n:
-            tomb.write.mode("append").parquet(_deletes_dir(out_dir))
-    finally:
-        tomb.unpersist()
+    ).toArrow()
+    n, parts = tomb.num_rows, len(pc.unique(tomb["part_id"]))
+    if n:
+        publish_table(_deletes_dir(out_dir), tomb, f"{delete_id}.parquet")
     run_seq = None
     if n and not defer_commit:
         # part_id -1: a delete spans partitions; readers resolve only
@@ -653,72 +649,51 @@ def compact_deletes(spark: SparkSession, out_dir: str) -> dict:
     appends its own parquet file; after many point deletes the scan-time
     tombstone read pays per-file open costs. Keeps committed tombstones
     VERBATIM (delete_id/del_seq survive, so epoch visibility and time
-    travel are unchanged) and drops orphans from crashed deletes.
-    Skipped (no-op) when an in-flight delete might be mid-commit —
-    callers run this on a quiesced store, same as ``compact_store``."""
-    from pyspark.errors import AnalysisException
-
-    from choetl_spark.ledger import ledger_state
+    travel are unchanged) and drops every uncommitted one — a crashed
+    delete's orphans, but also the deferred tombstones an in-flight
+    ``upsert`` writes before its ledger append, which would then delete
+    nothing. Run it on a quiesced store, as ``compact_store``. Reads and
+    writes on the driver with pyarrow (zero Spark jobs)."""
+    from choetl_spark.ledger import _read_parquet_dir, ledger_state
 
     d = _deletes_dir(out_dir)
     ids = ledger_state(out_dir)["delete_ids"]
     if not ids:
         return {"files_before": 0, "files_after": 0}
-    try:
-        tomb = spark.read.parquet(d)
-    except AnalysisException:  # no _deletes table (or no file in it)
+    tomb = _read_parquet_dir(d)
+    if tomb is None:
         refuse_lost_tombstones(out_dir)
         return {"files_before": 0, "files_after": 0}
 
-    def _n_files(p: str) -> int:
-        try:
-            return sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
-        except OSError:
-            return 0
+    def _n_files() -> int:
+        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
-    before = _n_files(d)
-    # full-row dedup collapses duplicates a previous crashed compaction
-    # left behind (legitimate rows are unique: one delete_id tombstones
-    # a given (part_id, row_pos) at most once)
-    replace_tombstone_files(
-        spark, out_dir,
-        tomb.filter(F.col("delete_id").isin(sorted(ids))).dropDuplicates(),
-    )
-    return {"files_before": before, "files_after": _n_files(d)}
+    before = _n_files()
+    committed = pc.is_in(tomb["delete_id"], pa.array(sorted(ids), pa.string()))
+    replace_tombstone_files(out_dir, tomb.filter(committed))
+    return {"files_before": before, "files_after": _n_files()}
 
 
-def replace_tombstone_files(
-    spark: SparkSession, out_dir: str, keep: DataFrame
-) -> None:
-    """Rewrite the ``_deletes`` parquet table to exactly ``keep``'s rows
-    without ever leaving a missing-directory window.
-
-    A directory swap (rename away + rename staging in) has a crash
-    window in which ``_deletes`` does not exist — and tombstone absence
-    is a legitimate "no deletes" state, so readers would silently
-    RESURRECT every deleted row. Instead: write staging, MOVE the new
-    parts into the live directory under fresh names (same filesystem —
-    atomic per file), then unlink the old files. A crash at any point
-    leaves the directory holding a row SUPERSET (old + new coexist as
-    exact duplicates) — duplicates are harmless to the anti-join
-    subtraction and the next compaction's ``dropDuplicates`` collapses
-    them; rows are never lost."""
-    import shutil
+def replace_tombstone_files(out_dir: str, keep: pa.Table) -> None:
+    """Rewrite the ``_deletes`` table to ``keep``'s distinct rows (one
+    ``delete_id`` tombstones a position at most once) with no window in
+    which the directory is missing — absence reads as "no deletes" and
+    would RESURRECT rows. The new file is published into the live
+    directory first, THEN the old files and their Spark sidecars
+    (``.<name>.crc``, ``_SUCCESS``) are unlinked: a crash in between
+    leaves a harmless row SUPERSET, never a loss."""
+    from choetl_spark.ledger import publish_table
 
     d = _deletes_dir(out_dir)
-    old_files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    staging = os.path.join(out_dir, f"_deletes_compact_{uuid.uuid4().hex[:8]}")
-    keep.coalesce(1).write.mode("overwrite").parquet(staging)
-    tag = uuid.uuid4().hex[:8]
-    for name in os.listdir(staging):
-        if name.endswith(".parquet"):
-            os.rename(
-                os.path.join(staging, name),
-                os.path.join(d, f"compact_{tag}_{name}"),
-            )
-    for name in old_files:
+    old = [f for f in os.listdir(d) if f.endswith(".parquet")]
+    publish_table(
+        d,
+        keep.group_by(keep.column_names, use_threads=False).aggregate([]),
+        f"compact-{uuid.uuid4().hex}.parquet",
+    )
+    for name in [*old, *(f".{f}.crc" for f in old), "_SUCCESS",
+                 "._SUCCESS.crc"]:
         try:
             os.remove(os.path.join(d, name))
         except OSError:
             pass
-    shutil.rmtree(staging, ignore_errors=True)

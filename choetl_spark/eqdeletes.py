@@ -8,10 +8,11 @@ scan at WRITE time to pin exact row coordinates. An equality delete
 
     out_dir/_eq_deletes/<column>/<delete_id>.parquet   (value rows)
 
-plus a ledger commit row (``status="eqdelete"``, appended on the driver
-by :func:`choetl_spark.ledger.append_ledger_rows`) — O(keys) write
-cost, no store scan at all. :func:`eq_value_maps` loads the committed
-value sets with pyarrow, and the reader's ``_decode_split`` subtracts
+plus a ledger commit row (``status="eqdelete"``), both published on the
+driver with pyarrow (:func:`choetl_spark.ledger.publish_table`) — O(keys)
+write cost, no store scan. :func:`eq_value_maps` loads the committed
+value sets cast to the key column's type (so Spark-written INT96
+timestamps match too), and the reader's ``_decode_split`` subtracts
 them from rows of partitions committed BEFORE the delete (Iceberg's
 rule: data-seq < delete-seq). A key re-inserted AFTER the delete
 therefore survives, which is what makes streaming CDC upserts O(changed
@@ -39,7 +40,11 @@ import json
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from choetl_spark.codecs.base import str_to_type
 
 EQ_STATUS = "eqdelete"
 
@@ -52,35 +57,37 @@ def _eq_dir(out_dir: str, column: str) -> str:
     return os.path.join(_eq_root(out_dir), column)
 
 
-def _write_eq_values(
-    spark: SparkSession, out_dir: str, key: str, values
-) -> tuple[str, int] | None:
-    """Write the (value, delete_id) files for an equality delete —
-    invisible orphans until a ledger ``eqdelete`` row commits the
-    returned ``delete_id``. Returns None for an empty value set."""
-    from choetl_spark.engine import normalize_predicate_value as _n
+def _key_type(entry: dict | None) -> pa.DataType | None:
+    """The Arrow type a key column's manifest ``entry`` decodes to
+    (``None``, values kept as written: no entry, or nested/decimal)."""
+    if entry and not entry.get("logical"):
+        return str_to_type(entry["dtype"])
+    return None
 
+
+def _write_eq_values(out_dir: str, key: str, values) -> tuple[str, int] | None:
+    """Publish the distinct non-null ``values`` (a DataFrame's first
+    column is collected) in the key column's type — a value that does
+    not cast raises — as ``<delete_id>.parquet``: an invisible orphan
+    until a ledger ``eqdelete`` row commits the returned ``delete_id``.
+    Returns None for an empty value set."""
+    from choetl_spark.engine import normalize_predicate_value as _n
+    from choetl_spark.ledger import publish_table, read_manifest
+
+    typ = _key_type((read_manifest(out_dir) or {}).get(key))
     if isinstance(values, DataFrame):
-        vals_df = values.select(
-            F.col(values.columns[0]).alias("value")
-        ).distinct()
+        vals = values.select(values.columns[0]).distinct().toArrow()[0]
     else:
-        norm = [_n(v) for v in values]
-        if not norm:
-            return None
-        vals_df = spark.createDataFrame(
-            [(v,) for v in norm]
-        ).toDF("value").distinct()
+        vals = pa.array([_n(v) for v in values])
+    if typ is not None:
+        vals = vals.cast(typ)
+    vals = pc.unique(pc.drop_null(vals))
+    if not len(vals):
+        return None
     delete_id = uuid.uuid4().hex
-    vals_df = vals_df.filter(F.col("value").isNotNull()).withColumn(
-        "delete_id", F.lit(delete_id)
-    )
-    # value files BEFORE any ledger row (the shared commit protocol)
-    vals_df.write.mode("append").parquet(_eq_dir(out_dir, key))
-    n = spark.read.parquet(_eq_dir(out_dir, key)).filter(
-        F.col("delete_id") == delete_id
-    ).count()
-    return delete_id, int(n)
+    table = pa.table({"value": vals, "delete_id": [delete_id] * len(vals)})
+    publish_table(_eq_dir(out_dir, key), table, f"{delete_id}.parquet")
+    return delete_id, len(vals)
 
 
 def delete_by_key(
@@ -115,7 +122,7 @@ def delete_by_key(
             f"equality-delete column {key!r} is not a store column "
             f"(manifest has {sorted(manifest)})"
         )
-    wrote = _write_eq_values(spark, out_dir, key, values)
+    wrote = _write_eq_values(out_dir, key, values)
     if wrote is None:
         return {"n_values": 0, "run_seq": None, "delete_id": None}
     delete_id, n = wrote
@@ -180,7 +187,8 @@ def eq_value_maps(out_dir: str, state: dict, view: dict) -> dict[str, dict]:
     A row dies iff its partition's first-done epoch is STRICTLY BEFORE
     the newest delete epoch naming its key value; ``format("choetl")``
     splits carry the sets. Keys resolve into ``view``, the reader's
-    schema, through :func:`resolve_eq_key`."""
+    schema, through :func:`resolve_eq_key`; values are cast to the
+    key's type there, so they equal decoded values."""
     from choetl_spark.ledger import _read_parquet_dir, read_manifest
 
     if not state["eq_commits"]:
@@ -195,7 +203,11 @@ def eq_value_maps(out_dir: str, state: dict, view: dict) -> dict[str, dict]:
         ).append((did, seq))
     out: dict[str, dict] = {}
     for (cur, col), commits in by_col.items():
-        t = _read_parquet_dir(_eq_dir(out_dir, col))
+        typ = _key_type(view.get(cur))
+        t = _read_parquet_dir(
+            _eq_dir(out_dir, col), ["value", "delete_id"],
+            None if typ is None else {"value": typ},
+        )
         if t is None:
             raise RuntimeError(
                 f"store at {out_dir} has committed equality-delete "
@@ -321,7 +333,7 @@ def upsert_by_key(
     if prior is not None:
         n_vals = int(prior)  # first attempt's delete stands
     else:
-        wrote = _write_eq_values(spark, out_dir, key, df.select(key))
+        wrote = _write_eq_values(out_dir, key, df.select(key))
         if wrote is not None:
             delete_id, n_vals = wrote
             eq_commits = [(delete_id, n_vals, key)]

@@ -39,6 +39,7 @@ import os
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -216,18 +217,26 @@ def _rows_table(rows: list[tuple], ddl: str) -> pa.Table:
     )
 
 
+def publish_table(d: str, table: pa.Table, name: str) -> None:
+    """Write ``table`` as the file ``d/name`` with pyarrow on the
+    driver, under a hidden ``.tmp-`` name renamed into place, so readers
+    see all of its rows or none — the one writer of the store's side
+    tables (ledger rows, tombstones, equality-delete values)."""
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".tmp-{name}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
 def append_ledger_rows(out_dir: str, rows: list[tuple]) -> None:
     """Append one commit's ledger rows (``LEDGER_SCHEMA_DDL`` order) as
-    ONE ledger file, written with pyarrow on the driver under a hidden
-    name and renamed into place — the commit point of a write: readers
-    see all of its rows or none."""
-    d = _ledger_dir(out_dir)
-    os.makedirs(d, exist_ok=True)
-    name = f"{uuid.uuid4().hex}.parquet"
-    pq.write_table(
-        _rows_table(rows, LEDGER_SCHEMA_DDL), os.path.join(d, f".tmp-{name}")
+    ONE ledger file (:func:`publish_table`) — the commit point of a
+    write: readers see all of its rows or none."""
+    publish_table(
+        _ledger_dir(out_dir),
+        _rows_table(rows, LEDGER_SCHEMA_DDL),
+        f"{uuid.uuid4().hex}.parquet",
     )
-    os.replace(os.path.join(d, f".tmp-{name}"), os.path.join(d, name))
 
 
 def manifest_data_items(manifest: dict | None) -> list[tuple[str, dict]]:
@@ -259,12 +268,13 @@ def reserved_physicals(manifest: dict | None) -> set[str]:
 
 
 def _read_parquet_dir(
-    d: str, columns: list[str] | None = None
+    d: str, columns: list[str] | None = None, types: dict | None = None
 ) -> pa.Table | None:
     """Schema-lenient union read of every parquet file in ``d`` (the
     pyarrow analog of ``mergeSchema`` — stores resumed across engine
-    upgrades mix footers with/without newer columns). ``None`` only
-    when ``d`` holds no ``*.parquet``; an unreadable file raises."""
+    upgrades mix footers with/without newer columns; ``types``,
+    ``{column: Arrow type}``, casts each file's columns first). ``None``
+    only when ``d`` holds no ``*.parquet``; an unreadable file raises."""
     paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if not paths:
         return None
@@ -273,6 +283,9 @@ def _read_parquet_dir(
         t = pq.read_table(p)
         if columns is not None:
             t = t.select([c for c in columns if c in t.column_names])
+        for c, typ in (types or {}).items():
+            i = t.schema.get_field_index(c)
+            t = t.set_column(i, c, t.column(i).cast(typ))
         tables.append(t)
     return pa.concat_tables(tables, promote_options="default")
 
@@ -1590,26 +1603,19 @@ def expire_snapshots(
     n_files = max(1, math.ceil(total / max(1, target_file_bytes)))
     swap = _swap_chunk_table(spark, out_dir, keep, n_files, grace_sec)
     # tombstones that pointed at expired partitions are dead weight now
-    from choetl_spark.deletes import _deletes_dir
+    from choetl_spark.deletes import _deletes_dir, replace_tombstone_files
 
     ddir = _deletes_dir(out_dir)
-    try:
-        tomb = spark.read.parquet(ddir)
-    except Exception:
-        tomb = None
+    tomb = _read_parquet_dir(ddir)
     if tomb is not None:
-        kept_tomb = tomb.filter(~F.col("part_id").isin(expired))
-        if kept_tomb.limit(1).count() == 0:
-            # nothing survives: drop the tombstone table entirely so
-            # readers skip the positional decode again (an EMPTY
-            # _deletes dir would still trigger the merge-on-read path)
-            shutil.rmtree(ddir, ignore_errors=True)
+        gone = pc.is_in(tomb["part_id"], pa.array(expired, pa.int64()))
+        kept = tomb.filter(pc.invert(gone))
+        if kept.num_rows:
+            replace_tombstone_files(out_dir, kept)
         else:
-            # crash-safe rewrite: never leaves a missing-_deletes window
-            # (absence reads as "no deletes" — silent resurrection)
-            from choetl_spark.deletes import replace_tombstone_files
-
-            replace_tombstone_files(spark, out_dir, kept_tomb)
+            # nothing survives: drop the tombstone table entirely so
+            # readers skip the positional decode again
+            shutil.rmtree(ddir, ignore_errors=True)
     return {**res, "partitions_reclaimed": len(expired), **swap}
 
 
@@ -1684,8 +1690,6 @@ def _tiling_violation(
     shuffle="none" (tasks each number the part's rows from 0, so row
     ALIGNMENT across columns is garbage). Returns the first violating
     ``part_id, column, n_rows_sum, end_max`` group, or ``None``."""
-    import pyarrow.compute as pc
-
     if not files:
         return None
     t = pa.concat_tables(
